@@ -20,12 +20,20 @@ object Bench {
     // `reps` timed repetitions per query, report the per-query MEDIAN so
     // round-over-round comparisons measure the code, not machine noise
     // (VERDICT r1 item 10). Reps run back-to-back per query so page cache
-    // and codegen state are comparable across reps.
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // and codegen state are comparable across reps. A query that throws on
+    // any rep is FAILED: it contributes no time to `value` and is named in
+    // the `failed` list, and the run exits non-zero.
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    def timeOnce(name: String,
+                 fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       System.gc() // keep one query's garbage from billing the next
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          failed.getOrElseUpdate(name, e.toString.linesIterator.nextOption().getOrElse(""))
+          return None
+      }
+      Some((System.nanoTime() - t0) / 1e9)
     }
     // Storage-pressure context PER QUERY (VERDICT r10 item 2): the r10
     // triangles anomaly (31 s full-bench vs 3.7 s standalone) was only
@@ -103,13 +111,15 @@ object Bench {
     // measured SF; the full bench now measures under the same discipline,
     // at the cost of one extra pass per query.
     val memCtx = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-    val results = wanted.map { case (name, fn) =>
-      timeOnce(fn)
-      val mb = storageMb()
-      val d0 = dropped.get
-      val ts = (1 to reps).map(_ => timeOnce(fn)).sorted
-      memCtx(name) = (mb, dropped.get - d0)
-      name -> ts(ts.length / 2)
+    val results = wanted.flatMap { case (name, fn) =>
+      if (timeOnce(name, fn).isEmpty) None
+      else {
+        val mb = storageMb()
+        val d0 = dropped.get
+        val ts = (1 to reps).flatMap(_ => timeOnce(name, fn)).sorted
+        memCtx(name) = (mb, dropped.get - d0)
+        if (ts.length < reps) None else Some(name -> ts(ts.length / 2))
+      }
     }
     // listener removed once the timed loop ends (ADVICE r11): harmless for
     // the one-shot CLI, a leak if Bench is ever driven repeatedly in-session
@@ -122,6 +132,7 @@ object Bench {
     def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def qsJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val failedJson = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     spark.stop()
     // Calibration-NORMALIZED total (VERDICT r7 item 7): the co-tenant noise
@@ -181,7 +192,7 @@ object Bench {
     val memJson = memCtx.map { case (k, (mb, dr)) => s""""$k":[$mb,$dr]""" }
       .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${qsJson(results)},"families":$famJson,"mem":$memJson,$ctx,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failedJson,"queries":${qsJson(results)},"families":$famJson,"mem":$memJson,$ctx,"sf":"$sfDir"}"""
     // The complete artifact always goes to a PER-SF file, so a dev sf0.001 or
     // subset run can never clobber the canonical sf0.1 artifact the round is
     // judged on (ADVICE r4: a committed bench_out.json was from a dev run).
@@ -213,7 +224,7 @@ object Bench {
       val others =
         if (rest.isEmpty) ""
         else s""","others_n":${rest.length},"others_sec":${r3(rest.map(_._2).sum)}"""
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","calibrated_value":${r3(calibTotal)},"calib_factor":${r3(calibFactor)},"queries":${qsJson(kept)}$others,"full":"$artifact","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","calibrated_value":${r3(calibTotal)},"calib_factor":${r3(calibFactor)},"failed":$failedJson,"queries":${qsJson(kept)}$others,"full":"$artifact","sf":"$sfDir"}"""
     }
     var k = results.length
     while (k > 0 && lineFor(k).length > budget) k -= 1
@@ -223,6 +234,10 @@ object Bench {
     // guessing: earlier rounds' padded/duplicated output never parsed anyway
     // (ADVICE r5) and only cluttered the log.
     println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","calibrated_value":${r3(calibTotal)},"calib_factor":${r3(calibFactor)},"queries":${qsJson(byCost.take(3).sortBy(_._1))},"n_queries":${results.length},"full":"$artifact","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","calibrated_value":${r3(calibTotal)},"calib_factor":${r3(calibFactor)},"failed":$failedJson,"queries":${qsJson(byCost.take(3).sortBy(_._1))},"n_queries":${results.length},"full":"$artifact","sf":"$sfDir"}""")
+    if (failed.nonEmpty) {
+      failed.foreach { case (name, err) => System.err.println(s"[bench] $name failed: $err") }
+      sys.exit(1)
+    }
   }
 }

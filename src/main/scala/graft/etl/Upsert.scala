@@ -10,11 +10,14 @@ import org.apache.spark.sql.functions._
   *
   * Semantics the reference leaves undefined (duplicate source keys — Redshift
   * MERGE errors or picks arbitrarily) are made deterministic here: the source
-  * is first deduplicated to the latest row per key (orderCols descending,
-  * callers append a unique tiebreak column). Then matched rows take all source
-  * columns, unmatched target rows survive unchanged, unmatched source rows are
-  * inserted — expressed as a full-outer join on the key, which shuffles both
-  * sides by the key and scales linearly with no driver-side state.
+  * is first deduplicated to the latest row per key (orderCols descending; a
+  * unique tiebreak belongs among them, and for `merge` every one of them must
+  * be a target column). Then matched rows take all source columns, unmatched
+  * target rows survive unchanged, unmatched source rows are inserted. `merge`
+  * computes that as merge(t, s) ≡ dedupLatest(t ∪ s) with every source row
+  * ranked above every target row: one exchange by key, no driver-side state.
+  * A NULL key matches nothing (as in SQL MERGE), so every null-key row of
+  * either side is kept.
   */
 object Upsert {
 
@@ -24,29 +27,39 @@ object Upsert {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Full-outer SCD1 merge; `source` AND `target` must each be unique per key
-    * (targets are outputs of previous merges, so this holds inductively).
-    * On a key match the source row wins unconditionally — the reference's
-    * MERGE has no conditional UPDATE clause. */
-  def scd1(target: DataFrame, source: DataFrame, key: String): DataFrame = {
-    val tgt = target.alias("t")
-    val src = source.alias("s")
-    val matched: Column = col(s"s.$key").isNotNull
-    val cols = target.columns.map { c =>
-      when(matched, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
-    }
-    tgt.join(src, col(s"t.$key") === col(s"s.$key"), "full_outer").select(cols.toSeq: _*)
+  /** Latest row per non-null key; null-key rows all survive. */
+  private def latestPerKeyKeepNull(df: DataFrame, key: String, orderCols: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(orderCols.map(_.desc): _*)
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1 || col(key).isNull).drop("__rn")
   }
 
-  /** Dedup-then-merge in one call (the reference's COPY→MERGE round). */
-  def merge(target: DataFrame, source: DataFrame, key: String, orderCols: Seq[String]): DataFrame =
-    scd1(target, latestPerKey(source, key, orderCols), key)
+  /** The first publish of a target: the source deduplicated by the same
+    * window `merge` runs, so a round behaves alike with or without a target. */
+  def insert(source: DataFrame, key: String, orderCols: Seq[String]): DataFrame =
+    latestPerKeyKeepNull(source, key, orderCols.map(col))
+
+  /** Dedup-then-merge in one call (the reference's COPY→MERGE round): the
+    * target (tag 0) and the source projected to the target's columns (tag 1)
+    * go through one window by key, so a source row always beats the target
+    * row and source duplicates resolve on `orderCols`, which must therefore
+    * be target columns. The target must be unique per non-null key (it is
+    * the output of a previous merge). */
+  def merge(target: DataFrame, source: DataFrame, key: String, orderCols: Seq[String]): DataFrame = {
+    require(orderCols.forall(target.columns.contains),
+      s"Upsert.merge: orderCols ${orderCols.mkString(", ")} must all be target columns " +
+        s"(${target.columns.mkString(", ")})")
+    val cols = target.columns.toSeq.map(col)
+    val tagged = target.select(cols :+ lit(0).as("__tag"): _*)
+      .union(source.select(cols :+ lit(1).as("__tag"): _*))
+    latestPerKeyKeepNull(tagged, key, col("__tag") +: orderCols.map(col)).drop("__tag")
+  }
 
   /** CDC merge: `changes` carries an `op` column — 'D' tombstones delete the
     * key, anything else ('I'/'U') upserts the payload; unmatched target rows
     * survive. The delete clause is what the reference's TRUNCATE-and-reload
-    * sidesteps and every incremental CDC feed needs. Same single full-outer
-    * join by key — deletes cost nothing extra. `changes` must be unique per
+    * sidesteps and every incremental CDC feed needs. One full-outer join by
+    * key — deletes cost nothing extra. `changes` must be unique per
     * key (pre-dedup with latestPerKey). */
   def applyCdc(target: DataFrame, changes: DataFrame, key: String): DataFrame = {
     val tgt = target.alias("t")

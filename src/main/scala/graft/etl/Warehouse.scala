@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets
 
 /** Multi-writer commit protocol for warehouse targets (VERDICT r1 item 9).
@@ -16,6 +16,11 @@ import java.nio.charset.StandardCharsets
   *
   *   target/
   *     v_<millis>_<nonce>/   complete, immutable data versions
+  *       part-*.parquet        the rows
+  *       _SCHEMA               the writer's schema as JSON (partition
+  *                             columns left out), so a read needs no
+  *                             footer-inference job
+  *       _CLUSTERING           layout contract (clustered / z-ordered only)
   *     _CURRENT              pointer file naming the current version dir
   *
   *  - A writer materializes its FULL new version dir first, then publishes
@@ -35,35 +40,60 @@ object Warehouse {
 
   private def pointer(target: String) = new Path(target, "_CURRENT")
 
-  /** Name of the current version dir, if the target has ever been published. */
-  def currentVersion(spark: SparkSession, target: String): Option[String] = {
-    val f = fs(spark, target)
-    val p = pointer(target)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(buf.toString(StandardCharsets.UTF_8.name()).trim)
-      } finally in.close()
-    }
+  /** Contents of a small metadata file (pointer or sidecar), if present. */
+  private def readSmall(f: FileSystem, p: Path): Option[String] = {
+    val in = try f.open(p) catch { case _: java.io.FileNotFoundException => return None }
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
+      Some(buf.toString(StandardCharsets.UTF_8.name()))
+    } finally in.close()
   }
+
+  private def writeSmall(f: FileSystem, p: Path, text: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** Name of the current version dir, if the target has ever been published. */
+  def currentVersion(spark: SparkSession, target: String): Option[String] =
+    readSmall(fs(spark, target), pointer(target)).map(_.trim)
 
   def exists(spark: SparkSession, target: String): Boolean =
     currentVersion(spark, target).isDefined
 
-  /** Read the current version (immutable snapshot). */
-  def read(spark: SparkSession, target: String): DataFrame = {
-    val v = currentVersion(spark, target).getOrElse(
+  private def schemaSidecar(dir: String) = new Path(dir, "_SCHEMA")
+
+  /** Record the schema a version dir was written with, partition columns
+    * excluded: Spark types those from the directory names on read, as it
+    * would without the sidecar. */
+  private def recordSchema(spark: SparkSession, dir: String, schema: StructType,
+                           partCols: Seq[String] = Nil): Unit =
+    writeSmall(fs(spark, dir), schemaSidecar(dir),
+      StructType(schema.filterNot(c => partCols.contains(c.name))).json)
+
+  /** Read one immutable version dir. With its `_SCHEMA` sidecar the schema is
+    * handed to the reader, so no footer-inference job runs; a dir published
+    * before sidecars existed falls back to inference. */
+  private def readDir(spark: SparkSession, dir: String): DataFrame =
+    readSmall(fs(spark, dir), schemaSidecar(dir)) match {
+      case Some(json) =>
+        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+
+  private def currentOrFail(spark: SparkSession, target: String): String =
+    currentVersion(spark, target).getOrElse(
       sys.error(s"no published version under $target"))
-    spark.read.parquet(s"$target/$v")
-  }
+
+  /** Read the current version (immutable snapshot). */
+  def read(spark: SparkSession, target: String): DataFrame =
+    readDir(spark, s"$target/${currentOrFail(spark, target)}")
 
   /** Write `df` as a fresh version dir, then atomically swap the pointer.
     * Returns the version name. */
   def publish(spark: SparkSession, target: String, df: DataFrame): String =
-    publishVersion(spark, target) { dir =>
+    publishVersion(spark, target, df.schema) { dir =>
       df.write.mode(SaveMode.Overwrite).parquet(dir)
     }
 
@@ -79,14 +109,15 @@ object Warehouse {
     * complete immutable version. */
   def publishPartitioned(spark: SparkSession, target: String, df: DataFrame,
                          partCol: String): String =
-    publishVersion(spark, target) { dir =>
+    publishVersion(spark, target, df.schema, Seq(partCol)) { dir =>
       df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(dir)
     }
 
-  /** Materialize a COMPLETE version dir via `write`, then commit it with the
-    * one atomic pointer replace. Everything `write` puts in the dir —
-    * part-files, layout sidecars — is immutable together: readers never see
-    * a version without its metadata.
+  /** Materialize a COMPLETE version dir via `write`, record `schema` (minus
+    * `partCols`) in its `_SCHEMA` sidecar, then commit it with the one atomic
+    * pointer replace. Everything in the dir — part-files, schema and layout
+    * sidecars — is immutable together: readers never see a version without
+    * its metadata.
     *
     * The staged pointer file doubles as the publish's INTENT MARKER
     * (ADVICE r9): it is created BEFORE any data is materialized, and the
@@ -98,15 +129,16 @@ object Warehouse {
     * the dirs it is about to reference. A marker with no rename is a
     * publish that died mid-flight; vacuum reclaims it only after
     * `abandonedMs` (default 24 h — far beyond any real write). */
-  private def publishVersion(spark: SparkSession, target: String)
+  private def publishVersion(spark: SparkSession, target: String, schema: StructType,
+                             partCols: Seq[String] = Nil)
                             (write: String => Unit): String = {
     val nonce = java.util.UUID.randomUUID.toString.take(8)
     val v = f"v_${System.currentTimeMillis()}%013d_$nonce"
     val f = fs(spark, target)
     val tmp = new Path(target, s"_CURRENT.$nonce.tmp")
-    val intent = f.create(tmp, true)
-    try intent.write(v.getBytes(StandardCharsets.UTF_8)) finally intent.close()
+    writeSmall(f, tmp, v)
     write(s"$target/$v")
+    recordSchema(spark, s"$target/$v", schema, partCols)
     val fc = FileContext.getFileContext(new Path(target).toUri,
       spark.sparkContext.hadoopConfiguration)
     fc.rename(tmp, pointer(target), Options.Rename.OVERWRITE)
@@ -150,14 +182,11 @@ object Warehouse {
     * every subsequent selective scan cheap. */
   def publishClustered(spark: SparkSession, target: String, df: DataFrame,
                        clusterCol: String, files: Int): String =
-    publishVersion(spark, target) { dir =>
+    publishVersion(spark, target, df.schema) { dir =>
       df.repartitionByRange(files, org.apache.spark.sql.functions.col(clusterCol))
         .sortWithinPartitions(clusterCol)
         .write.mode(SaveMode.Overwrite).parquet(dir)
-      val f = fs(spark, dir)
-      val out = f.create(clusteringSidecar(dir), true)
-      try out.write(clusterCol.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+      writeSmall(fs(spark, dir), clusteringSidecar(dir), clusterCol)
     }
 
   /** Publish `df` Z-ORDER clustered on `cols`: each row's cluster key is the
@@ -202,34 +231,20 @@ object Warehouse {
           i * cols.size + j)
       }
     }.reduce(_.bitwiseOR(_))
-    publishVersion(spark, target) { dir =>
+    publishVersion(spark, target, df.schema) { dir =>
       df.withColumn("__z", z)
         .repartitionByRange(files, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode(SaveMode.Overwrite).parquet(dir)
-      val f = fs(spark, dir)
-      val out = f.create(clusteringSidecar(dir), true)
-      try out.write(s"zorder:${cols.mkString(",")}".getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+      writeSmall(fs(spark, dir), clusteringSidecar(dir), s"zorder:${cols.mkString(",")}")
     }
   }
 
   /** The cluster column the current version was published with, if any. */
   def clusteringOf(spark: SparkSession, target: String): Option[String] =
-    currentVersion(spark, target).flatMap { v =>
-      val f = fs(spark, target)
-      val p = clusteringSidecar(s"$target/$v")
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          Some(buf.toString(StandardCharsets.UTF_8.name()).trim)
-        } finally in.close()
-      }
-    }
+    currentVersion(spark, target).flatMap(v =>
+      readSmall(fs(spark, target), clusteringSidecar(s"$target/$v")).map(_.trim))
 
   /** Save `df` as a BUCKETED catalog table: hash-partitioned into `buckets`
     * files per write-task group on `key` and sorted within each bucket —
@@ -254,11 +269,10 @@ object Warehouse {
       .saveAsTable(table)
   }
 
-  /** Schema of the target's current version (parquet footer metadata — no
-    * data read), if ever published. */
+  /** Schema of the target's current version (the `_SCHEMA` sidecar — no
+    * data read, no job), if ever published. */
   def schemaOf(spark: SparkSession, target: String): Option[StructType] =
-    currentVersion(spark, target).map(v =>
-      spark.read.parquet(s"$target/$v").schema)
+    currentVersion(spark, target).map(v => readDir(spark, s"$target/$v").schema)
 
   /** Publish under a SCHEMA CONTRACT — the enforcement a table format runs
     * on every write, on the pointer-commit warehouse: against the current
@@ -296,9 +310,10 @@ object Warehouse {
     * pipeline and the streaming foreachBatch sink. */
   def upsertPublish(spark: SparkSession, target: String, src: DataFrame,
                     key: String, orderCols: Seq[String]): String = {
-    val merged =
-      if (exists(spark, target)) Upsert.merge(read(spark, target), src, key, orderCols)
-      else Upsert.latestPerKey(src, key, orderCols)
+    val merged = currentVersion(spark, target) match {
+      case Some(v) => Upsert.merge(readDir(spark, s"$target/$v"), src, key, orderCols)
+      case None => Upsert.insert(src, key, orderCols)
+    }
     publish(spark, target, merged)
   }
 
@@ -322,8 +337,7 @@ object Warehouse {
   /** Parquet part-file count of the current version — the quantity compaction
     * bounds (and a spec hook). */
   def currentFileCount(spark: SparkSession, target: String): Int = {
-    val v = currentVersion(spark, target).getOrElse(
-      sys.error(s"no published version under $target"))
+    val v = currentOrFail(spark, target)
     fs(spark, target).listStatus(new Path(s"$target/$v")).toSeq
       .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
   }
@@ -361,29 +375,28 @@ object Warehouse {
     // member writes take. The commit rename below consumes the marker.
     val f = fs(spark, root)
     val tmp = new Path(root, s"_SNAPSHOT.$nonce.tmp")
-    val intent = f.create(tmp, true)
-    try intent.write(nonce.getBytes(StandardCharsets.UTF_8)) finally intent.close()
+    writeSmall(f, tmp, nonce)
     val versions = members.map { case (name, df) =>
       val v = f"v_${System.currentTimeMillis()}%013d_$nonce"
+      val dir = s"$root/$name/$v"
       val w = df.write.mode(SaveMode.Overwrite)
-      partCol.fold(w)(w.partitionBy(_)).parquet(s"$root/$name/$v")
+      partCol.fold(w)(w.partitionBy(_)).parquet(dir)
       // An EMPTY member written hive-partitioned leaves only _SUCCESS —
-      // no parquet footer, so readSnapshotMember would throw
-      // UNABLE_TO_INFER_SCHEMA. A delta member CAN legitimately be empty
-      // (an ingest batch that dedups away entirely), so re-write it
-      // unpartitioned: one schema-carrying empty part file, same rows
-      // (none), and downstream partition pruning has nothing to prune.
-      val written = fs(spark, root).listStatus(new Path(s"$root/$name/$v"))
-      if (partCol.isDefined && !written.exists(_.getPath.getName.startsWith("part-")) &&
-          !written.exists(_.isDirectory))
-        df.limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$root/$name/$v")
+      // no parquet footer (inference throws UNABLE_TO_INFER_SCHEMA) and no
+      // partition directory to type the partition column from. A delta
+      // member CAN legitimately be empty (an ingest batch that dedups away
+      // entirely), so re-write it unpartitioned: one schema-carrying empty
+      // part file, same rows (none), and downstream partition pruning has
+      // nothing to prune.
+      val written = f.listStatus(new Path(dir))
+      val emptyPartitioned = partCol.isDefined &&
+        !written.exists(_.getPath.getName.startsWith("part-")) && !written.exists(_.isDirectory)
+      if (emptyPartitioned)
+        df.limit(0).coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
+      recordSchema(spark, dir, df.schema, if (emptyPartitioned) Nil else partCol.toSeq)
       name -> v
     }
-    val content = versions.sortBy(_._1)
-      .map { case (n, v) => s"$n=$v" }.mkString("\n")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    writeSmall(f, tmp, versions.sortBy(_._1).map { case (n, v) => s"$n=$v" }.mkString("\n"))
     val fc = FileContext.getFileContext(new Path(root).toUri,
       spark.sparkContext.hadoopConfiguration)
     fc.rename(tmp, snapPointer(root), Options.Rename.OVERWRITE)
@@ -392,28 +405,16 @@ object Warehouse {
 
   /** The current snapshot's member → version map (one pointer read), or
     * None if the root has never been committed. */
-  def readSnapshot(spark: SparkSession, root: String): Option[Map[String, String]] = {
-    val f = fs(spark, root)
-    val p = snapPointer(root)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        buf.toString(StandardCharsets.UTF_8.name())
-      } finally in.close()
-      Some(text.linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(n, v) = l.split("=", 2); n -> v
-      }.toMap)
-    }
-  }
+  def readSnapshot(spark: SparkSession, root: String): Option[Map[String, String]] =
+    readSmall(fs(spark, root), snapPointer(root)).map(_.linesIterator.filter(_.nonEmpty).map { l =>
+      val Array(n, v) = l.split("=", 2); n -> v
+    }.toMap)
 
   /** Read one member of a RESOLVED snapshot (callers resolve the map once
     * per serve so every member read comes from the same commit). */
   def readSnapshotMember(spark: SparkSession, root: String,
                          member: String, version: String): DataFrame =
-    spark.read.parquet(s"$root/$member/$version")
+    readDir(spark, s"$root/$member/$version")
 
   /** DELETE WHERE — the lakehouse delete (GDPR erasure, bad-batch rollback):
     * republish the current version minus the matching rows, through the
@@ -449,7 +450,7 @@ object Warehouse {
   def readVersion(spark: SparkSession, target: String, version: String): DataFrame = {
     require(versions(spark, target).contains(version),
       s"version $version not present under $target (vacuumed or never published)")
-    spark.read.parquet(s"$target/$version")
+    readDir(spark, s"$target/$version")
   }
 
   /** Change feed between two published versions — what a downstream

@@ -67,7 +67,7 @@ object GroupA {
       .orderBy("user_id")
 
   /** O15: MERGE upsert (SCD1) — target = pre-cutoff latest state, source =
-    * post-cutoff rows, merged full-outer with source-wins semantics
+    * post-cutoff latest state, merged by key with source-wins semantics
     * (/root/reference/coininsights.py:115-127,139-161). */
   def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
@@ -77,7 +77,7 @@ object GroupA {
       .drop("event_id", "ts")
     val source = Upsert.latestPerKey(ev.filter(col("ts") >= CutoffNs), "user_id", Seq("ts", "event_id"))
       .drop("event_id", "ts")
-    Upsert.scd1(target, source, "user_id").orderBy("user_id")
+    Upsert.merge(target, source, "user_id", Nil).orderBy("user_id")
   }
 
   /** CDC merge with tombstones: deletes ('D'), updates ('U') and inserts

@@ -86,6 +86,30 @@ class UpsertSpec extends SparkSpec {
     assert(m == Set(("a", 2L, 2.0)))
   }
 
+  test("merge rejects an orderCols column the target does not have") {
+    val t = df(Seq(("a", 1L, 1.0)))
+    val s = df(Seq(("a", 2L, 2.0))).withColumn("tiebreak", org.apache.spark.sql.functions.lit(1))
+    val e = intercept[IllegalArgumentException](Upsert.merge(t, s, "id", Seq("ver", "tiebreak")))
+    assert(e.getMessage.contains("tiebreak"))
+  }
+
+  test("a null key matches nothing: merge and the first publish keep every null-key row") {
+    val all = (d: DataFrame) => d.collect().map(_.toSeq).toSet
+    val t = df(Seq(("a", 1L, 1.0), (null, 1L, 2.0)))
+    val s = df(Seq((null, 2L, 3.0), ("a", 2L, 4.0), (null, 3L, 5.0)))
+    assert(all(Upsert.merge(t, s, "id", ord)) == Set(
+      Seq("a", 2L, 4.0), Seq(null, 1L, 2.0), Seq(null, 2L, 3.0), Seq(null, 3L, 5.0)))
+    // the same through the warehouse: the first publish (no target yet) and
+    // a later merge treat null keys alike
+    val target = java.nio.file.Files.createTempDirectory("upsert_null").toString + "/t"
+    Warehouse.upsertPublish(spark, target, s, "id", ord)
+    assert(all(Warehouse.read(spark, target)) ==
+      Set(Seq(null, 2L, 3.0), Seq("a", 2L, 4.0), Seq(null, 3L, 5.0)))
+    Warehouse.upsertPublish(spark, target, df(Seq((null, 4L, 6.0), ("a", 3L, 7.0))), "id", ord)
+    assert(all(Warehouse.read(spark, target)) == Set(
+      Seq(null, 2L, 3.0), Seq(null, 3L, 5.0), Seq(null, 4L, 6.0), Seq("a", 3L, 7.0)))
+  }
+
   test("applyCdc: tombstones delete, upserts apply, absent-key delete is a no-op, idempotent") {
     import org.apache.spark.sql.functions.{col, when}
     val target = df(Seq(("a", 1L, 1.0), ("b", 1L, 2.0), ("c", 1L, 3.0)))
