@@ -200,16 +200,17 @@ object Bench {
     // full-surface run — its "sf" field identifies the run that produced it.
     val sfName = new java.io.File(sfDir).getName
     // subset (dev/stress) runs get their own artifact: a partial total must
-    // never overwrite a full-surface per-SF artifact
+    // never overwrite a full-surface per-SF artifact. Paths are relative to
+    // the working directory (sbt's forked `run` starts in the project dir).
     val artifact =
-      if (args.isEmpty) s"/root/repo/bench_out_$sfName.json"
-      else s"/root/repo/bench_out_${sfName}_subset.json"
+      if (args.isEmpty) s"bench_out_$sfName.json"
+      else s"bench_out_${sfName}_subset.json"
     def write(path: String): Unit = {
       val out = new java.io.PrintWriter(path)
       try out.println(fullLine) finally out.close()
     }
     write(artifact)
-    if (args.isEmpty && sfName == "sf0.1") write("/root/repo/bench_out.json")
+    if (args.isEmpty && sfName == "sf0.1") write("bench_out.json")
     // ... but the driver parses the stdout TAIL, whose capture window is
     // ~2 KB: with 100+ queries the full line's HEAD gets cut and the round's
     // headline number becomes unverifiable (BENCH_r03 `parsed: null`). So the

@@ -64,26 +64,6 @@ object Tables {
   /** 2024-01-15T00:00:00Z in epoch nanoseconds (merge-upsert cutoff). */
   val CutoffNs: Long = 1705276800000000000L
 
-  /** Cache key for a published artifact derived from `$dir/$table.parquet`:
-    * fingerprints the corpus FILES (name:size:mtime of every part) plus the
-    * caller's training/design constants, so neither a rewritten fixture at
-    * the same path nor a parameter change can ever serve a stale artifact
-    * (ADVICE r6: Clustering keyed on path+constants only and could serve
-    * stale centroids after a fixture rewrite). Metadata-only: one
-    * driver-side listing, no data read — the same check a table format's
-    * snapshot id gives for free. */
-  def fixtureKey(spark: SparkSession, dir: String, table: String,
-                 consts: String = ""): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = hfs.listStatus(p).map(st =>
-      s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$consts|$parts".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-  }
-
   /** Match a CPU-heavy map stage's parallelism to the session when its scan
     * under-splits. A compact parquet table arrives as ONE row group → ONE
     * task, so per-row fingerprint hashing (winnowing, shingle minhash)

@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Count-once/serve-many table statistics (VERDICT r4 item 5).
@@ -13,49 +12,28 @@ import org.apache.spark.sql.SparkSession
   * later invocation from the published manifest: a pointer read + a 1-row
   * parquet, no corpus scan.
   *
-  * The manifest key includes a listStatus CONTENT SIGNATURE (file names,
-  * lengths, modification times) of the table path, so a corpus rewritten in
-  * place gets a fresh count instead of a stale one — the signature listing
-  * is one object-store prefix call, the same price Manifest.processed pays.
+  * The manifest lives in the state store (`State`), whose key holds the
+  * table's file listing (names, lengths, modification times), so a corpus
+  * rewritten in place gets a fresh count instead of a stale one — the
+  * listing is one object-store prefix call, the same price
+  * Manifest.processed pays.
   * Concurrent first callers both publish the identical count —
   * last-writer-wins is benign, exactly as with the trained IVF centroids.
   */
 object TableStats {
 
-  private def signature(spark: SparkSession, path: String): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val entries =
-      if (st.isDirectory) fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
-      else Seq(st)
-    entries.map(e => s"${e.getPath.getName}:${e.getLen}:${e.getModificationTime}")
-      .mkString("|")
-  }
-
-  private[graft] def statsTarget(spark: SparkSession, dir: String, table: String): String = {
-    val path = s"$dir/$table.parquet"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$path|${signature(spark, path)}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    s"${sys.props("java.io.tmpdir")}/graft_stats/rows_$key"
-  }
+  private[graft] def statsTarget(spark: SparkSession, dir: String, table: String): String =
+    State.root(spark, "stats", "rows", dir, table)
 
   /** Row count of `dir/table.parquet`: scanned once per corpus content,
     * then served from the published manifest. */
-  def rowCount(spark: SparkSession, dir: String, table: String): Long = {
-    val target = statsTarget(spark, dir, table)
-    if (Warehouse.exists(spark, target)) {
-      Warehouse.read(spark, target).head().getLong(0)
-    } else {
+  def rowCount(spark: SparkSession, dir: String, table: String): Long =
+    State.memo(spark, statsTarget(spark, dir, table)) { target =>
       val n = spark.read.parquet(s"$dir/$table.parquet").count()
-      val df = spark.createDataFrame(
+      Warehouse.publish(spark, target, spark.createDataFrame(
         java.util.Collections.singletonList(org.apache.spark.sql.Row(n)),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("n_rows",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      Warehouse.publish(spark, target, df)
-      n
-    }
-  }
+            org.apache.spark.sql.types.LongType, nullable = false)))))
+    }.head().getLong(0)
 }

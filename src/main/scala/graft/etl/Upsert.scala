@@ -70,8 +70,11 @@ object Upsert {
     val checked = changes.withColumn("op",
       when(col("op").isin("I", "U", "D"), col("op"))
         .otherwise(raise_error(concat(lit("applyCdc: unknown op code: "), col("op")))))
-    val chg = checked.alias("s")
-    val matched: Column = col(s"s.$key").isNotNull
+    // source presence marker: a change row whose key is NULL matches no
+    // target row (as in `merge`) but is still a change row — an I/U keeps
+    // its own payload, a D deletes nothing
+    val chg = checked.withColumn("__in_s", lit(true)).alias("s")
+    val matched: Column = col("s.__in_s").isNotNull
     val cols = target.columns.map { c =>
       when(matched, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
     }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets
@@ -24,8 +24,8 @@ import java.nio.charset.StandardCharsets
   *     _CURRENT              pointer file naming the current version dir
   *
   *  - A writer materializes its FULL new version dir first, then publishes
-  *    with ONE atomic pointer replace (FileContext.rename OVERWRITE — atomic
-  *    on POSIX and HDFS). Readers resolve the pointer then read an immutable
+  *    with ONE atomic pointer replace (`commit`: rename(2) on the local
+  *    filesystem, FileContext.rename OVERWRITE elsewhere). Readers resolve the pointer then read an immutable
   *    dir: they see the old or the new version, never a partial one.
   *  - Two interleaved writers both leave a consistent target; the later
   *    pointer swap wins (last-writer-wins, the same outcome two unserialized
@@ -40,9 +40,20 @@ object Warehouse {
 
   private def pointer(target: String) = new Path(target, "_CURRENT")
 
+  /** Small metadata files (pointers, intent markers, sidecars) bypass a
+    * checksummed filesystem's `.crc` layer (the local filesystem's): with
+    * no `.crc` beside `_CURRENT.<nonce>.tmp`, the commit rename moves ONE
+    * file, where with one it moves the file and its `.crc` in two steps
+    * that racing writers and readers can see apart. Reads ignore a `.crc`
+    * that older code left beside a pointer. */
+  private def raw(f: FileSystem): FileSystem = f match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case _ => f
+  }
+
   /** Contents of a small metadata file (pointer or sidecar), if present. */
   private def readSmall(f: FileSystem, p: Path): Option[String] = {
-    val in = try f.open(p) catch { case _: java.io.FileNotFoundException => return None }
+    val in = try raw(f).open(p) catch { case _: java.io.FileNotFoundException => return None }
     try {
       val buf = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
@@ -51,7 +62,7 @@ object Warehouse {
   }
 
   private def writeSmall(f: FileSystem, p: Path, text: String): Unit = {
-    val out = f.create(p, true)
+    val out = raw(f).create(p, true)
     try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
@@ -139,11 +150,23 @@ object Warehouse {
     writeSmall(f, tmp, v)
     write(s"$target/$v")
     recordSchema(spark, s"$target/$v", schema, partCols)
-    val fc = FileContext.getFileContext(new Path(target).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, pointer(target), Options.Rename.OVERWRITE)
+    commit(spark, f, tmp, pointer(target))
     v
   }
+
+  /** Replace pointer `dst` with the staged `tmp` in ONE atomic rename. On
+    * the local filesystem FileContext's OVERWRITE rename deletes `dst` and
+    * then renames — a reader between the two finds no pointer — so there
+    * the commit is a rename(2), which replaces `dst` atomically. */
+  private def commit(spark: SparkSession, f: FileSystem, tmp: Path, dst: Path): Unit =
+    raw(f) match {
+      case local: RawLocalFileSystem =>
+        java.nio.file.Files.move(local.pathToFile(tmp).toPath, local.pathToFile(dst).toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      case _ =>
+        FileContext.getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
+          .rename(tmp, dst, Options.Rename.OVERWRITE)
+    }
 
   /** Nonces of live in-flight publish markers (`<prefix>.<nonce>.tmp`)
     * under `dir`, deleting markers older than `abandonedMs` (a publish
@@ -356,7 +379,7 @@ object Warehouse {
     * reimplementation of a table-format snapshot commit (what Iceberg's
     * metadata.json / Delta's _last_checkpoint give a multi-file state),
     * built from the same two public pieces as `publish`: materialize
-    * everything immutable first, then one FileContext.rename(OVERWRITE).
+    * everything immutable first, then one atomic pointer rename (`commit`).
     * A member absent from the map is absent from the snapshot — retirement
     * is non-listing, never deletion (old versions stay readable until
     * vacuum, the standard two-phase contract). */
@@ -397,9 +420,7 @@ object Warehouse {
       name -> v
     }
     writeSmall(f, tmp, versions.sortBy(_._1).map { case (n, v) => s"$n=$v" }.mkString("\n"))
-    val fc = FileContext.getFileContext(new Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, snapPointer(root), Options.Rename.OVERWRITE)
+    commit(spark, f, tmp, snapPointer(root))
     versions.toMap
   }
 

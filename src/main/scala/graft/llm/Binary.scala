@@ -139,9 +139,4 @@ object Binary {
       .orderBy("q_id", "rank")
   }
 
-  /** Serve-version salt for the published binary ranking (VERDICT r12
-    * item 3): tuning constants ride in the key — see Similarity's salts
-    * for the contract. */
-  private[llm] def serveV: String = s"bin1|$HalfBits|$NQueries|$Shortlist"
-
 }

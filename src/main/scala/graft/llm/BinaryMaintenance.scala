@@ -31,17 +31,11 @@ object BinaryMaintenance {
   private val NQueries = Binary.NQueries
   private val S = Similarity.MeanScale
 
-  private[llm] def muTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"binup_mu|${IvfMaintenance.BaseFrac}|${Binary.HalfBits}|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_binary/up_mu_$key"
-  }
+  private[llm] def muTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "binary", "up_mu", dir, "embeddings")
 
-  private[llm] def sigsRoot(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"binup_sigs|${IvfMaintenance.BaseFrac}|${Binary.HalfBits}|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_binary/up_sigs_$key"
-  }
+  private[llm] def sigsRoot(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "binary", "up_sigs", dir, "embeddings")
 
   /** Per-dimension means of an embeddings slice, by the scaled-BIGINT
     * exact discipline (Binary.muArray's arithmetic with a slice filter). */
@@ -59,14 +53,10 @@ object BinaryMaintenance {
   /** The FROZEN per-dimension means, trained on the base slice and
     * published once (d-row metadata; doubles round-trip parquet exactly). */
   private[llm] def publishedMu(s: SparkSession, dir: String,
-                               cut: Long): Array[Double] = {
-    val target = muTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target,
-        sliceMeans(t(s, dir, "embeddings").filter(col("vec_id") < cut)))
-    graft.etl.Warehouse.read(s, target).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).map(_._2)
-  }
+                               cut: Long): Array[Double] =
+    graft.etl.State.memo(s, muTarget(s, dir))(graft.etl.Warehouse.publish(s, _,
+        sliceMeans(t(s, dir, "embeddings").filter(col("vec_id") < cut))))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).map(_._2)
 
   /** Sign an id slice against the frozen means — the shared build of the
     * base member (pred = < cut) and the incremental add (pred = >= cut).
@@ -84,15 +74,13 @@ object BinaryMaintenance {
   /** The current signature snapshot (publishing the initial {base, delta}
     * pair on first call — one atomic commit covering both members). */
   private def currentSigs(s: SparkSession, dir: String,
-                          cut: Long): Map[String, String] = {
-    val root = sigsRoot(s, dir)
-    graft.etl.Warehouse.readSnapshot(s, root).getOrElse {
+                          cut: Long): Map[String, String] =
+    graft.etl.State.memoSnapshot(s, sigsRoot(s, dir)) { root =>
       val mu = publishedMu(s, dir, cut)
       graft.etl.Warehouse.publishSnapshot(s, root, Seq(
         "base" -> signSlice(s, dir, mu, cut, newRows = false),
         "delta" -> signSlice(s, dir, mu, cut, newRows = true)))
     }
-  }
 
   /** Union of every member the RESOLVED snapshot lists (name order —
     * deterministic file-level concatenation, no shuffle). */
@@ -215,10 +203,5 @@ object BinaryMaintenance {
       .select("segment", "n", "mean_adev", "bit_rate")
       .orderBy("segment")
   }
-
-  /** Serve-version salt for the published binary freshness ranking
-    * (VERDICT r12 item 3) — the base serve's salt plus the maintenance
-    * cut. */
-  private[llm] def upsertServeV: String = s"${Binary.serveV}|up|${IvfMaintenance.BaseFrac}"
 
 }

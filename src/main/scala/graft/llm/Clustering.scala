@@ -159,16 +159,6 @@ object Clustering {
           (count(lit(1)).cast("double") * lit(S.toDouble))).as("mean_dist2"))
       .orderBy("cluster")
 
-  /** Published-centroid location for a corpus dir, keyed by every training
-    * constant AND the fixture-file fingerprint (Tables.fixtureKey — a
-    * parameter change or a rewritten fixture can never serve stale
-    * centroids, which would silently break the serve-equals-train
-    * equivalence the oracle check depends on). */
-  private[graft] def clusterTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings", s"$K|$Iters|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_kmeans/centroids_$key"
-  }
-
   /** q_cluster_assign — the SERVE face of k-means, train-once/serve-many:
     * the first call for a corpus runs the Lloyd rounds and PUBLISHES the
     * final centroids through the warehouse pointer commit (deterministic
@@ -177,12 +167,15 @@ object Clustering {
     * sessions, the streaming router — assigns against the published
     * version with ZERO training in the plan. Output is identical to
     * q_cluster_kmeans (same centroids, same argmin), which is exactly the
-    * point: the oracle hash-matching both queries proves serve ≡ train. */
+    * point: the oracle hash-matching both queries proves serve ≡ train.
+    * The centroids live in a state-store root, so a code change or a
+    * rewritten fixture can never serve stale centroids, which would
+    * silently break that equivalence. */
   def assignPublished(s: SparkSession, dir: String): DataFrame = {
-    val target = clusterTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target, trained(s, dir)._1)
-    val cents = graft.etl.Warehouse.read(s, target).select("cluster", "c_emb")
+    val cents = graft.etl.State.memo(s,
+        graft.etl.State.root(s, "kmeans", "centroids", dir, "embeddings"))(
+        graft.etl.Warehouse.publish(s, _, trained(s, dir)._1))
+      .select("cluster", "c_emb")
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     assign(e, cents)
       .select(col("vec_id"), col("cluster"), col("d2").as("dist2"))

@@ -646,19 +646,13 @@ object Dedup {
     * other session — serves the closure from the published graph, the same
     * pattern as the IVF centroids and the incremental-dedup band index. */
   def components(s: SparkSession, dir: String): DataFrame = {
-    val target = componentsTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, s"$target/edges"))
-      publishNearDupGraph(s, dir, target)
+    // a state-store root: its key holds the corpus FILE listing, so a
+    // rewritten fixture dir (the stress specs do this) never serves a stale
+    // graph
+    val target = graft.etl.State.root(s, "dedup", "graph", dir, "documents")
+    graft.etl.State.memo(s, s"$target/edges")(_ => publishNearDupGraph(s, dir, target))
     componentsServe(s, target)
   }
-
-  /** Published-graph location. The key fingerprints the corpus FILES
-    * (name/size/mtime of every part), not just the dir path — a rewritten
-    * fixture dir (the stress specs do this) must never serve a stale
-    * graph. Metadata-only: one driver-side listing, no data read. */
-  private[graft] def componentsTarget(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_dedup/graph_" +
-      graft.Tables.fixtureKey(s, dir, "documents")
 
   /** Build + publish the near-dup graph: `members` (doc → its set's rep)
     * and `edges` (jaccard-verified rep pairs). Edges are LINEAR in the
@@ -689,13 +683,12 @@ object Dedup {
     * the pointer-jumping loop is a build cost, not a query cost — a
     * production system materializes the component assignment, it does not
     * re-run label propagation per query. The labels live under the same
-    * content-fingerprinted target as the edges, so a rewritten corpus can
-    * never serve a stale closure. */
+    * state-store root as the edges, so a rewritten corpus can never serve
+    * a stale closure. */
   def componentsServe(s: SparkSession, target: String): DataFrame = {
-    if (!graft.etl.Warehouse.exists(s, s"$target/labels"))
-      graft.etl.Warehouse.publish(s, s"$target/labels", closureLabels(s, target))
     val members = graft.etl.Warehouse.read(s, s"$target/members")
-    val labels = graft.etl.Warehouse.read(s, s"$target/labels")
+    val labels = graft.etl.State.memo(s, s"$target/labels")(
+      graft.etl.Warehouse.publish(s, _, closureLabels(s, target)))
     // Members inherit their rep's component in one join; reps that touch no
     // cross edge (and thus never entered the loop) keep their own id.
     val docComp = members
@@ -724,11 +717,6 @@ object Dedup {
     // (localCheckpoint blocks die with an executor).
     var changed = 1L
     var rounds = 0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var tPrev = System.nanoTime
-    def mark(tag: String): Unit = if (dbg) {
-      val t = System.nanoTime; System.err.println(f"CCDBG $tag ${(t - tPrev) / 1e9}%.3f"); tPrev = t
-    }
     // The loop's working set is the rep graph — orders of magnitude smaller
     // than the corpus. Size its shuffles from the MEASURED edge count
     // (≥20k edges/partition, never above the session setting — at 100 TB the
@@ -740,7 +728,6 @@ object Dedup {
     val aqePrev = conf.get("spark.sql.adaptive.enabled", "true")
     val partsPrev = conf.get("spark.sql.shuffle.partitions")
     val edgeCount = und.count() // also materializes the edge cache pre-loop
-    mark("edges")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.shuffle.partitions",
       math.min(partsPrev.toLong, edgeCount / 20000 + 1).toString)
@@ -748,7 +735,6 @@ object Dedup {
     try {
     labels = und.select(col("doc_a").as("doc_id")).distinct()
       .withColumn("comp", col("doc_id")).localCheckpoint()
-    mark("labels-init")
     while (changed > 0 && rounds < 64) {
       val nbr = und.join(labels, und("doc_b") === labels("doc_id"))
         .select(col("doc_a").as("doc_id"), col("comp"))
@@ -771,7 +757,6 @@ object Dedup {
       changed = tagged.filter(col("comp") =!= col("old")).count()
       labels = tagged.select("doc_id", "comp")
       rounds += 1
-      mark(s"round$rounds changed=$changed")
     }
     } finally {
       conf.set("spark.sql.adaptive.enabled", aqePrev)
@@ -780,12 +765,6 @@ object Dedup {
     und.unpersist()
     labels
   }
-
-  /** Published-graph location for the EMBEDDING near-dup graph (mirrors
-    * componentsTarget, fingerprinting the embeddings files). */
-  private[graft] def embedGraphTarget(s: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_dedup/embedgraph_" +
-      graft.Tables.fixtureKey(s, dir, "embeddings")
 
   /** Semantic-dedup clusters (the embedding analog of `components`, the
     * SemDeDup-shaped operator a training-data pipeline runs after embedding
@@ -801,8 +780,8 @@ object Dedup {
     * graph — still linear, because the LSH blocking already capped pair
     * candidates at ~N·B/2. */
   def embedComponents(s: SparkSession, dir: String): DataFrame = {
-    val target = embedGraphTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, s"$target/edges")) {
+    val target = graft.etl.State.root(s, "dedup", "embedgraph", dir, "embeddings")
+    graft.etl.State.memo(s, s"$target/edges") { _ =>
       val planes = Similarity.planesFor(
         graft.etl.TableStats.rowCount(s, dir, "embeddings"))
       graft.etl.Warehouse.publish(s, s"$target/members",
@@ -887,12 +866,9 @@ object Dedup {
   /** Batch split modulus: doc_id % DeltaMod == DeltaMod-1 → incoming batch. */
   val DeltaMod = 10
 
-  /** Published-index location, keyed by the fixture fingerprint + the hash
-    * design point (mirrors Similarity.centroidTarget). */
-  private[graft] def dedupIndexTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "documents", s"$DeltaMod|$K|$Bands")
-    s"${sys.props("java.io.tmpdir")}/graft_dedup/index_$key"
-  }
+  /** Published-index location (a state-store root). */
+  private[graft] def dedupIndexTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "dedup", "index", dir, "documents")
 
   /** Build + publish the corpus dedup index: one row per DISTINCT corpus
     * token set and band — (rep, ths, nt, band, bh). Collapsing to distinct
@@ -962,7 +938,7 @@ object Dedup {
     * published version directly. */
   def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val target = dedupIndexTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) publishDedupIndex(s, dir, target)
+    graft.etl.State.memo(s, target)(publishDedupIndex(s, dir, _))
     dedupDeltaServe(s, dir, target)
   }
 }

@@ -445,12 +445,4 @@ object Fusion {
       .orderBy("q_id", "rank")
   }
 
-  /** Serve-version salts for the published lexical rankings (VERDICT r12
-    * item 3): BM25's k1/b are inline literals in the shared score SQL, so
-    * they appear here verbatim; the query count and top-k bound the
-    * artifact shape — see Similarity's salts for the contract. */
-  private[llm] def lexServeV: String = s"lex1|k1=1.2|b=0.75|q$HybridQueries|k10"
-  private[llm] def lexUpsertServeV: String =
-    s"$lexServeV|up|${IvfMaintenance.BaseFrac}"
-
 }

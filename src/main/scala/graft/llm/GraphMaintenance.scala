@@ -39,46 +39,30 @@ object GraphMaintenance {
       col("vec_id"), col("embedding"),
       expr(Similarity.normFor(s)("embedding")).as("nrm"))
 
-  /** Published BASE-graph location (the descentTarget discipline, keyed by
-    * the split fraction too — a different cut is a different index). */
-  private[graft] def baseGraphTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"nndbase|${IvfMaintenance.BaseFrac}|${Similarity.DescentIters}|${Similarity.DescentK}|" +
-        s"${Similarity.LongLinkA.mkString("_")}|${Similarity.LongLinkB.mkString("_")}|" +
-        s"src${Similarity.DescentFiles}")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/nndbase_$key"
-  }
+  /** Published BASE-graph location (a state-store root). */
+  private[graft] def baseGraphTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "nndbase", dir, "embeddings")
 
   /** The frozen base graph: NN-descent over the base slice only, published
     * src-clustered once (construct-once/serve-many). */
-  private[graft] def publishedBaseGraph(s: SparkSession, dir: String): DataFrame = {
-    val target = baseGraphTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) {
+  private[graft] def publishedBaseGraph(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, baseGraphTarget(s, dir)) { target =>
       val cut = cutOf(s, dir)
       graft.etl.Warehouse.publishClustered(s, target,
         Similarity.descentGraphOn(
           withNorm(s, dir).filter(col("vec_id") < cut), cut,
           Similarity.DescentIters),
         "src", Similarity.DescentFiles)
-    }
-    graft.etl.Warehouse.read(s, target).select("src", "dst", "cos", "rnk")
-  }
+    }.select("src", "dst", "cos", "rnk")
 
   /** Published DELTA-adjacency location (the inserted nodes' links —
     * deterministic insert, so publish-once through the pointer commit). */
-  private[graft] def insTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"nndins|${IvfMaintenance.BaseFrac}|${Similarity.DescentIters}|${Similarity.DescentK}|" +
-        s"${Similarity.GraphK}|${Similarity.BeamWidth}|${Similarity.SearchIters}")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/nndins_$key"
-  }
+  private[graft] def insTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "nndins", dir, "embeddings")
 
-  private def publishedInserted(s: SparkSession, dir: String): DataFrame = {
-    val target = insTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target, insert(s, dir))
-    graft.etl.Warehouse.read(s, target).select("vec_id", "rnk", "n_id", "cos")
-  }
+  private def publishedInserted(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, insTarget(s, dir))(graft.etl.Warehouse.publish(s, _, insert(s, dir)))
+      .select("vec_id", "rnk", "n_id", "cos")
 
   /** Snapshot ROOT for the graph family's SERVE-EDGE segments — base and
     * delta are MEMBERS of one multi-table snapshot (the IvfMaintenance
@@ -86,13 +70,8 @@ object GraphMaintenance {
     * base version and RETIRES the delta in the same pointer swap, so a
     * reader never sees the new base with the old delta (double edges) or
     * neither. */
-  private[graft] def serveRoot(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"nndsrv|${IvfMaintenance.BaseFrac}|${Similarity.DescentIters}|${Similarity.DescentK}|" +
-        s"${Similarity.GraphK}|${Similarity.BeamWidth}|${Similarity.SearchIters}|" +
-        s"${Similarity.LongLinkA.mkString("_")}|${Similarity.LongLinkB.mkString("_")}")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/nndsrv_$key"
-  }
+  private[graft] def serveRoot(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "nndsrv", dir, "embeddings")
 
   /** Range-shape an edge frame so every part-file owns a narrow src range
     * (row-group min/max stats make the serve's In(src) frontier filter
@@ -109,9 +88,8 @@ object GraphMaintenance {
     * long-link explode — the publishedServeGraph discipline); delta = the
     * inserted adjacency SYMMETRIZED (a base node's back-link is what makes
     * a late node REACHABLE, the HNSW bidirectional-link effect). */
-  private[graft] def currentServeGraph(s: SparkSession, dir: String): Map[String, String] = {
-    val root = serveRoot(s, dir)
-    graft.etl.Warehouse.readSnapshot(s, root).getOrElse {
+  private[graft] def currentServeGraph(s: SparkSession, dir: String): Map[String, String] =
+    graft.etl.State.memoSnapshot(s, serveRoot(s, dir)) { root =>
       val cut = cutOf(s, dir)
       val longLinks = withNorm(s, dir).filter(col("vec_id") < cut)
         .select(col("vec_id").as("src"))
@@ -130,7 +108,6 @@ object GraphMaintenance {
         "delta" -> bySrc(delta.unionByName(
           delta.select(col("dst").as("src"), col("src").as("dst"))))))
     }
-  }
 
   /** Union of every member the RESOLVED snapshot lists — a file-level
     * concatenation; after compaction this is one table. */
@@ -283,11 +260,5 @@ object GraphMaintenance {
         col("n_id"), col("cos"))
       .orderBy("vec_id", "rnk")
   }
-
-  /** Serve-version salt for the published graph freshness ranking
-    * (VERDICT r12 item 3) — the base serve's salt plus the maintenance
-    * cut. */
-  private[llm] def upsertServeV: String =
-    s"${Similarity.graphServeV}|up|${IvfMaintenance.BaseFrac}"
 
 }

@@ -42,11 +42,8 @@ object IvfMaintenance {
       col("vec_id"), col("embedding"),
       expr(Similarity.normFor(s)("embedding")).as("nrm"))
 
-  private[graft] def centsTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"ivfup_cents|$BaseFrac|${Similarity.Cells}|${Similarity.TrainIters}|${Similarity.MeanScale}")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/up_cents_$key"
-  }
+  private[graft] def centsTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "up_cents", dir, "embeddings")
 
   /** Snapshot ROOT for the list tables: base and delta are MEMBERS of one
     * multi-table snapshot (Warehouse.publishSnapshot), because maintenance
@@ -54,23 +51,17 @@ object IvfMaintenance {
     * delta into a new base version and RETIRES the delta, and a reader
     * must never observe the new base with the old delta (double rows) or
     * neither. One `_SNAPSHOT` pointer resolves every member. */
-  private[graft] def listsRoot(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"ivfup_lists|$BaseFrac|${Similarity.Cells}|${Similarity.TrainIters}|${Similarity.MeanScale}")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/up_lists_$key"
-  }
+  private[graft] def listsRoot(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "up_lists", dir, "embeddings")
 
   /** Centroids trained on the BASE corpus only, published once (the frozen
     * index version late batches are measured against). `private[llm]`:
     * the composite's maintenance path (IvfPq.upsertAdcTopK) freezes the
     * SAME coarse stage. */
-  private[llm] def cents(s: SparkSession, dir: String, cut: Long): DataFrame = {
-    val target = centsTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target,
-        Similarity.trainCentroidsOn(withNorm(s, dir).filter(col("vec_id") < cut)))
-    graft.etl.Warehouse.read(s, target).select("cent_id", "c_emb")
-  }
+  private[llm] def cents(s: SparkSession, dir: String, cut: Long): DataFrame =
+    graft.etl.State.memo(s, centsTarget(s, dir))(graft.etl.Warehouse.publish(s, _,
+        Similarity.trainCentroidsOn(withNorm(s, dir).filter(col("vec_id") < cut))))
+      .select("cent_id", "c_emb")
 
   /** One frozen-centroid assignment pass over an id slice — the shared
     * build of the base lists (pred = < cut) and the incremental add
@@ -88,15 +79,12 @@ object IvfMaintenance {
   /** The current snapshot (publishing the initial {base, delta} pair on
     * first call — one atomic commit covering both members). */
   private[graft] def currentLists(s: SparkSession, dir: String,
-                                  cut: Long): Map[String, String] = {
-    val root = listsRoot(s, dir)
-    graft.etl.Warehouse.readSnapshot(s, root).getOrElse {
-      graft.etl.Warehouse.publishSnapshot(s, root, Seq(
+                                  cut: Long): Map[String, String] =
+    graft.etl.State.memoSnapshot(s, listsRoot(s, dir))(
+      graft.etl.Warehouse.publishSnapshot(s, _, Seq(
         "base" -> assignSlice(s, dir, cut, newRows = false),
         "delta" -> assignSlice(s, dir, cut, newRows = true)),
-        Some("cent_id"))
-    }
-  }
+        Some("cent_id")))
 
   /** Every vector with its frozen-centroid cell id — the current snapshot's
     * full membership (the composite's residual stage reads this too). */
@@ -220,9 +208,5 @@ object IvfMaintenance {
       .select("q_id", "n_id", "cos", "rank", "is_new")
       .orderBy("q_id", "rank")
   }
-
-  /** Serve-version salt for the published ivf freshness ranking (VERDICT
-    * r12 item 3) — the base serve's salt plus the maintenance cut. */
-  private[llm] def upsertServeV: String = s"${Similarity.ivfServeV}|up|$BaseFrac"
 
 }

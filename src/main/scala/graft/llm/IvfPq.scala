@@ -63,22 +63,13 @@ object IvfPq {
     s"(CAST(CAST($x AS DOUBLE) * $S AS BIGINT) - " +
       s"CAST(FLOOR($c * $S) AS BIGINT)) / CAST($S AS DOUBLE)"
 
-  /** Published trained centroids (train-once/serve-many; publishes on the
-    * first call of the whole IVF family, whichever query gets there). */
-  private[llm] def cents(s: SparkSession, dir: String): DataFrame = {
-    val target = Similarity.centroidTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      Similarity.publishCentroids(s, dir, target)
-    graft.etl.Warehouse.read(s, target).select("cent_id", "c_emb")
-  }
-
   /** (vec_id, cent_id, m, sv): every vector's M residual subvectors against
     * its own cell's snapped centroid — one map pass over the published
     * inverted lists joined to the broadcast k×d centroid frame; the M
     * fan-out is a constant, never a shuffle. */
   private[llm] def residualSubvecs(s: SparkSession, dir: String): DataFrame =
     Similarity.publishedAssignments(s, dir)
-      .join(broadcast(cents(s, dir)), "cent_id")
+      .join(broadcast(Similarity.centroids(s, dir)), "cent_id")
       .withColumn("r", expr(
         s"zip_with(embedding, c_emb, (x, c) -> ${residSql("x", "c")})"))
       .select(col("vec_id"), col("cent_id"), explode(expr(
@@ -93,48 +84,31 @@ object IvfPq {
   def trainBooks(s: SparkSession, dir: String): DataFrame =
     Pq.lloydBooks(residualSubvecs(s, dir).select("vec_id", "m", "sv"))
 
-  /** Published residual-codebook location (fixture fingerprint + every
-    * constant of BOTH stages — a coarse-quantizer retrain must orphan the
-    * residual books too, since residuals are measured against it). */
-  private[graft] def booksTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"ivfpq|${Similarity.Cells}|${Similarity.TrainIters}|$M|$SubDim|$K|$Iters|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/ivfpq_books_$key"
-  }
+  /** Published residual-codebook location (a state-store root). */
+  private[graft] def booksTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "ivfpq_books", dir, "embeddings")
 
-  private[llm] def books(s: SparkSession, dir: String): DataFrame = {
-    val target = booksTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target, trainBooks(s, dir))
-    graft.etl.Warehouse.read(s, target).select("m", "code", "csv")
-  }
+  private[llm] def books(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, booksTarget(s, dir))(graft.etl.Warehouse.publish(s, _, trainBooks(s, dir)))
+      .select("m", "code", "csv")
 
   /** Published CODE-LIST location: the per-cell inverted lists of
     * (vec_id, m, code) rows, hive-partitioned by cell — the disk layout
-    * the serve prunes against. Keyed like booksTarget plus the list
-    * marker, so a codebook retrain orphans stale lists. */
-  private[graft] def codesTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"ivfpqcodes|${Similarity.Cells}|${Similarity.TrainIters}|$M|$SubDim|$K|$Iters|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/ivfpq_codes_$key"
-  }
+    * the serve prunes against (a state-store root). */
+  private[graft] def codesTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "ivfpq_codes", dir, "embeddings")
 
   /** The IVF-PQ index body: every vector's M residual codes in its cell's
     * partition directory. Build = one assignment pass of the residual
     * subvectors against the broadcast books; publish-once through the
     * atomic pointer (deterministic build — racing writers publish
     * identical bytes). */
-  private[graft] def publishedCodes(s: SparkSession, dir: String): DataFrame = {
-    val target = codesTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) {
-      val cd = Pq.assign(residualSubvecs(s, dir), books(s, dir))
-        .select("vec_id", "m", "code", "cent_id")
-      graft.etl.Warehouse.publishPartitioned(s, target, cd, "cent_id")
-    }
-    // partition-column inference reads dir names as int — restore long
-    graft.etl.Warehouse.read(s, target).select(col("vec_id"), col("m"),
-      col("code"), col("cent_id").cast("long").as("cent_id"))
-  }
+  private[graft] def publishedCodes(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, codesTarget(s, dir))(graft.etl.Warehouse.publishPartitioned(s, _,
+        Pq.assign(residualSubvecs(s, dir), books(s, dir)).select("vec_id", "m", "code", "cent_id"),
+        "cent_id"))
+      // partition-column inference reads dir names as int — restore long
+      .select(col("vec_id"), col("m"), col("code"), col("cent_id").cast("long").as("cent_id"))
 
   /** ADC shortlist per sample query. The LUT is PER PROBED CELL (query
     * residual re-expressed against each probed centroid): NQueries × NProbe
@@ -169,7 +143,7 @@ object IvfPq {
     val q = t(s, dir, "embeddings").filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("embedding"))
     val qres = probes.join(broadcast(q), "q_id")
-      .join(broadcast(cents(s, dir)), "cent_id")
+      .join(broadcast(Similarity.centroids(s, dir)), "cent_id")
       .withColumn("qr", expr(
         s"zip_with(embedding, c_emb, (x, c) -> ${residSql("x", "c")})"))
       .select(col("q_id"), col("crn"), col("cent_id"), explode(expr(
@@ -271,21 +245,15 @@ object IvfPq {
 
   /** Published location of the maintenance books (trained on BASE
     * residuals only — frozen before the late batch arrives). */
-  private[graft] def upBooksTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"ivfpqup_books|${IvfMaintenance.BaseFrac}|${Similarity.Cells}|${Similarity.TrainIters}|$M|$SubDim|$K|$Iters|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/ivfpqup_books_$key"
-  }
+  private[graft] def upBooksTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "ivfpqup_books", dir, "embeddings")
 
   /** Snapshot ROOT for the composite's code lists: base and delta codes
     * are MEMBERS of one multi-table snapshot (the IvfMaintenance listsRoot
     * discipline) so compaction can fold the delta and retire it in ONE
     * pointer swap. */
-  private[graft] def upListsRoot(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"ivfpqup_lists|${IvfMaintenance.BaseFrac}|${Similarity.Cells}|${Similarity.TrainIters}|$M|$SubDim|$K|$Iters|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/ivfpqup_lists_$key"
-  }
+  private[graft] def upListsRoot(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "ivfpqup_lists", dir, "embeddings")
 
   /** Residual subvectors of EVERY vector against the FROZEN base-trained
     * coarse stage: the snapshot's full membership (cell ids from the
@@ -308,16 +276,13 @@ object IvfPq {
 
   /** Books trained on the BASE slice's residuals only (Pq.lloydBooks over
     * the filtered frame — the freeze), published once. */
-  private def upBooks(s: SparkSession, dir: String): DataFrame = {
-    val target = upBooksTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) {
+  private def upBooks(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, upBooksTarget(s, dir)) { target =>
       val cut = IvfMaintenance.baseCut(s, dir)
       graft.etl.Warehouse.publish(s, target, Pq.lloydBooks(
         upResidualSubvecs(s, dir).filter(col("vec_id") < cut)
           .select("vec_id", "m", "sv")))
-    }
-    graft.etl.Warehouse.read(s, target).select("m", "code", "csv")
-  }
+    }.select("m", "code", "csv")
 
   /** One frozen-book encode pass over an id slice — the shared build of
     * the base code lists (pred = < cut) and the encode-add (pred = >= cut;
@@ -335,15 +300,12 @@ object IvfPq {
   /** The current code-list snapshot (publishing the initial {base, delta}
     * pair on first call — one atomic commit covering both members, each
     * hive-partitioned by cell). */
-  private[graft] def currentUpCodes(s: SparkSession, dir: String): Map[String, String] = {
-    val root = upListsRoot(s, dir)
-    graft.etl.Warehouse.readSnapshot(s, root).getOrElse {
-      graft.etl.Warehouse.publishSnapshot(s, root, Seq(
+  private[graft] def currentUpCodes(s: SparkSession, dir: String): Map[String, String] =
+    graft.etl.State.memoSnapshot(s, upListsRoot(s, dir))(
+      graft.etl.Warehouse.publishSnapshot(s, _, Seq(
         "base" -> upCodesSlice(s, dir, newRows = false),
         "delta" -> upCodesSlice(s, dir, newRows = true)),
-        Some("cent_id"))
-    }
-  }
+        Some("cent_id")))
 
   /** Union of every member the RESOLVED snapshot lists — a file-level
     * concatenation of per-cell partitioned tables; after compaction this
@@ -528,14 +490,5 @@ object IvfPq {
         col("n_hit").cast("double") / col("n_exact").cast("double"))
       .orderBy("q_id")
   }
-
-  /** Serve-version salts for the published ivfpq rankings (VERDICT r12
-    * item 3): the composite's coarse + book + shortlist constants ride in
-    * the key — see Similarity's salts for the contract. */
-  private[llm] def bruteL2ServeV: String = "exactl2v1|q8|k10"
-  private[llm] def rerankServeV: String =
-    s"ivfpq1|${Similarity.Cells}|${Similarity.NProbe}|$M|$SubDim|$K|$Iters|$Shortlist|$S"
-  private[llm] def upsertRerankServeV: String =
-    s"$rerankServeV|up|${IvfMaintenance.BaseFrac}"
 
 }

@@ -12,8 +12,8 @@ import TextHash.tokens
   * serve reads BOTH towers from published artifacts, exactly like the
   * trained-IVF dense side).
   *
-  * Three warehouse-published members, all derived in ONE corpus tokenize
-  * pass and committed through the pointer-commit protocol
+  * Three warehouse-published members, all derived from ONE corpus tokenize
+  * plan and committed through the pointer-commit protocol
   * (graft.etl.Warehouse — the publishedAssignments discipline; the build
   * is deterministic, so concurrent writers publish identical bytes and
   * last-writer-wins is benign):
@@ -44,9 +44,9 @@ import TextHash.tokens
   * All columns are exact BIGINTs (counts and sums), so the parquet
   * round-trip is bit-free of risk and every serve computes the identical
   * IEEE score the inline derivation produced — the DuckDB twins are
-  * unchanged and the hashes must not move. Targets are keyed by the
-  * fixture fingerprint (Tables.fixtureKey), the index-build-id analog:
-  * a rewritten corpus can never serve a stale index. */
+  * unchanged and the hashes must not move. Targets are state-store roots
+  * (graft.etl.State), the index-build-id analog: a rewritten corpus or a
+  * code change can never serve a stale index. */
 object LexIndex {
 
   /** Part-files for the clustered postings (the DescentFiles tier at the
@@ -54,59 +54,45 @@ object LexIndex {
     * 128 MB–1 GB object-store sweet spot). */
   val PostingFiles = 4
 
-  private def target(s: SparkSession, dir: String, member: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "documents", s"lexidx1|$member")
-    s"${sys.props("java.io.tmpdir")}/graft_lex/${member}_$key"
-  }
+  /** A member's state-store root. */
+  private def target(s: SparkSession, dir: String, member: String): String =
+    graft.etl.State.root(s, "lex", member, dir, "documents")
 
-  /** Build all three members from one corpus pass and publish whichever
-    * are missing. The tokenize+explode runs once; df derives FROM tf (the
-    * tfidf vocabulary-exchange shape); postings join tf ⋈ df ⋈ dl on the
-    * build side so serves never pay those joins. */
-  private def ensurePublished(s: SparkSession, dir: String): Unit = {
-    val pT = target(s, dir, "postings")
-    val vT = target(s, dir, "vocab")
-    val sT = target(s, dir, "stats")
-    val missing = Seq(pT, vT, sT).exists(!graft.etl.Warehouse.exists(s, _))
-    if (missing) {
-      val docs = t(s, dir, "documents")
-      val docToks = docs.select(col("doc_id"),
-        explode(tokens(col("text"))).as("token"))
-      val tf = docToks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val dfx = tf.select("token").groupBy("token").agg(count(lit(1)).as("df"))
-      val dl = docs.select(col("doc_id"),
-        size(tokens(col("text"))).cast("long").as("dl"))
-      val post = tf.join(dfx, "token").join(dl, "doc_id")
-        .select("token", "doc_id", "tf", "df", "dl")
-      val st = docs.agg(count(lit(1)).as("n_docs"),
-        sum(size(tokens(col("text"))).cast("long")).as("tot"))
-      if (!graft.etl.Warehouse.exists(s, pT))
-        graft.etl.Warehouse.publishClustered(s, pT, post, "token", PostingFiles)
-      if (!graft.etl.Warehouse.exists(s, vT))
-        graft.etl.Warehouse.publishClustered(s, vT, dfx, "token", PostingFiles)
-      if (!graft.etl.Warehouse.exists(s, sT))
-        graft.etl.Warehouse.publish(s, sT, st)
-    }
+  /** The build frames of all three members over one corpus tokenize plan;
+    * df derives FROM tf (the tfidf vocabulary-exchange shape); postings
+    * join tf ⋈ df ⋈ dl on the build side so serves never pay those joins.
+    * Each member publishes on its first read. */
+  private def build(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val docs = t(s, dir, "documents")
+    val docToks = docs.select(col("doc_id"),
+      explode(tokens(col("text"))).as("token"))
+    val tf = docToks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    val dfx = tf.select("token").groupBy("token").agg(count(lit(1)).as("df"))
+    val dl = docs.select(col("doc_id"),
+      size(tokens(col("text"))).cast("long").as("dl"))
+    val post = tf.join(dfx, "token").join(dl, "doc_id")
+      .select("token", "doc_id", "tf", "df", "dl")
+    val st = docs.agg(count(lit(1)).as("n_docs"),
+      sum(size(tokens(col("text"))).cast("long")).as("tot"))
+    (post, dfx, st)
   }
 
   /** The published inverted index: (token, doc_id, tf, df, dl), clustered
     * on token — filter it with a literal IN over the query terms so the
     * pushed predicate prunes row groups at the scan. */
-  private[llm] def postings(s: SparkSession, dir: String): DataFrame = {
-    ensurePublished(s, dir)
-    graft.etl.Warehouse.read(s, target(s, dir, "postings"))
+  private[llm] def postings(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, target(s, dir, "postings"))(graft.etl.Warehouse.publishClustered(s, _,
+        build(s, dir)._1, "token", PostingFiles))
       .select("token", "doc_id", "tf", "df", "dl")
-  }
 
   /** The published dictionary: (token, df). */
-  private[llm] def vocab(s: SparkSession, dir: String): DataFrame = {
-    ensurePublished(s, dir)
-    graft.etl.Warehouse.read(s, target(s, dir, "vocab")).select("token", "df")
-  }
+  private[llm] def vocab(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, target(s, dir, "vocab"))(graft.etl.Warehouse.publishClustered(s, _,
+        build(s, dir)._2, "token", PostingFiles))
+      .select("token", "df")
 
   /** The published 1-row corpus statistic: (n_docs, tot). */
-  private[llm] def stats(s: SparkSession, dir: String): DataFrame = {
-    ensurePublished(s, dir)
-    graft.etl.Warehouse.read(s, target(s, dir, "stats")).select("n_docs", "tot")
-  }
+  private[llm] def stats(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, target(s, dir, "stats"))(graft.etl.Warehouse.publish(s, _, build(s, dir)._3))
+      .select("n_docs", "tot")
 }

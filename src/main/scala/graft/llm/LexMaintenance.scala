@@ -47,11 +47,8 @@ object LexMaintenance {
     math.floor(graft.etl.TableStats.rowCount(s, dir, "documents")
       * IvfMaintenance.BaseFrac).toLong
 
-  private[graft] def snapRoot(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "documents",
-      s"lexup|${IvfMaintenance.BaseFrac}|lexidx1")
-    s"${sys.props("java.io.tmpdir")}/graft_lex/up_$key"
-  }
+  private[graft] def snapRoot(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "lex", "up", dir, "documents")
 
   /** The three index members of ONE document slice, from one tokenize pass
     * over that slice only — the shared build of the base members
@@ -76,15 +73,13 @@ object LexMaintenance {
 
   /** The current index snapshot (publishing the initial base+delta member
     * set on first call — one atomic commit covering all six members). */
-  private[llm] def current(s: SparkSession, dir: String): Map[String, String] = {
-    val root = snapRoot(s, dir)
-    graft.etl.Warehouse.readSnapshot(s, root).getOrElse {
+  private[llm] def current(s: SparkSession, dir: String): Map[String, String] =
+    graft.etl.State.memoSnapshot(s, snapRoot(s, dir)) { root =>
       val cut = baseCut(s, dir)
       graft.etl.Warehouse.publishSnapshot(s, root,
         sliceMembers(s, dir, cut, newRows = false) ++
           sliceMembers(s, dir, cut, newRows = true))
     }
-  }
 
   private[llm] def member(s: SparkSession, dir: String, snap: Map[String, String],
                      name: String): DataFrame =

@@ -128,10 +128,7 @@ object Mining {
     * is the ground-truth SAMPLE path, this is the serve. Output schema
     * matches `hardNegatives` exactly. */
   def hardNegativesIvf(s: SparkSession, dir: String): DataFrame = {
-    val target = Similarity.centroidTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      Similarity.publishCentroids(s, dir, target)
-    val cents = graft.etl.Warehouse.read(s, target).select("cent_id", "c_emb")
+    val cents = Similarity.centroids(s, dir)
     val lists = Similarity.publishedAssignments(s, dir)
     val e = corpus(s, dir)
     val probes = Similarity.rankAgainst(e.filter(col("vec_id") < 8), cents)

@@ -32,25 +32,19 @@ import org.apache.spark.sql.functions._
   * on the read path. */
 object PackMaintenance {
 
-  /** Snapshot ROOT for the packed-bin segments. The salt embeds every
-    * constant the layout depends on (the ivfup_cents discipline —
-    * ADVICE r12): changing any of them re-keys the artifact mechanically,
-    * so a stale /tmp layout from an older build can never serve. */
-  private[graft] def packRoot(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "documents",
-      s"packup_bins|${IvfMaintenance.BaseFrac}|${Curation.PackBudget}|" +
-        s"${Curation.PackShards}|${Curation.ChunkSize}|${Curation.ChunkStride}")
-    s"${sys.props("java.io.tmpdir")}/graft_pack/up_bins_$key"
-  }
+  /** Snapshot ROOT for the packed-bin segments: a state-store root, whose
+    * key holds the code fingerprint, so a stale layout from an older build
+    * can never serve. */
+  private[graft] def packRoot(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "pack", "up_bins", dir, "documents")
 
   /** The current snapshot (publishing the initial {base, delta} pair on
     * first call — one atomic commit covering both members, the
     * IvfMaintenance.currentLists shape). The chunk stream and column
     * contract are the SHARED definitions (Curation.uniqChunks /
     * Curation.PackCols), so artifact and declaration cannot drift. */
-  private[graft] def currentSegments(s: SparkSession, dir: String): Map[String, String] = {
-    val root = packRoot(s, dir)
-    graft.etl.Warehouse.readSnapshot(s, root).getOrElse {
+  private[graft] def currentSegments(s: SparkSession, dir: String): Map[String, String] =
+    graft.etl.State.memoSnapshot(s, packRoot(s, dir)) { root =>
       val cut = LexMaintenance.baseCut(s, dir)
       val uniq = Curation.uniqChunks(s, dir)
       val base = Curation.packBins(uniq.filter(col("doc_id") < cut))
@@ -62,7 +56,6 @@ object PackMaintenance {
       graft.etl.Warehouse.publishSnapshot(s, root,
         Seq("base" -> base, "delta" -> delta), Some("source"))
     }
-  }
 
   /** Union of every member the RESOLVED snapshot lists, in name order — a
     * file-level concatenation, no shuffle. The hive partition column is

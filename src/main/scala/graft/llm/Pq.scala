@@ -23,8 +23,8 @@ import graft.Tables._
   *    subspace fan-out is a constant M map stage, one corpus scan per Lloyd
   *    round regardless of M); codebooks are M·K·SubDim doubles — metadata
   *    tier, broadcast, never shuffled;
-  *  - train-once/serve-many through the warehouse pointer commit
-  *    (Tables.fixtureKey — the ivfTrainedTopK discipline);
+  *  - train-once/serve-many through a state-store root (graft.etl.State —
+  *    the ivfTrainedTopK discipline);
   *  - encoding is one broadcast-join map pass; the ADC estimate is an
   *    ORDER-FIXED fold over the M partial distances (m ascending), so the
   *    DuckDB twin's list_sum(list(pd ORDER BY m)) replays it bit-for-bit.
@@ -107,22 +107,15 @@ object Pq {
     books
   }
 
-  /** Published-codebook location (fixture fingerprint + every design
-    * constant — the centroidTarget discipline). */
-  private[graft] def pqTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"pq|$M|$SubDim|$K|$Iters|$S")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/pq_$key"
-  }
+  /** Published-codebook location (a state-store root). */
+  private[graft] def pqTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "pq", dir, "embeddings")
 
   /** Train-once/serve-many codebooks (deterministic training — racing
     * writers publish identical bytes, last-writer-wins benign). */
-  private def books(s: SparkSession, dir: String): DataFrame = {
-    val target = pqTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target, trainBooks(s, dir))
-    graft.etl.Warehouse.read(s, target).select("m", "code", "csv")
-  }
+  private def books(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, pqTarget(s, dir))(graft.etl.Warehouse.publish(s, _, trainBooks(s, dir)))
+      .select("m", "code", "csv")
 
   private def codesOf(s: SparkSession, dir: String): DataFrame =
     assign(subvecs(s, dir), books(s, dir)).select("vec_id", "m", "code")

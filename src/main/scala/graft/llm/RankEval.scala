@@ -150,7 +150,7 @@ object RankEval {
     * explicit 0.0, left-associative sum in member order, top-10 per
     * query. Shared by the audit's ensemble/hybrid rows and the diff
     * feed (RankEvalSpec pins fold ≡ frame fusion pair-for-pair). */
-  private def rrfFold(members: Seq[Seq[(Long, Long, Long)]]): Seq[(Long, Long, Long)] = {
+  private[llm] def rrfFold(members: Seq[Seq[(Long, Long, Long)]]): Seq[(Long, Long, Long)] = {
     val maps = members.map(_.map(t => (t._1, t._2) -> t._3).toMap)
     val pairs = members.flatMap(_.map(t => (t._1, t._2))).distinct
     pairs.map { p =>

@@ -24,73 +24,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Only consumers that treat a ranking as INPUT EVIDENCE (fusions, recall
   * and rank-quality audits, ablation sweeps) read the published copy.
   *
-  * Keying: fixture content (file names/sizes/mtimes via
-  * `Tables.fixtureKey`) + the serve VARIANT + that variant's SERVE
-  * VERSION + a layout version const. Base and upsert serves are
-  * DIFFERENT artifacts under the same fixture (the upsert ranking
-  * carries the late batch) — distinct variants keep a freshness audit
-  * from ever reading a stale base ranking. The serve version is OWNED
-  * NEXT TO EACH SERVE (Similarity/IvfPq/Binary/Fusion/…ServeV — VERDICT
-  * r12 item 3 / ADVICE r12): it embeds the serve's tuning constants
-  * (NProbe, Cells, Shortlist, FusionK-tier bounds, BaseFrac, MeanScale),
-  * so changing one re-keys the published artifact mechanically, and a
-  * pure-logic serve change bumps the version literal in the SAME FILE as
-  * the serve — forgetting is impossible to do in one file. */
+  * Keying: each (fixture, variant) ranking is a state-store root
+  * (graft.etl.State): its key holds the fixture table's file listing and
+  * the code fingerprint, so a rewritten fixture, a tuning-constant change
+  * or a serve-logic change re-keys every published ranking with nothing to
+  * bump by hand. Base and upsert serves are DIFFERENT variants under the
+  * same fixture (the upsert ranking carries the late batch) — distinct
+  * variants keep a freshness audit from ever reading a stale base
+  * ranking. */
 object Rankings {
 
-  /** Bump only when the published artifact's LAYOUT (row schema / writer
-    * format) changes — serve semantics re-key via versionOf. */
-  private val LayoutV = "rankings-v2"
-
-  /** The serve-version salt for one variant — resolved from the constant
-    * owned next to that serve's code. */
-  private[llm] def versionOf(variant: String): String = variant match {
-    case "exact_cos"           => Similarity.bruteServeV
-    case "exact_l2"            => IvfPq.bruteL2ServeV
-    case "ivf"                 => Similarity.ivfServeV
-    case "graph"               => Similarity.graphServeV
-    case "binary"              => Binary.serveV
-    case "ivfpq"               => IvfPq.rerankServeV
-    case "lex"                 => Fusion.lexServeV
-    case "ivf_upsert"          => IvfMaintenance.upsertServeV
-    case "graph_upsert"        => GraphMaintenance.upsertServeV
-    case "binary_upsert"       => BinaryMaintenance.upsertServeV
-    case "ivfpq_upsert_rerank" => IvfPq.upsertRerankServeV
-    case "lex_upsert"          => Fusion.lexUpsertServeV
-  }
-
-  /** Tables a variant's serve reads — the fixture-key basis. */
-  private def tablesOf(variant: String): Seq[String] = variant match {
-    case "lex" | "lex_upsert" => Seq("documents")
-    case _                    => Seq("embeddings")
-  }
-
-  /** The published-ranking target for one (fixture, variant) — exposed to
-    * the publish-once spec (RankingsSpec). */
+  /** The published-ranking target for one (fixture, variant), keyed on the
+    * one table the variant's serve reads — exposed to the publish-once spec
+    * (RankingsSpec). */
   private[llm] def targetOf(s: SparkSession, dir: String, variant: String): String =
-    targetOf(s, dir, variant, versionOf(variant))
-
-  /** The explicit-version overload: what the key WOULD be under a
-    * different serve version — exposed so RankingsSpec can prove a
-    * version change moves the target and forces a republish. */
-  private[llm] def targetOf(s: SparkSession, dir: String, variant: String,
-                            serveV: String): String = {
-    val key = tablesOf(variant)
-      .map(t => graft.Tables.fixtureKey(s, dir, t, s"$LayoutV|$variant|$serveV"))
-      .mkString("_")
-    s"${sys.props("java.io.tmpdir")}/graft_rankings/${variant}_$key"
-  }
+    graft.etl.State.root(s, "rankings", variant, dir,
+      if (variant.startsWith("lex")) "documents" else "embeddings")
 
   /** Serve-once/audit-many: the published Q·10 ranking for one (fixture,
     * variant). `serve` is by-name — it executes only on the publishing
     * call. */
   private def served(s: SparkSession, dir: String, variant: String)
-                    (serve: => DataFrame): DataFrame = {
-    val t = targetOf(s, dir, variant)
-    if (!graft.etl.Warehouse.exists(s, t))
-      graft.etl.Warehouse.publish(s, t, serve)
-    graft.etl.Warehouse.read(s, t)
-  }
+                    (serve: => DataFrame): DataFrame =
+    graft.etl.State.memo(s, targetOf(s, dir, variant))(graft.etl.Warehouse.publish(s, _, serve))
 
   // ——— exact ground-truth sides (one per metric space) ———
 

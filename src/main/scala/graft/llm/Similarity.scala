@@ -219,9 +219,7 @@ object Similarity {
     * streaming routing twin (StreamTwins.ivfProbe); StreamTwinsSpec pins
     * drained ≡ batch on it. */
   private[graft] def probeCells(s: SparkSession, dir: String): DataFrame = {
-    val target = centroidTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) publishCentroids(s, dir, target)
-    val cents = graft.etl.Warehouse.read(s, target).select("cent_id", "c_emb")
+    val cents = centroids(s, dir)
     val e = withNorm(s, dir).filter(col("vec_id") < 8)
     rankAgainst(e, cents).filter(col("crn") <= NProbe)
       .select(col("vec_id").as("q_id"), col("crn"), col("cent_id"))
@@ -305,16 +303,12 @@ object Similarity {
     cents
   }
 
-  /** Published-index location for a corpus dir: keyed by the fixture-file
-    * fingerprint and every training constant (Tables.fixtureKey), so neither
-    * a parameter change nor a rewritten fixture can serve a stale index (the
-    * analog of an index build id). Lives under the JVM tmpdir — the
-    * warehouse root on a real deployment. */
-  private[graft] def centroidTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"$Cells|$TrainIters|$MeanScale")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/centroids_$key"
-  }
+  /** Published-index location for a corpus dir: a state-store root
+    * (graft.etl.State), keyed by the fixture files and the code, so neither
+    * a code change nor a rewritten fixture can serve a stale index (the
+    * analog of an index build id). */
+  private[graft] def centroidTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "centroids", dir, "embeddings")
 
   /** Train the IVF centroids and PUBLISH them through the warehouse pointer
     * commit (VERDICT r2 item 4) — the train-once/serve-many split of a real
@@ -325,24 +319,18 @@ object Similarity {
                        target: String): String =
     graft.etl.Warehouse.publish(s, target, trainCentroids(s, dir))
 
+  /** The published trained centroids (cent_id, c_emb), trained and
+    * published by the first call of the whole IVF family. */
+  private[graft] def centroids(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, centroidTarget(s, dir))(publishCentroids(s, dir, _))
+      .select("cent_id", "c_emb")
+
   /** Serve IVF ANN from PUBLISHED centroids — no training anywhere in this
     * plan: centroids are k×d rows read from the current warehouse version
     * and broadcast. Same serving shape as `ivfTopK` (cell id is the shuffle
     * key). */
   def ivfServeTopK(s: SparkSession, dir: String, target: String): DataFrame =
     serveIvf(s, dir, graft.etl.Warehouse.read(s, target).select("cent_id", "c_emb"))
-
-  /** Published INVERTED-LIST location: the corpus assignment table,
-    * hive-partitioned by cell (keyed like centroidTarget, plus the
-    * assignment marker — a centroid retrain invalidates the lists too). */
-  private[graft] def assignTarget(s: SparkSession, dir: String): String = {
-    // "ivfassign2": schema v2 — lists carry the label payload column for
-    // the label-predicated serves (Mining.hardNegativesIvf); the bumped
-    // key orphans any v1 lists rather than serving the narrower schema
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"ivfassign2|$Cells|$TrainIters|$MeanScale")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/assign_$key"
-  }
 
   /** The IVF INVERTED LISTS: every vector's (vec_id, embedding, nrm,
     * label, cent_id) under its nearest published centroid, published
@@ -356,12 +344,9 @@ object Similarity {
     * so label-predicated serves never join back to the corpus); serves
     * that don't reference it prune it at the scan. Deterministic build →
     * every writer publishes identical bytes (last-writer-wins benign). */
-  private[graft] def publishedAssignments(s: SparkSession, dir: String): DataFrame = {
-    val target = assignTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) {
-      val ct = centroidTarget(s, dir)
-      if (!graft.etl.Warehouse.exists(s, ct)) publishCentroids(s, dir, ct)
-      val cents = graft.etl.Warehouse.read(s, ct).select("cent_id", "c_emb")
+  private[graft] def publishedAssignments(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, graft.etl.State.root(s, "ivf", "assign", dir, "embeddings")) { target =>
+      val cents = centroids(s, dir)
       // label rides the assignment scan itself (rankAgainst passes extra
       // columns through) — no corpus-side join anywhere in the build
       val e = t(s, dir, "embeddings").select(
@@ -372,12 +357,10 @@ object Similarity {
         .select(col("vec_id"), col("embedding"), col("nrm"), col("label"),
           col("cent_id"))
       graft.etl.Warehouse.publishPartitioned(s, target, assigned, "cent_id")
-    }
-    // partition-column type inference reads the dir names as int — restore
-    // the build-side long
-    graft.etl.Warehouse.read(s, target).select(col("vec_id"), col("embedding"),
-      col("nrm"), col("label"), col("cent_id").cast("long").as("cent_id"))
-  }
+    } // partition-column type inference reads the dir names as int — restore
+      // the build-side long
+      .select(col("vec_id"), col("embedding"),
+        col("nrm"), col("label"), col("cent_id").cast("long").as("cent_id"))
 
   /** IVF ANN over TRAINED centroids, train-once/serve-many — and since r8,
     * SERVED FROM THE PUBLISHED INVERTED LISTS: the first call trains +
@@ -392,9 +375,7 @@ object Similarity {
     * k-bounded heap aggregate. Output is row-identical to ivfServeTopK
     * (same cosine expression over the same operands). */
   def ivfTrainedTopK(s: SparkSession, dir: String): DataFrame = {
-    val target = centroidTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) publishCentroids(s, dir, target)
-    val cents = graft.etl.Warehouse.read(s, target).select("cent_id", "c_emb")
+    val cents = centroids(s, dir)
     val lists = publishedAssignments(s, dir)
     val q = withNorm(s, dir).filter(col("vec_id") < 8)
     val probes = rankAgainst(q, cents).filter(col("crn") <= NProbe)
@@ -433,9 +414,7 @@ object Similarity {
     * corpus size (the q_sim_recall posture). All counts are integers; each
     * recall is one IEEE division — oracle-hashable. */
   def ivfSweep(s: SparkSession, dir: String): DataFrame = {
-    val target = centroidTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) publishCentroids(s, dir, target)
-    val cents = graft.etl.Warehouse.read(s, target).select("cent_id", "c_emb")
+    val cents = centroids(s, dir)
     val lists = publishedAssignments(s, dir)
     val q = withNorm(s, dir).filter(col("vec_id") < 8)
     val probes = rankAgainst(q, cents).filter(col("crn") <= SweepProbes.max)
@@ -586,17 +565,10 @@ object Similarity {
     * build quantizes the corpus once, assigns each vector to its
     * first-`Cells` dequant centroid (the ivfTopK untrained discipline),
     * and stores codes + the dequant norm; the serve prunes to probed cell
-    * directories and dequantizes ONLY those rows. Keyed by the fixture
-    * fingerprint + the cell count; deterministic build → identical bytes
-    * from any writer. */
-  private[graft] def quantListsTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings", s"ivfqlists|$Cells")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/qlists_$key"
-  }
-
-  private[graft] def publishedQuantLists(s: SparkSession, dir: String): DataFrame = {
-    val target = quantListsTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) {
+    * directories and dequantizes ONLY those rows. Deterministic build →
+    * identical bytes from any writer. */
+  private[graft] def publishedQuantLists(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, graft.etl.State.root(s, "ivf", "qlists", dir, "embeddings")) { target =>
       val deq = quantCodes(s, dir)
         .withColumn("demb",
           expr("transform(codes, q -> CAST(q AS DOUBLE) * maxabs / 127.0D)"))
@@ -610,10 +582,8 @@ object Similarity {
         .filter(col("crn") === 1)
         .select(col("vec_id"), col("maxabs"), col("codes"), col("nrm"), col("cent_id"))
       graft.etl.Warehouse.publishPartitioned(s, target, assigned, "cent_id")
-    }
-    graft.etl.Warehouse.read(s, target).select(col("vec_id"), col("maxabs"),
+    }.select(col("vec_id"), col("maxabs"),
       col("codes"), col("nrm"), col("cent_id").cast("long").as("cent_id"))
-  }
 
   /** Distributed GRAM MATRIX of the embedding corpus (upper triangle):
     * G[i,j] = Σ_v x_v[i]·x_v[j] — the statistic PCA/whitening runs on
@@ -780,16 +750,6 @@ object Similarity {
     v.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toSeq.toDF("i", "pc")
   }
 
-  /** Published-PC location for a corpus dir (the centroidTarget discipline:
-    * keyed by the fixture fingerprint and every training constant, so
-    * neither a parameter change nor a fixture rewrite serves a stale
-    * component). */
-  private[graft] def pcTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"pca1|$PcaIters|$MeanScale")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/pc_$key"
-  }
-
   /** Top-PC PROJECTION: every vector's coordinate along the corpus's first
     * principal component — the 1-D embedding PCA/whitening pipelines rank,
     * bucket, and debias by. Train-once/serve-many (the ivfTrainedTopK
@@ -802,10 +762,8 @@ object Similarity {
     * DuckDB twin unrolls the same ten iterations and matches every score
     * bit-for-bit. */
   def pcaProject(s: SparkSession, dir: String): DataFrame = {
-    val target = pcTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target, trainPc(s, dir))
-    val v = graft.etl.Warehouse.read(s, target)
+    val v = graft.etl.State.memo(s, graft.etl.State.root(s, "ivf", "pc", dir, "embeddings"))(
+        graft.etl.Warehouse.publish(s, _, trainPc(s, dir)))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy(_._1).map(_._2)
     graft.Tables.withBroadcastArray(t(s, dir, "embeddings"), "pc", v.toSeq)
@@ -911,13 +869,9 @@ object Similarity {
     beamServe(e, queries(e), publishedServeGraph(s, dir), entryNodes(s, dir))
   }
 
-  /** Published SERVE-graph location (the descentTarget discipline plus the
-    * serve-layer marker: a long-link constant change orphans it). */
-  private[graft] def serveGraphTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"nndserve|$DescentIters|$DescentK|${LongLinkA.mkString("_")}|${LongLinkB.mkString("_")}|src$DescentFiles")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/nndserve_$key"
-  }
+  /** Published SERVE-graph location (a state-store root). */
+  private[graft] def serveGraphTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "nndserve", dir, "embeddings")
 
   /** The complete SERVE graph — refined descent layer (local quality,
     * degree DescentK) ∪ symmetrized long-link layer (global navigability;
@@ -935,9 +889,8 @@ object Similarity {
     * a production corpus uses its dense row rank. Duplicate edges (a long
     * link that is also a kNN edge) collapse in the serve's candidate-level
     * distinct, exactly as the unpublished union did. */
-  private[graft] def publishedServeGraph(s: SparkSession, dir: String): DataFrame = {
-    val target = serveGraphTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target)) {
+  private[graft] def publishedServeGraph(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, serveGraphTarget(s, dir)) { target =>
       val n = graft.etl.TableStats.rowCount(s, dir, "embeddings")
       val longLinks = withNorm(s, dir).select(col("vec_id").as("src"))
         .select(col("src"), explode(array(
@@ -950,9 +903,7 @@ object Similarity {
           .unionByName(longLinks)
           .unionByName(longLinks.select(col("dst").as("src"), col("src").as("dst"))),
         "src", DescentFiles)
-    }
-    graft.etl.Warehouse.read(s, target).select("src", "dst")
-  }
+    }.select("src", "dst")
 
   /** The QUERY-SAMPLE beam serve over an arbitrary (corpus, queries,
     * graph, entries) — shared by the standing full-corpus serve above and
@@ -1079,14 +1030,9 @@ object Similarity {
     * target (the Warehouse.compact sizing rule). */
   val DescentFiles: Int = 4
 
-  /** Published-graph location (the centroidTarget discipline: fixture
-    * fingerprint + every design constant — including the clustered-layout
-    * parameters, so a pre-clustering published version can never serve). */
-  private[graft] def descentTarget(s: SparkSession, dir: String): String = {
-    val key = graft.Tables.fixtureKey(s, dir, "embeddings",
-      s"nnd|$DescentIters|$DescentK|${LongLinkA.mkString("_")}|${LongLinkB.mkString("_")}|src$DescentFiles")
-    s"${sys.props("java.io.tmpdir")}/graft_ivf/nnd_$key"
-  }
+  /** Published-graph location (a state-store root). */
+  private[graft] def descentTarget(s: SparkSession, dir: String): String =
+    graft.etl.State.root(s, "ivf", "nnd", dir, "embeddings")
 
   /** The refined WORKING graph (degree `DescentK`), train-once/serve-many
     * through the warehouse pointer commit — the ivfTrainedTopK discipline:
@@ -1099,13 +1045,10 @@ object Similarity {
     * so the serve's per-round In(src) frontier filter prunes to the row
     * groups owning those ids instead of scanning the whole graph (VERDICT
     * r7 missing-item 3: the bucketed-serve posture as code, not comment). */
-  private[graft] def publishedDescent(s: SparkSession, dir: String): DataFrame = {
-    val target = descentTarget(s, dir)
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publishClustered(s, target,
-        descentGraph(s, dir, DescentIters), "src", DescentFiles)
-    graft.etl.Warehouse.read(s, target).select("src", "dst", "cos", "rnk")
-  }
+  private[graft] def publishedDescent(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, descentTarget(s, dir))(graft.etl.Warehouse.publishClustered(s, _,
+        descentGraph(s, dir, DescentIters), "src", DescentFiles))
+      .select("src", "dst", "cos", "rnk")
 
   /** The refined graph after `iters` rounds (exposed so the spec can
     * measure the per-round quality climb). */
@@ -1199,17 +1142,4 @@ object Similarity {
         col("n_hit").cast("double") / col("n_exact").cast("double"))
       .orderBy("q_id")
   }
-
-  /** Serve-version salts for the PUBLISHED-rankings tier (VERDICT r12
-    * item 3 / ADVICE r12): each serve's tuning constants ride in its
-    * published-ranking key and are owned HERE, next to the serve code —
-    * changing a constant re-keys every ranking that depends on it
-    * mechanically (the ivfup_cents pattern), with no Rankings.LayoutV
-    * bump to remember. A pure-LOGIC change to a serve (constants
-    * untouched) bumps that serve's leading literal in the same file. */
-  private[llm] def bruteServeV: String = "exactcos1|q8|k10"
-  private[llm] def ivfServeV: String =
-    s"ivf1|$NProbe|$Cells|$TrainIters|$MeanScale"
-  private[llm] def graphServeV: String =
-    s"graph1|$GraphK|$BeamWidth|$SearchIters|$DescentK|$DescentIters"
 }

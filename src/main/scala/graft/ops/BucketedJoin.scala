@@ -30,10 +30,11 @@ import graft.Tables._
   * (both Murmur3), so each task holds exactly one bucket and writes ONE
   * sorted file per bucket — the layout that lets the scan report ordering
   * and the planner drop both the Exchange AND the Sort under the join.
-  * Table names carry the fixture fingerprint (Tables.fixtureKey), so a
-  * rewritten fixture can never serve a stale layout; the catalog is
-  * session-scoped (in-memory), so the first call per session pays the
-  * one-time write — bench reps 2+ and every later join serve from it. */
+  * Table names carry the state-store key (State.key: fixture listing plus
+  * code fingerprint), so a rewritten fixture can never serve a stale
+  * layout; the catalog is session-scoped (in-memory), so the first call
+  * per session pays the one-time write — bench reps 2+ and every later
+  * join serve from it. */
 object BucketedJoin {
 
   /** Bucket count: sized so each bucket of the largest fixture tier holds
@@ -41,7 +42,7 @@ object BucketedJoin {
     * bytes / target task input (the shuffle.partitions sizing rule). */
   val Buckets = 8
 
-  /** Table names carry the fixture fingerprint AND the application id: the
+  /** Table names carry the state key AND the application id: the
     * catalog is session-scoped (in-memory) but managed-table FILES persist
     * under spark.sql.warehouse.dir, so a name shared across applications
     * would leave a later app staring at an occupied location — and
@@ -54,7 +55,7 @@ object BucketedJoin {
     * superseded versions awaiting vacuum. */
   private[graft] def tableName(s: SparkSession, dir: String, table: String): String = {
     val app = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    s"bkt_${table}_${app}_" + graft.Tables.fixtureKey(s, dir, table, s"bkt|$Buckets")
+    s"bkt_${table}_${app}_" + graft.etl.State.key(s, dir, table)
   }
 
   /** Age-guarded sweep of ORPHANED bucketed layouts (ADVICE r9):

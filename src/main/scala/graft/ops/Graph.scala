@@ -37,10 +37,8 @@ object Graph {
     * per analytic); PageRank, triangles, and the degree profile all serve
     * from the same published table. Content-fingerprinted target: a
     * rewritten fixture can never serve a stale graph. */
-  private[graft] def edges(s: SparkSession, dir: String): DataFrame = {
-    val key = graft.Tables.fixtureKey(s, dir, "lineitem")
-    val target = s"${sys.props("java.io.tmpdir")}/graft_graph/edges_$key"
-    if (!graft.etl.Warehouse.exists(s, target)) {
+  private[graft] def edges(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, graft.etl.State.root(s, "graph", "edges", dir, "lineitem")) { target =>
       val pp = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       val canon = pp.as("a").join(pp.as("b"),
@@ -48,8 +46,6 @@ object Graph {
         .select(col("a.p").as("src"), col("b.p").as("dst")).distinct()
       graft.etl.Warehouse.publish(s, target, canon)
     }
-    graft.etl.Warehouse.read(s, target)
-  }
 
   private def bothDirections(canon: DataFrame): DataFrame =
     canon.unionByName(
@@ -243,13 +239,9 @@ object Graph {
     * the layout discipline into recompute-per-rep (31.4 s vs 3.7 s quiet
     * standalone, the driver's r10 measurement). A published index has no
     * blocks to evict. */
-  private[graft] def adjacency(s: SparkSession, dir: String): DataFrame = {
-    val key = graft.Tables.fixtureKey(s, dir, "lineitem")
-    val target = s"${sys.props("java.io.tmpdir")}/graft_graph/adj_$key"
-    if (!graft.etl.Warehouse.exists(s, target))
-      graft.etl.Warehouse.publish(s, target, adjacencyOf(edges(s, dir)))
-    graft.etl.Warehouse.read(s, target)
-  }
+  private[graft] def adjacency(s: SparkSession, dir: String): DataFrame =
+    graft.etl.State.memo(s, graft.etl.State.root(s, "graph", "adj", dir, "lineitem"))(
+      graft.etl.Warehouse.publish(s, _, adjacencyOf(edges(s, dir))))
 
   /** The triangle serve over an adjacency frame — a pure STATELESS plan,
     * no persist, no localCheckpoint, nothing for a long bench session to

@@ -9,6 +9,39 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf: String = "/root/testdata/sf0.001"
+
+  /** Jobs started while `body` runs, counted by a listener through the job
+    * group. The listener bus is asynchronous, so a sentinel job in a second
+    * group runs afterwards and its end is awaited: the bus delivers events
+    * in order, so every earlier job start has been counted by then. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`sentinel`) => sentinelJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (sentinelJobs.contains(e.jobId)) sentinelDone.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "job count probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "job count probe sentinel")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      started.get
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -3,7 +3,6 @@ package graft.etl
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Every published version dir carries its writer's schema in a `_SCHEMA`
   * sidecar: reads through `Warehouse` see exactly the schema parquet footer
@@ -71,38 +70,6 @@ class RecordedSchemaSpec extends SparkSpec {
     assert(new java.io.File(s"$t/$v/_SCHEMA").delete())
     assert(Warehouse.read(spark, t).schema === schema)
     assert(sorted(Warehouse.read(spark, t)) === data)
-  }
-
-  /** Jobs started while `body` runs, counted by a listener through the job
-    * group. The listener bus is asynchronous, so a sentinel job in a second
-    * group runs afterwards and its end is awaited: the bus delivers events
-    * in order, so every earlier job start has been counted by then. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"recorded-schema-${java.util.UUID.randomUUID}"
-    val sentinel = s"$group-sentinel"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(`sentinel`) => sentinelJobs.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (sentinelJobs.contains(e.jobId)) sentinelDone.countDown()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "recorded schema probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "recorded schema probe sentinel")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      started.get
-    } finally sc.removeSparkListener(l)
   }
 
   test("Warehouse reads launch no job before an action") {

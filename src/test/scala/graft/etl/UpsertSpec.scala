@@ -126,6 +126,16 @@ class UpsertSpec extends SparkSpec {
     assert(canon(twice.drop("op")) == canon(once.drop("op")))
   }
 
+  test("applyCdc: a null-key change row matches nothing, an upsert keeps its payload, a delete removes nothing") {
+    import org.apache.spark.sql.functions.{col, when}
+    val all = (d: DataFrame) => d.collect().map(_.toSeq).toSet
+    val target = df(Seq(("a", 1L, 1.0), (null, 1L, 2.0)))
+    val changes = df(Seq((null, 3L, 5.0), (null, 4L, 6.0), ("a", 2L, 9.0)))
+      .withColumn("op", when(col("ver") === 4L, "D").otherwise("U"))
+    assert(all(Upsert.applyCdc(target, changes, "id")) ==
+      Set(Seq("a", 2L, 9.0), Seq(null, 1L, 2.0), Seq(null, 3L, 5.0)))
+  }
+
   test("applyCdc rejects unknown op codes loudly") {
     import org.apache.spark.sql.functions.lit
     val target = df(Seq(("a", 1L, 1.0)))

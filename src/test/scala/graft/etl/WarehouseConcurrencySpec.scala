@@ -74,6 +74,7 @@ class WarehouseConcurrencySpec extends SparkSpec {
     Warehouse.publish(spark, target, writerDf("base", rows))
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val started = new CountDownLatch(1)
     val reader = new Thread(() => {
       started.countDown()
@@ -84,16 +85,34 @@ class WarehouseConcurrencySpec extends SparkSpec {
           bad.add(got.toSeq.toString)
       }
     })
+    reader.setUncaughtExceptionHandler((_, t) => errs.add(t))
     reader.start(); started.await()
     for (round <- 1 to 3) {
       val barrier = new CyclicBarrier(2)
       val writers = Seq("x", "y").map { tag =>
         val df = writerDf(s"$tag$round", rows)
-        new Thread(() => { barrier.await(); Warehouse.publish(spark, target, df) })
+        new Thread(() => {
+          try { barrier.await(); Warehouse.publish(spark, target, df) }
+          catch { case t: Throwable => errs.add(t) }
+        })
       }
       writers.foreach(_.start()); writers.foreach(_.join())
     }
     stop.set(true); reader.join()
+    assert(errs.isEmpty, s"a reader or writer thread failed: ${errs.peek()}")
     assert(bad.isEmpty, s"reader saw partial/blended snapshots: ${bad.peek()}")
+  }
+
+  test("pointer, marker and sidecar files carry no checksum sidecar") {
+    // a `.crc` beside `_CURRENT` would make the commit rename two steps
+    val target = mkTarget()
+    val v = Warehouse.publish(spark, target, writerDf("a", 3))
+    val root = mkTarget()
+    val snap = Warehouse.publishSnapshot(spark, root, Seq("m" -> writerDf("b", 3)))
+    val crcs = Seq(s"$target/._CURRENT.crc", s"$target/$v/._SCHEMA.crc",
+      s"$root/._SNAPSHOT.crc", s"$root/m/${snap("m")}/._SCHEMA.crc")
+      .filter(new java.io.File(_).exists())
+    assert(crcs.isEmpty, s"checksum sidecars written: $crcs")
+    assert(Warehouse.read(spark, target).count() == 3L)
   }
 }

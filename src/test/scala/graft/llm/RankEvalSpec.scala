@@ -84,6 +84,15 @@ class RankEvalSpec extends SparkSpec {
       "driver RRF fold diverged from the frame fusion")
   }
 
+  test("the driver-folded hybrid ranking equals Fusion.hybridTopK pair-for-pair") {
+    // both sides read the same published rankings (Rankings.lex / .ivf)
+    val lex = localize(Rankings.lex(spark, sf).withColumnRenamed("r_lex", "rank"))
+    val folded = RankEval.rrfFold(Seq(lex, localize(Rankings.ivf(spark, sf))))
+    assert(folded.sortBy(t => (t._1, t._3)) ==
+      localize(Fusion.hybridTopK(spark, sf)).sortBy(t => (t._1, t._3)),
+      "driver RRF fold diverged from the hybrid frame fusion")
+  }
+
   test("audit frame: 6 families × 8 queries, metrics in [0, 1]") {
     val rows = RankEval.rankQuality(spark, sf).collect()
     assert(rows.length == 48)

@@ -61,30 +61,4 @@ class RankingsSpec extends SparkSpec {
     val u = Rankings.ivfUpsert(spark, sf).select("q_id", "n_id").collect().toSet
     assert(b != u, "upsert ranking must reflect the late batch, not the base serve")
   }
-
-  test("a serve-version change moves the target and forces a republish (VERDICT r12 item 3)") {
-    // the default key embeds the version OWNED NEXT TO THE SERVE — the
-    // mechanical-invalidation contract: constants ride in the string, so
-    // changing NProbe (or bumping the serve's literal for a logic change)
-    // re-keys the artifact without any Rankings-side edit
-    val cur = Rankings.targetOf(spark, sf, "ivf")
-    assert(cur == Rankings.targetOf(spark, sf, "ivf", Rankings.versionOf("ivf")),
-      "default key must embed the serve-owned version")
-    assert(Rankings.versionOf("ivf").contains(Similarity.NProbe.toString) &&
-      Rankings.versionOf("ivf").contains(Similarity.Cells.toString),
-      "tuning constants must ride in the serve-version salt")
-    assert(Rankings.versionOf("ivf_upsert")
-      .contains(IvfMaintenance.BaseFrac.toString),
-      "the freshness variant's salt must embed the maintenance cut")
-    val bumped = Rankings.targetOf(spark, sf, "ivf",
-      Rankings.versionOf("ivf") + "|logic-bump")
-    assert(bumped != cur, "a serve-version change must move the published target")
-    // publish under the current version; nothing exists under the bumped
-    // key, so the first caller after a version change re-serves instead of
-    // reading the stale artifact
-    Rankings.ivf(spark, sf).count()
-    assert(Warehouse.exists(spark, cur))
-    assert(!Warehouse.exists(spark, bumped),
-      "a stale artifact must be unreachable from a bumped serve version")
-  }
 }
