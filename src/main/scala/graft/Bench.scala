@@ -5,32 +5,39 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val spark = Verify.session(s"local[$cpus]", cpus)
-    // One warm pass outside timing: JIT + codegen cache + file-footer reads.
-    // Runs every query once at the smallest SF so each code path is compiled
-    // before it is measured (skipped when the warmup fixtures are absent).
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    SparkEntry.entry(spark).count()
-    if (new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.values.foreach { fn =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
     // optional args: restrict to the named queries (dev/stress use)
     val wanted = (if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap
                   else SparkEntry.queries).toSeq.sortBy(_._1)
+    // A query that throws (in the warm pass or on any timed rep) is FAILED:
+    // it contributes no time to `value` and is named in the `failed` list,
+    // and the run exits non-zero.
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    def firstLine(e: Throwable): String = e.toString.linesIterator.nextOption().getOrElse("")
+    // One warm pass outside timing: JIT + codegen cache + file-footer reads.
+    // Runs every wanted query once at the smallest SF so each code path is
+    // compiled before it is measured (skipped when the warmup fixtures are
+    // absent).
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
+    SparkEntry.entry(spark).count()
+    if (new java.io.File(warmDir).isDirectory)
+      wanted.foreach { case (name, fn) =>
+        try fn(spark, warmDir).count() catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] warm $name failed: ${firstLine(e)}")
+            failed.getOrElseUpdate(name, firstLine(e))
+        }
+      }
     // `reps` timed repetitions per query, report the per-query MEDIAN so
     // round-over-round comparisons measure the code, not machine noise
     // (VERDICT r1 item 10). Reps run back-to-back per query so page cache
-    // and codegen state are comparable across reps. A query that throws on
-    // any rep is FAILED: it contributes no time to `value` and is named in
-    // the `failed` list, and the run exits non-zero.
-    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    // and codegen state are comparable across reps.
     def timeOnce(name: String,
                  fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       System.gc() // keep one query's garbage from billing the next
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         case e: Throwable =>
-          failed.getOrElseUpdate(name, e.toString.linesIterator.nextOption().getOrElse(""))
+          failed.getOrElseUpdate(name, firstLine(e))
           return None
       }
       Some((System.nanoTime() - t0) / 1e9)
@@ -112,7 +119,7 @@ object Bench {
     // at the cost of one extra pass per query.
     val memCtx = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
     val results = wanted.flatMap { case (name, fn) =>
-      if (timeOnce(name, fn).isEmpty) None
+      if (failed.contains(name) || timeOnce(name, fn).isEmpty) None
       else {
         val mb = storageMb()
         val d0 = dropped.get

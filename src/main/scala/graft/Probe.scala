@@ -13,7 +13,9 @@ object Probe {
     // 1. reference pipeline end-to-end on the checked-in fixture
     val rawDst = java.nio.file.Paths.get(root, "raw_data")
     java.nio.file.Files.createDirectories(rawDst)
-    val fixture = java.nio.file.Paths.get("/root/repo/src/test/resources/raw_coins.json")
+    // relative to the working directory (sbt's forked `run` starts in the
+    // project dir), so each checkout reads its own fixture
+    val fixture = java.nio.file.Paths.get("src/test/resources/raw_coins.json")
     java.nio.file.Files.copy(fixture, rawDst.resolve("cryptoinsight_raw_1"))
     val p = new etl.Pipeline(spark, root)
     p.run()

@@ -281,7 +281,7 @@ object ScaleBench {
         // edges, paid off the serving path at rebuild cadence; rep 1 pays
         // the initial snapshot publish, the median times the fold)
         val tGDrift = med(graft.llm.GraphMaintenance.drift(spark, dirM).count())
-        val tGComp = med { graft.llm.GraphMaintenance.compact(spark, dirM); 1L }
+        val tGComp = med { graft.llm.GraphMaintenance.serveEdges.compact(spark, dirM); 1L }
         println(f"[scalebench] glife  m=$m%-3d vectors=$nV%-8d drift=$tGDrift%.2f s compact=$tGComp%.2f s")
         // IVF-PQ composite: residual-book CONSTRUCTION measured directly
         // (bypasses the publish cache — the honest-measurement discipline;
@@ -300,7 +300,7 @@ object ScaleBench {
         // training publish; the median times the pure add — must be LINEAR
         // in the batch); the union serve reads base ∪ delta cell-pruned
         // (median post-publish, near-flat like the trained serve)
-        val cutM = graft.llm.IvfMaintenance.baseCut(spark, dirM)
+        val cutM = graft.llm.Segments.cut(spark, dirM, "embeddings")
         val tAdd = med(graft.llm.IvfMaintenance
           .assignSlice(spark, dirM, cutM, newRows = true).count())
         val tUpServe = med(graft.llm.IvfMaintenance.upsertServe(spark, dirM).count())
@@ -319,7 +319,7 @@ object ScaleBench {
         // (LINEAR in N, off the serving path)
         val tBinUp = med(graft.llm.BinaryMaintenance.upsertServe(spark, dirM).count())
         val tBinDrift = med(graft.llm.BinaryMaintenance.drift(spark, dirM).count())
-        val tBinComp = med { graft.llm.BinaryMaintenance.compact(spark, dirM); 1L }
+        val tBinComp = med { graft.llm.BinaryMaintenance.sigs.compact(spark, dirM); 1L }
         println(f"[scalebench] binup  m=$m%-3d vectors=$nV%-8d serve=$tBinUp%.2f s drift=$tBinDrift%.2f s compact=$tBinComp%.2f s")
       }
     }
@@ -465,11 +465,11 @@ object ScaleBench {
         // (one partitioned rewrite of bin rows behind a pointer swap —
         // LINEAR in chunks, off the serving path)
         val tServe = med(graft.llm.PackMaintenance.serve(spark, dirM).count())
-        val tComp = med { graft.llm.PackMaintenance.compact(spark, dirM); 1L }
+        val tComp = med { graft.llm.PackMaintenance.segments.compact(spark, dirM); 1L }
         println(f"[scalebench] pack   m=$m%-3d docs=$nD%-8d chunk_pack=$tPack%.2f s serve=$tServe%.2f s compact=$tComp%.2f s window_parts=${fan.getLong(0)} sources=${fan.getLong(1)} parts_per_source=${fan.getLong(0).toDouble / fan.getLong(1)}%.1f")
         // resolve the pack root BEFORE dropping the fixture (the key reads
         // the fixture's file stats), then drop both
-        val packRootM = graft.llm.PackMaintenance.packRoot(spark, dirM)
+        val packRootM = graft.llm.PackMaintenance.segments.root(spark, dirM)
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirM))
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(packRootM))
       }

@@ -829,7 +829,7 @@ object SparkEntry {
           uc$i AS (SELECT p.cent_id, COALESCE(u.cemb, p.cemb) AS cemb
                    FROM $prev p LEFT JOIN uu$i u USING (cent_id))"""
     }.mkString(",\n")
-    s"""ut AS (SELECT CAST(floor(count(*) * ${graft.llm.IvfMaintenance.BaseFrac}) AS BIGINT) AS t
+    s"""ut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
                FROM embeddings),
         ue AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm
                FROM embeddings, ut WHERE vec_id < ut.t),
@@ -1026,7 +1026,7 @@ object SparkEntry {
                          for i in generate_series(0, ${H - 1})]) AS BIGINT)"""
     val bt =
       if (!baseOnlyMu) ""
-      else s"""bt AS (SELECT CAST(floor(count(*) * ${graft.llm.IvfMaintenance.BaseFrac}) AS BIGINT) AS t
+      else s"""bt AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
                       FROM embeddings),
         """
     val muFrom = if (baseOnlyMu) "FROM embeddings, bt WHERE vec_id < bt.t"
@@ -1148,7 +1148,7 @@ object SparkEntry {
     * base cut (one scalar CTE), not from the members' flags. Extracted so
     * the freshness rank audit reuses it as a served subquery. */
   private def fusedUpsertSql: String =
-    s"""WITH fut AS (SELECT CAST(floor(count(*) * ${graft.llm.IvfMaintenance.BaseFrac}) AS BIGINT) AS t
+    s"""WITH fut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
                      FROM embeddings),
         fi AS (SELECT q_id, n_id, "rank" AS r_ivf FROM ($ivfUpsertSql)),
         fg AS (SELECT q_id, n_id, "rank" AS r_graph FROM ($graphUpsertSql)),
@@ -1169,7 +1169,7 @@ object SparkEntry {
         FROM fr, fut WHERE "rank" <= 10 ORDER BY q_id, "rank""""
 
   private def hybridUpsertSql: String = {
-    val bf = graft.llm.IvfMaintenance.BaseFrac
+    val bf = graft.llm.Segments.BaseFrac
     s"""WITH hdc AS (SELECT CAST(floor(count(*) * $bf) AS BIGINT) AS t FROM documents),
         hec AS (SELECT CAST(floor(count(*) * $bf) AS BIGINT) AS t FROM embeddings),
         ${hybridSqlCtes(ivfUpsertSql)}
@@ -1386,7 +1386,7 @@ object SparkEntry {
                       ORDER BY cos DESC, n_id) AS rn FROM gsc$t)
                   WHERE rn <= $BeamWidth)"""
     }.mkString(",\n")
-    s"""icut AS (SELECT CAST(floor(count(*) * ${graft.llm.IvfMaintenance.BaseFrac}) AS BIGINT) AS t
+    s"""icut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
                  FROM embeddings),
         ${ndCtesFor("vec_id < (SELECT t FROM icut)")},
         graph AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
@@ -2970,7 +2970,7 @@ object SparkEntry {
     "q_text_bm25_upsert" -> {
       import graft.llm.TextAnalysis.{Bm25QTerms, Bm25TopK}
       s"""WITH dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-          dcut AS (SELECT CAST(floor(count(*) * ${graft.llm.IvfMaintenance.BaseFrac}) AS BIGINT) AS t
+          dcut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
                    FROM documents),
           tfx AS (SELECT doc_id, token, count(*) AS tf FROM dt GROUP BY 1, 2),
           dfx AS (SELECT token, count(*) AS df FROM tfx GROUP BY 1),
@@ -2992,7 +2992,7 @@ object SparkEntry {
     // Twin of LexMaintenance.drift: the frozen BASE vocabulary's fit per
     // segment — OOV token mass and new-type count vs the docs < cut vocab.
     "q_text_bm25_drift" ->
-      s"""WITH dcut AS (SELECT CAST(floor(count(*) * ${graft.llm.IvfMaintenance.BaseFrac}) AS BIGINT) AS t
+      s"""WITH dcut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
                         FROM documents),
           tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
           sg AS (SELECT CASE WHEN tk.doc_id >= dcut.t THEN 'late' ELSE 'base' END AS segment,
@@ -4116,7 +4116,7 @@ object SparkEntry {
                   SELECT chks.*, row_number() OVER (PARTITION BY chunk_hash
                     ORDER BY doc_id, chunk_idx) AS rn FROM chks)
                 WHERE rn = 1),
-          cutt AS (SELECT CAST(floor(count(*) * ${graft.llm.IvfMaintenance.BaseFrac}) AS BIGINT) AS t
+          cutt AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
                    FROM documents),
           ub AS (SELECT u.* FROM u, cutt WHERE doc_id < t),
           ud AS (SELECT u.* FROM u, cutt WHERE doc_id >= t),

@@ -13,9 +13,9 @@ import graft.Tables._
   * freezes centroids (IvfMaintenance.cents): the means train on the base
   * corpus, publish once through the warehouse pointer, and every later
   * batch signs against the FROZEN statistic — a stateless per-row map, no
-  * shuffle, O(batch). Signatures land as base/delta MEMBERS of one
-  * multi-table snapshot (the IvfMaintenance.listsRoot discipline) so a
-  * future compaction folding delta into base stays a one-pointer commit.
+  * shuffle, O(batch). Signatures land as base/delta members of one
+  * Segments.Root, so compaction folding delta into base is a one-pointer
+  * commit.
   *
   * Because signing is per-row independent given μ, serve-after-add is
   * BIT-IDENTICAL to a from-scratch signing of the full corpus against the
@@ -33,9 +33,6 @@ object BinaryMaintenance {
 
   private[llm] def muTarget(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "binary", "up_mu", dir, "embeddings")
-
-  private[llm] def sigsRoot(s: SparkSession, dir: String): String =
-    graft.etl.State.root(s, "binary", "up_sigs", dir, "embeddings")
 
   /** Per-dimension means of an embeddings slice, by the scaled-BIGINT
     * exact discipline (Binary.muArray's arithmetic with a slice filter). */
@@ -71,26 +68,17 @@ object BinaryMaintenance {
       .select("vec_id", "h0", "h1")
   }
 
-  /** The current signature snapshot (publishing the initial {base, delta}
-    * pair on first call — one atomic commit covering both members). */
-  private def currentSigs(s: SparkSession, dir: String,
-                          cut: Long): Map[String, String] =
-    graft.etl.State.memoSnapshot(s, sigsRoot(s, dir)) { root =>
-      val mu = publishedMu(s, dir, cut)
-      graft.etl.Warehouse.publishSnapshot(s, root, Seq(
-        "base" -> signSlice(s, dir, mu, cut, newRows = false),
-        "delta" -> signSlice(s, dir, mu, cut, newRows = true)))
-    }
-
-  /** Union of every member the RESOLVED snapshot lists (name order —
-    * deterministic file-level concatenation, no shuffle). */
-  private def sigsOf(s: SparkSession, dir: String,
-                     snap: Map[String, String]): DataFrame = {
-    val root = sigsRoot(s, dir)
-    snap.toSeq.sortBy(_._1)
-      .map { case (m, v) => graft.etl.Warehouse.readSnapshotMember(s, root, m, v) }
-      .reduce(_ unionByName _)
-  }
+  /** The signature snapshot: base and delta signed against the frozen
+    * means (`mu` is read once for both members). Signatures are per-row
+    * facts, so compaction is file-level concatenation — no shuffle and,
+    * crucially, NO re-sign: the frozen means never re-enter, so
+    * serve-before ≡ serve-after bit-for-bit (BinaryCompactionSpec pins
+    * it). */
+  val sigs = new Segments.Root("binary", "up_sigs", "embeddings")({ (s, dir) =>
+    val cut = Segments.cut(s, dir, "embeddings")
+    val mu = publishedMu(s, dir, cut)
+    (signSlice(s, dir, mu, cut, newRows = false), signSlice(s, dir, mu, cut, newRows = true))
+  })
 
   /** The binary serve over a given signature frame: Hamming shortlist
     * through the k-bounded heap, exact cosine re-rank on the Q·Shortlist
@@ -110,7 +98,7 @@ object BinaryMaintenance {
     val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"),
       expr(s"sqrt(${Similarity.dotFor(s)("embedding", "embedding")})").as("nrm"))
     val wCos = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    shortlist
+    val ranked = shortlist
       .join(raw.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
         col("nrm").as("n_nrm")), "n_id")
       .join(broadcast(raw.filter(col("vec_id") < NQueries)
@@ -120,7 +108,7 @@ object BinaryMaintenance {
         (col("q_nrm") * col("n_nrm")))
       .withColumn("rank", row_number().over(wCos).cast("long"))
       .filter(col("rank") <= 10)
-      .withColumn("is_new", when(col("n_id") >= cut, 1L).otherwise(0L))
+    Segments.withFlag(ranked, "n_id", cut)
       .select(col("q_id"), col("n_id"), col("hd"), col("cos"),
         col("rank"), col("is_new"))
       .orderBy("q_id", "rank")
@@ -130,41 +118,21 @@ object BinaryMaintenance {
     * base ∪ delta signatures (one snapshot resolve, so a concurrent
     * compaction can never split the serve), exact re-rank, late neighbors
     * flagged. Serve shape and cost identical to q_sim_binary_topk. */
-  def upsertServe(s: SparkSession, dir: String): DataFrame = {
-    val cut = IvfMaintenance.baseCut(s, dir)
-    serveOver(s, dir, sigsOf(s, dir, currentSigs(s, dir, cut)), cut)
-  }
+  def upsertServe(s: SparkSession, dir: String): DataFrame =
+    serveOver(s, dir, sigs.read(s, dir), Segments.cut(s, dir, "embeddings"))
 
   /** The from-scratch control for BinaryUpsertSpec: sign the FULL corpus
     * against the same frozen means in one pass and serve identically.
     * Signing is per-row independent, so this must equal the snapshot
     * serve bit-for-bit. */
   private[llm] def rebuildServe(s: SparkSession, dir: String): DataFrame = {
-    val cut = IvfMaintenance.baseCut(s, dir)
-    val mu = publishedMu(s, dir, cut)
-    val sigs = graft.Tables.withBroadcastArray(
-        t(s, dir, "embeddings"), "mu", mu.toSeq)
+    val cut = Segments.cut(s, dir, "embeddings")
+    val all = graft.Tables.withBroadcastArray(
+        t(s, dir, "embeddings"), "mu", publishedMu(s, dir, cut).toSeq)
       .withColumn("h0", expr(Binary.halfSql(0)))
       .withColumn("h1", expr(Binary.halfSql(Binary.HalfBits)))
       .select("vec_id", "h0", "h1")
-    serveOver(s, dir, sigs, cut)
-  }
-
-  /** COMPACTION — fold the delta signatures into a refreshed base member
-    * and retire the delta, committed with ONE snapshot-pointer swap (the
-    * GraphMaintenance.compact discipline; closes compaction 5/5 across
-    * the index families). Signatures are per-row facts disjoint across
-    * members, so the fold is file-level concatenation — no shuffle and,
-    * crucially, NO re-sign: the frozen means never re-enter, so
-    * serve-before ≡ serve-after bit-for-bit (BinaryCompactionSpec pins
-    * it). Pre-compaction versions stay readable until vacuumSnapshot's
-    * phase two, and a reader that resolves the pointer once can never
-    * see a torn commit. */
-  def compact(s: SparkSession, dir: String): Map[String, String] = {
-    val cut = IvfMaintenance.baseCut(s, dir)
-    val merged = sigsOf(s, dir, currentSigs(s, dir, cut))
-    graft.etl.Warehouse.publishSnapshot(s, sigsRoot(s, dir),
-      Seq("base" -> merged))
+    serveOver(s, dir, all, cut)
   }
 
   /** q_sim_binary_drift: the frozen-means STALENESS MONITOR — per segment
@@ -177,10 +145,10 @@ object BinaryMaintenance {
     * republish trigger, same contract as q_index_drift. Cost: one
     * explode-scan + the signature scan, 2-row output. */
   def drift(s: SparkSession, dir: String): DataFrame = {
-    val cut = IvfMaintenance.baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
     val mu = publishedMu(s, dir, cut)
     val d = mu.length
-    val seg = when(col("vec_id") >= cut, lit("late")).otherwise(lit("base"))
+    val seg = Segments.segment(col("vec_id"), cut)
     val adev = graft.Tables.withBroadcastArray(
         t(s, dir, "embeddings"), "mu", mu.toSeq)
       .select(col("vec_id"), expr(
@@ -194,7 +162,7 @@ object BinaryMaintenance {
           .cast("string").cast("double") /
           (count(lit(1)).cast("double") * lit(d.toDouble) * lit(S.toDouble)))
           .as("mean_adev"))
-    val bits = sigsOf(s, dir, currentSigs(s, dir, cut))
+    val bits = sigs.read(s, dir)
       .groupBy(seg.as("segment"))
       .agg((sum(expr("bit_count(h0) + bit_count(h1)")).cast("double") /
         (count(lit(1)).cast("double") * lit(2.0 * Binary.HalfBits)))

@@ -1053,8 +1053,7 @@ object Curation {
     * families applied to the training-data artifact itself. Bin
     * coordinates are PHYSICAL file offsets fixed at pack time, so a late
     * ingest batch must never move a byte of the base layout: base rows
-    * (docs below the corpus cut — the LexMaintenance/IvfMaintenance
-    * BaseFrac convention on the documents id space) reproduce the
+    * (docs below the documents cut, Segments.cut) reproduce the
     * base-time pack BIT-IDENTICALLY, and late chunks lay out into FRESH
     * bins only, starting past each source's high-water bin (never
     * appended into a partially-filled frozen bin). Chunk dedup stays
@@ -1076,14 +1075,8 @@ object Curation {
     * the IvfMaintenance posture). Per-(source, pack_shard) high-water
     * bins are a (source × PackShards)-domain aggregate — broadcast. */
   def curriculumPackUpsert(s: SparkSession, dir: String): DataFrame = {
-    val cut = LexMaintenance.baseCut(s, dir)
-    val uniq = uniqChunks(s, dir)
-    val pBase = packBins(uniq.filter(col("doc_id") < cut))
-      .withColumn("is_new", lit(0L))
-      .select(PackCols.map(col): _*)
-    val pDelta = packDeltaBins(uniq.filter(col("doc_id") >= cut), pBase)
-      .withColumn("is_new", lit(1L))
-      .select(PackCols.map(col): _*)
+    val cut = Segments.cut(s, dir, "documents")
+    val (pBase, pDelta) = packSegments(uniqChunks(s, dir), cut)
     val lg = logitRows(s, dir).select("doc_id", "logit_milli")
     val crr = curriculumOrderOf(lg.filter(col("doc_id") < cut))
       .unionByName(curriculumOrderOf(lg.filter(col("doc_id") >= cut))
@@ -1108,6 +1101,18 @@ object Curation {
     chunkRows(s, dir, Seq("source"))
       .withColumn("rn", row_number().over(firstWins))
       .filter(col("rn") === 1).drop("rn")
+  }
+
+  /** The frozen-base and delta pack layouts of a chunk stream split at the
+    * documents cut, every row flagged `is_new` in the PackCols contract —
+    * shared by the batch declaration above and the published
+    * PackMaintenance artifact. */
+  private[graft] def packSegments(uniq: DataFrame, cut: Long): (DataFrame, DataFrame) = {
+    val base = Segments.tagged(packBins(uniq.filter(col("doc_id") < cut)), late = false)
+      .select(PackCols.map(col): _*)
+    val delta = Segments.tagged(packDeltaBins(uniq.filter(col("doc_id") >= cut), base), late = true)
+      .select(PackCols.map(col): _*)
+    (base, delta)
   }
 
   /** The pack artifact's column contract — one list, every producer. */

@@ -81,18 +81,17 @@ object Fusion {
     * all three inputs read their base ∪ delta snapshots (each O(batch)
     * add, no rebuild anywhere), so `is_new` neighbors flow through the
     * rank consensus like any other evidence. All three families share the
-    * IvfMaintenance.baseCut split, so the flag is one comparison on the
+    * embeddings cut (Segments.cut), so the flag is one comparison on the
     * fused output. Fusion cost is unchanged: two full-outer joins on
     * Q·10 frames and a Q·≤30 window — metadata-tier. */
   def fusedUpsertTopK(s: SparkSession, dir: String): DataFrame = {
-    val cut = IvfMaintenance.baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
     // the UPSERT rankings are distinct published artifacts from the base
     // ones (they carry the late batch) — the variant key keeps this
     // freshness serve from ever reading a stale base ranking
-    fuseOf(Rankings.ivfUpsert(s, dir),
+    Segments.withFlag(fuseOf(Rankings.ivfUpsert(s, dir),
         Rankings.graphUpsert(s, dir),
-        Rankings.binaryUpsert(s, dir))
-      .withColumn("is_new", when(col("n_id") >= cut, 1L).otherwise(0L))
+        Rankings.binaryUpsert(s, dir)), "n_id", cut)
       .select("q_id", "n_id", "rrf", "rank", "is_new")
       .orderBy("q_id", "rank")
   }
@@ -376,8 +375,7 @@ object Fusion {
     * corpus tokenize. Extracted from hybridUpsertTopK so it publishes as
     * its own ranking variant (Rankings.lexUpsert). */
   private[llm] def lexUpsertTopK(s: SparkSession, dir: String): DataFrame = {
-    val snap = LexMaintenance.current(s, dir)
-    val vocab = LexMaintenance.mergedVocab(s, dir, snap)
+    val m = LexMaintenance.merged(s, dir, LexMaintenance.current(s, dir))
     val qtoks = graft.Tables.t(s, dir, "documents")
       .filter(col("doc_id") < HybridQueries)
       .select(col("doc_id").as("q_id"),
@@ -387,7 +385,7 @@ object Fusion {
     // (the hybridTopK discipline); carrying df through the collect means
     // the MERGED dictionary aggregates exactly once per call instead of
     // re-running for the scoring join's broadcast dictionary slice
-    val qtRows = broadcast(qtoks).join(vocab, "token")
+    val qtRows = broadcast(qtoks).join(m.vocab, "token")
       .withColumn("trn", row_number().over(wq))
       .filter(col("trn") <= HybridQTerms)
       .select("q_id", "token", "df")
@@ -395,16 +393,12 @@ object Fusion {
     import s.implicits._
     val qt = qtRows.toSeq.toDF("q_id", "token", "df")
     val terms = qtRows.map(_._2).distinct.toSeq
-    val st = LexMaintenance.member(s, dir, snap, "stats_base")
-      .unionByName(LexMaintenance.member(s, dir, snap, "stats_delta"))
-      .agg(sum("n_docs").as("n_docs"), sum("tot").as("tot"))
     val wl = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id"))
-    LexMaintenance.member(s, dir, snap, "post_base")
-      .unionByName(LexMaintenance.member(s, dir, snap, "post_delta"))
+    m.post
       .filter(col("token").isInCollection(terms))
       .join(broadcast(qt), "token")
       .filter(col("doc_id") =!= col("q_id"))
-      .crossJoin(broadcast(st))
+      .crossJoin(broadcast(m.stats))
       .withColumn("score_t", expr(TextAnalysis.bm25ScoreSql))
       .groupBy("q_id", "doc_id")
       .agg(graft.Tables.dsum10(col("score_t")).as("score"))
@@ -427,8 +421,8 @@ object Fusion {
     * is_new_dense — rather than pretending one cut covers both id
     * spaces. */
   def hybridUpsertTopK(s: SparkSession, dir: String): DataFrame = {
-    val lexCut = LexMaintenance.baseCut(s, dir)
-    val denseCut = IvfMaintenance.baseCut(s, dir)
+    val lexCut = Segments.cut(s, dir, "documents")
+    val denseCut = Segments.cut(s, dir, "embeddings")
     val lex = Rankings.lexUpsert(s, dir)
     val dense = Rankings.ivfUpsert(s, dir)
       .select(col("q_id"), col("n_id"), col("rank").as("r_dense"))
@@ -439,8 +433,8 @@ object Fusion {
           s"coalesce(CAST(1 AS DOUBLE) / ($FusionK + r_dense), 0D)"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 10)
-      .withColumn("is_new_lex", when(col("n_id") >= lexCut, 1L).otherwise(0L))
-      .withColumn("is_new_dense", when(col("n_id") >= denseCut, 1L).otherwise(0L))
+      .withColumn("is_new_lex", Segments.flag(col("n_id"), lexCut))
+      .withColumn("is_new_dense", Segments.flag(col("n_id"), denseCut))
       .select("q_id", "n_id", "rrf", "rank", "is_new_lex", "is_new_dense")
       .orderBy("q_id", "rank")
   }

@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables._
 
 /** GRAPH-INDEX MAINTENANCE — the incremental INSERT of the graph-ANN
   * family (the HNSW/NSG insert algorithm, Malkov & Yashunin 2016, public:
@@ -23,21 +22,11 @@ import graft.Tables._
   * equi-join — the row-group pruning trick does not scale to
   * batch-cardinality id sets and is deliberately not used here). Each
   * inserted node emits its top-`GraphK` links into the base graph — the
-  * adjacency rows a real deployment appends as the graph's delta segment
-  * (the IvfMaintenance base ∪ delta discipline applies unchanged from
-  * there). Every score is the fixed-order cosine with ties to the lower
+  * adjacency rows the serve-edge Segments.Root holds as its delta
+  * member. Every score is the fixed-order cosine with ties to the lower
   * id, so the insert is deterministic and the DuckDB twin replays the
   * identical beam rounds bit-for-bit. */
 object GraphMaintenance {
-
-  /** Same frozen split as the IVF maintenance path. */
-  private def cutOf(s: SparkSession, dir: String): Long =
-    IvfMaintenance.baseCut(s, dir)
-
-  private def withNorm(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(
-      col("vec_id"), col("embedding"),
-      expr(Similarity.normFor(s)("embedding")).as("nrm"))
 
   /** Published BASE-graph location (a state-store root). */
   private[graft] def baseGraphTarget(s: SparkSession, dir: String): String =
@@ -47,10 +36,10 @@ object GraphMaintenance {
     * src-clustered once (construct-once/serve-many). */
   private[graft] def publishedBaseGraph(s: SparkSession, dir: String): DataFrame =
     graft.etl.State.memo(s, baseGraphTarget(s, dir)) { target =>
-      val cut = cutOf(s, dir)
+      val cut = Segments.cut(s, dir, "embeddings")
       graft.etl.Warehouse.publishClustered(s, target,
         Similarity.descentGraphOn(
-          withNorm(s, dir).filter(col("vec_id") < cut), cut,
+          Similarity.withNorm(s, dir).filter(col("vec_id") < cut), cut,
           Similarity.DescentIters),
         "src", Similarity.DescentFiles)
     }.select("src", "dst", "cos", "rnk")
@@ -64,14 +53,13 @@ object GraphMaintenance {
     graft.etl.State.memo(s, insTarget(s, dir))(graft.etl.Warehouse.publish(s, _, insert(s, dir)))
       .select("vec_id", "rnk", "n_id", "cos")
 
-  /** Snapshot ROOT for the graph family's SERVE-EDGE segments — base and
-    * delta are MEMBERS of one multi-table snapshot (the IvfMaintenance
-    * listsRoot discipline): compaction folds the delta edges into a new
-    * base version and RETIRES the delta in the same pointer swap, so a
-    * reader never sees the new base with the old delta (double edges) or
-    * neither. */
-  private[graft] def serveRoot(s: SparkSession, dir: String): String =
-    graft.etl.State.root(s, "ivf", "nndsrv", dir, "embeddings")
+  /** The base search layer: the frozen base kNN graph ∪ the symmetrized
+    * long links over the base ids (modulus `cut`) — the full navigable
+    * base layer the insert walks and the serve-edge base member holds. */
+  private def baseLayer(s: SparkSession, dir: String, cut: Long): DataFrame =
+    publishedBaseGraph(s, dir).select("src", "dst")
+      .unionByName(Similarity.longLinks(
+        Similarity.withNorm(s, dir).filter(col("vec_id") < cut), cut))
 
   /** Range-shape an edge frame so every part-file owns a narrow src range
     * (row-group min/max stats make the serve's In(src) frontier filter
@@ -81,60 +69,24 @@ object GraphMaintenance {
     edges.repartitionByRange(Similarity.DescentFiles, col("src"))
       .sortWithinPartitions("src")
 
-  /** The current serve-edge snapshot, publishing the initial {base, delta}
-    * pair on first call — one atomic commit covering both members.
-    * base = frozen base descent layer ∪ symmetrized base long links (the
-    * full navigable base layer, so no serve round ever recomputes the
-    * long-link explode — the publishedServeGraph discipline); delta = the
-    * inserted adjacency SYMMETRIZED (a base node's back-link is what makes
-    * a late node REACHABLE, the HNSW bidirectional-link effect). */
-  private[graft] def currentServeGraph(s: SparkSession, dir: String): Map[String, String] =
-    graft.etl.State.memoSnapshot(s, serveRoot(s, dir)) { root =>
-      val cut = cutOf(s, dir)
-      val longLinks = withNorm(s, dir).filter(col("vec_id") < cut)
-        .select(col("vec_id").as("src"))
-        .select(col("src"), explode(array(
-          Similarity.LongLinkA.zip(Similarity.LongLinkB).map { case (a, b) =>
-            (col("src") * lit(a) + lit(b)) % lit(TextHash.P) % lit(cut)
-          }: _*)).as("dst"))
-        .filter(col("dst") =!= col("src"))
-      val base = publishedBaseGraph(s, dir).select("src", "dst")
-        .unionByName(longLinks)
-        .unionByName(longLinks.select(col("dst").as("src"), col("src").as("dst")))
-      val delta = publishedInserted(s, dir)
-        .select(col("vec_id").as("src"), col("n_id").as("dst"))
-      graft.etl.Warehouse.publishSnapshot(s, root, Seq(
-        "base" -> bySrc(base),
-        "delta" -> bySrc(delta.unionByName(
-          delta.select(col("dst").as("src"), col("src").as("dst"))))))
-    }
-
-  /** Union of every member the RESOLVED snapshot lists — a file-level
-    * concatenation; after compaction this is one table. */
-  private def serveEdgesOf(s: SparkSession, dir: String,
-                           snap: Map[String, String]): DataFrame = {
-    val root = serveRoot(s, dir)
-    snap.toSeq.sortBy(_._1)
-      .map { case (m, v) => graft.etl.Warehouse.readSnapshotMember(s, root, m, v) }
-      .reduce(_ unionByName _)
-      .select("src", "dst")
-  }
-
-  /** COMPACTION — the graph family's rebuild-cycle half (VERDICT r8 item
-    * 2): fold the delta edges into a fresh base version and retire the
-    * delta member, committed with ONE snapshot-pointer swap. The fold is
-    * file-level — same edge multiset, one src-clustered table — so
-    * serve-before ≡ serve-after bit-for-bit (GraphCompactionSpec pins it)
-    * and the walk's per-round In(src) prune now reads exactly one segment.
-    * A deployment alternates this with the full NN-descent refinement
-    * (which also inter-links the late batch); the refinement is a RETRAIN,
-    * not a compaction — it changes served results, so it publishes as a
-    * new index version, never through this fold. */
-  def compact(s: SparkSession, dir: String): Map[String, String] = {
-    val merged = serveEdgesOf(s, dir, currentServeGraph(s, dir))
-    graft.etl.Warehouse.publishSnapshot(s, serveRoot(s, dir),
-      Seq("base" -> bySrc(merged)))
-  }
+  /** The graph family's SERVE-EDGE segments, every member src-range
+    * shaped (`bySrc`). base = the base layer, so no serve round ever
+    * recomputes the long-link explode; delta = the inserted adjacency
+    * SYMMETRIZED (a base node's back-link is what makes a late node
+    * REACHABLE, the HNSW bidirectional-link effect). Compaction keeps the
+    * edge multiset in one src-clustered table, so serve-before ≡
+    * serve-after bit-for-bit (GraphCompactionSpec pins it) and the walk's
+    * per-round In(src) prune reads one segment. A deployment alternates it
+    * with the full NN-descent refinement (which also inter-links the late
+    * batch); the refinement is a RETRAIN — it changes served results, so it
+    * publishes as a new index version, never through this fold. */
+  val serveEdges = new Segments.Root("ivf", "nndsrv", "embeddings",
+      project = _.select("src", "dst"), layout = bySrc)({ (s, dir) =>
+    val delta = publishedInserted(s, dir)
+      .select(col("vec_id").as("src"), col("n_id").as("dst"))
+    (baseLayer(s, dir, Segments.cut(s, dir, "embeddings")),
+      delta.unionByName(delta.select(col("dst").as("src"), col("src").as("dst"))))
+  })
 
   /** q_sim_graph_upsert: the FRESHNESS serve — the standard 8-query beam
     * search over the serve-edge snapshot (base layer + symmetrized delta),
@@ -143,19 +95,14 @@ object GraphMaintenance {
     * family's twin of q_sim_ivf_upsert's flag. The snapshot is resolved
     * ONCE, so a concurrent compaction can never split this serve. */
   def upsertSearch(s: SparkSession, dir: String): DataFrame = {
-    val cut = cutOf(s, dir)
-    val e = withNorm(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
+    val e = Similarity.withNorm(s, dir)
     val q = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
-    val graph = serveEdgesOf(s, dir, currentServeGraph(s, dir))
-    val entries = publishedBaseGraph(s, dir)
-      .groupBy("dst").agg(count(lit(1)).as("deg"))
-      .orderBy(col("deg").desc, col("dst"))
-      .limit(Similarity.NEntries)
-      .select(col("dst").as("n_id"))
-    Similarity.beamServe(e, q, graph, entries)
-      .withColumn("is_new", when(col("n_id") >= cut, 1L).otherwise(0L))
+    val graph = serveEdges.read(s, dir)
+    val entries = Similarity.topInDegree(publishedBaseGraph(s, dir))
+    Segments.withFlag(Similarity.beamServe(e, q, graph, entries), "n_id", cut)
       .select("q_id", "n_id", "cos", "rank", "is_new")
       .orderBy("q_id", "rank")
   }
@@ -174,10 +121,10 @@ object GraphMaintenance {
     val S = Similarity.MeanScale
     val best = publishedBaseGraph(s, dir)
       .filter(col("rnk") === 1)
-      .select(col("cos"), lit("base").as("segment"))
+      .select(col("cos"), Segments.label(late = false).as("segment"))
       .unionByName(publishedInserted(s, dir)
         .filter(col("rnk") === 1)
-        .select(col("cos"), lit("late").as("segment")))
+        .select(col("cos"), Segments.label(late = true).as("segment")))
     best.groupBy("segment")
       .agg(count(lit(1)).as("n"),
         (sum(floor(col("cos") * S)
@@ -195,8 +142,8 @@ object GraphMaintenance {
     * into the base (the batch is searched, not inter-linked — the standard
     * insert; batch-internal edges arrive with the next full refinement). */
   def insert(s: SparkSession, dir: String): DataFrame = {
-    val cut = cutOf(s, dir)
-    val e = withNorm(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
+    val e = Similarity.withNorm(s, dir)
     val base = e.filter(col("vec_id") < cut)
     val q = e.filter(col("vec_id") >= cut)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -208,26 +155,11 @@ object GraphMaintenance {
         .withColumn("cos", expr(Similarity.dotFor(s)("q_emb", "n_emb")) /
           (col("q_nrm") * col("n_nrm")))
         .select("q_id", "n_id", "cos")
-    // search graph = published base kNN layer + the base long-link layer
-    // (dst = (src·a + b) mod P mod cut — the base corpus's navigability
-    // links, exactly what the base serve walks)
-    val longLinks = base.select(col("vec_id").as("src"))
-      .select(col("src"), explode(array(
-        Similarity.LongLinkA.zip(Similarity.LongLinkB).map { case (a, b) =>
-          (col("src") * lit(a) + lit(b)) % lit(TextHash.P) % lit(cut)
-        }: _*)).as("dst"))
-      .filter(col("dst") =!= col("src"))
-    val graph = publishedBaseGraph(s, dir)
-      .select("src", "dst")
-      .unionByName(longLinks)
-      .unionByName(longLinks.select(col("dst").as("src"), col("src").as("dst")))
-    // entry points: the base graph's top in-degree hubs (the entryNodes
-    // heuristic over the frozen graph)
-    val entries = publishedBaseGraph(s, dir)
-      .groupBy("dst").agg(count(lit(1)).as("deg"))
-      .orderBy(col("deg").desc, col("dst"))
-      .limit(Similarity.NEntries)
-      .select(col("dst").as("n_id"))
+    // search graph = the base layer (published base kNN layer + the base
+    // long links — exactly what the base serve walks); entry points = the
+    // base graph's top in-degree hubs
+    val graph = baseLayer(s, dir, cut)
+    val entries = Similarity.topInDegree(publishedBaseGraph(s, dir))
     // per-round localCheckpoint: the frontier is batch·beam rows — TOO BIG
     // for the 8-query serve's driver-state walk — and each round references
     // it three times, so a lazily-composed walk recomputes round r-1 per

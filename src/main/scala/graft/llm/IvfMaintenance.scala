@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables._
 
 /** IVF INDEX MAINTENANCE — the incremental-add path every serving vector
   * warehouse runs between rebuilds: an index is trained and published once,
@@ -23,36 +22,14 @@ import graft.Tables._
   * is EXACTLY what a from-scratch assignment against the same centroids
   * would produce (UpsertIvfSpec pins the equivalence) — the freshness gap
   * of real systems is only the centroids' staleness, surfaced here by the
-  * is_new flag on served neighbors. */
+  * is_new flag on served neighbors. The base/delta storage is a
+  * Segments.Root. */
 object IvfMaintenance {
 
-  /** Base fraction: the index trained before the last quarter arrived. */
-  val BaseFrac = 0.75
   private val NQueries = 8
-
-  /** The base/late cut: ⌊N·BaseFrac⌋ — one corpus-count scalar (metadata
-    * tier; the twin's scalar subquery). Served from the count-once
-    * TableStats manifest, not a per-call `.count()` scan (the planesFor
-    * discipline — a serve should never pay a corpus pass for one number). */
-  private[graft] def baseCut(s: SparkSession, dir: String): Long =
-    math.floor(graft.etl.TableStats.rowCount(s, dir, "embeddings") * BaseFrac).toLong
-
-  private def withNorm(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(
-      col("vec_id"), col("embedding"),
-      expr(Similarity.normFor(s)("embedding")).as("nrm"))
 
   private[graft] def centsTarget(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "ivf", "up_cents", dir, "embeddings")
-
-  /** Snapshot ROOT for the list tables: base and delta are MEMBERS of one
-    * multi-table snapshot (Warehouse.publishSnapshot), because maintenance
-    * has a commit that must change both at once — compaction folds the
-    * delta into a new base version and RETIRES the delta, and a reader
-    * must never observe the new base with the old delta (double rows) or
-    * neither. One `_SNAPSHOT` pointer resolves every member. */
-  private[graft] def listsRoot(s: SparkSession, dir: String): String =
-    graft.etl.State.root(s, "ivf", "up_lists", dir, "embeddings")
 
   /** Centroids trained on the BASE corpus only, published once (the frozen
     * index version late batches are measured against). `private[llm]`:
@@ -60,7 +37,7 @@ object IvfMaintenance {
     * SAME coarse stage. */
   private[llm] def cents(s: SparkSession, dir: String, cut: Long): DataFrame =
     graft.etl.State.memo(s, centsTarget(s, dir))(graft.etl.Warehouse.publish(s, _,
-        Similarity.trainCentroidsOn(withNorm(s, dir).filter(col("vec_id") < cut))))
+        Similarity.trainCentroidsOn(Similarity.withNorm(s, dir).filter(col("vec_id") < cut))))
       .select("cent_id", "c_emb")
 
   /** One frozen-centroid assignment pass over an id slice — the shared
@@ -69,73 +46,35 @@ object IvfMaintenance {
     * predicate pushes to the parquet scan (UpsertIvfSpec pins it). */
   private[graft] def assignSlice(s: SparkSession, dir: String, cut: Long,
                                  newRows: Boolean): DataFrame = {
-    val e = withNorm(s, dir)
+    val e = Similarity.withNorm(s, dir)
       .filter(if (newRows) col("vec_id") >= cut else col("vec_id") < cut)
     Similarity.rankAgainst(e, cents(s, dir, cut))
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
   }
 
-  /** The current snapshot (publishing the initial {base, delta} pair on
-    * first call — one atomic commit covering both members). */
-  private[graft] def currentLists(s: SparkSession, dir: String,
-                                  cut: Long): Map[String, String] =
-    graft.etl.State.memoSnapshot(s, listsRoot(s, dir))(
-      graft.etl.Warehouse.publishSnapshot(s, _, Seq(
-        "base" -> assignSlice(s, dir, cut, newRows = false),
-        "delta" -> assignSlice(s, dir, cut, newRows = true)),
-        Some("cent_id")))
+  /** The inverted lists: base and delta members hive-partitioned by cell,
+    * so every serve prunes both to the probed cells. Compaction (`compact`)
+    * keeps the rows — one cell-partitioned table, bigger files — at the
+    * price of one partitioned rewrite of the index body, paid off the
+    * serving path whenever the delta-to-base ratio makes it worth it
+    * (CompactionSpec races a reader through it). The full membership
+    * (`read`) is what the composite's residual stage reads too. */
+  val lists = new Segments.Root("ivf", "up_lists", "embeddings",
+      Some("cent_id"),
+      project = _.select(col("vec_id"), col("embedding"), col("nrm"),
+        col("cent_id").cast("long").as("cent_id")))({ (s, dir) =>
+    val cut = Segments.cut(s, dir, "embeddings")
+    (assignSlice(s, dir, cut, newRows = false), assignSlice(s, dir, cut, newRows = true))
+  })
 
-  /** Every vector with its frozen-centroid cell id — the current snapshot's
-    * full membership (the composite's residual stage reads this too). */
-  private[llm] def allLists(s: SparkSession, dir: String): DataFrame = {
-    val cut = baseCut(s, dir)
-    listsOf(s, dir, currentLists(s, dir, cut))
-  }
-
-  /** Union of every member the RESOLVED snapshot lists (members joined in
-    * name order — deterministic; a file-level concatenation, no shuffle).
-    * After compaction the snapshot has no delta member and this is one
-    * table. */
-  private def listsOf(s: SparkSession, dir: String,
-                      snap: Map[String, String]): DataFrame = {
-    val root = listsRoot(s, dir)
-    snap.toSeq.sortBy(_._1)
-      .map { case (m, v) => graft.etl.Warehouse.readSnapshotMember(s, root, m, v) }
-      .reduce(_ unionByName _)
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cent_id").cast("long").as("cent_id"))
-  }
-
-  /** COMPACTION — the rebuild-cycle half of maintenance: fold the delta
-    * into a fresh base version and retire the delta member, committed with
-    * ONE snapshot-pointer swap. Serving is uninterrupted and exact at every
-    * instant: a reader resolved either the old snapshot (base + delta) or
-    * the new one (merged base) — never a mix (CompactionSpec races it).
-    * Data is unchanged — same rows, one table, bigger files; the old
-    * versions stay readable until vacuum (the two-phase contract). Cost is
-    * one partitioned rewrite of the index body, paid off the serving path
-    * at whatever cadence the delta-to-base ratio makes worth it. */
-  def compact(s: SparkSession, dir: String): Map[String, String] = {
-    val cut = baseCut(s, dir)
-    val merged = listsOf(s, dir, currentLists(s, dir, cut))
-    graft.etl.Warehouse.publishSnapshot(s, listsRoot(s, dir),
-      Seq("base" -> merged), Some("cent_id"))
-  }
-
-  /** q_sim_ivf_upsert: the post-add serve — top-10 per sample query over
-    * base ∪ delta lists, both read cell-pruned (PartitionFilters on each),
-    * candidates ranked through the k-bounded heap. `is_new` marks late
-    * neighbors: the proof the add is LIVE without any rebuild. Same serving
-    * shape and cost as q_sim_ivf_trained; the union is a file-level
-    * concatenation of two partitioned tables, not a shuffle. */
-  def upsertServe(s: SparkSession, dir: String): DataFrame = {
-    val cut = baseCut(s, dir)
-    val cs = cents(s, dir, cut)
-    // resolve the snapshot ONCE — every member read below comes from the
-    // same commit, so a concurrent compaction can never split this serve
-    val all = listsOf(s, dir, currentLists(s, dir, cut))
-    val q = withNorm(s, dir).filter(col("vec_id") < NQueries)
+  /** The probe/score/rank tail of both serves: the 8 sample queries probe
+    * their `NProbe` nearest frozen centroids, `all` is read pruned to the
+    * probed cells, candidates rank through the k-bounded heap, and `is_new`
+    * marks late neighbors. */
+  private def serveOver(s: SparkSession, dir: String, all: DataFrame,
+                        cs: DataFrame, cut: Long): DataFrame = {
+    val q = Similarity.withNorm(s, dir).filter(col("vec_id") < NQueries)
     val probes = Similarity.rankAgainst(q, cs)
       .filter(col("crn") <= Similarity.NProbe)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -148,11 +87,20 @@ object IvfMaintenance {
       .withColumn("cos", expr(Similarity.dotFor(s)("q_emb", "embedding")) /
         (col("q_nrm") * col("nrm")))
       .select("q_id", "vec_id", "cos")
-    Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10, asc = false,
-        "cos", "n_id")
-      .withColumn("is_new", when(col("n_id") >= cut, 1L).otherwise(0L))
+    Segments.withFlag(Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10,
+        asc = false, "cos", "n_id"), "n_id", cut)
       .select("q_id", "n_id", "cos", "rank", "is_new")
       .orderBy("q_id", "rank")
+  }
+
+  /** q_sim_ivf_upsert: the post-add serve — top-10 per sample query over
+    * base ∪ delta lists, both read cell-pruned (PartitionFilters on each).
+    * `is_new` is the proof the add is LIVE without any rebuild. Same
+    * serving shape and cost as q_sim_ivf_trained; the union is a
+    * file-level concatenation of two partitioned tables, not a shuffle. */
+  def upsertServe(s: SparkSession, dir: String): DataFrame = {
+    val cut = Segments.cut(s, dir, "embeddings")
+    serveOver(s, dir, lists.read(s, dir), cents(s, dir, cut), cut)
   }
 
   /** q_index_drift: the STALENESS MONITOR every frozen index needs — how
@@ -165,13 +113,12 @@ object IvfMaintenance {
     * audit is one assignment-shaped scan + a 2-row aggregate, so a
     * deployment runs it per batch at scan cost. */
   def drift(s: SparkSession, dir: String): DataFrame = {
-    val cut = baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
     val cs = cents(s, dir, cut)
     val S = Similarity.MeanScale
-    Similarity.rankAgainst(withNorm(s, dir), cs)
+    Similarity.rankAgainst(Similarity.withNorm(s, dir), cs)
       .filter(col("crn") === 1)
-      .withColumn("segment",
-        when(col("vec_id") >= cut, lit("late")).otherwise(lit("base")))
+      .withColumn("segment", Segments.segment(col("vec_id"), cut))
       .groupBy("segment")
       .agg(count(lit(1)).as("n"),
         (sum(floor(col("c_cos") * S)
@@ -187,26 +134,12 @@ object IvfMaintenance {
     * — what a rebuild-per-batch would cost to reproduce what the O(batch)
     * add already serves. */
   private[llm] def rebuildServe(s: SparkSession, dir: String): DataFrame = {
-    val cut = baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
     val cs = cents(s, dir, cut)
-    val all = Similarity.rankAgainst(withNorm(s, dir), cs)
+    val all = Similarity.rankAgainst(Similarity.withNorm(s, dir), cs)
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
-    val q = withNorm(s, dir).filter(col("vec_id") < NQueries)
-    val probes = Similarity.rankAgainst(q, cs)
-      .filter(col("crn") <= Similarity.NProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cent_id"))
-    val cands = all.join(broadcast(probes), "cent_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr(Similarity.dotFor(s)("q_emb", "embedding")) /
-        (col("q_nrm") * col("nrm")))
-      .select("q_id", "vec_id", "cos")
-    Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10, asc = false,
-        "cos", "n_id")
-      .withColumn("is_new", when(col("n_id") >= cut, 1L).otherwise(0L))
-      .select("q_id", "n_id", "cos", "rank", "is_new")
-      .orderBy("q_id", "rank")
+    serveOver(s, dir, all, cs, cut)
   }
 
 }

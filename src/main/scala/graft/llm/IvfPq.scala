@@ -248,21 +248,14 @@ object IvfPq {
   private[graft] def upBooksTarget(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "ivf", "ivfpqup_books", dir, "embeddings")
 
-  /** Snapshot ROOT for the composite's code lists: base and delta codes
-    * are MEMBERS of one multi-table snapshot (the IvfMaintenance listsRoot
-    * discipline) so compaction can fold the delta and retire it in ONE
-    * pointer swap. */
-  private[graft] def upListsRoot(s: SparkSession, dir: String): String =
-    graft.etl.State.root(s, "ivf", "ivfpqup_lists", dir, "embeddings")
-
   /** Residual subvectors of EVERY vector against the FROZEN base-trained
     * coarse stage: the snapshot's full membership (cell ids from the
     * IvfMaintenance lists — base assignment and the O(batch) adds alike)
     * joined to the broadcast frozen centroids, grid-snap residuals, M-way
     * split. One map pass. */
   private def upResidualSubvecs(s: SparkSession, dir: String): DataFrame = {
-    val cut = IvfMaintenance.baseCut(s, dir)
-    IvfMaintenance.allLists(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
+    IvfMaintenance.lists.read(s, dir)
       .join(broadcast(IvfMaintenance.cents(s, dir, cut)
         .select(col("cent_id"), col("c_emb"))), "cent_id")
       .withColumn("r", expr(
@@ -278,7 +271,7 @@ object IvfPq {
     * the filtered frame — the freeze), published once. */
   private def upBooks(s: SparkSession, dir: String): DataFrame =
     graft.etl.State.memo(s, upBooksTarget(s, dir)) { target =>
-      val cut = IvfMaintenance.baseCut(s, dir)
+      val cut = Segments.cut(s, dir, "embeddings")
       graft.etl.Warehouse.publish(s, target, Pq.lloydBooks(
         upResidualSubvecs(s, dir).filter(col("vec_id") < cut)
           .select("vec_id", "m", "sv")))
@@ -289,55 +282,26 @@ object IvfPq {
     * the slice predicate pushes through the residual map to the list
     * scan, so the add's plan touches ONLY the new rows — the
     * IvfMaintenance.assignSlice discipline at the code tier). */
-  private def upCodesSlice(s: SparkSession, dir: String,
+  private def upCodesSlice(s: SparkSession, dir: String, cut: Long,
                            newRows: Boolean): DataFrame = {
-    val cut = IvfMaintenance.baseCut(s, dir)
     val sv = upResidualSubvecs(s, dir)
       .filter(if (newRows) col("vec_id") >= cut else col("vec_id") < cut)
     Pq.assign(sv, upBooks(s, dir)).select("vec_id", "m", "code", "cent_id")
   }
 
-  /** The current code-list snapshot (publishing the initial {base, delta}
-    * pair on first call — one atomic commit covering both members, each
-    * hive-partitioned by cell). */
-  private[graft] def currentUpCodes(s: SparkSession, dir: String): Map[String, String] =
-    graft.etl.State.memoSnapshot(s, upListsRoot(s, dir))(
-      graft.etl.Warehouse.publishSnapshot(s, _, Seq(
-        "base" -> upCodesSlice(s, dir, newRows = false),
-        "delta" -> upCodesSlice(s, dir, newRows = true)),
-        Some("cent_id")))
-
-  /** Union of every member the RESOLVED snapshot lists — a file-level
-    * concatenation of per-cell partitioned tables; after compaction this
-    * is one table. */
-  private def upCodesOf(s: SparkSession, dir: String,
-                        snap: Map[String, String]): DataFrame = {
-    val root = upListsRoot(s, dir)
-    snap.toSeq.sortBy(_._1)
-      .map { case (m, v) => graft.etl.Warehouse.readSnapshotMember(s, root, m, v) }
-      .reduce(_ unionByName _)
-      .select(col("vec_id"), col("m"), col("code"),
-        col("cent_id").cast("long").as("cent_id"))
-  }
-
-  /** Per-cell code lists for EVERY vector — the late batch's codes are one
-    * assignment map pass against the FROZEN books (the encode-add: no
-    * retrain anywhere; the delta member of the list snapshot, exactly the
-    * IvfMaintenance discipline). */
-  private[graft] def upPublishedCodes(s: SparkSession, dir: String): DataFrame =
-    upCodesOf(s, dir, currentUpCodes(s, dir))
-
-  /** COMPACTION — the composite's rebuild-cycle half (VERDICT r8 item 4):
-    * fold the delta code lists into a fresh base version and retire the
-    * delta member with ONE snapshot-pointer swap. Books are FROZEN, so the
-    * fold is file-level — no re-encode, same code rows, one partitioned
-    * table — and the serve is bit-identical before/after with exactly one
-    * cell-pruned scan after (IvfPqCompactionSpec pins both). */
-  def compactCodes(s: SparkSession, dir: String): Map[String, String] = {
-    val merged = upCodesOf(s, dir, currentUpCodes(s, dir))
-    graft.etl.Warehouse.publishSnapshot(s, upListsRoot(s, dir),
-      Seq("base" -> merged), Some("cent_id"))
-  }
+  /** The composite's code lists: base and delta codes hive-partitioned by
+    * cell (the IvfMaintenance.lists layout at the code tier). Books are
+    * FROZEN, so compaction is file-level — no re-encode, same code rows,
+    * one partitioned table — and the serve is bit-identical before/after
+    * with exactly one cell-pruned scan after (IvfPqCompactionSpec pins
+    * both). */
+  val upCodes = new Segments.Root("ivf", "ivfpqup_lists", "embeddings",
+      Some("cent_id"),
+      project = _.select(col("vec_id"), col("m"), col("code"),
+        col("cent_id").cast("long").as("cent_id")))({ (s, dir) =>
+    val cut = Segments.cut(s, dir, "embeddings")
+    (upCodesSlice(s, dir, cut, newRows = false), upCodesSlice(s, dir, cut, newRows = true))
+  })
 
   /** q_sim_ivfpq_upsert: the COMPOSITE's post-add serve — IVFADC top-10
     * over base ∪ late codes where BOTH stages froze before the late
@@ -347,10 +311,9 @@ object IvfPq {
     * (assign cell, encode residual) — the full maintenance symmetry with
     * q_sim_ivf_upsert at the composite's 8-bytes-per-vector scan cost. */
   def upsertAdcTopK(s: SparkSession, dir: String): DataFrame = {
-    val cut = IvfMaintenance.baseCut(s, dir)
-    Ranking.topKPerGroup(upsertEst(s, dir), "q_id", "est_d2", "n_id", 10,
-        asc = true, "est_d2", "n_id")
-      .withColumn("is_new", when(col("n_id") >= cut, 1L).otherwise(0L))
+    val cut = Segments.cut(s, dir, "embeddings")
+    Segments.withFlag(Ranking.topKPerGroup(upsertEst(s, dir), "q_id", "est_d2",
+        "n_id", 10, asc = true, "est_d2", "n_id"), "n_id", cut)
       .select("q_id", "n_id", "est_d2", "rank", "is_new")
       .orderBy("q_id", "rank")
   }
@@ -366,9 +329,9 @@ object IvfPq {
     * any corpus size), `is_new` flags late neighbors. */
   def upsertRerankTopK(s: SparkSession, dir: String): DataFrame = {
     val dd = Clustering.dist2For(s) _
-    val cut = IvfMaintenance.baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
     val e = t(s, dir, "embeddings")
-    Ranking.topKPerGroup(upsertEst(s, dir), "q_id", "est_d2", "n_id",
+    val reranked = Ranking.topKPerGroup(upsertEst(s, dir), "q_id", "est_d2", "n_id",
         Shortlist, asc = true, "est_d2", "n_id")
       .select("q_id", "n_id")
       .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), "n_id")
@@ -379,7 +342,7 @@ object IvfPq {
         Window.partitionBy("q_id").orderBy(col("d2"), col("n_id")))
         .cast("long"))
       .filter(col("rank") <= 10)
-      .withColumn("is_new", when(col("n_id") >= cut, 1L).otherwise(0L))
+    Segments.withFlag(reranked, "n_id", cut)
       .select("q_id", "n_id", "d2", "rank", "is_new")
       .orderBy("q_id", "rank")
   }
@@ -389,7 +352,7 @@ object IvfPq {
     * production rerank shortlists. */
   private def upsertEst(s: SparkSession, dir: String): DataFrame = {
     val dd = Clustering.dist2For(s) _
-    val cut = IvfMaintenance.baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
     val cs = IvfMaintenance.cents(s, dir, cut).select("cent_id", "c_emb")
     val e = t(s, dir, "embeddings")
     val q = e.filter(col("vec_id") < NQueries)
@@ -413,7 +376,7 @@ object IvfPq {
         expr(dd("qsv", "csv")).as("pd"))
     val cellIds = probes.select("cent_id").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val est = upPublishedCodes(s, dir)
+    val est = upCodes.read(s, dir)
       .filter(col("cent_id").isInCollection(cellIds))
       .join(broadcast(lut), Seq("cent_id", "m", "code"))
       .filter(col("q_id") =!= col("vec_id"))
@@ -440,15 +403,14 @@ object IvfPq {
     * a deployment runs the late-segment half per batch. */
   def drift(s: SparkSession, dir: String): DataFrame = {
     val dd = Clustering.dist2For(s) _
-    val cut = IvfMaintenance.baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "embeddings")
     val qe = upResidualSubvecs(s, dir)
-      .join(upPublishedCodes(s, dir).select("vec_id", "m", "code"),
+      .join(upCodes.read(s, dir).select("vec_id", "m", "code"),
         Seq("vec_id", "m"))
       .join(broadcast(upBooks(s, dir)), Seq("m", "code"))
       .select(col("vec_id"), expr(
         s"CAST(FLOOR(${dd("sv", "csv")} * $S.0) AS BIGINT)").as("sqe"))
-    qe.groupBy(when(col("vec_id") >= cut, lit("late")).otherwise(lit("base"))
-        .as("segment"))
+    qe.groupBy(Segments.segment(col("vec_id"), cut).as("segment"))
       .agg(countDistinct(col("vec_id")).as("n"),
         (sum(col("sqe").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
           .cast("string").cast("double") /

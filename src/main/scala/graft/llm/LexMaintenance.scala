@@ -13,7 +13,7 @@ import TextHash.tokens
   * statistic are ADDITIVE across batches — so the incremental add is the
   * cleanest in the matrix: tokenize ONLY the late batch (O(batch), no base
   * re-scan anywhere), publish its postings/vocab/stats as delta MEMBERS of
-  * one multi-table snapshot (the IvfMaintenance.listsRoot discipline), and
+  * one multi-table snapshot (the Segments.Root discipline), and
   * the serve reconciles df/stats by summing base + delta — integer sums,
   * so serve-after-add is BIT-IDENTICAL to a full-corpus rebuild
   * (LexUpsertSpec pins it; the same strongest-equivalence contract as the
@@ -39,13 +39,6 @@ import TextHash.tokens
 object LexMaintenance {
 
   import TextAnalysis.{Bm25QTerms, Bm25TopK, bm25ScoreSql}
-
-  /** The base/late cut on documents: ⌊N·BaseFrac⌋ — the embeddings
-    * families' split constant, reused so every family's maintenance
-    * fixtures agree on what "the late quarter" means. */
-  private[graft] def baseCut(s: SparkSession, dir: String): Long =
-    math.floor(graft.etl.TableStats.rowCount(s, dir, "documents")
-      * IvfMaintenance.BaseFrac).toLong
 
   private[graft] def snapRoot(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "lex", "up", dir, "documents")
@@ -75,23 +68,29 @@ object LexMaintenance {
     * set on first call — one atomic commit covering all six members). */
   private[llm] def current(s: SparkSession, dir: String): Map[String, String] =
     graft.etl.State.memoSnapshot(s, snapRoot(s, dir)) { root =>
-      val cut = baseCut(s, dir)
+      val cut = Segments.cut(s, dir, "documents")
       graft.etl.Warehouse.publishSnapshot(s, root,
         sliceMembers(s, dir, cut, newRows = false) ++
           sliceMembers(s, dir, cut, newRows = true))
     }
 
-  private[llm] def member(s: SparkSession, dir: String, snap: Map[String, String],
+  private def member(s: SparkSession, dir: String, snap: Map[String, String],
                      name: String): DataFrame =
     graft.etl.Warehouse.readSnapshotMember(s, snapRoot(s, dir), name, snap(name))
 
-  /** The MERGED dictionary: df summed across members — exact integers, so
-    * it equals the full-corpus df bit-for-bit. Vocabulary-sized. */
-  private[llm] def mergedVocab(s: SparkSession, dir: String,
-                          snap: Map[String, String]): DataFrame =
-    member(s, dir, snap, "vocab_base")
-      .unionByName(member(s, dir, snap, "vocab_delta"))
-      .groupBy("token").agg(sum("df").as("df"))
+  /** The MERGED index of a resolved snapshot: postings concatenated
+    * (tf/dl are per-doc facts, disjoint across members), df summed per
+    * token and the corpus stats summed — exact integers, so every piece
+    * equals its full-corpus rebuild bit-for-bit. */
+  private[llm] final case class Merged(post: DataFrame, vocab: DataFrame, stats: DataFrame)
+
+  private[llm] def merged(s: SparkSession, dir: String, snap: Map[String, String]): Merged = {
+    def both(m: String) = member(s, dir, snap, s"${m}_base")
+      .unionByName(member(s, dir, snap, s"${m}_delta"))
+    Merged(both("post"),
+      both("vocab").groupBy("token").agg(sum("df").as("df")),
+      both("stats").agg(sum("n_docs").as("n_docs"), sum("tot").as("tot")))
+  }
 
   /** q_text_bm25_upsert: the post-add lexical serve — BM25 top-20 over
     * base ∪ delta postings with df/stats reconciled from the merged
@@ -104,32 +103,27 @@ object LexMaintenance {
     * would, in the same IEEE order, so the result equals q_text_bm25 plus
     * the is_new column (LexUpsertSpec pins the bit-equality). */
   def upsertServe(s: SparkSession, dir: String): DataFrame = {
-    val cut = baseCut(s, dir)
-    val snap = current(s, dir)
-    val vocab = mergedVocab(s, dir, snap)
+    val cut = Segments.cut(s, dir, "documents")
+    val m = merged(s, dir, current(s, dir))
     // ≤ Bm25QTerms (token, df) rows — the probed-cell-ids metadata tier;
     // collected WITH their merged df so the dictionary aggregates once
     // per call (the scoring join's slice re-enters as a literal)
-    val termRows = vocab.orderBy(col("df"), col("token")).limit(Bm25QTerms)
+    val termRows = m.vocab.orderBy(col("df"), col("token")).limit(Bm25QTerms)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val terms = termRows.map(_._1).toSeq
     import s.implicits._
     val termDf = termRows.toSeq.toDF("token", "df")
-    val st = member(s, dir, snap, "stats_base")
-      .unionByName(member(s, dir, snap, "stats_delta"))
-      .agg(sum("n_docs").as("n_docs"), sum("tot").as("tot"))
-    member(s, dir, snap, "post_base")
-      .unionByName(member(s, dir, snap, "post_delta"))
+    val scored = m.post
       .filter(col("token").isInCollection(terms))
       .join(broadcast(termDf), "token")
-      .crossJoin(broadcast(st))
+      .crossJoin(broadcast(m.stats))
       .withColumn("score_t", expr(bm25ScoreSql))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"),
         graft.Tables.dsum10(col("score_t")).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(Bm25TopK)
-      .withColumn("is_new", when(col("doc_id") >= cut, 1L).otherwise(0L))
+    Segments.withFlag(scored, "doc_id", cut)
       .select("doc_id", "n_terms", "score", "is_new")
   }
 
@@ -137,7 +131,7 @@ object LexMaintenance {
     * inline tf/df/dl/stats, identical score expression. Counting is exact,
     * so this must equal the snapshot serve bit-for-bit. */
   private[llm] def rebuildServe(s: SparkSession, dir: String): DataFrame = {
-    val cut = baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "documents")
     val docs = t(s, dir, "documents")
     val docToks = docs.select(col("doc_id"),
       explode(tokens(col("text"))).as("token"))
@@ -149,7 +143,7 @@ object LexMaintenance {
       sum(size(tokens(col("text"))).cast("long")).as("tot"))
     val terms = dfx.orderBy(col("df"), col("token")).limit(Bm25QTerms)
       .select("token").collect().map(_.getString(0)).toSeq
-    tf.filter(col("token").isInCollection(terms))
+    val scored = tf.filter(col("token").isInCollection(terms))
       .join(broadcast(dfx.filter(col("token").isInCollection(terms))), "token")
       .join(dl, "doc_id")
       .crossJoin(broadcast(st))
@@ -159,7 +153,7 @@ object LexMaintenance {
         graft.Tables.dsum10(col("score_t")).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(Bm25TopK)
-      .withColumn("is_new", when(col("doc_id") >= cut, 1L).otherwise(0L))
+    Segments.withFlag(scored, "doc_id", cut)
       .select("doc_id", "n_terms", "score", "is_new")
   }
 
@@ -171,17 +165,12 @@ object LexMaintenance {
     * (LexUpsertSpec pins it). */
   def compact(s: SparkSession, dir: String): Map[String, String] = {
     val snap = current(s, dir)
-    val post = member(s, dir, snap, "post_base")
-      .unionByName(member(s, dir, snap, "post_delta"))
-    val vocab = mergedVocab(s, dir, snap)
-    val st = member(s, dir, snap, "stats_base")
-      .unionByName(member(s, dir, snap, "stats_delta"))
-      .agg(sum("n_docs").as("n_docs"), sum("tot").as("tot"))
+    val m = merged(s, dir, snap)
     val empty = (n: String) => s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       member(s, dir, snap, n).schema)
     graft.etl.Warehouse.publishSnapshot(s, snapRoot(s, dir), Seq(
-      "post_base" -> post, "vocab_base" -> vocab, "stats_base" -> st,
+      "post_base" -> m.post, "vocab_base" -> m.vocab, "stats_base" -> m.stats,
       "post_delta" -> empty("post_delta"),
       "vocab_delta" -> empty("vocab_delta"),
       "stats_delta" -> empty("stats_delta")))
@@ -197,10 +186,10 @@ object LexMaintenance {
     * one tokenize pass + an anti-join against the vocabulary (token-keyed,
     * vocabulary-sized build side), 2-row output. */
   def drift(s: SparkSession, dir: String): DataFrame = {
-    val cut = baseCut(s, dir)
+    val cut = Segments.cut(s, dir, "documents")
     val snap = current(s, dir)
     val baseVocab = member(s, dir, snap, "vocab_base").select("token")
-    val seg = when(col("doc_id") >= cut, lit("late")).otherwise(lit("base"))
+    val seg = Segments.segment(col("doc_id"), cut)
     val toks = t(s, dir, "documents")
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .withColumn("segment", seg)

@@ -12,12 +12,12 @@ import org.apache.spark.sql.functions._
   *
   * The batch query `q_curriculum_pack_upsert` is the oracle-checkable
   * DECLARATION of what the artifact contains; this object is the
-  * production posture — the layout is materialized ONCE through the
-  * warehouse snapshot commit ({base, delta} members under one `_SNAPSHOT`
-  * pointer) and every later serve reads it back instead of re-packing the
-  * corpus. After k ingest batches a serve reads k+1 segments forever
-  * unless something folds them: `compact` merges the delta segment into a
-  * fresh base version and retires the delta member with ONE pointer swap.
+  * production posture — the layout is materialized ONCE as a
+  * Segments.Root ({base, delta} members under one `_SNAPSHOT` pointer) and
+  * every later serve reads it back instead of re-packing the corpus.
+  * After k ingest batches a serve reads k+1 segments forever unless
+  * something folds them: `segments.compact` merges the delta into a fresh
+  * base version and retires the delta member with ONE pointer swap.
   * Bin ids are already pairwise disjoint per (source, pack_shard) across
   * segments (CurriculumUpsertSpec pins the chain), so the fold is purely
   * file-level — no row is rewritten, no offset moves, and the serve is
@@ -32,60 +32,25 @@ import org.apache.spark.sql.functions._
   * on the read path. */
 object PackMaintenance {
 
-  /** Snapshot ROOT for the packed-bin segments: a state-store root, whose
-    * key holds the code fingerprint, so a stale layout from an older build
-    * can never serve. */
-  private[graft] def packRoot(s: SparkSession, dir: String): String =
-    graft.etl.State.root(s, "pack", "up_bins", dir, "documents")
-
-  /** The current snapshot (publishing the initial {base, delta} pair on
-    * first call — one atomic commit covering both members, the
-    * IvfMaintenance.currentLists shape). The chunk stream and column
-    * contract are the SHARED definitions (Curation.uniqChunks /
-    * Curation.PackCols), so artifact and declaration cannot drift. */
-  private[graft] def currentSegments(s: SparkSession, dir: String): Map[String, String] =
-    graft.etl.State.memoSnapshot(s, packRoot(s, dir)) { root =>
-      val cut = LexMaintenance.baseCut(s, dir)
-      val uniq = Curation.uniqChunks(s, dir)
-      val base = Curation.packBins(uniq.filter(col("doc_id") < cut))
-        .withColumn("is_new", lit(0L))
-        .select(Curation.PackCols.map(col): _*)
-      val delta = Curation.packDeltaBins(uniq.filter(col("doc_id") >= cut), base)
-        .withColumn("is_new", lit(1L))
-        .select(Curation.PackCols.map(col): _*)
-      graft.etl.Warehouse.publishSnapshot(s, root,
-        Seq("base" -> base, "delta" -> delta), Some("source"))
-    }
-
-  /** Union of every member the RESOLVED snapshot lists, in name order — a
-    * file-level concatenation, no shuffle. The hive partition column is
-    * cast back to its declared STRING type: directory-name inference
-    * would otherwise read a numeric-looking source ('2024') as INT and
-    * break bit-identity with the declared pack math (the listsOf
-    * cent_id-cast discipline). */
-  private def segmentsOf(s: SparkSession, dir: String,
-                         snap: Map[String, String]): DataFrame = {
-    val root = packRoot(s, dir)
-    snap.toSeq.sortBy(_._1)
-      .map { case (m, v) => graft.etl.Warehouse.readSnapshotMember(s, root, m, v)
-        .withColumn("source", col("source").cast("string")) }
-      .reduce(_ unionByName _)
-      .select(Curation.PackCols.head, Curation.PackCols.tail: _*)
-  }
+  /** The packed-bin segments: base and delta members hive-partitioned by
+    * source. The chunk stream and column contract are the SHARED
+    * definitions (Curation.uniqChunks / Curation.packSegments), so artifact
+    * and declaration cannot drift. Each member's partition column is cast
+    * back to its declared STRING type: directory-name inference would
+    * otherwise read a numeric-looking source ('2024') as INT and break
+    * bit-identity with the declared pack math. Bin ids are pairwise
+    * disjoint across segments per (source, pack_shard), so compaction
+    * moves files, never bytes within a bin: the serve is bit-identical at
+    * every instant and reads ONE segment afterwards. */
+  val segments = new Segments.Root("pack", "up_bins", "documents",
+      Some("source"),
+      project = _.withColumn("source", col("source").cast("string"))
+        .select(Curation.PackCols.map(col): _*))({ (s, dir) =>
+    Curation.packSegments(Curation.uniqChunks(s, dir), Segments.cut(s, dir, "documents"))
+  })
 
   /** The packed layout a dataloader reads: base ∪ delta from ONE resolved
     * snapshot (a concurrent compaction can never split this serve). */
   def serve(s: SparkSession, dir: String): DataFrame =
-    segmentsOf(s, dir, currentSegments(s, dir))
-
-  /** COMPACTION — fold the delta segment into a fresh base version and
-    * retire the delta member with one snapshot-pointer swap. Bin ids are
-    * pairwise disjoint across segments per (source, pack_shard), so this
-    * moves files, never bytes within a bin: the serve is bit-identical at
-    * every instant and reads ONE segment afterwards. */
-  def compact(s: SparkSession, dir: String): Map[String, String] = {
-    val merged = segmentsOf(s, dir, currentSegments(s, dir))
-    graft.etl.Warehouse.publishSnapshot(s, packRoot(s, dir),
-      Seq("base" -> merged), Some("source"))
-  }
+    segments.read(s, dir)
 }

@@ -23,9 +23,9 @@ object Sessions {
     val run = byTs.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     t(s, dir, "events")
       .withColumn("prev_ts", lag(col("ts"), 1).over(byTs))
-      .withColumn("is_new",
+      .withColumn("starts",
         when(col("prev_ts").isNull || col("ts") - col("prev_ts") > GapNs, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("is_new")).over(run))
+      .withColumn("session_id", sum(col("starts")).over(run))
       .groupBy("user_id", "session_id")
       .agg(
         count(lit(1)).as("n_events"),

@@ -99,7 +99,9 @@ object Similarity {
     e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
 
-  private def withNorm(s: SparkSession, dir: String): DataFrame =
+  /** The embeddings with their L2 norm `nrm` — the corpus frame every
+    * cosine serve, index build and maintenance path scores against. */
+  private[llm] def withNorm(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings").select(
       col("vec_id"), col("embedding"), expr(normFor(s)("embedding")).as("nrm"))
 
@@ -824,8 +826,13 @@ object Similarity {
     * NEntries rows of metadata; deterministic in both engines (count desc,
     * id asc), so the DuckDB twin derives the identical seeds. */
   private[graft] def entryNodes(s: SparkSession, dir: String): DataFrame =
-    publishedDescent(s, dir)
-      .groupBy("dst").agg(count(lit(1)).as("deg"))
+    topInDegree(publishedDescent(s, dir))
+
+  /** The `NEntries` highest in-degree nodes of an edge frame (src, dst),
+    * ties to the lower id, as `n_id` — the entry points of every beam walk
+    * over that graph. */
+  private[llm] def topInDegree(graph: DataFrame): DataFrame =
+    graph.groupBy("dst").agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("dst"))
       .limit(NEntries)
       .select(col("dst").as("n_id"))
@@ -840,6 +847,20 @@ object Similarity {
     * layer then refines locally. Same integer arithmetic in both engines. */
   val LongLinkA: Seq[Long] = Seq(2654435761L, 40503L)
   val LongLinkB: Seq[Long] = Seq(1L, 7L)
+
+  /** The long-link layer over the ids (`vec_id`) of `e`, modulus `n` (the
+    * corpus size, or the base cut for a frozen base graph), SYMMETRIZED:
+    * every link src → dst is emitted with its reverse dst → src, so a walk
+    * can leave a node by the links that point at it. */
+  private[llm] def longLinks(e: DataFrame, n: Long): DataFrame = {
+    val links = e.select(col("vec_id").as("src"))
+      .select(col("src"), explode(array(
+        LongLinkA.zip(LongLinkB).map { case (a, b) =>
+          (col("src") * lit(a) + lit(b)) % lit(TextHash.P) % lit(n)
+        }: _*)).as("dst"))
+      .filter(col("dst") =!= col("src"))
+    links.unionByName(links.select(col("dst").as("src"), col("src").as("dst")))
+  }
 
   /** q_sim_graph_search: GRAPH-PROBE ANN — the flat cousin of HNSW/NSG
     * serving (Malkov & Yashunin 2016, public method): start each query at
@@ -892,16 +913,9 @@ object Similarity {
   private[graft] def publishedServeGraph(s: SparkSession, dir: String): DataFrame =
     graft.etl.State.memo(s, serveGraphTarget(s, dir)) { target =>
       val n = graft.etl.TableStats.rowCount(s, dir, "embeddings")
-      val longLinks = withNorm(s, dir).select(col("vec_id").as("src"))
-        .select(col("src"), explode(array(
-          LongLinkA.zip(LongLinkB).map { case (a, b) =>
-            (col("src") * lit(a) + lit(b)) % lit(TextHash.P) % lit(n)
-          }: _*)).as("dst"))
-        .filter(col("dst") =!= col("src"))
       graft.etl.Warehouse.publishClustered(s, target,
         publishedDescent(s, dir).select("src", "dst")
-          .unionByName(longLinks)
-          .unionByName(longLinks.select(col("dst").as("src"), col("src").as("dst"))),
+          .unionByName(longLinks(withNorm(s, dir), n)),
         "src", DescentFiles)
     }.select("src", "dst")
 
@@ -1073,15 +1087,7 @@ object Similarity {
           col("nrm").as("dn")), "dst")
         .withColumn("cos", expr(dotFor(s)("se", "de")) / (col("sn") * col("dn")))
         .select("src", "dst", "cos")
-    val links = e.select(col("vec_id").as("src"))
-      .select(col("src"), explode(array(
-        LongLinkA.zip(LongLinkB).map { case (a, b) =>
-          (col("src") * lit(a) + lit(b)) % lit(TextHash.P) % lit(n)
-        }: _*)).as("dst"))
-      .filter(col("dst") =!= col("src"))
-    var g = scoreEdges(
-        links.unionByName(links.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct())
+    var g = scoreEdges(longLinks(e, n).distinct())
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= DescentK)
       .localCheckpoint()

@@ -13,7 +13,7 @@ import graft.SparkSpec
   * a fresh state around itself so suite order never matters. */
 class BinaryCompactionSpec extends SparkSpec {
 
-  private def root = BinaryMaintenance.sigsRoot(spark, sf)
+  private def root = BinaryMaintenance.sigs.root(spark, sf)
   private def rm(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rm)
     f.delete()
@@ -32,7 +32,7 @@ class BinaryCompactionSpec extends SparkSpec {
       graft.etl.Warehouse.readSnapshotMember(spark, root, m, v).count()
     }.sum
 
-    val snapAfter = BinaryMaintenance.compact(spark, sf)
+    val snapAfter = BinaryMaintenance.sigs.compact(spark, sf)
     assert(snapAfter.keySet == Set("base"),
       s"compaction must retire the delta member, got ${snapAfter.keySet}")
     assert(graft.etl.Warehouse.readSnapshot(spark, root).get == snapAfter)
@@ -85,7 +85,7 @@ class BinaryCompactionSpec extends SparkSpec {
       }
     })
     reader.start()
-    BinaryMaintenance.compact(spark, sf)
+    BinaryMaintenance.sigs.compact(spark, sf)
     reader.join()
     assert(bad.isEmpty, bad.getOrElse(""))
     resetRoot()

@@ -52,7 +52,7 @@ class BinaryRetrainSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_bretrain").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val cut = IvfMaintenance.baseCut(spark, dir)
+    val cut = Segments.cut(spark, dir, "embeddings")
 
     // 1. the monitor: q_sim_binary_drift against the frozen base means
     val drift = BinaryMaintenance.drift(spark, dir).collect()

@@ -20,7 +20,7 @@ class BinaryUpsertSpec extends SparkSpec {
   }
 
   test("serve shape: 10 ranked rows per query, no self, flags consistent") {
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val got = BinaryMaintenance.upsertServe(spark, sf).collect()
     val byQ = got.groupBy(_.getLong(0))
     assert(byQ.keySet == (0L until 8L).toSet)
@@ -39,7 +39,7 @@ class BinaryUpsertSpec extends SparkSpec {
     // guarantee is that the delta member exists, carries exactly the late
     // rows, and the serve reads base ∪ delta
     BinaryMaintenance.upsertServe(spark, sf).count() // publishes
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val n = graft.Tables.t(spark, sf, "embeddings").count()
     val root = {
       // reach the snapshot through the public read path
@@ -57,7 +57,7 @@ class BinaryUpsertSpec extends SparkSpec {
   }
 
   test("drift monitor: exact segment counts, balanced base bits, positive gap") {
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val n = graft.Tables.t(spark, sf, "embeddings").count()
     val rows = BinaryMaintenance.drift(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
@@ -93,5 +93,5 @@ class BinaryUpsertSpec extends SparkSpec {
   private def muTargetOf(s: org.apache.spark.sql.SparkSession, dir: String): String =
     BinaryMaintenance.muTarget(s, dir)
   private def sigsRootOf(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    BinaryMaintenance.sigsRoot(s, dir)
+    BinaryMaintenance.sigs.root(s, dir)
 }

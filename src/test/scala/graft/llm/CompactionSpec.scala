@@ -16,7 +16,7 @@ class CompactionSpec extends SparkSpec {
     f.delete()
   }
   private def resetRoot(): Unit = {
-    val d = new java.io.File(IvfMaintenance.listsRoot(spark, sf))
+    val d = new java.io.File(IvfMaintenance.lists.root(spark, sf))
     if (d.exists()) rm(d)
   }
 
@@ -24,14 +24,14 @@ class CompactionSpec extends SparkSpec {
     resetRoot()
     val before = IvfMaintenance.upsertServe(spark, sf).collect().toSeq
     val snapBefore = graft.etl.Warehouse.readSnapshot(spark,
-      IvfMaintenance.listsRoot(spark, sf)).get
+      IvfMaintenance.lists.root(spark, sf)).get
     assert(snapBefore.keySet == Set("base", "delta"))
 
-    val snapAfter = IvfMaintenance.compact(spark, sf)
+    val snapAfter = IvfMaintenance.lists.compact(spark, sf)
     assert(snapAfter.keySet == Set("base"),
       s"compaction must retire the delta member, got ${snapAfter.keySet}")
     assert(graft.etl.Warehouse.readSnapshot(spark,
-      IvfMaintenance.listsRoot(spark, sf)).get == snapAfter)
+      IvfMaintenance.lists.root(spark, sf)).get == snapAfter)
 
     val after = IvfMaintenance.upsertServe(spark, sf).collect().toSeq
     assert(after == before, "compaction changed served results")
@@ -45,7 +45,7 @@ class CompactionSpec extends SparkSpec {
     // two-phase retirement: the PRE-compaction members are still readable
     // from their immutable version dirs (a mid-flight reader that resolved
     // the old snapshot finishes consistently; vacuum comes later)
-    val root = IvfMaintenance.listsRoot(spark, sf)
+    val root = IvfMaintenance.lists.root(spark, sf)
     val oldRows = snapBefore.toSeq.sortBy(_._1).map { case (m, v) =>
       graft.etl.Warehouse.readSnapshotMember(spark, root, m, v).count()
     }.sum
@@ -76,7 +76,7 @@ class CompactionSpec extends SparkSpec {
     resetRoot()
     val n = graft.Tables.t(spark, sf, "embeddings").count()
     IvfMaintenance.upsertServe(spark, sf).count() // initial {base, delta}
-    val root = IvfMaintenance.listsRoot(spark, sf)
+    val root = IvfMaintenance.lists.root(spark, sf)
     @volatile var bad: Option[String] = None
     val reader = new Thread(() => {
       (1 to 8).foreach { _ =>
@@ -90,7 +90,7 @@ class CompactionSpec extends SparkSpec {
       }
     })
     reader.start()
-    IvfMaintenance.compact(spark, sf)
+    IvfMaintenance.lists.compact(spark, sf)
     reader.join()
     assert(bad.isEmpty, bad.getOrElse(""))
     resetRoot()

@@ -14,7 +14,7 @@ class CurriculumUpsertSpec extends SparkSpec {
   private lazy val packed = Curation.curriculumPackUpsert(spark, sf).cache()
 
   test("base rows reproduce the base-only pack bit-identically") {
-    val cut = LexMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "documents")
     // the base-time artifact: the SAME shared stages run over base docs
     // only — what a pack job at the cut point would have shipped
     val fw = Window.partitionBy("chunk_hash").orderBy("doc_id", "chunk_idx")

@@ -112,8 +112,8 @@ class FusionSpec extends SparkSpec {
   }
 
   test("upsert-aware hybrid: both towers read their snapshots; per-tower flags") {
-    val lexCut = LexMaintenance.baseCut(spark, sf)
-    val denseCut = IvfMaintenance.baseCut(spark, sf)
+    val lexCut = Segments.cut(spark, sf, "documents")
+    val denseCut = Segments.cut(spark, sf, "embeddings")
     val fresh = Fusion.hybridUpsertTopK(spark, sf).collect()
     val byQ = fresh.groupBy(_.getLong(0))
     assert(byQ.keySet == (0L until 8L).toSet)
@@ -145,7 +145,7 @@ class FusionSpec extends SparkSpec {
   }
 
   test("upsert-aware fusion: late vectors flow through the rank consensus") {
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val fresh = Fusion.fusedUpsertTopK(spark, sf).collect()
     val byQ = fresh.groupBy(_.getLong(0))
     assert(byQ.keySet == (0L until 8L).toSet)

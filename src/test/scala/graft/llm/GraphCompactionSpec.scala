@@ -12,7 +12,7 @@ import graft.SparkSpec
   * restores a fresh state around itself so suite order never matters. */
 class GraphCompactionSpec extends SparkSpec {
 
-  private def root = GraphMaintenance.serveRoot(spark, sf)
+  private def root = GraphMaintenance.serveEdges.root(spark, sf)
   private def rm(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rm)
     f.delete()
@@ -31,7 +31,7 @@ class GraphCompactionSpec extends SparkSpec {
       graft.etl.Warehouse.readSnapshotMember(spark, root, m, v).count()
     }.sum
 
-    val snapAfter = GraphMaintenance.compact(spark, sf)
+    val snapAfter = GraphMaintenance.serveEdges.compact(spark, sf)
     assert(snapAfter.keySet == Set("base"),
       s"compaction must retire the delta member, got ${snapAfter.keySet}")
     assert(graft.etl.Warehouse.readSnapshot(spark, root).get == snapAfter)
@@ -84,7 +84,7 @@ class GraphCompactionSpec extends SparkSpec {
       }
     })
     reader.start()
-    GraphMaintenance.compact(spark, sf)
+    GraphMaintenance.serveEdges.compact(spark, sf)
     reader.join()
     assert(bad.isEmpty, bad.getOrElse(""))
     resetRoot()

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class GraphDriftSpec extends SparkSpec {
 
   test("segments, counts, and the iid fixture shows no staleness gap") {
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val n = graft.Tables.t(spark, sf, "embeddings").count()
     val rows = GraphMaintenance.drift(spark, sf).collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("base", "late"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * hash-checked). */
 class GraphInsertSpec extends SparkSpec {
 
-  private lazy val cut = IvfMaintenance.baseCut(spark, sf)
+  private lazy val cut = Segments.cut(spark, sf, "embeddings")
   private lazy val inserted = GraphMaintenance.insert(spark, sf).collect()
 
   test("every late vector links GraphK base neighbors, scored descending") {

@@ -49,7 +49,7 @@ class GraphRetrainSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_gretrain").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val cut = IvfMaintenance.baseCut(spark, dir)
+    val cut = Segments.cut(spark, dir, "embeddings")
 
     // 1. the monitor: q_graph_drift against the frozen base graph + the
     // beam-inserted late links

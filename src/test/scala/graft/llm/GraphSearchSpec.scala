@@ -154,7 +154,7 @@ class GraphSearchSpec extends SparkSpec {
     assert(!graft.etl.Warehouse.exists(spark,
         GraphMaintenance.baseGraphTarget(spark, dir)),
       "no-delta serve published a maintenance base graph")
-    assert(!new java.io.File(GraphMaintenance.serveRoot(spark, dir)).exists(),
+    assert(!new java.io.File(GraphMaintenance.serveEdges.root(spark, dir)).exists(),
       "no-delta serve created the maintenance serve-edge snapshot")
   }
 }

@@ -9,7 +9,7 @@ import graft.SparkSpec
   * post-compaction serve reads exactly one cell-pruned code scan. */
 class IvfPqCompactionSpec extends SparkSpec {
 
-  private def root = IvfPq.upListsRoot(spark, sf)
+  private def root = IvfPq.upCodes.root(spark, sf)
   private def rm(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rm)
     f.delete()
@@ -31,7 +31,7 @@ class IvfPqCompactionSpec extends SparkSpec {
     val n = graft.Tables.t(spark, sf, "embeddings").count()
     assert(rowsBefore == n * IvfPq.M)
 
-    val snapAfter = IvfPq.compactCodes(spark, sf)
+    val snapAfter = IvfPq.upCodes.compact(spark, sf)
     assert(snapAfter.keySet == Set("base"),
       s"compaction must retire the delta member, got ${snapAfter.keySet}")
 
@@ -72,7 +72,7 @@ class IvfPqCompactionSpec extends SparkSpec {
       }
     })
     reader.start()
-    IvfPq.compactCodes(spark, sf)
+    IvfPq.upCodes.compact(spark, sf)
     reader.join()
     assert(bad.isEmpty, bad.getOrElse(""))
     resetRoot()

@@ -13,7 +13,7 @@ import graft.SparkSpec
 class IvfPqDriftSpec extends SparkSpec {
 
   test("segments cut at the maintenance split with exact counts") {
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val n = graft.Tables.t(spark, sf, "embeddings").count()
     val rows = IvfPq.drift(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -41,10 +41,10 @@ class IvfPqDriftSpec extends SparkSpec {
   test("drift runs off the published snapshot: no republish on re-run") {
     IvfPq.drift(spark, sf).count()
     val snap = graft.etl.Warehouse.readSnapshot(spark,
-      IvfPq.upListsRoot(spark, sf))
+      IvfPq.upCodes.root(spark, sf))
     assert(snap.isDefined)
     IvfPq.drift(spark, sf).count()
     assert(graft.etl.Warehouse.readSnapshot(spark,
-      IvfPq.upListsRoot(spark, sf)) == snap)
+      IvfPq.upCodes.root(spark, sf)) == snap)
   }
 }

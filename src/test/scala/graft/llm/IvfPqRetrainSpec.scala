@@ -60,7 +60,7 @@ class IvfPqRetrainSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_pqretrain").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val cut = IvfMaintenance.baseCut(spark, dir)
+    val cut = Segments.cut(spark, dir, "embeddings")
 
     // 1. the monitor: q_sim_ivfpq_drift against the frozen two-stage
     // quantizer (base-trained coarse + base-trained books)

@@ -130,7 +130,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("composite maintenance: frozen-stage encode-add serves late vectors") {
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val rows = IvfPq.upsertAdcTopK(spark, sf).collect()
     assert(rows.length == IvfPq.NQueries * 10)
     rows.foreach { r =>
@@ -146,11 +146,11 @@ class IvfPqSpec extends SparkSpec {
     // snapshot root — same pointer-stability contract)
     val bt = IvfPq.upBooksTarget(spark, sf)
     val bv = graft.etl.Warehouse.currentVersion(spark, bt)
-    val cs = graft.etl.Warehouse.readSnapshot(spark, IvfPq.upListsRoot(spark, sf))
+    val cs = graft.etl.Warehouse.readSnapshot(spark, IvfPq.upCodes.root(spark, sf))
     assert(bv.isDefined && cs.isDefined)
     IvfPq.upsertAdcTopK(spark, sf).count()
     assert(graft.etl.Warehouse.currentVersion(spark, bt) == bv)
-    assert(graft.etl.Warehouse.readSnapshot(spark, IvfPq.upListsRoot(spark, sf)) == cs)
+    assert(graft.etl.Warehouse.readSnapshot(spark, IvfPq.upCodes.root(spark, sf)) == cs)
   }
 
   test("recall audit rows are consistent integer counts") {
@@ -179,7 +179,7 @@ class IvfPqSpec extends SparkSpec {
     // is_new coheres with the shared base cut on every served row
     val cut = math.floor(
       graft.etl.TableStats.rowCount(spark, sf, "embeddings")
-        * IvfMaintenance.BaseFrac).toLong
+        * Segments.BaseFrac).toLong
     rrRows.foreach { r =>
       assert(r.getLong(4) == (if (r.getLong(1) >= cut) 1L else 0L))
     }

@@ -19,7 +19,7 @@ class LexRetrainSpec extends SparkSpec {
     * vocabulary to measure the response). */
   private def lateOovRate(dir: String,
                           vocab: org.apache.spark.sql.DataFrame): Double = {
-    val cut = LexMaintenance.baseCut(spark, dir)
+    val cut = Segments.cut(spark, dir, "documents")
     val toks = graft.Tables.t(spark, dir, "documents")
       .filter(col("doc_id") >= cut)
       .select(explode(tokens(col("text"))).as("token"))

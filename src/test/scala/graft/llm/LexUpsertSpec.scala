@@ -29,7 +29,7 @@ class LexUpsertSpec extends SparkSpec {
   }
 
   test("upsert serve equals q_text_bm25 plus the is_new flag") {
-    val cut = LexMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "documents")
     val up = LexMaintenance.upsertServe(spark, sf).collect().toSeq
     val plain = TextAnalysis.bm25(spark, sf).collect().toSeq
     assert(up.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ==
@@ -41,7 +41,7 @@ class LexUpsertSpec extends SparkSpec {
   test("the add is O(batch): delta members carry exactly the late slice") {
     resetRoot()
     LexMaintenance.upsertServe(spark, sf).count() // publishes
-    val cut = LexMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "documents")
     val n = graft.Tables.t(spark, sf, "documents").count()
     val snap = graft.etl.Warehouse.readSnapshot(spark, root)
     assert(snap.isDefined && snap.get.keySet == Set(
@@ -80,7 +80,7 @@ class LexUpsertSpec extends SparkSpec {
   }
 
   test("drift monitor: exact segment counts, zero base OOV, rate in [0,1]") {
-    val cut = LexMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "documents")
     val n = graft.Tables.t(spark, sf, "documents").count()
     val rows = LexMaintenance.drift(spark, sf).collect()
       .map(r => r.getString(0) ->

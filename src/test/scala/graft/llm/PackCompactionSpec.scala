@@ -18,7 +18,7 @@ class PackCompactionSpec extends SparkSpec {
     f.delete()
   }
   private def resetRoot(): Unit = {
-    val d = new java.io.File(PackMaintenance.packRoot(spark, sf))
+    val d = new java.io.File(PackMaintenance.segments.root(spark, sf))
     if (d.exists()) rm(d)
   }
 
@@ -28,7 +28,7 @@ class PackCompactionSpec extends SparkSpec {
   test("the published layout IS the declared pack math, and compaction never moves a byte") {
     resetRoot()
     // the oracle-checked declaration, recomputed: base pack + delta chain
-    val cut = LexMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "documents")
     val fw = Window.partitionBy("chunk_hash").orderBy("doc_id", "chunk_idx")
     val uniq = Curation.chunkRows(spark, sf, Seq("source"))
       .withColumn("rn", row_number().over(fw))
@@ -45,14 +45,14 @@ class PackCompactionSpec extends SparkSpec {
     assert(before == want,
       "the published segments must reproduce the declared pack math bit-for-bit")
     val snapBefore = graft.etl.Warehouse.readSnapshot(spark,
-      PackMaintenance.packRoot(spark, sf)).get
+      PackMaintenance.segments.root(spark, sf)).get
     assert(snapBefore.keySet == Set("base", "delta"))
 
-    val snapAfter = PackMaintenance.compact(spark, sf)
+    val snapAfter = PackMaintenance.segments.compact(spark, sf)
     assert(snapAfter.keySet == Set("base"),
       s"compaction must retire the delta member, got ${snapAfter.keySet}")
     assert(graft.etl.Warehouse.readSnapshot(spark,
-      PackMaintenance.packRoot(spark, sf)).get == snapAfter)
+      PackMaintenance.segments.root(spark, sf)).get == snapAfter)
     val after = sorted(PackMaintenance.serve(spark, sf))
     assert(after == before, "compaction changed the served layout")
 
@@ -60,7 +60,7 @@ class PackCompactionSpec extends SparkSpec {
     // their immutable version dirs; vacuum then drops them (default grace
     // protects fresh versions — a concurrent publish looks exactly like
     // this — an explicit graceMs=0 models drained readers)
-    val root = PackMaintenance.packRoot(spark, sf)
+    val root = PackMaintenance.segments.root(spark, sf)
     val oldRows = snapBefore.toSeq.sortBy(_._1).map { case (m, v) =>
       graft.etl.Warehouse.readSnapshotMember(spark, root, m, v).count()
     }.sum
@@ -102,7 +102,7 @@ class PackCompactionSpec extends SparkSpec {
   test("every resolved snapshot is complete: reader race sees all bin rows, once") {
     resetRoot()
     val n = PackMaintenance.serve(spark, sf).count() // initial {base, delta}
-    val root = PackMaintenance.packRoot(spark, sf)
+    val root = PackMaintenance.segments.root(spark, sf)
     @volatile var bad: Option[String] = None
     val reader = new Thread(() => {
       (1 to 8).foreach { _ =>
@@ -116,7 +116,7 @@ class PackCompactionSpec extends SparkSpec {
       }
     })
     reader.start()
-    PackMaintenance.compact(spark, sf)
+    PackMaintenance.segments.compact(spark, sf)
     reader.join()
     assert(bad.isEmpty, bad.getOrElse(""))
     resetRoot()

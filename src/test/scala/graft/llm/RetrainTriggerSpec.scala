@@ -25,7 +25,7 @@ class RetrainTriggerSpec extends SparkSpec {
     val e = graft.Tables.t(spark, dir, "embeddings").select(
       col("vec_id"), col("embedding"),
       expr(s"sqrt(${dot("embedding", "embedding")})").as("nrm"))
-    val cut = IvfMaintenance.baseCut(spark, dir)
+    val cut = Segments.cut(spark, dir, "embeddings")
     val rows = Similarity.rankAgainst(e, cents)
       .filter(col("crn") === 1)
       .withColumn("segment",

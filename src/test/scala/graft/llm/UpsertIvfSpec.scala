@@ -21,7 +21,7 @@ class UpsertIvfSpec extends SparkSpec {
       .selectExpr("sum(is_new)").collect()(0).getLong(0)
     assert(served > 0L, "no late-batch vector reached any top-10")
     // and every flag is consistent with the cut
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     IvfMaintenance.upsertServe(spark, sf).collect().foreach { r =>
       assert(r.getLong(4) == (if (r.getLong(1) >= cut) 1L else 0L))
     }
@@ -29,7 +29,7 @@ class UpsertIvfSpec extends SparkSpec {
 
   test("the incremental add scans only the new rows") {
     IvfMaintenance.upsertServe(spark, sf).count() // publishes the index
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val plan = IvfMaintenance.assignSlice(spark, sf, cut, newRows = true)
       .queryExecution.executedPlan.toString
     val embScans = plan.linesIterator.filter(_.contains("embeddings.parquet")).toSeq
@@ -49,7 +49,7 @@ class UpsertIvfSpec extends SparkSpec {
   }
 
   test("drift monitor: exact segment counts, and the base fits its own index better") {
-    val cut = IvfMaintenance.baseCut(spark, sf)
+    val cut = Segments.cut(spark, sf, "embeddings")
     val n = graft.Tables.t(spark, sf, "embeddings").count()
     val rows = IvfMaintenance.drift(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
@@ -68,7 +68,7 @@ class UpsertIvfSpec extends SparkSpec {
     val cv = graft.etl.Warehouse.currentVersion(spark,
       IvfMaintenance.centsTarget(spark, sf))
     val snap = graft.etl.Warehouse.readSnapshot(spark,
-      IvfMaintenance.listsRoot(spark, sf))
+      IvfMaintenance.lists.root(spark, sf))
     assert(cv.isDefined && snap.isDefined)
     assert(snap.get.keySet == Set("base", "delta"),
       s"fresh index must snapshot both members, got ${snap.get.keySet}")
@@ -76,7 +76,7 @@ class UpsertIvfSpec extends SparkSpec {
     assert(graft.etl.Warehouse.currentVersion(spark,
       IvfMaintenance.centsTarget(spark, sf)) == cv)
     assert(graft.etl.Warehouse.readSnapshot(spark,
-      IvfMaintenance.listsRoot(spark, sf)) == snap,
+      IvfMaintenance.lists.root(spark, sf)) == snap,
       "a later serve republished the list snapshot")
   }
 }

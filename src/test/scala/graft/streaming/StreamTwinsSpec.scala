@@ -666,7 +666,7 @@ class StreamTwinsSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     // batch face first: trains + publishes the frozen upsert centroids
-    val cut = graft.llm.IvfMaintenance.baseCut(s, sf)
+    val cut = graft.llm.Segments.cut(s, sf, "embeddings")
     val want = graft.llm.IvfMaintenance.assignSlice(s, sf, cut, newRows = true)
       .collect().map(r => (r.getLong(0), r.getDouble(2), r.getLong(3))).sorted
     val target = graft.llm.IvfMaintenance.centsTarget(s, sf)
@@ -695,8 +695,8 @@ class StreamTwinsSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     // batch face first: publishes the frozen cents + books + code snapshot
-    val cut = graft.llm.IvfMaintenance.baseCut(s, sf)
-    val want = graft.llm.IvfPq.upPublishedCodes(s, sf)
+    val cut = graft.llm.Segments.cut(s, sf, "embeddings")
+    val want = graft.llm.IvfPq.upCodes.read(s, sf)
       .filter($"vec_id" >= cut).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).sorted
     assert(want.nonEmpty)
@@ -747,7 +747,7 @@ class StreamTwinsSpec extends SparkSpec {
       .sorted
     assert(want.nonEmpty,
       "compacted snapshot — reset the lexical root before this spec")
-    val cut = graft.llm.LexMaintenance.baseCut(s, sf)
+    val cut = graft.llm.Segments.cut(s, sf, "documents")
     val rows = graft.Tables.t(s, sf, "documents")
       .filter($"doc_id" >= cut).select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -769,7 +769,7 @@ class StreamTwinsSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     import org.apache.spark.sql.functions.{col, max, row_number}
     // batch face: the frozen base layout + the delta layout to reproduce
-    val cut = graft.llm.LexMaintenance.baseCut(s, sf)
+    val cut = graft.llm.Segments.cut(s, sf, "documents")
     val fw = org.apache.spark.sql.expressions.Window
       .partitionBy("chunk_hash").orderBy("doc_id", "chunk_idx")
     val uniq = graft.llm.Curation.chunkRows(s, sf, Seq("source"))

@@ -1,12 +1,18 @@
 #!/usr/bin/env python3
 """Dev-only local oracle harness (mirrors the driver's DuckDB compare).
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--digests <file>]
 Reads each <outDir>/<name> parquet (Spark output) and runs the matching
 oracle SQL from <outDir>/oracle_sql.json in DuckDB over the sfDir tables,
 then compares schema + values with columns sorted by name.
+
+Every query line ends with `md5=<digest>`: an MD5 of the Spark rows with
+columns sorted by name, rows sorted by all columns, each value normalized
+as the compare does. `--digests <file>` also writes {name: digest} for
+every output dir (no-oracle rows included) as JSON, so two Verify runs
+compare by diffing their digest files.
 """
-import sys, json, math, glob, os
+import sys, json, math, glob, os, hashlib
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -25,7 +31,23 @@ def norm(v):
         return tuple(norm(x) for x in v)
     return v
 
-def main(sf_dir, out_dir):
+def digest(df):
+    cols = sorted(df.columns)
+    try:
+        df = df[cols].sort_values(by=cols, ignore_index=True)
+        rows = [repr(tuple(norm(v) for v in r))
+                for r in zip(*(df[c].tolist() for c in cols))]
+    except Exception:
+        # cells the frame sort cannot order (arrays): sort the rendered rows
+        rows = sorted(repr(tuple(norm(v) for v in r))
+                      for r in zip(*(df[c].tolist() for c in cols)))
+    h = hashlib.md5(repr(cols).encode())
+    for r in rows:
+        h.update(r.encode())
+        h.update(b"\n")
+    return h.hexdigest()
+
+def main(sf_dir, out_dir, digests_path=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -33,31 +55,36 @@ def main(sf_dir, out_dir):
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     n_pass = n_fail = n_noracle = 0
+    digests = {}
     for name in names:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output")
+            digests[name] = None
             n_fail += 1
             continue
         sdf = con.execute(
             f"SELECT * FROM read_parquet({files!r})").fetch_df()
+        d = digests[name] = digest(sdf)
+        def say(line):
+            print(f"{line} md5={d}")
         if name not in oracle:
-            print(f"SKIP {name}: no oracle ({len(sdf)} rows)")
+            say(f"SKIP {name}: no oracle ({len(sdf)} rows)")
             n_noracle += 1
             continue
         try:
             odf = con.execute(oracle[name]).fetch_df()
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}")
+            say(f"FAIL {name}: oracle SQL error: {e}")
             n_fail += 1
             continue
         scols, ocols = sorted(sdf.columns), sorted(odf.columns)
         if scols != ocols:
-            print(f"FAIL {name}: columns spark={scols} oracle={ocols}")
+            say(f"FAIL {name}: columns spark={scols} oracle={ocols}")
             n_fail += 1
             continue
         if len(sdf) != len(odf):
-            print(f"FAIL {name}: rows spark={len(sdf)} oracle={len(odf)}")
+            say(f"FAIL {name}: rows spark={len(sdf)} oracle={len(odf)}")
             n_fail += 1
             continue
         # Driver-faithful: the driver sorts result rows by ALL columns before
@@ -68,7 +95,7 @@ def main(sf_dir, out_dir):
             sdf = sdf[scols].sort_values(by=scols, ignore_index=True)
             odf = odf[scols].sort_values(by=scols, ignore_index=True)
         except Exception as e:
-            print(f"FAIL {name}: row-sort crash (driver-fatal): {type(e).__name__}: {e}")
+            say(f"FAIL {name}: row-sort crash (driver-fatal): {type(e).__name__}: {e}")
             n_fail += 1
             continue
         # Representation check: the driver hashes serialized values, so a
@@ -83,7 +110,7 @@ def main(sf_dir, out_dir):
                 break
         if repbad:
             c, st, ot = repbad
-            print(f"FAIL {name}: col={c} representation spark={st} oracle={ot}")
+            say(f"FAIL {name}: col={c} representation spark={st} oracle={ot}")
             n_fail += 1
             continue
         bad = None
@@ -99,13 +126,22 @@ def main(sf_dir, out_dir):
                     break
         if bad:
             c, i, a, b = bad
-            print(f"FAIL {name}: col={c} row={i} spark={a!r} oracle={b!r}")
+            say(f"FAIL {name}: col={c} row={i} spark={a!r} oracle={b!r}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(sdf)} rows)")
+            say(f"PASS {name} ({len(sdf)} rows)")
             n_pass += 1
+    if digests_path:
+        with open(digests_path, "w") as f:
+            json.dump(digests, f, indent=1, sort_keys=True)
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} no-oracle")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    args = sys.argv[1:]
+    digests_path = None
+    if "--digests" in args:
+        i = args.index("--digests")
+        digests_path = args[i + 1]
+        del args[i:i + 2]
+    sys.exit(main(args[0], args[1], digests_path))
