@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops._
 import graft.llm.{Dedup, Similarity, TextAnalysis, Sessions}
-import graft.llm.TextHash
 
-/** Driver contract — see /root/repo/SURVEY.md §2.2 for the declared query
-  * inventory and §7 for the build plan. Every key in `queries` has a matching
-  * DuckDB oracle in `oracleSql` unless the operator is engine-specific
-  * (approx sketches) — those get the driver's weaker rows-only check.
+/** Driver contract — see SURVEY.md §2.2 (repository root) for the declared
+  * query inventory and §7 for the build plan. Every key in `queries` has a
+  * matching DuckDB oracle in `oracleSql` unless the operator is
+  * engine-specific (approx sketches) — those get the driver's weaker
+  * rows-only check. The oracles live in `graft.oracle`, one file per query
+  * family, built from the shared fragments in `graft.oracle.Sql`.
   *
   * Determinism discipline (SURVEY.md §7.4): every query ends in an explicit
   * orderBy over a unique key; money aggregates accumulate in DECIMAL and
@@ -360,4192 +361,19 @@ object SparkEntry {
     "q_mix_apply"           -> (graft.llm.Curation.mixApply _),
   )
 
-  /** DECIMAL-staged exact sum, surfaced as DOUBLE (matches Tables.dsum2).
-    * The VARCHAR hop makes DuckDB's decimal→double conversion correctly
-    * rounded (parse of the exact decimal string), matching Spark's
-    * BigDecimal.doubleValue — a direct DECIMAL→DOUBLE cast in DuckDB goes
-    * int128→double then ×10⁻ˢ, which can be off by one ulp. */
-  private def dsum(c: String) = s"CAST(CAST(SUM(CAST($c AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)"
+  /** The DuckDB twin of each query, by name, merged from the per-family
+    * lists in `graft.oracle`. */
+  def oracleSql: Map[String, String] =
+    disjoint(oracle.Relational.twins, oracle.JoinsAggregates.twins,
+      oracle.TextCuration.twins, oracle.VectorIndexes.twins,
+      oracle.DedupMultimodal.twins)
 
-  /** Shared covariance-statistic CTEs (x → g Gram / m,mm mean): the twin of
-    * Similarity.gram + meanVector, used by both q_embed_covariance and the
-    * PCA oracle. */
-  private def covCtes: String =
-    s"""x AS (SELECT vec_id,
-                     unnest(generate_series(1, len(embedding))) - 1 AS i,
-                     unnest([CAST(e AS DOUBLE) for e in embedding]) AS xi
-              FROM embeddings),
-        g AS (SELECT a.i, b.i AS j,
-                     CAST(CAST(SUM(CAST(a.xi * b.xi AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS g,
-                     count(*) AS n
-              FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
-              GROUP BY 1, 2),
-        m AS (SELECT i,
-                     CAST(SUM(CAST(xi * ${Similarity.MeanScale}.0 AS BIGINT)) AS BIGINT) AS ssx,
-                     count(*) AS n
-              FROM x GROUP BY 1),
-        mm AS (SELECT i,
-                      CAST(ssx AS DOUBLE) / (CAST(n AS DOUBLE) * ${Similarity.MeanScale}.0) AS mean_x
-               FROM m)"""
-
-  /** Ten unrolled power iterations over the covariance (twin of
-    * Similarity.pcaProject): wk = C·v(k−1) per row as an ordered
-    * list_sum, vk = wk normalized — every fold left-to-right, matching
-    * the driver-side ascending loops. */
-  private def pcaOracle: String = {
-    val iters = (1 to Similarity.PcaIters).map { k =>
-      s"""w$k AS (SELECT c.i,
-                        list_sum([c.row[t] * v.v[t] for t in generate_series(1, len(c.row))]) AS w
-                 FROM crow c, v${k - 1} v),
-          wl$k AS (SELECT list(w ORDER BY i) AS wl FROM w$k),
-          v$k AS (SELECT [y / sqrt(list_sum([z * z for z in wl])) for y in wl] AS v FROM wl$k)"""
-    }.mkString(",\n")
-    s"""WITH $covCtes,
-        cov AS (SELECT g.i, g.j,
-                       g.g / CAST(g.n AS DOUBLE) - mi.mean_x * mj.mean_x AS c
-                FROM g JOIN mm mi ON g.i = mi.i JOIN mm mj ON g.j = mj.i),
-        cfull AS (SELECT i, j, c FROM cov
-                  UNION ALL SELECT j AS i, i AS j, c FROM cov WHERE i < j),
-        crow AS (SELECT i, list(c ORDER BY j) AS row FROM cfull GROUP BY i),
-        v0 AS (SELECT [CAST(1.0 AS DOUBLE) for e in embedding] AS v
-               FROM embeddings ORDER BY vec_id LIMIT 1),
-        $iters
-        SELECT e.vec_id,
-               list_sum([CAST(e.embedding[t] AS DOUBLE) * v.v[t]
-                         for t in generate_series(1, len(e.embedding))]) AS score
-        FROM embeddings e, v${Similarity.PcaIters} v ORDER BY e.vec_id"""
-  }
-
-  // ---- DuckDB twins of the graft.llm hash/vector primitives ----
-
-  /** 60-bit md5 token hash (DuckDB twin of TextHash.tokHash). */
-  private def dTokHash(e: String) = s"('0x' || substr(md5($e), 1, 15))::BIGINT"
-
-  /** Double dot product, left-to-right (twin of Similarity.dotSql). */
-  private def dDot(a: String, b: String) =
-    s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) for i in generate_series(1, len($a))])"
-
-  /** Euclidean norm (twin of Similarity.normSql). */
-  private def dNorm(a: String) =
-    s"sqrt(list_sum([CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE) for i in generate_series(1, len($a))]))"
-
-  /** Shared minhash CTEs: th (hashed features) → sig (16 minima) → bands
-    * (twin of Dedup.minhashSignatures/bandsOf: Bands × Rows, mod-P fold).
-    * `thList` is the hashed-feature list expression — word tokens for the
-    * default pipelines, char shingles for q_dedup_shingle. */
-  /** MinHash banding CTEs. `cap > 0` mirrors Dedup.MinhashMaxClass: only the
-    * cap smallest doc_ids per distinct feature SET are pair-eligible, the
-    * same row_number-over-class qualification the Spark side applies before
-    * pair expansion (quadratic-output bound for the declared pair queries). */
-  private def minhashCtesFor(thList: String, cap: Int = 0): String = {
-    import TextHash.{A, B, K, P, Bands, Rows}
-    val ms = (0 until K).map(i =>
-      s"list_min([(${A(i)} * x + ${B(i)}) % $P for x in h]) AS m$i").mkString(", ")
-    val bands = (0 until Bands).map { j =>
-      val bh = (Rows * j until Rows * (j + 1)).map(i => s"m$i")
-        .reduce((acc, m) => s"((($acc) * 31 + $m) % $P)")
-      s"SELECT doc_id, $j AS band, $bh AS bh FROM sig"
-    }.mkString(" UNION ALL ")
-    val th =
-      if (cap > 0)
-        s"""th0 AS (SELECT doc_id, $thList AS h FROM documents),
-            th AS (SELECT doc_id, h FROM (
-                     SELECT doc_id, h, row_number() OVER (
-                         PARTITION BY array_to_string(list_sort(list_distinct(h)), ',')
-                         ORDER BY doc_id) AS _rn
-                     FROM th0)
-                   WHERE _rn <= $cap)"""
-      else s"th AS (SELECT doc_id, $thList AS h FROM documents)"
-    s"""$th,
-        sig AS (SELECT doc_id, $ms FROM th),
-        bands AS ($bands),
-        pairs AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-                  FROM bands x JOIN bands y
-                    ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id)"""
-  }
-
-  private def tokThList: String =
-    s"[${dTokHash("t")} % ${TextHash.P} for t in string_split(text, ' ')]"
-
-  private def shingleThList: String = {
-    val n = TextHash.ShingleLen
-    s"[${dTokHash(s"substring(text, i, $n)")} % ${TextHash.P} " +
-      s"for i in generate_series(1, greatest(length(coalesce(text, '')) - ${n - 1}, 1))]"
-  }
-
-  private def minhashCtes: String = minhashCtesFor(tokThList)
-
-  private def minhashCtesCapped: String =
-    minhashCtesFor(tokThList, graft.llm.Dedup.MinhashMaxClass)
-
-  private def shingleCtesCapped: String =
-    minhashCtesFor(shingleThList, graft.llm.Dedup.MinhashMaxClass)
-
-  /** LSH bucket id (twin of Similarity.bucketSql; dd is 1-based in DuckDB). */
-  private def dBucket(emb: String, planes: Int = Similarity.Planes): String =
-    (0 until planes).map { i =>
-      val coef = s"(CAST((${(i + 1) * 2654435761L} + (dd-1) * 40503) % 2000001 AS DOUBLE) / 1000000.0 - 1.0)"
-      val dot = s"list_sum([CAST($emb[dd] AS DOUBLE) * $coef for dd in generate_series(1, len($emb))])"
-      s"(CASE WHEN $dot > 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-
-  /** Unrolled DuckDB twin of Similarity.trainCentroids + ivfTrainedTopK:
-    * c0 = seed (first `Cells` vectors as doubles); each Lloyd iteration is
-    * assign (cosine argmax) → exact BIGINT element sums scaled by 2^48 →
-    * one double division → empty-cell coalesce. The fixture dimension is 64
-    * (q_array_funcs pins it). */
-  /** Exact brute-force cosine top-10 (twin of Similarity.bruteTopK) —
-    * standalone for q_sim_topk and reused as the ground-truth side of the
-    * q_sim_recall audit. */
-  private def simTopkSql: String =
-    s"""WITH e AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm FROM embeddings),
-        q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE vec_id < 8),
-        c AS (SELECT q_id, e.vec_id AS n_id,
-                     ${dDot("q_emb", "embedding")} / (q_nrm * nrm) AS cos
-              FROM e, q WHERE e.vec_id <> q.q_id),
-        r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM c)
-        SELECT q_id, n_id, cos, "rank" FROM r WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Shared trained-IVF CTE block (unrolled Lloyd + final assignment):
-    * yields CTEs e (normed corpus), cent (trained centroids), rc
-    * (vector×centroid ranking), asg (cell assignments) — the common prefix
-    * of ivfTrainedSql and ivfSweepSql. */
-  private def ivfTrainCtes: String = {
-    val S = Similarity.MeanScale
-    val T = Similarity.TrainIters
-    def cosTo(c: String) =
-      s"${dDot("e.embedding", s"$c.cemb")} / (e.nrm * sqrt(${dDot(s"$c.cemb", s"$c.cemb")}))"
-    val iters = (1 to T).map { i =>
-      val prev = s"c${i - 1}"
-      s"""r$i AS (SELECT e.vec_id, e.embedding, c.cent_id,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${cosTo("c")} DESC, c.cent_id) AS rn
-          FROM e, $prev c),
-          a$i AS (SELECT vec_id, embedding, cent_id FROM r$i WHERE rn = 1),
-          s$i AS (SELECT cent_id, d, SUM(CAST(CAST(embedding[d] AS DOUBLE) * $S AS BIGINT)) AS sm,
-                         COUNT(*) AS n
-                  FROM a$i, generate_series(1, 64) AS g(d) GROUP BY 1, 2),
-          u$i AS (SELECT cent_id, list(CAST(CAST(sm AS VARCHAR) AS DOUBLE)
-                         / (CAST(n AS DOUBLE) * $S) ORDER BY d) AS cemb
-                  FROM s$i GROUP BY 1),
-          c$i AS (SELECT p.cent_id, COALESCE(u.cemb, p.cemb) AS cemb
-                  FROM $prev p LEFT JOIN u$i u USING (cent_id))"""
-    }.mkString(",\n")
-    s"""e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, embedding,
-                     ${dNorm("embedding")} AS nrm FROM embeddings),
-        c0 AS (SELECT vec_id AS cent_id,
-                      [CAST(embedding[i] AS DOUBLE) for i in generate_series(1, len(embedding))] AS cemb
-               FROM embeddings WHERE vec_id < ${Similarity.Cells}),
-        $iters,
-        cent AS (SELECT cent_id, cemb, sqrt(${dDot("cemb", "cemb")}) AS c_nrm FROM c$T),
-        rc AS (SELECT e.vec_id, e.label, e.embedding, e.nrm, cent.cent_id,
-                      row_number() OVER (PARTITION BY e.vec_id
-                        ORDER BY ${dDot("e.embedding", "cent.cemb")} / (e.nrm * cent.c_nrm) DESC,
-                                 cent.cent_id) AS crn
-               FROM e, cent),
-        asg AS (SELECT vec_id, label, embedding, nrm, cent_id FROM rc WHERE crn = 1)"""
-  }
-
-  private def ivfTrainedSql: String =
-    s"""WITH $ivfTrainCtes,
-        probes AS (SELECT vec_id AS q_id, cent_id FROM rc
-                   WHERE crn <= ${Similarity.NProbe} AND vec_id < 8),
-        q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE vec_id < 8),
-        c AS (SELECT p.q_id, a.vec_id AS n_id,
-                     ${dDot("q.q_emb", "a.embedding")} / (q.q_nrm * a.nrm) AS cos
-              FROM probes p
-              JOIN asg a ON p.cent_id = a.cent_id AND a.vec_id <> p.q_id
-              JOIN q ON q.q_id = p.q_id),
-        r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM c)
-        SELECT q_id, n_id, cos, "rank" FROM r WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Twin of Similarity.ivfSweep: shared training CTEs, probes fanned
-    * against the 3-value nprobe frame, one ranking per (nprobe, q_id),
-    * recall against the brute-force exact side. */
-  private def ivfSweepSql: String = {
-    val npVals = Similarity.SweepProbes
-      .map(p => s"(CAST($p AS BIGINT))").mkString(", ")
-    s"""WITH $ivfTrainCtes,
-        np(nprobe) AS (VALUES $npVals),
-        probes AS (SELECT vec_id AS q_id, cent_id, crn FROM rc
-                   WHERE crn <= ${Similarity.SweepProbes.max} AND vec_id < 8),
-        q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE vec_id < 8),
-        cc AS (SELECT np.nprobe, p.q_id, a.vec_id AS n_id,
-                      ${dDot("q.q_emb", "a.embedding")} / (q.q_nrm * a.nrm) AS cos
-               FROM probes p
-               CROSS JOIN np
-               JOIN asg a ON p.cent_id = a.cent_id AND a.vec_id <> p.q_id
-               JOIN q ON q.q_id = p.q_id
-               WHERE p.crn <= np.nprobe),
-        rr AS (SELECT *, row_number() OVER (PARTITION BY nprobe, q_id
-                                            ORDER BY cos DESC, n_id) AS rk FROM cc),
-        approx AS (SELECT nprobe, q_id, n_id FROM rr WHERE rk <= 10),
-        exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-        h AS (SELECT np.nprobe, e.q_id, e.n_id, a.n_id AS hit
-              FROM exact e
-              CROSS JOIN np
-              LEFT JOIN approx a ON a.nprobe = np.nprobe
-                                AND a.q_id = e.q_id AND a.n_id = e.n_id)
-        SELECT nprobe, count(*) AS n_exact,
-               CAST(SUM(CASE WHEN hit IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-               CAST(SUM(CASE WHEN hit IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) AS recall
-        FROM h GROUP BY 1 ORDER BY nprobe"""
-  }
-
-  /** Shared epoch-schedule CTE block (twin of Curation.epochSchedule over
-    * lang): per/tot/j/k, with k carrying (lang, n_docs, avail_tokens,
-    * alloc_tokens, epochs_ppm). */
-  private def mixEpochsCtes: String =
-    s"""per AS (SELECT lang, count(*) AS n_docs,
-                  CAST(sum(len(string_split(coalesce(text, ''), ' '))) AS BIGINT) AS avail_tokens
-             FROM documents GROUP BY 1),
-        tot AS (SELECT CAST(sum(avail_tokens) AS BIGINT) AS total_tokens,
-                       count(*) AS n_groups FROM per),
-        j AS (SELECT lang, n_docs, avail_tokens,
-                     (total_tokens * 2) // n_groups AS alloc_tokens
-              FROM per, tot),
-        k AS (SELECT *, least(CAST(${graft.llm.Curation.MaxEpochs * 1000000L} AS BIGINT),
-                     CAST((CAST(alloc_tokens AS HUGEINT) * 1000000)
-                          // greatest(avail_tokens, 1) AS BIGINT)) AS epochs_ppm
-              FROM j)"""
-
-  /** Twin of Mining.hardNegatives: exact label-filtered top-NegK under the
-    * near-dup ceiling. */
-  private def mineHardNegSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, embedding,
-                          ${dNorm("embedding")} AS nrm FROM embeddings),
-        q AS (SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb,
-                     nrm AS q_nrm FROM e WHERE vec_id < 8),
-        c AS (SELECT q.q_id, q.q_label, e.vec_id AS n_id, e.label AS n_label,
-                     ${dDot("q_emb", "embedding")} / (q_nrm * nrm) AS cos
-              FROM e, q WHERE e.label <> q.q_label),
-        f AS (SELECT * FROM c WHERE cos <= ${graft.llm.Mining.NearDupCeiling}),
-        r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM f)
-        SELECT q_id, q_label, n_id, n_label, cos, "rank"
-        FROM r WHERE "rank" <= ${graft.llm.Mining.NegK} ORDER BY q_id, "rank""""
-
-  /** Twin of Mining.hardNegativesIvf: same label/ceiling predicates over
-    * the trained-IVF probed cells (shared ivfTrainCtes, which carry the
-    * label payload exactly like the published inverted lists). */
-  private def mineHardNegIvfSql: String =
-    s"""WITH $ivfTrainCtes,
-        q AS (SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb,
-                     nrm AS q_nrm FROM e WHERE vec_id < 8),
-        probes AS (SELECT vec_id AS q_id, cent_id FROM rc
-                   WHERE crn <= ${Similarity.NProbe} AND vec_id < 8),
-        c AS (SELECT q.q_id, q.q_label, a.vec_id AS n_id, a.label AS n_label,
-                     ${dDot("q.q_emb", "a.embedding")} / (q.q_nrm * a.nrm) AS cos
-              FROM probes p
-              JOIN asg a ON p.cent_id = a.cent_id
-              JOIN q ON q.q_id = p.q_id
-              WHERE a.label <> q.q_label),
-        f AS (SELECT * FROM c WHERE cos <= ${graft.llm.Mining.NearDupCeiling}),
-        r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM f)
-        SELECT q_id, q_label, n_id, n_label, cos, "rank"
-        FROM r WHERE "rank" <= ${graft.llm.Mining.NegK} ORDER BY q_id, "rank""""
-
-  /** Shared perceptual-hash CTEs (twin of Multimodal.phashOf): per media
-    * row, 60 window-mean-vs-global-mean bits over the ASCII byte plane —
-    * all-integer, division-free (ws·n > total·wl), so every bit matches.
-    * DuckDB list slices are 1-based inclusive-end: window [st, en) maps to
-    * bs[st+1 : en]; `//` keeps the bound arithmetic integral; the final
-    * sum casts HUGEINT → BIGINT for the dtype-representation check. */
-  private def phashCtes: String = {
-    val B = graft.multimodal.Multimodal.PhashBits
-    s"""m AS (SELECT doc_id AS media_id,
-                     ['image','audio','video'][(doc_id % 3) + 1] AS kind, text
-              FROM documents),
-        bb AS (SELECT media_id, kind,
-                      [ascii(substr(text, i, 1))
-                       for i in generate_series(1, length(text))] AS bs
-               FROM m),
-        ph AS (SELECT media_id, kind,
-                 CAST(list_sum([CASE WHEN
-                     COALESCE(list_sum(bs[CAST(i * len(bs) // $B AS BIGINT) + 1
-                                          : CAST((i + 1) * len(bs) // $B AS BIGINT)]), 0)
-                       * len(bs)
-                     > COALESCE(list_sum(bs), 0)
-                       * ((i + 1) * len(bs) // $B - i * len(bs) // $B)
-                   THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END
-                   for i in generate_series(0, ${B - 1})]) AS BIGINT) AS phash
-               FROM bb)"""
-  }
-
-  /** Shared PQ CTEs (DuckDB twin of graft.llm.Pq): psv (all M subvectors)
-    * → pc0 (seed = first K vectors' subvectors) → per-iteration
-    * assign/scaled-recenter/coalesce → pcf (final codebooks) → pcd (codes).
-    * Same unrolled-Lloyd structure as ivfTrainedSql, euclidean on
-    * subvectors, ties to the lower code. */
-  private def pqCtes: String = {
-    import graft.llm.Pq.{M, SubDim => D, K, Iters}
-    val S = Similarity.MeanScale
-    val iters = (1 to Iters).map { i =>
-      val prev = s"pc${i - 1}"
-      s"""pr$i AS (SELECT s.vec_id, s.m, s.sv, c.code,
-                 row_number() OVER (PARTITION BY s.vec_id, s.m
-                   ORDER BY ${dDist2("s.sv", "c.csv")}, c.code) AS rn
-          FROM psv s JOIN $prev c ON c.m = s.m),
-          pa$i AS (SELECT vec_id, m, sv, code FROM pr$i WHERE rn = 1),
-          ps$i AS (SELECT m, code, d, SUM(CAST(sv[d] * $S AS BIGINT)) AS sm,
-                          COUNT(*) AS n
-                   FROM pa$i, generate_series(1, $D) AS g(d) GROUP BY 1, 2, 3),
-          pu$i AS (SELECT m, code, list(CAST(CAST(sm AS VARCHAR) AS DOUBLE)
-                          / (CAST(n AS DOUBLE) * $S) ORDER BY d) AS csv
-                   FROM ps$i GROUP BY 1, 2),
-          pc$i AS (SELECT p.m, p.code, COALESCE(u.csv, p.csv) AS csv
-                   FROM $prev p LEFT JOIN pu$i u USING (m, code))"""
-    }.mkString(",\n")
-    s"""psv AS (SELECT vec_id, m,
-                 [CAST(embedding[m * $D + j] AS DOUBLE)
-                  for j in generate_series(1, $D)] AS sv
-               FROM embeddings, generate_series(0, ${M - 1}) AS gm(m)),
-        pc0 AS (SELECT m, vec_id AS code, sv AS csv FROM psv WHERE vec_id < $K),
-        $iters,
-        pcf AS (SELECT m, code, csv FROM pc$Iters),
-        pcd AS (SELECT vec_id, m, code FROM (
-                  SELECT s.vec_id, s.m, c.code,
-                         row_number() OVER (PARTITION BY s.vec_id, s.m
-                           ORDER BY ${dDist2("s.sv", "c.csv")}, c.code) AS rn
-                  FROM psv s JOIN pcf c ON c.m = s.m)
-                WHERE rn = 1)"""
-  }
-
-  /** Shared IVF-PQ CTEs (DuckDB twin of graft.llm.IvfPq): the trained-IVF
-    * block (ivfTrainCtes: e/cent/rc/asg) extended with vres (grid-snapped
-    * residuals: r = (x·2^48 − ⌊c·2^48⌋)/2^48, every term an exact BIGINT so
-    * floor/multiply/divide replay bit-for-bit), vsv (residual subvectors),
-    * the unrolled residual-codebook Lloyd (vcN), vcf (final books), vcd
-    * (codes with cell id), vprob (probed cells), vqr (PER-CELL query
-    * residuals — the IVFADC detail), vlut (per-cell ADC tables) and vest
-    * (m-ordered-fold distance estimates). */
-  private def ivfPqCtes: String = {
-    import graft.llm.IvfPq.{M, SubDim => D, K, Iters, NQueries}
-    val S = Similarity.MeanScale
-    def resid(x: String, c: String) =
-      s"(CAST(CAST($x AS DOUBLE) * $S AS BIGINT) - " +
-        s"CAST(floor($c * $S) AS BIGINT)) / CAST($S AS DOUBLE)"
-    val iters = (1 to Iters).map { i =>
-      val prev = s"vc${i - 1}"
-      s"""vw$i AS (SELECT s.vec_id, s.m, s.sv, c.code,
-                 row_number() OVER (PARTITION BY s.vec_id, s.m
-                   ORDER BY ${dDist2("s.sv", "c.csv")}, c.code) AS rn
-          FROM vsv s JOIN $prev c ON c.m = s.m),
-          va$i AS (SELECT vec_id, m, sv, code FROM vw$i WHERE rn = 1),
-          vs$i AS (SELECT m, code, d, SUM(CAST(sv[d] * $S AS BIGINT)) AS sm,
-                          COUNT(*) AS n
-                   FROM va$i, generate_series(1, $D) AS g(d) GROUP BY 1, 2, 3),
-          vu$i AS (SELECT m, code, list(CAST(CAST(sm AS VARCHAR) AS DOUBLE)
-                          / (CAST(n AS DOUBLE) * $S) ORDER BY d) AS csv
-                   FROM vs$i GROUP BY 1, 2),
-          vc$i AS (SELECT p.m, p.code, COALESCE(u.csv, p.csv) AS csv
-                   FROM $prev p LEFT JOIN vu$i u USING (m, code))"""
-    }.mkString(",\n")
-    s"""$ivfTrainCtes,
-        vres AS (SELECT a.vec_id, a.cent_id,
-                   [${resid("a.embedding[d]", "c.cemb[d]")}
-                    for d in generate_series(1, len(a.embedding))] AS r
-                 FROM asg a JOIN cent c USING (cent_id)),
-        vsv AS (SELECT vec_id, cent_id, m,
-                  [r[m * $D + j] for j in generate_series(1, $D)] AS sv
-                FROM vres, generate_series(0, ${M - 1}) AS gm(m)),
-        vc0 AS (SELECT m, vec_id AS code, sv AS csv FROM vsv WHERE vec_id < $K),
-        $iters,
-        vcf AS (SELECT m, code, csv FROM vc$Iters),
-        vcd AS (SELECT vec_id, cent_id, m, code FROM (
-                  SELECT s.vec_id, s.cent_id, s.m, c.code,
-                         row_number() OVER (PARTITION BY s.vec_id, s.m
-                           ORDER BY ${dDist2("s.sv", "c.csv")}, c.code) AS rn
-                  FROM vsv s JOIN vcf c ON c.m = s.m) WHERE rn = 1),
-        vprob AS (SELECT vec_id AS q_id, crn, cent_id FROM rc
-                  WHERE crn <= ${Similarity.NProbe} AND vec_id < $NQueries),
-        vqr AS (SELECT p.q_id, p.crn, p.cent_id, m,
-                  [${resid(s"q.embedding[m * $D + j]", s"c.cemb[m * $D + j]")}
-                   for j in generate_series(1, $D)] AS qsv
-                FROM vprob p
-                JOIN cent c USING (cent_id)
-                JOIN embeddings q ON q.vec_id = p.q_id,
-                generate_series(0, ${M - 1}) AS gm(m)),
-        vlut AS (SELECT r.q_id, r.crn, r.cent_id, b.m, b.code,
-                        ${dDist2("r.qsv", "b.csv")} AS pd
-                 FROM vqr r JOIN vcf b ON b.m = r.m),
-        vest AS (SELECT l.q_id, cd.vec_id AS n_id,
-                        list_sum(list(l.pd ORDER BY l.m)) AS est_d2,
-                        min(l.crn) AS crn
-                 FROM vcd cd
-                 JOIN vlut l ON l.cent_id = cd.cent_id AND l.m = cd.m
-                            AND l.code = cd.code
-                 WHERE l.q_id <> cd.vec_id
-                 GROUP BY 1, 2)"""
-  }
-
-  /** Twin of IvfMaintenance.upsertServe — index maintenance: centroids
-    * train on the BASE corpus only (the oldest ⌊N·3/4⌋ vectors — the
-    * frozen index version), every vector (base AND the late batch) assigns
-    * against them, and the serve ranks over the union. Assignment is
-    * per-vector independent, so the union-of-slices Spark build and this
-    * all-at-once replay are exactly equal. */
-  private def ivfUpsertSql: String =
-    s"""WITH $ivfUpCtes,
-        uprob AS (SELECT vec_id AS q_id, cent_id FROM urc
-                  WHERE crn <= ${Similarity.NProbe} AND vec_id < 8),
-        uq AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
-               FROM uf WHERE vec_id < 8),
-        ucand AS (SELECT p.q_id, a.vec_id AS n_id,
-                         ${dDot("q.q_emb", "a.embedding")} / (q.q_nrm * a.nrm) AS cos
-                  FROM uprob p
-                  JOIN uasg a ON p.cent_id = a.cent_id AND a.vec_id <> p.q_id
-                  JOIN uq q ON q.q_id = p.q_id),
-        urk AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM ucand)
-        SELECT q_id, n_id, cos, "rank",
-               CAST(CASE WHEN n_id >= ut.t THEN 1 ELSE 0 END AS BIGINT) AS is_new
-        FROM urk, ut WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Shared base-trained-IVF CTE block of the maintenance twins: ut (the
-    * split scalar), base-only Lloyd (ue/ucN), ucent, uf (full corpus),
-    * urc (full ranking vs frozen centroids, c_cos carried), uasg. */
-  private def ivfUpCtes: String = {
-    val S = Similarity.MeanScale
-    val T = Similarity.TrainIters
-    def cosTo(c: String) =
-      s"${dDot("e.embedding", s"$c.cemb")} / (e.nrm * sqrt(${dDot(s"$c.cemb", s"$c.cemb")}))"
-    val iters = (1 to T).map { i =>
-      val prev = s"uc${i - 1}"
-      s"""uw$i AS (SELECT e.vec_id, e.embedding, c.cent_id,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${cosTo("c")} DESC, c.cent_id) AS rn
-          FROM ue e, $prev c),
-          ua$i AS (SELECT vec_id, embedding, cent_id FROM uw$i WHERE rn = 1),
-          us$i AS (SELECT cent_id, d,
-                      SUM(CAST(CAST(embedding[d] AS DOUBLE) * $S AS BIGINT)) AS sm,
-                      COUNT(*) AS n
-                   FROM ua$i, generate_series(1, 64) AS g(d) GROUP BY 1, 2),
-          uu$i AS (SELECT cent_id, list(CAST(CAST(sm AS VARCHAR) AS DOUBLE)
-                      / (CAST(n AS DOUBLE) * $S) ORDER BY d) AS cemb
-                   FROM us$i GROUP BY 1),
-          uc$i AS (SELECT p.cent_id, COALESCE(u.cemb, p.cemb) AS cemb
-                   FROM $prev p LEFT JOIN uu$i u USING (cent_id))"""
-    }.mkString(",\n")
-    s"""ut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
-               FROM embeddings),
-        ue AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm
-               FROM embeddings, ut WHERE vec_id < ut.t),
-        uc0 AS (SELECT vec_id AS cent_id,
-                       [CAST(embedding[i] AS DOUBLE) for i in generate_series(1, len(embedding))] AS cemb
-                FROM embeddings WHERE vec_id < ${Similarity.Cells}),
-        $iters,
-        ucent AS (SELECT cent_id, cemb, sqrt(${dDot("cemb", "cemb")}) AS c_nrm FROM uc$T),
-        uf AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm FROM embeddings),
-        urc AS (SELECT f.vec_id, f.embedding, f.nrm, ucent.cent_id,
-                       ${dDot("f.embedding", "ucent.cemb")} / (f.nrm * ucent.c_nrm) AS c_cos,
-                       row_number() OVER (PARTITION BY f.vec_id
-                         ORDER BY ${dDot("f.embedding", "ucent.cemb")} / (f.nrm * ucent.c_nrm) DESC,
-                                  ucent.cent_id) AS crn
-                FROM uf f, ucent),
-        uasg AS (SELECT vec_id, embedding, nrm, cent_id FROM urc WHERE crn = 1)"""
-  }
-
-  /** Shared frozen-book CTE prefix of the COMPOSITE maintenance twins
-    * (upsert serve + drift monitor): base-trained coarse stage (ivfUpCtes),
-    * residual books trained on the BASE residuals only (the ww/wa/ws/wu/wc
-    * Lloyd carries a training-row filter), and every vector's codes vs the
-    * frozen books (wcd) with its residual subvectors (wsv). */
-  private def ivfPqUpCtes: String = {
-    import graft.llm.IvfPq.{M, SubDim => D, K, Iters}
-    val S = Similarity.MeanScale
-    def resid(x: String, c: String) =
-      s"(CAST(CAST($x AS DOUBLE) * $S AS BIGINT) - " +
-        s"CAST(floor($c * $S) AS BIGINT)) / CAST($S AS DOUBLE)"
-    val iters = (1 to Iters).map { i =>
-      val prev = s"wc${i - 1}"
-      s"""ww$i AS (SELECT s.vec_id, s.m, s.sv, c.code,
-                 row_number() OVER (PARTITION BY s.vec_id, s.m
-                   ORDER BY ${dDist2("s.sv", "c.csv")}, c.code) AS rn
-          FROM wsv s JOIN $prev c ON c.m = s.m
-          WHERE s.vec_id < (SELECT t FROM ut)),
-          wa$i AS (SELECT vec_id, m, sv, code FROM ww$i WHERE rn = 1),
-          ws$i AS (SELECT m, code, d, SUM(CAST(sv[d] * $S AS BIGINT)) AS sm,
-                          COUNT(*) AS n
-                   FROM wa$i, generate_series(1, $D) AS g(d) GROUP BY 1, 2, 3),
-          wu$i AS (SELECT m, code, list(CAST(CAST(sm AS VARCHAR) AS DOUBLE)
-                          / (CAST(n AS DOUBLE) * $S) ORDER BY d) AS csv
-                   FROM ws$i GROUP BY 1, 2),
-          wc$i AS (SELECT p.m, p.code, COALESCE(u.csv, p.csv) AS csv
-                   FROM $prev p LEFT JOIN wu$i u USING (m, code))"""
-    }.mkString(",\n")
-    s"""$ivfUpCtes,
-        wres AS (SELECT a.vec_id, a.cent_id,
-                   [${resid("a.embedding[d]", "c.cemb[d]")}
-                    for d in generate_series(1, len(a.embedding))] AS r
-                 FROM uasg a JOIN ucent c USING (cent_id)),
-        wsv AS (SELECT vec_id, cent_id, m,
-                  [r[m * $D + j] for j in generate_series(1, $D)] AS sv
-                FROM wres, generate_series(0, ${M - 1}) AS gm(m)),
-        wc0 AS (SELECT m, vec_id AS code, sv AS csv FROM wsv WHERE vec_id < $K),
-        $iters,
-        wcf AS (SELECT m, code, csv FROM wc$Iters),
-        wcd AS (SELECT vec_id, cent_id, m, code FROM (
-                  SELECT s.vec_id, s.cent_id, s.m, c.code,
-                         row_number() OVER (PARTITION BY s.vec_id, s.m
-                           ORDER BY ${dDist2("s.sv", "c.csv")}, c.code) AS rn
-                  FROM wsv s JOIN wcf c ON c.m = s.m) WHERE rn = 1)"""
-  }
-
-  /** Twin of IvfPq.drift — per segment, the mean ADC reconstruction error
-    * under the frozen coarse centroids + frozen residual books: for every
-    * (vector, subspace), d²(residual subvector, assigned codeword),
-    * floor-quantized at 2^-48 so the cross-row sum is order-free. */
-  private def ivfPqDriftSql: String = {
-    val S = Similarity.MeanScale
-    s"""WITH $ivfPqUpCtes,
-        wqe AS (SELECT s.vec_id,
-                       CAST(floor(${dDist2("s.sv", "b.csv")} * $S.0) AS BIGINT) AS sqe
-                FROM wsv s
-                JOIN wcd cd ON cd.vec_id = s.vec_id AND cd.m = s.m
-                JOIN wcf b ON b.m = s.m AND b.code = cd.code)
-        SELECT CASE WHEN vec_id >= ut.t THEN 'late' ELSE 'base' END AS segment,
-               count(DISTINCT vec_id) AS n,
-               CAST(CAST(SUM(CAST(sqe AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
-                 / (CAST(count(DISTINCT vec_id) AS DOUBLE) * $S.0) AS mean_qerr
-        FROM wqe, ut GROUP BY 1 ORDER BY 1"""
-  }
-
-  /** Twin of IvfPq.upsertAdcTopK — the COMPOSITE's maintenance serve:
-    * every vector encodes against the frozen books (ivfPqUpCtes), and the
-    * IVFADC serve ranks base ∪ late codes with the is_new flag. */
-  /** The shared base ∪ delta ADC-estimate CTE chain (ends in
-    * west(q_id, n_id, est_d2)) — twin of IvfPq.upsertEst, composed by the
-    * ADC upsert serve and the production rerank serve below. */
-  private def ivfPqUpServeCtes: String = {
-    import graft.llm.IvfPq.{M, SubDim => D, NQueries}
-    val S = Similarity.MeanScale
-    def resid(x: String, c: String) =
-      s"(CAST(CAST($x AS DOUBLE) * $S AS BIGINT) - " +
-        s"CAST(floor($c * $S) AS BIGINT)) / CAST($S AS DOUBLE)"
-    s"""$ivfPqUpCtes,
-        wprob AS (SELECT vec_id AS q_id, cent_id FROM urc
-                  WHERE crn <= ${Similarity.NProbe} AND vec_id < $NQueries),
-        wqr AS (SELECT p.q_id, p.cent_id, m,
-                  [${resid(s"q.embedding[m * $D + j]", s"c.cemb[m * $D + j]")}
-                   for j in generate_series(1, $D)] AS qsv
-                FROM wprob p
-                JOIN ucent c USING (cent_id)
-                JOIN embeddings q ON q.vec_id = p.q_id,
-                generate_series(0, ${M - 1}) AS gm(m)),
-        wlut AS (SELECT r.q_id, r.cent_id, b.m, b.code,
-                        ${dDist2("r.qsv", "b.csv")} AS pd
-                 FROM wqr r JOIN wcf b ON b.m = r.m),
-        west AS (SELECT l.q_id, cd.vec_id AS n_id,
-                        list_sum(list(l.pd ORDER BY l.m)) AS est_d2
-                 FROM wcd cd
-                 JOIN wlut l ON l.cent_id = cd.cent_id AND l.m = cd.m
-                            AND l.code = cd.code
-                 WHERE l.q_id <> cd.vec_id
-                 GROUP BY 1, 2)"""
-  }
-
-  private def ivfPqUpsertSql: String =
-    s"""WITH $ivfPqUpServeCtes,
-        wrk AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY est_d2, n_id) AS BIGINT) AS "rank" FROM west)
-        SELECT q_id, n_id, est_d2, "rank",
-               CAST(CASE WHEN n_id >= ut.t THEN 1 ELSE 0 END AS BIGINT) AS is_new
-        FROM wrk, ut WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Twin of IvfPq.upsertRerankTopK — ADC shortlist over base ∪ delta
-    * codes, exact euclidean re-rank of only those rows. */
-  private def ivfPqUpsertRerankSql: String =
-    s"""WITH $ivfPqUpServeCtes,
-        wsl AS (SELECT q_id, n_id FROM (
-                  SELECT *, row_number() OVER (PARTITION BY q_id
-                    ORDER BY est_d2, n_id) AS rn FROM west)
-                WHERE rn <= ${graft.llm.IvfPq.Shortlist}),
-        wre AS (SELECT s.q_id, s.n_id,
-                       ${dDist2("qq.embedding", "nn.embedding")} AS d2
-                FROM wsl s
-                JOIN embeddings qq ON qq.vec_id = s.q_id
-                JOIN embeddings nn ON nn.vec_id = s.n_id),
-        wrr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY d2, n_id) AS BIGINT) AS "rank" FROM wre)
-        SELECT q_id, n_id, d2, "rank",
-               CAST(CASE WHEN n_id >= ut.t THEN 1 ELSE 0 END AS BIGINT) AS is_new
-        FROM wrr, ut WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Twin of IvfPq.rerankTopK — shared by q_sim_ivfpq_rerank and the
-    * recall audit's approx side. */
-  private def ivfPqRerankSql: String =
-    s"""WITH $ivfPqCtes,
-        vsl AS (SELECT q_id, n_id FROM (
-                  SELECT *, row_number() OVER (PARTITION BY q_id
-                    ORDER BY est_d2, n_id) AS rn FROM vest)
-                WHERE rn <= ${graft.llm.IvfPq.Shortlist}),
-        vre AS (SELECT s.q_id, s.n_id,
-                       ${dDist2("qq.embedding", "nn.embedding")} AS d2
-                FROM vsl s
-                JOIN embeddings qq ON qq.vec_id = s.q_id
-                JOIN embeddings nn ON nn.vec_id = s.n_id),
-        vrr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY d2, n_id) AS BIGINT) AS "rank" FROM vre)
-        SELECT q_id, n_id, d2, "rank" FROM vrr
-        WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Exact euclidean brute top-10 (twin of IvfPq.bruteL2TopK) — the ground
-    * truth of the IVF-PQ recall audit. */
-  private def bruteL2Sql: String =
-    s"""WITH bq AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
-                    WHERE vec_id < ${graft.llm.IvfPq.NQueries}),
-        bc AS (SELECT bq.q_id, e.vec_id AS n_id,
-                      ${dDist2("bq.qe", "e.embedding")} AS d2
-               FROM bq, embeddings e WHERE e.vec_id <> bq.q_id),
-        br AS (SELECT *, row_number() OVER (PARTITION BY q_id
-                 ORDER BY d2, n_id) AS rn FROM bc)
-        SELECT q_id, n_id FROM br WHERE rn <= 10"""
-
-  /** Shared binary-quantization CTEs ending in bsig(vec_id, h0, h1) — twin
-    * of Binary.signed: scaled-BIGINT per-dimension means (the q_embed_mean
-    * discipline, tie-free), then one centered sign bit per dimension packed
-    * into two 32-bit halves (no engine shifts into a 64-bit sign bit —
-    * DuckDB raises on BIGINT overflow where two's-complement would wrap). */
-  private def binaryCtes: String = binarySigCtes(baseOnlyMu = false)
-
-  /** Same CTE block with the means trained on the BASE slice only
-    * (vec_id < bt.t) — the frozen-μ form the maintenance twins share
-    * (q_sim_binary_upsert, q_sim_binary_drift). Adds the bt split-scalar
-    * CTE when baseOnlyMu is set. */
-  private def binarySigCtes(baseOnlyMu: Boolean): String = {
-    val S = Similarity.MeanScale
-    val H = graft.llm.Binary.HalfBits
-    def half(off: Int) =
-      s"""CAST(list_sum([CASE WHEN CAST(embedding[i + ${off + 1}] AS DOUBLE)
-                                   > mu[i + ${off + 1}]
-                              THEN CAST(1 AS BIGINT) << i
-                              ELSE CAST(0 AS BIGINT) END
-                         for i in generate_series(0, ${H - 1})]) AS BIGINT)"""
-    val bt =
-      if (!baseOnlyMu) ""
-      else s"""bt AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
-                      FROM embeddings),
-        """
-    val muFrom = if (baseOnlyMu) "FROM embeddings, bt WHERE vec_id < bt.t"
-                 else "FROM embeddings"
-    s"""${bt}bx AS (SELECT unnest(generate_series(1, len(embedding))) - 1 AS i,
-                unnest([CAST(CAST(e AS DOUBLE) * $S.0 AS BIGINT)
-                        for e in embedding]) AS sx
-              $muFrom),
-        bg AS (SELECT i, CAST(SUM(sx) AS BIGINT) AS ssx, count(*) AS n
-               FROM bx GROUP BY 1),
-        bmu AS (SELECT list(CAST(ssx AS DOUBLE) / (CAST(n AS DOUBLE) * $S.0)
-                  ORDER BY i) AS mu FROM bg),
-        bsig AS (SELECT vec_id, ${half(0)} AS h0, ${half(H)} AS h1
-                 FROM embeddings, bmu)"""
-  }
-
-  /** Twin of BinaryMaintenance.upsertServe: means frozen on the base
-    * slice, every vector signed against them (signing is per-row
-    * independent, so the union-of-slices snapshot build and this
-    * all-at-once replay are exactly equal — the ivfUpsertSql argument),
-    * the standard Hamming-shortlist + exact-re-rank serve, is_new flag. */
-  private def binaryUpsertSql: String =
-    s"""WITH ${binarySigCtes(baseOnlyMu = true)},
-        bq AS (SELECT vec_id AS q_id, h0 AS q0, h1 AS q1 FROM bsig
-               WHERE vec_id < ${graft.llm.Binary.NQueries}),
-        bham AS (SELECT q.q_id, s.vec_id AS n_id,
-                        CAST(bit_count(xor(s.h0, q.q0))
-                           + bit_count(xor(s.h1, q.q1)) AS BIGINT) AS hd
-                 FROM bsig s JOIN bq q ON s.vec_id <> q.q_id),
-        bsl AS (SELECT q_id, n_id, hd FROM (
-                  SELECT *, row_number() OVER (PARTITION BY q_id
-                    ORDER BY hd, n_id) AS rn FROM bham)
-                WHERE rn <= ${graft.llm.Binary.Shortlist}),
-        bre AS (SELECT s.q_id, s.n_id, s.hd,
-                       ${dDot("qq.embedding", "nn.embedding")}
-                         / (${dNorm("qq.embedding")} * ${dNorm("nn.embedding")}) AS cos
-                FROM bsl s
-                JOIN embeddings qq ON qq.vec_id = s.q_id
-                JOIN embeddings nn ON nn.vec_id = s.n_id),
-        brr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM bre)
-        SELECT q_id, n_id, hd, cos, "rank",
-               CAST(CASE WHEN n_id >= bt.t THEN 1 ELSE 0 END AS BIGINT) AS is_new
-        FROM brr, bt WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Twin of BinaryMaintenance.drift: per-segment mean |x − μ| against
-    * the frozen base means (floor-quantized exact sums, one division by
-    * the (n · d · scale) product) plus the set-bit rate of the signatures
-    * signed against the same means. */
-  private def binaryDriftSql: String = {
-    val S = Similarity.MeanScale
-    val H = graft.llm.Binary.HalfBits
-    s"""WITH ${binarySigCtes(baseOnlyMu = true)},
-        bad AS (SELECT vec_id,
-                       CAST(list_sum([CAST(floor(abs(CAST(embedding[i] AS DOUBLE) - mu[i]) * $S.0) AS BIGINT)
-                                      for i in generate_series(1, len(embedding))]) AS BIGINT) AS sadev
-                FROM embeddings, bmu),
-        bseg AS (SELECT CASE WHEN vec_id >= bt.t THEN 'late' ELSE 'base' END AS segment,
-                        sadev
-                 FROM bad, bt),
-        bag AS (SELECT segment, count(*) AS n,
-                       CAST(CAST(SUM(sadev) AS VARCHAR) AS DOUBLE)
-                         / (CAST(count(*) AS DOUBLE) * ${2 * H}.0 * $S.0) AS mean_adev
-                FROM bseg GROUP BY 1),
-        bbit AS (SELECT CASE WHEN s.vec_id >= bt.t THEN 'late' ELSE 'base' END AS segment,
-                        bit_count(s.h0) + bit_count(s.h1) AS b
-                 FROM bsig s, bt),
-        bbr AS (SELECT segment,
-                       CAST(SUM(b) AS DOUBLE)
-                         / (CAST(count(*) AS DOUBLE) * ${2 * H}.0) AS bit_rate
-                FROM bbit GROUP BY 1)
-        SELECT a.segment, a.n, a.mean_adev, r.bit_rate
-        FROM bag a JOIN bbr r USING (segment) ORDER BY segment"""
-  }
-
-  /** Standalone binary-serve twin (q_sim_binary_topk, reused as the
-    * approx side of q_sim_binary_recall). */
-  private def binaryTopkSql: String =
-    s"""WITH $binaryCtes,
-        bq AS (SELECT vec_id AS q_id, h0 AS q0, h1 AS q1 FROM bsig
-               WHERE vec_id < ${graft.llm.Binary.NQueries}),
-        bham AS (SELECT q.q_id, s.vec_id AS n_id,
-                        CAST(bit_count(xor(s.h0, q.q0))
-                           + bit_count(xor(s.h1, q.q1)) AS BIGINT) AS hd
-                 FROM bsig s JOIN bq q ON s.vec_id <> q.q_id),
-        bsl AS (SELECT q_id, n_id, hd FROM (
-                  SELECT *, row_number() OVER (PARTITION BY q_id
-                    ORDER BY hd, n_id) AS rn FROM bham)
-                WHERE rn <= ${graft.llm.Binary.Shortlist}),
-        bre AS (SELECT s.q_id, s.n_id, s.hd,
-                       ${dDot("qq.embedding", "nn.embedding")}
-                         / (${dNorm("qq.embedding")} * ${dNorm("nn.embedding")}) AS cos
-                FROM bsl s
-                JOIN embeddings qq ON qq.vec_id = s.q_id
-                JOIN embeddings nn ON nn.vec_id = s.n_id),
-        brr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM bre)
-        SELECT q_id, n_id, hd, cos, "rank" FROM brr
-        WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Twin of Fusion.hybridTopK: per-query selective terms (the bm25 twin's
-    * derivation, partitioned by query doc), posting-list BM25 with the
-    * shared bm25ScoreSql + decimal-staged per-(q, doc) sum, the trained-IVF
-    * twin as the dense side, and the fused queries' RRF shape. Shared by
-    * q_retrieve_hybrid and its recall audit q_retrieve_recall. */
-  private def hybridTopkSql: String =
-    s"""WITH ${hybridSqlCtes(ivfTrainedSql)}
-        SELECT q_id, n_id, rrf, "rank" FROM hr
-        WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** Twin of Fusion.hybridUpsertTopK — both towers replayed all-at-once:
-    * the lexical CTEs below recompute the full-corpus tf/df/dl/stats,
-    * which the MERGED snapshot members equal bit-for-bit (integer
-    * counting — the LexUpsertSpec equivalence), and the dense side is the
-    * frozen-centroid upsert twin. The two id spaces freeze at different
-    * cuts, so the twin re-derives both flags from their own tables. */
-  /** Twin of Fusion.fusedUpsertTopK: the three UPSERT member twins fused
-    * with the identical fixed-order RRF; is_new re-derives from the shared
-    * base cut (one scalar CTE), not from the members' flags. Extracted so
-    * the freshness rank audit reuses it as a served subquery. */
-  private def fusedUpsertSql: String =
-    s"""WITH fut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
-                     FROM embeddings),
-        fi AS (SELECT q_id, n_id, "rank" AS r_ivf FROM ($ivfUpsertSql)),
-        fg AS (SELECT q_id, n_id, "rank" AS r_graph FROM ($graphUpsertSql)),
-        fb AS (SELECT q_id, n_id, "rank" AS r_bin FROM ($binaryUpsertSql)),
-        fj AS (SELECT q_id, n_id, r_ivf, r_graph, r_bin
-               FROM fi
-               FULL OUTER JOIN fg USING (q_id, n_id)
-               FULL OUTER JOIN fb USING (q_id, n_id)),
-        fs AS (SELECT q_id, n_id,
-                      coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_ivf), CAST(0 AS DOUBLE)) +
-                      coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_graph), CAST(0 AS DOUBLE)) +
-                      coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_bin), CAST(0 AS DOUBLE)) AS rrf
-               FROM fj),
-        fr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                 ORDER BY rrf DESC, n_id) AS BIGINT) AS "rank" FROM fs)
-        SELECT q_id, n_id, rrf, "rank",
-               CAST(CASE WHEN n_id >= fut.t THEN 1 ELSE 0 END AS BIGINT) AS is_new
-        FROM fr, fut WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  private def hybridUpsertSql: String = {
-    val bf = graft.llm.Segments.BaseFrac
-    s"""WITH hdc AS (SELECT CAST(floor(count(*) * $bf) AS BIGINT) AS t FROM documents),
-        hec AS (SELECT CAST(floor(count(*) * $bf) AS BIGINT) AS t FROM embeddings),
-        ${hybridSqlCtes(ivfUpsertSql)}
-        SELECT q_id, n_id, rrf, "rank",
-               CAST(CASE WHEN n_id >= hdc.t THEN 1 ELSE 0 END AS BIGINT) AS is_new_lex,
-               CAST(CASE WHEN n_id >= hec.t THEN 1 ELSE 0 END AS BIGINT) AS is_new_dense
-        FROM hr, hdc, hec WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-  }
-
-  /** The hybrid fusion's shared CTE chain (lexical tower + RRF over the
-    * given dense-tower subquery), ending at hr — the ranked fused frame
-    * the base and upsert twins select from. */
-  private def hybridSqlCtes(denseSql: String): String = {
-    import graft.llm.Fusion.{HybridQTerms, HybridQueries, FusionK}
-    s"""dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        tfx AS (SELECT doc_id, token, count(*) AS tf FROM dt GROUP BY 1, 2),
-        dfx AS (SELECT token, count(*) AS df FROM tfx GROUP BY 1),
-        hqt AS (SELECT q_id, token, df FROM (
-                  SELECT t.doc_id AS q_id, t.token, d.df,
-                         row_number() OVER (PARTITION BY t.doc_id
-                           ORDER BY d.df, t.token) AS trn
-                  FROM tfx t JOIN dfx d USING (token)
-                  WHERE t.doc_id < $HybridQueries)
-                WHERE trn <= $HybridQTerms),
-        dlx AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-        st AS (SELECT count(*) AS n_docs, SUM(len(string_split(text, ' '))) AS tot
-               FROM documents),
-        hsc AS (SELECT q.q_id, tfx.doc_id, ${graft.llm.TextAnalysis.bm25ScoreSql} AS score_t
-                FROM tfx JOIN hqt q USING (token)
-                JOIN dlx ON dlx.doc_id = tfx.doc_id, st
-                WHERE tfx.doc_id <> q.q_id),
-        hlx AS (SELECT q_id, doc_id,
-                       CAST(CAST(SUM(CAST(score_t AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS score
-                FROM hsc GROUP BY 1, 2),
-        hl AS (SELECT q_id, n_id, r_lex FROM (
-                 SELECT q_id, doc_id AS n_id,
-                        CAST(row_number() OVER (PARTITION BY q_id
-                          ORDER BY score DESC, doc_id) AS BIGINT) AS r_lex
-                 FROM hlx)
-               WHERE r_lex <= 10),
-        hd AS (SELECT q_id, n_id, "rank" AS r_dense FROM ($denseSql)),
-        hj AS (SELECT q_id, n_id, r_lex, r_dense
-               FROM hl FULL OUTER JOIN hd USING (q_id, n_id)),
-        hs AS (SELECT q_id, n_id,
-                      coalesce(CAST(1 AS DOUBLE) / ($FusionK + r_lex), CAST(0 AS DOUBLE)) +
-                      coalesce(CAST(1 AS DOUBLE) / ($FusionK + r_dense), CAST(0 AS DOUBLE)) AS rrf
-               FROM hj),
-        hr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                 ORDER BY rrf DESC, n_id) AS BIGINT) AS "rank" FROM hs)"""
-  }
-
-  /** Transitive-closure twin of Dedup.components (recursive CTE over the
-    * jaccard-verified near-dup edges; component = min reachable doc) —
-    * shared by q_dedup_components and the split-leakage audit, which joins
-    * the closure to the content-keyed split rule. */
-  private def dedupComponentsSql: String =
-    s"""WITH RECURSIVE $minhashCtes,
-        toks AS (SELECT doc_id, list_distinct(h) AS ths, len(list_distinct(h)) AS nt FROM th),
-        edges AS (SELECT p.doc_a, p.doc_b,
-               CAST(len(list_intersect(a.ths, b.ths)) AS DOUBLE)
-                 / (a.nt + b.nt - len(list_intersect(a.ths, b.ths))) AS jac
-              FROM pairs p
-              JOIN toks a ON p.doc_a = a.doc_id
-              JOIN toks b ON p.doc_b = b.doc_id
-              WHERE jac >= 0.95),
-        und AS (SELECT doc_a AS s, doc_b AS d FROM edges
-                UNION ALL SELECT doc_b, doc_a FROM edges),
-        reach(s, d) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT u.s, r.d FROM und u JOIN reach r ON u.d = r.s),
-        comp AS (SELECT s AS doc_id, min(d) AS component_id FROM reach GROUP BY s)
-        SELECT c.doc_id, CAST(c.component_id AS BIGINT) AS component_id,
-               CAST(z.n AS BIGINT) AS n_members
-        FROM comp c JOIN (SELECT component_id, count(*) AS n FROM comp GROUP BY 1) z
-          ON c.component_id = z.component_id
-        ORDER BY c.doc_id"""
-
-  /** Shared NN-descent CTEs ending in the refined WORKING graph
-    * d{DescentIters}(src, dst, cos, rnk ≤ DescentK) — twin of
-    * Similarity.descentGraph, reused by the nndescent emit query and the
-    * graph-search serve (which reads the published form of this graph).
-    * MATERIALIZED is load-bearing: each round references the previous
-    * graph 6× through the base/two-hop CTEs, so an inlined expansion is
-    * 6^iters copies of the init scan — DuckDB runs out of file handles
-    * (and time) at 4 rounds. Materializing each round keeps the twin
-    * linear, mirroring the Spark side's per-round localCheckpoint. */
-  private def ndCtes: String = ndCtesFor("TRUE")
-
-  /** ndCtes over a row-predicated corpus slice — the graph-maintenance
-    * twin builds the frozen BASE graph from `vec_id < cut` only (dense
-    * base ids, so the long-link modulus is the filtered count). */
-  private def ndCtesFor(pred: String): String = {
-    import Similarity.{DescentIters, DescentK}
-    def ranked(sc: String, d: String) =
-      s"""$d AS MATERIALIZED (SELECT src, dst, cos, CAST(rnk AS BIGINT) AS rnk FROM (
-                   SELECT *, row_number() OVER (PARTITION BY src
-                     ORDER BY cos DESC, dst) AS rnk FROM $sc)
-                 WHERE rnk <= $DescentK)"""
-    def scored(c: String, sc: String) =
-      s"""$sc AS (SELECT c.src, c.dst,
-              ${dDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-            FROM $c c JOIN ee a ON a.vec_id = c.src
-            JOIN ee b ON b.vec_id = c.dst)"""
-    val rounds = (1 to DescentIters).map { r =>
-      val prev = s"d${r - 1}"
-      s"""b$r AS MATERIALIZED (SELECT src, dst FROM $prev
-                  UNION ALL SELECT dst, src FROM $prev),
-          c$r AS (SELECT DISTINCT src, dst FROM (
-                    SELECT src, dst FROM b$r
-                    UNION ALL
-                    SELECT x.src, y.dst FROM b$r x JOIN b$r y ON x.dst = y.src)
-                  WHERE dst <> src),
-          ${scored(s"c$r", s"sc$r")},
-          ${ranked(s"sc$r", s"d$r")}"""
-    }.mkString(",\n")
-    s"""ee AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm
-               FROM embeddings WHERE $pred),
-        nn AS (SELECT count(*) AS n FROM embeddings WHERE $pred),
-        nl AS (${Similarity.LongLinkA.zip(Similarity.LongLinkB)
-                  .map { case (a, b) =>
-                    s"""SELECT vec_id AS src,
-                        (vec_id * $a + $b) % ${TextHash.P} % n AS dst
-                        FROM embeddings, nn WHERE $pred""" }
-                  .mkString(" UNION ALL ")}),
-        c0 AS (SELECT DISTINCT src, dst FROM (
-                 SELECT src, dst FROM nl WHERE dst <> src
-                 UNION ALL SELECT dst, src FROM nl WHERE dst <> src)),
-        ${scored("c0", "sc0")},
-        ${ranked("sc0", "d0")},
-        $rounds"""
-  }
-
-  /** Standalone graph-search twin (q_sim_graph_search, reused as the
-    * approx side of q_sim_graph_recall): the serve walks the published
-    * NN-descent working graph + long links — the twin rebuilds the
-    * identical graph via ndCtes (the Spark side's publish is
-    * deterministic, so rebuild ≡ read), then unrolls the beam rounds. */
-  private def graphSearchSql: String = {
-    import Similarity.{BeamWidth, SearchIters, NEntries, DescentIters}
-    def scoredOf(c: String) =
-      s"""SELECT c.q_id, c.n_id,
-             ${dDot("q.q_emb", "e.embedding")} / (q.q_nrm * e.nrm) AS cos
-          FROM $c c JOIN ee e ON e.vec_id = c.n_id
-          JOIN gq q ON q.q_id = c.q_id"""
-    val rounds = (1 to SearchIters).map { t =>
-      val prev = s"f${t - 1}"
-      s"""gx$t AS (SELECT f.q_id, g.dst AS n_id
-                  FROM $prev f JOIN graph g ON f.n_id = g.src),
-          gcd$t AS (SELECT DISTINCT q_id, n_id FROM (
-                    SELECT q_id, n_id FROM $prev
-                    UNION ALL SELECT q_id, n_id FROM gx$t)
-                  WHERE n_id <> q_id),
-          gsc$t AS (${scoredOf(s"gcd$t")}),
-          f$t AS (SELECT q_id, n_id, cos FROM (
-                    SELECT *, row_number() OVER (PARTITION BY q_id
-                      ORDER BY cos DESC, n_id) AS rn FROM gsc$t)
-                  WHERE rn <= $BeamWidth)"""
-    }.mkString(",\n")
-    s"""WITH $ndCtes,
-        graph AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-                    SELECT src, dst FROM d$DescentIters
-                    UNION ALL SELECT src, dst FROM nl WHERE dst <> src
-                    UNION ALL SELECT dst, src FROM nl WHERE dst <> src)),
-        gq AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
-               FROM ee WHERE vec_id < 8),
-        gdeg AS (SELECT dst, count(*) AS deg FROM d$DescentIters GROUP BY dst),
-        gent AS (SELECT dst AS n_id FROM gdeg ORDER BY deg DESC, dst LIMIT $NEntries),
-        e0 AS (SELECT q.q_id, v.n_id FROM gq q, gent v
-               WHERE v.n_id <> q.q_id),
-        f0 AS (${scoredOf("e0")}),
-        $rounds,
-        fin AS (SELECT q_id, n_id, cos,
-                       CAST(row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, n_id) AS BIGINT) AS "rank"
-                FROM f$SearchIters)
-        SELECT q_id, n_id, cos, "rank" FROM fin
-        WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-  }
-
-  /** Twin of GraphMaintenance.insert — graph-index maintenance: the base
-    * graph is the NN-descent build over the frozen base slice (ndCtesFor
-    * with the cut predicate; the Spark side's publish is deterministic, so
-    * rebuild ≡ read), the late batch is the query set, and the identical
-    * beam rounds run to each new node's top-GraphK links. */
-  private def graphInsertSql: String = {
-    import Similarity.GraphK
-    s"""WITH $graphInsertCtes
-        SELECT q_id AS vec_id, rnk, n_id, cos FROM fin
-        WHERE rnk <= $GraphK ORDER BY vec_id, rnk"""
-  }
-
-  /** The insert twin's CTE body (icut/base ndCtes/graph/beam rounds/fin) —
-    * shared by q_sim_graph_insert and the freshness serve
-    * (q_sim_graph_upsert), which walks the base graph PLUS the inserted
-    * delta edges. */
-  private def graphInsertCtes: String = {
-    import Similarity.{BeamWidth, SearchIters, NEntries, DescentIters}
-    def scoredOf(c: String) =
-      s"""SELECT c.q_id, c.n_id,
-             ${dDot("q.q_emb", "e.embedding")} / (q.q_nrm * e.nrm) AS cos
-          FROM $c c JOIN ee e ON e.vec_id = c.n_id
-          JOIN giq q ON q.q_id = c.q_id"""
-    val rounds = (1 to SearchIters).map { t =>
-      val prev = s"f${t - 1}"
-      s"""gx$t AS (SELECT f.q_id, g.dst AS n_id
-                  FROM $prev f JOIN graph g ON f.n_id = g.src),
-          gcd$t AS (SELECT DISTINCT q_id, n_id FROM (
-                    SELECT q_id, n_id FROM $prev
-                    UNION ALL SELECT q_id, n_id FROM gx$t)),
-          gsc$t AS (${scoredOf(s"gcd$t")}),
-          f$t AS (SELECT q_id, n_id, cos FROM (
-                    SELECT *, row_number() OVER (PARTITION BY q_id
-                      ORDER BY cos DESC, n_id) AS rn FROM gsc$t)
-                  WHERE rn <= $BeamWidth)"""
-    }.mkString(",\n")
-    s"""icut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
-                 FROM embeddings),
-        ${ndCtesFor("vec_id < (SELECT t FROM icut)")},
-        graph AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-                    SELECT src, dst FROM d$DescentIters
-                    UNION ALL SELECT src, dst FROM nl WHERE dst <> src
-                    UNION ALL SELECT dst, src FROM nl WHERE dst <> src)),
-        giq AS (SELECT vec_id AS q_id, embedding AS q_emb,
-                       ${dNorm("embedding")} AS q_nrm
-                FROM embeddings WHERE vec_id >= (SELECT t FROM icut)),
-        gdeg AS (SELECT dst, count(*) AS deg FROM d$DescentIters GROUP BY dst),
-        gent AS (SELECT dst AS n_id FROM gdeg ORDER BY deg DESC, dst LIMIT $NEntries),
-        e0 AS (SELECT q.q_id, v.n_id FROM giq q, gent v),
-        f0 AS (${scoredOf("e0")}),
-        $rounds,
-        fin AS (SELECT q_id, n_id, cos,
-                       CAST(row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, n_id) AS BIGINT) AS rnk
-                FROM f$SearchIters)"""
-  }
-
-  /** Twin of GraphMaintenance.upsertSearch — the graph freshness serve:
-    * the 8-query beam walks base graph + base long links + the inserted
-    * delta edges (both directions), scoring against the FULL corpus;
-    * `is_new` flags late nodes in the served top-10s. */
-  private def graphUpsertSql: String = {
-    import Similarity.{BeamWidth, SearchIters, GraphK}
-    def scoredOf(c: String) =
-      s"""SELECT c.q_id, c.n_id,
-             ${dDot("q.q_emb", "e.embedding")} / (q.q_nrm * e.nrm) AS cos
-          FROM $c c JOIN fe e ON e.vec_id = c.n_id
-          JOIN uq q ON q.q_id = c.q_id"""
-    val rounds = (1 to SearchIters).map { t =>
-      val prev = s"uf${t - 1}"
-      s"""ugx$t AS (SELECT f.q_id, g.dst AS n_id
-                  FROM $prev f JOIN ugraph g ON f.n_id = g.src),
-          ugcd$t AS (SELECT DISTINCT q_id, n_id FROM (
-                    SELECT q_id, n_id FROM $prev
-                    UNION ALL SELECT q_id, n_id FROM ugx$t)
-                  WHERE n_id <> q_id),
-          ugsc$t AS (${scoredOf(s"ugcd$t")}),
-          uf$t AS (SELECT q_id, n_id, cos FROM (
-                    SELECT *, row_number() OVER (PARTITION BY q_id
-                      ORDER BY cos DESC, n_id) AS rn FROM ugsc$t)
-                  WHERE rn <= $BeamWidth)"""
-    }.mkString(",\n")
-    s"""WITH $graphInsertCtes,
-        ins AS (SELECT q_id AS src, n_id AS dst FROM fin WHERE rnk <= $GraphK),
-        ugraph AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-                    SELECT src, dst FROM graph
-                    UNION ALL SELECT src, dst FROM ins
-                    UNION ALL SELECT dst, src FROM ins)),
-        fe AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm
-               FROM embeddings),
-        uq AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
-               FROM fe WHERE vec_id < 8),
-        ue0 AS (SELECT q.q_id, v.n_id FROM uq q, gent v
-                WHERE v.n_id <> q.q_id),
-        uf0 AS (${scoredOf("ue0")}),
-        $rounds,
-        ufin AS (SELECT q_id, n_id, cos,
-                        CAST(row_number() OVER (PARTITION BY q_id
-                          ORDER BY cos DESC, n_id) AS BIGINT) AS "rank"
-                 FROM uf$SearchIters)
-        SELECT q_id, n_id, cos, "rank",
-               CAST(CASE WHEN n_id >= icut.t THEN 1 ELSE 0 END AS BIGINT) AS is_new
-        FROM ufin, icut WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-  }
-
-  private def lexList(l: String): String =
-    TextAnalysis.Lexicons.toMap.apply(l).map(w => s"'$w'").mkString("[", ", ", "]")
-
-  private def dHits(l: String): String =
-    s"CAST(len([t for t in string_split(text, ' ') if list_contains(${lexList(l)}, t)]) AS BIGINT)"
-
-  /** Shared simhash CTEs ending in sh(doc_id, simhash) — twin of
-    * Dedup.simhashSig. */
-  private def simhashCtes: String = {
-    val sums = (0 until TextHash.SimBits).map(b =>
-      s"SUM(CASE WHEN (h >> $b) % 2 = 1 THEN 1 ELSE -1 END) AS s$b").mkString(", ")
-    val sig = (0 until TextHash.SimBits).map(b =>
-      s"(CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
-    s"""tok AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok FROM documents),
-        hh AS (SELECT doc_id, ${dTokHash("tok")} AS h FROM tok),
-        bits AS (SELECT doc_id, $sums FROM hh GROUP BY doc_id),
-        sh AS (SELECT doc_id, CAST($sig AS BIGINT) AS simhash FROM bits)"""
-  }
-
-  /** Shared chunking CTEs ending in chks(doc_id, chunk_idx, tok_start,
-    * n_tokens, chunk_hash) — twin of Curation.chunkRows: stride-56 starts,
-    * capped so the last start still ADDS tokens past the previous chunk's
-    * end (no fully-contained straggler chunk), null text → empty string. */
-  private def chunkCtes: String = {
-    import graft.llm.Curation.{ChunkSize, ChunkStride, ChunkOverlap}
-    s"""ctoks AS (SELECT doc_id, source, string_split(coalesce(text, ''), ' ') AS toks FROM documents),
-        cstart AS (SELECT doc_id, source, toks,
-                     unnest(generate_series(0, greatest(len(toks) - ${ChunkOverlap + 1}, 0), $ChunkStride)) AS tok_start
-                   FROM ctoks),
-        chks AS (SELECT doc_id, source, tok_start // $ChunkStride AS chunk_idx, tok_start,
-                        least($ChunkSize, len(toks) - tok_start) AS n_tokens,
-                        ${dTokHash(s"array_to_string(toks[tok_start+1:tok_start+$ChunkSize], ' ')")} AS chunk_hash
-                 FROM cstart)"""
-  }
-
-  /** Pack-shard lottery — twin of Curation.packShardCol: doc-granularity
-    * pack-v1-salted hash mod PackShards (dTokHash is a positive 60-bit
-    * value, so DuckDB's % equals Spark's pmod). */
-  private def packShardSql: String =
-    s"${dTokHash("'pack-v1' || '|' || CAST(doc_id AS VARCHAR)")} % ${graft.llm.Curation.PackShards}"
-
-  /** All five language lexicons flattened, distinct — twin of the stopword
-    * array qualityLogit builds from TextAnalysis.Lexicons. */
-  private def allStopList: String =
-    TextAnalysis.Lexicons.flatMap(_._2).distinct.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  /** Curriculum-ordering CTE chain ending in crr(doc_id, stage, shard,
-    * seq) — twin of Curation.curriculumOrder (logit histogram → ceil stage
-    * cut → content-hash shard → within-(stage, shard) row_number), shared
-    * by q_curriculum_order and the q_curriculum_pack composition. */
-  private def curriculumCtes: String = curriculumCtesFor("", "TRUE")
-
-  /** The same chain over a doc-predicate SEGMENT, CTE names suffixed so
-    * two segments (the pack-upsert's frozen base + late delta) compose in
-    * one WITH. */
-  private def curriculumCtesFor(sfx: String, pred: String): String =
-    s"""x$sfx AS (SELECT doc_id,
-               string_split(coalesce(text, ''), ' ') AS toks,
-               coalesce(text, '') AS text, coalesce(n_chars, 0) AS n_chars
-            FROM documents WHERE $pred),
-        f$sfx AS (SELECT doc_id,
-               CAST(len(toks) AS BIGINT) AS f_tokens,
-               n_chars AS f_chars,
-               CAST(len(list_filter(toks, tk -> list_contains($allStopList, tk))) AS BIGINT) AS f_stop,
-               CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS f_digits,
-               CAST(len(list_distinct(toks)) AS BIGINT) AS f_distinct
-            FROM x$sfx),
-        lg$sfx AS (SELECT doc_id,
-               -2000 + f_tokens * 3 + f_chars * 1 + f_stop * 40
-                     + f_distinct * 10 - f_digits * 25 AS logit_milli
-            FROM f$sfx),
-        hist$sfx AS (SELECT logit_milli, count(*) AS cnt FROM lg$sfx GROUP BY 1),
-        n$sfx AS (SELECT count(*) AS n_docs FROM lg$sfx),
-        cum$sfx AS (SELECT logit_milli,
-                  sum(cnt) OVER (ORDER BY logit_milli DESC
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                FROM hist$sfx),
-        stg$sfx AS (SELECT logit_milli,
-                  CAST((cum * ${graft.llm.Curation.CurriculumStages} + n_docs - 1) // n_docs AS BIGINT) AS stage
-                FROM cum$sfx, n$sfx),
-        d$sfx AS (SELECT lg$sfx.doc_id, stg$sfx.stage,
-                ${dTokHash(s"'curriculum-v1' || '|' || CAST(lg$sfx.doc_id AS VARCHAR)")} AS h
-              FROM lg$sfx JOIN stg$sfx USING (logit_milli)),
-        crr$sfx AS (SELECT doc_id, stage,
-                  h % ${graft.llm.Curation.CurriculumShards} AS shard,
-                  CAST(row_number() OVER (
-                    PARTITION BY stage, h % ${graft.llm.Curation.CurriculumShards}
-                    ORDER BY h, doc_id) AS BIGINT) AS seq
-                FROM d$sfx)"""
-
-  /** int8 dequantization CTEs ending in e(vec_id, embedding, nrm) where
-    * `embedding` is the DEQUANTIZED double list — twin of the
-    * quantCodes→dequant stage of Similarity.ivfQuantizedTopK (floor-based
-    * codes, code·maxabs/127 reconstruction, left-to-right norm). */
-  private def dequantCtes: String =
-    s"""qz AS (SELECT vec_id, embedding AS fl,
-               list_max([abs(CAST(embedding[i] AS DOUBLE)) for i in generate_series(1, len(embedding))]) AS maxabs
-             FROM embeddings),
-        deq AS (SELECT vec_id,
-               CASE WHEN maxabs > 0 THEN
-                 [CAST(floor(CAST(fl[i] AS DOUBLE) * 127.0 / maxabs + 0.5) AS INT) * maxabs / 127.0
-                  for i in generate_series(1, len(fl))]
-               ELSE [CAST(0 AS DOUBLE) for i in generate_series(1, len(fl))] END AS embedding
-             FROM qz),
-        e AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm FROM deq)"""
-
-  /** Twin of Fusion.fusedTopK (the q_sim_fused entry, extracted as a
-    * fragment so the rank-quality audit can reuse it): the three member
-    * twins as subqueries, two chained FULL JOINs, the RRF terms added in
-    * the IDENTICAL textual order with explicit double division. */
-  private def fusedSql: String =
-    s"""WITH fi AS (SELECT q_id, n_id, "rank" AS r_ivf FROM ($ivfTrainedSql)),
-        fg AS (SELECT q_id, n_id, "rank" AS r_graph FROM ($graphSearchSql)),
-        fb AS (SELECT q_id, n_id, "rank" AS r_bin FROM ($binaryTopkSql)),
-        fj AS (SELECT q_id, n_id, r_ivf, r_graph, r_bin
-               FROM fi
-               FULL OUTER JOIN fg USING (q_id, n_id)
-               FULL OUTER JOIN fb USING (q_id, n_id)),
-        fs AS (SELECT q_id, n_id,
-                      coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_ivf), CAST(0 AS DOUBLE)) +
-                      coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_graph), CAST(0 AS DOUBLE)) +
-                      coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_bin), CAST(0 AS DOUBLE)) AS rrf
-               FROM fj),
-        fr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                 ORDER BY rrf DESC, n_id) AS BIGINT) AS "rank" FROM fs)
-        SELECT q_id, n_id, rrf, "rank" FROM fr
-        WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-
-  /** One family's per-query top-10 CHANGE-FEED rows for the
-    * q_sim_rank_diff twin (r13): base vs upsert serve full-outer-joined
-    * on (q_id, n_id), folded to exact integer churn counts — kept /
-    * entered / dropped members, summed |rank| displacement of kept ones,
-    * and whether rank 1 changed. */
-  private def rankDiffSql(fam: String, baseSql: String, upsSql: String): String =
-    s"""SELECT '$fam' AS family, q_id,
-           CAST(COUNT(CASE WHEN r_base IS NOT NULL AND r_ups IS NOT NULL THEN 1 END) AS BIGINT) AS n_common,
-           CAST(COUNT(CASE WHEN r_base IS NULL THEN 1 END) AS BIGINT) AS n_new,
-           CAST(COUNT(CASE WHEN r_ups IS NULL THEN 1 END) AS BIGINT) AS n_dropped,
-           CAST(COALESCE(SUM(CASE WHEN r_base IS NOT NULL AND r_ups IS NOT NULL
-             THEN abs(r_base - r_ups) ELSE 0 END), 0) AS BIGINT) AS displacement,
-           CAST(MAX(CASE WHEN r_ups = 1 AND (r_base IS NULL OR r_base <> 1)
-             THEN 1 ELSE 0 END) AS BIGINT) AS top1_changed
-        FROM (SELECT COALESCE(b.q_id, u.q_id) AS q_id, b.r_base, u.r_ups
-              FROM (SELECT q_id, n_id, "rank" AS r_base FROM ($baseSql)) b
-              FULL OUTER JOIN (SELECT q_id, n_id, "rank" AS r_ups FROM ($upsSql)) u
-              ON b.q_id = u.q_id AND b.n_id = u.n_id)
-        GROUP BY q_id"""
-
-  /** One family's per-query rank-metric rows for the q_sim_rank_quality
-    * twin: integer rel_r pivot + first-hit rank, grouped over the served
-    * Q·10 frame left-joined to the family's exact relevant set (a CTE
-    * named `exactCte` must be in scope — `exact` is the cosine set;
-    * the L2-space composite grades against `exact_l2`, the recall-audit
-    * contract). The DCG fold happens in the outer select via
-    * RankEval.dcgSqlExpr — the SAME text the Spark side executes. */
-  private def rankMetricsCte(fam: String, servedSql: String,
-                             exactCte: String = "exact"): String = {
-    val fh = """min(CASE WHEN e.n_id IS NOT NULL THEN a."rank" END)"""
-    val rels = (1 to 10).map(r =>
-      s"""CAST(max(CASE WHEN a."rank" = $r AND e.n_id IS NOT NULL
-              THEN 1 ELSE 0 END) AS BIGINT) AS rel_$r""").mkString(", ")
-    s"""SELECT '$fam' AS family, a.q_id,
-          CAST(coalesce($fh, 0) AS BIGINT) AS first_hit,
-          CASE WHEN $fh IS NOT NULL
-               THEN CAST(1 AS DOUBLE) / CAST($fh AS DOUBLE)
-               ELSE CAST(0 AS DOUBLE) END AS rr,
-          $rels
-        FROM ($servedSql) a LEFT JOIN $exactCte e
-          ON a.q_id = e.q_id AND a.n_id = e.n_id
-        GROUP BY a.q_id"""
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_project_rename" ->
-      """SELECT p_partkey AS id, p_name AS name, p_brand AS brand, p_retailprice AS price
-         FROM part ORDER BY id""",
-    "q_derived_column" ->
-      """SELECT c_custkey, c_mktsegment, c_mktsegment AS segment_key,
-                CAST(floor(c_acctbal/100) AS BIGINT) AS bal_bucket
-         FROM customer ORDER BY c_custkey""",
-    "q_cast_timestamp" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
-                date_trunc('month', o_orderdate) AS order_month,
-                year(o_orderdate) AS order_year
-         FROM orders ORDER BY o_orderkey""",
-    "q_filter_prefix" ->
-      """SELECT p_partkey, p_name, p_type FROM part
-         WHERE p_name LIKE 'red%' ORDER BY p_partkey""",
-    "q_union_all" ->
-      """SELECT * FROM (
-           SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderstatus='F'
-           UNION ALL
-           SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderstatus='O'
-         ) ORDER BY o_orderkey""",
-    "q_dedup_latest" ->
-      """SELECT user_id, event_id, event_type, value, epoch_ms(ts) AS ts_ms
-         FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-               FROM events)
-         WHERE rn = 1 ORDER BY user_id""",
-    "q_merge_upsert" ->
-      """WITH ev AS (SELECT user_id, event_type, value, epoch_ms(ts) AS ts_ms, event_id, ts FROM events),
-         tgt AS (SELECT user_id, event_type, value, ts_ms FROM
-                   (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                    FROM ev WHERE ts < TIMESTAMP '2024-01-15 00:00:00') WHERE rn = 1),
-         src AS (SELECT user_id, event_type, value, ts_ms FROM
-                   (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                    FROM ev WHERE ts >= TIMESTAMP '2024-01-15 00:00:00') WHERE rn = 1)
-         SELECT CASE WHEN s.user_id IS NOT NULL THEN s.user_id ELSE t.user_id END AS user_id,
-                CASE WHEN s.user_id IS NOT NULL THEN s.event_type ELSE t.event_type END AS event_type,
-                CASE WHEN s.user_id IS NOT NULL THEN s.value ELSE t.value END AS value,
-                CASE WHEN s.user_id IS NOT NULL THEN s.ts_ms ELSE t.ts_ms END AS ts_ms
-         FROM tgt t FULL OUTER JOIN src s ON t.user_id = s.user_id
-         ORDER BY user_id""",
-    "q_merge_cdc" ->
-      """WITH tgt AS (SELECT c_custkey, c_name, c_mktsegment FROM customer),
-         chg AS (
-           SELECT c_custkey, c_name, c_mktsegment, 'D' AS op FROM customer WHERE c_custkey % 10 = 0
-           UNION ALL
-           SELECT c_custkey, upper(c_name), c_mktsegment, 'U' FROM customer WHERE c_custkey % 10 = 1
-           UNION ALL
-           SELECT c_custkey + 1000000, 'new ' || c_name, c_mktsegment, 'I' FROM customer WHERE c_custkey % 10 = 2)
-         SELECT CASE WHEN s.c_custkey IS NOT NULL THEN s.c_custkey ELSE t.c_custkey END AS c_custkey,
-                CASE WHEN s.c_custkey IS NOT NULL THEN s.c_name ELSE t.c_name END AS c_name,
-                CASE WHEN s.c_custkey IS NOT NULL THEN s.c_mktsegment ELSE t.c_mktsegment END AS c_mktsegment
-         FROM tgt t FULL OUTER JOIN chg s ON t.c_custkey = s.c_custkey
-         WHERE NOT (s.c_custkey IS NOT NULL AND s.op = 'D')
-         ORDER BY c_custkey""",
-    "q_snapshot_overwrite" ->
-      s"""SELECT o_orderpriority, count(*) AS n, ${dsum("o_totalprice")} AS total
-          FROM orders WHERE o_orderstatus='O' GROUP BY 1 ORDER BY 1""",
-    "q_partition_prune" ->
-      s"""SELECT o_orderpriority, count(*) AS n, ${dsum("o_totalprice")} AS total
-          FROM orders WHERE year(o_orderdate) = 1996 GROUP BY 1 ORDER BY 1""",
-    "q_agg_collect_set" ->
-      """SELECT o_orderstatus,
-                array_to_string(list_sort(list(DISTINCT o_orderpriority)), '|') AS prios,
-                count(DISTINCT o_orderpriority) AS n_prios
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    "q_join_inner" ->
-      """SELECT l_orderkey, l_linenumber, o_custkey, o_orderstatus, l_extendedprice
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         ORDER BY l_orderkey, l_linenumber""",
-    "q_join_broadcast" ->
-      s"""SELECT p_brand, ${dsum("l_extendedprice")} AS revenue, count(*) AS n
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY 1 ORDER BY 1""",
-    // bucketed co-located join: the LAYOUT is the Spark-side story
-    // (zero-exchange zero-sort SMJ off bucketed tables, BucketedJoinSpec);
-    // the VALUES are plain relational algebra the oracle checks directly
-    "q_join_bucketed" ->
-      """SELECT o_orderstatus,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-                count(*) AS n
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "q_join_multi" ->
-      s"""SELECT r_name, l_returnflag,
-                 CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-                 ${dsum("l_quantity")} AS sum_qty, count(*) AS n
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          GROUP BY 1,2 ORDER BY 1,2""",
-    "q_join_left" ->
-      s"""SELECT c_custkey, count(o_orderkey) AS n_big,
-                 coalesce(${dsum("o_totalprice")}, 0.0) AS total_big
-          FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_totalprice > 300000) o
-            ON c_custkey = o_custkey
-          GROUP BY 1 ORDER BY 1""",
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_orderpriority='1-URGENT')
-         ORDER BY c_custkey""",
-    "q_join_anti" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus='P')
-         ORDER BY c_custkey""",
-    "q_join_anti_null" ->
-      """WITH blocked AS (
-           SELECT CASE WHEN o_orderstatus = 'P' THEN o_custkey END AS k FROM orders
-         )
-         SELECT 'in_blocked' AS variant,
-                (SELECT count(1) FROM customer WHERE c_custkey IN (SELECT k FROM blocked)) AS n
-         UNION ALL
-         SELECT 'not_in_naive',
-                (SELECT count(1) FROM customer WHERE c_custkey NOT IN (SELECT k FROM blocked))
-         UNION ALL
-         SELECT 'not_in_null_safe',
-                (SELECT count(1) FROM customer
-                 WHERE c_custkey NOT IN (SELECT k FROM blocked WHERE k IS NOT NULL))
-         ORDER BY variant""",
-    "q_join_range" ->
-      s"""SELECT r_regionkey AS bucket, count(*) AS n, ${dsum("p_retailprice")} AS total
-          FROM part JOIN region
-            ON p_retailprice >= 900 + r_regionkey*20 AND p_retailprice < 920 + r_regionkey*20
-          GROUP BY 1 ORDER BY 1""",
-    "q_join_star2" ->
-      s"""SELECT r_name, n_name,
-                 CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-                 count(*) AS n
-          FROM lineitem
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation ON s_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_join_skew_salted" ->
-      s"""SELECT 'flag_' || l_returnflag AS flag_label, count(*) AS n,
-                 ${dsum("l_extendedprice")} AS total
-          FROM lineitem GROUP BY 1 ORDER BY 1""",
-    "q_subquery_scalar" ->
-      """SELECT c_custkey, c_mktsegment,
-                (SELECT max(o_totalprice) FROM orders WHERE o_custkey = c_custkey) AS max_order,
-                (SELECT count(1) FROM orders WHERE o_custkey = c_custkey) AS n_orders
-         FROM customer ORDER BY c_custkey""",
-    "q_subquery_corr_agg" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-         FROM orders o
-         WHERE o_totalprice > 2 * (
-           SELECT CAST(CAST(SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) / COUNT(1)
-           FROM orders i WHERE i.o_custkey = o.o_custkey)
-         ORDER BY o_orderkey""",
-    "q_window_navigation" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-                first_value(o_totalprice) OVER wf AS first_price,
-                last_value(o_totalprice) OVER wf AS last_price,
-                CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-                percent_rank() OVER w AS pct_rank
-         FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-                wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         ORDER BY o_custkey, o_orderkey""",
-    "q_join_asof" ->
-      """WITH x AS (
-           SELECT event_id, user_id, value, ts, event_type,
-                  last_value(CASE WHEN event_type='signup' THEN ts END IGNORE NULLS)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS asof_ts
-           FROM events)
-         SELECT event_id, user_id, value, epoch_ms(ts) AS ts_ms, epoch_ms(asof_ts) AS asof_signup_ms
-         FROM x WHERE event_type='purchase' ORDER BY event_id""",
-    "q_join_asof2" ->
-      """WITH trades AS (SELECT event_id, user_id, value AS t_value, ts FROM events WHERE event_type='purchase'),
-              quotes AS (SELECT user_id, value AS q_value, ts FROM events WHERE event_type='view')
-         SELECT t.event_id, t.user_id, t.t_value, epoch_ms(t.ts) AS ts_ms,
-                epoch_ms(q.ts) AS quote_ts_ms, q.q_value AS quote_value
-         FROM trades t ASOF LEFT JOIN quotes q ON t.user_id = q.user_id AND t.ts >= q.ts
-         ORDER BY event_id""",
-    "q_agg_groupby" ->
-      s"""SELECT l_returnflag, l_linestatus,
-                 ${dsum("l_quantity")} AS sum_qty,
-                 ${dsum("l_extendedprice")} AS sum_base,
-                 CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-                 ${dsum("l_quantity")}/count(*) AS avg_qty,
-                 count(*) AS n
-          FROM lineitem GROUP BY 1,2 ORDER BY 1,2""",
-    "q_agg_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-                count(DISTINCT l_suppkey) AS n_supps, count(*) AS n
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-    "q_agg_stats" ->
-      s"""WITH a AS (SELECT o_orderstatus, count(*) AS n,
-                 ${dsum("o_totalprice")} AS s1,
-                 CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2)) * CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS s2
-          FROM orders GROUP BY 1)
-          SELECT o_orderstatus, n, s1 / n AS mean,
-                 (s2 - s1 * s1 / n) / (n - 1) AS var_samp,
-                 sqrt((s2 - s1 * s1 / n) / (n - 1)) AS stddev_samp
-          FROM a ORDER BY o_orderstatus""",
-    "q_agg_percentile" ->
-      """SELECT o_orderstatus,
-                quantile_cont(o_totalprice, 0.5) AS p50,
-                quantile_cont(o_totalprice, 0.9) AS p90,
-                count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    "q_rollup" ->
-      s"""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-                 ${dsum("o_totalprice")} AS total,
-                 CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-          FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-          ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q_cube" ->
-      s"""SELECT l_returnflag, l_linestatus, count(*) AS n,
-                 ${dsum("l_quantity")} AS sum_qty,
-                 CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid
-          FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-          ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_grouping_sets" ->
-      s"""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-                 ${dsum("o_totalprice")} AS total,
-                 CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
-          FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-          ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q_pivot" ->
-      """SELECT source,
-                count(*) FILTER (WHERE lang='de') AS de,
-                count(*) FILTER (WHERE lang='en') AS en,
-                count(*) FILTER (WHERE lang='es') AS es,
-                count(*) FILTER (WHERE lang='fr') AS fr,
-                count(*) FILTER (WHERE lang='zh') AS zh
-         FROM documents GROUP BY source ORDER BY source""",
-    "q_unpivot" ->
-      """SELECT * FROM (
-           SELECT o_orderkey, 'o_totalprice' AS metric, o_totalprice AS value FROM orders
-           UNION ALL
-           SELECT o_orderkey, 'days_since' AS metric,
-                  CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS DOUBLE) AS value
-           FROM orders
-         ) ORDER BY o_orderkey, metric""",
-    "q_window_rank" ->
-      """SELECT p_brand, p_partkey, p_retailprice, rnk, rn FROM (
-           SELECT p_brand, p_partkey, p_retailprice,
-                  CAST(rank() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC) AS BIGINT) AS rnk,
-                  CAST(row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS BIGINT) AS rn
-           FROM part)
-         WHERE rn <= 10 ORDER BY p_brand, rn""",
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-                CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                  OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS running_total
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-    "q_window_lag" ->
-      """SELECT event_id, user_id, epoch_ms(ts) AS ts_ms, value,
-                lag(value, 1) OVER w AS prev_value,
-                value - lag(value, 1) OVER w AS delta
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         ORDER BY user_id, ts_ms, event_id""",
-    "q_window_range" ->
-      """SELECT o_custkey, o_orderkey, days, o_totalprice,
-                CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                  OVER (PARTITION BY o_custkey ORDER BY days
-                        RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS sum_30d
-         FROM (SELECT *, datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days FROM orders)
-         ORDER BY o_custkey, o_orderkey""",
-    "q_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-    "q_sort_global" ->
-      """SELECT o_orderkey, o_orderdate, o_totalprice FROM orders
-         ORDER BY o_orderdate DESC, o_orderkey""",
-    "q_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus='F'
-         INTERSECT
-         SELECT o_custkey FROM orders WHERE o_orderstatus='O'
-         ORDER BY o_custkey""",
-    "q_except" ->
-      """SELECT o_custkey FROM orders
-         EXCEPT
-         SELECT o_custkey FROM orders WHERE o_orderpriority='1-URGENT'
-         ORDER BY o_custkey""",
-    "q_string_funcs" ->
-      """SELECT c_custkey, upper(c_name) AS uname, lower(c_mktsegment) AS lseg,
-                substr(c_name, 1, 8) AS prefix,
-                concat_ws('|', c_mktsegment, c_name) AS tag,
-                CAST(length(c_name) AS BIGINT) AS name_len,
-                trim('  x  ') AS trimmed
-         FROM customer ORDER BY c_custkey""",
-    "q_date_funcs" ->
-      """SELECT o_orderkey, year(o_orderdate) AS y, month(o_orderdate) AS m,
-                day(o_orderdate) AS d, quarter(o_orderdate) AS q,
-                date_trunc('quarter', o_orderdate) AS q_start,
-                datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since,
-                last_day(CAST(o_orderdate AS DATE)) AS month_end
-         FROM orders ORDER BY o_orderkey""",
-    "q_math_funcs" ->
-      """SELECT l_orderkey, l_linenumber,
-                CAST(CAST(round(CAST(l_extendedprice AS DECIMAL(12,2))
-                                * CAST(1 + l_tax AS DECIMAL(8,2))
-                                * CAST(1 - l_discount AS DECIMAL(8,2)), 2) AS VARCHAR) AS DOUBLE) AS charge,
-                abs(l_extendedprice - l_quantity * 1000.0) AS absdiff,
-                (l_extendedprice - l_quantity) / l_quantity AS pct,
-                sqrt(l_extendedprice) AS root,
-                CAST(floor(l_discount * 100) AS BIGINT) AS disc_pct
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_case_when" ->
-      """SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
-                     WHEN o_totalprice < 200000 THEN 'mid'
-                     ELSE 'big' END AS bucket,
-                o_orderstatus, count(*) AS n
-         FROM orders GROUP BY 1,2 ORDER BY 1,2""",
-    "q_json_funcs" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-         FROM events ORDER BY event_id""",
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS rep_id, count(*) AS n_copies, sha256(text) AS content_hash
-         FROM documents GROUP BY sha256(text) ORDER BY rep_id""",
-    "q_dedup_near" ->
-      """SELECT min(doc_id) AS rep_id, count(*) AS n_members
-         FROM documents
-         GROUP BY sha256(array_to_string(list_sort(list_distinct(
-                    string_split(lower(regexp_replace(text, '[^\p{L}\p{N}\s]', '', 'g')), ' '))), ' '))
-         ORDER BY rep_id""",
-    "q_dedup_minhash" ->
-      s"""WITH $minhashCtesCapped
-          SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""",
-    "q_dedup_clusters" ->
-      s"""WITH th AS (SELECT doc_id, [${dTokHash("t")} % ${TextHash.P} for t in string_split(text, ' ')] AS h FROM documents),
-          k AS (SELECT doc_id, list_sort(list_distinct(h)) AS ths FROM th)
-          SELECT doc_id,
-                 CAST(min(doc_id) OVER (PARTITION BY ths) AS BIGINT) AS rep_id,
-                 count(*) OVER (PARTITION BY ths) AS n_members
-          FROM k ORDER BY doc_id""",
-    "q_dedup_jaccard" ->
-      s"""WITH $minhashCtesCapped,
-          toks AS (SELECT doc_id, list_distinct(h) AS ths, len(list_distinct(h)) AS nt FROM th)
-          SELECT p.doc_a, p.doc_b,
-                 CAST(len(list_intersect(a.ths, b.ths)) AS DOUBLE)
-                   / (a.nt + b.nt - len(list_intersect(a.ths, b.ths))) AS jac
-          FROM pairs p
-          JOIN toks a ON p.doc_a = a.doc_id
-          JOIN toks b ON p.doc_b = b.doc_id
-          WHERE jac >= 0.95 ORDER BY doc_a, doc_b""",
-    // banding recall audit: exact all-pairs jaccard over the deterministic
-    // rep sample vs the same band self-join the candidate queries run
-    "q_dedup_recall" -> {
-      import graft.llm.Dedup.{RecallSampleMod, RecallMinJac}
-      import TextHash.{A, B, K, P, Bands, Rows}
-      val ms = (0 until K).map(i =>
-        s"list_min([(${A(i)} * x + ${B(i)}) % $P for x in ths]) AS m$i")
-        .mkString(", ")
-      val bands = (0 until Bands).map { j =>
-        val bh = (Rows * j until Rows * (j + 1)).map(i => s"m$i")
-          .reduce((acc, m) => s"((($acc) * 31 + $m) % $P)")
-        s"SELECT doc_id, $j AS band, $bh AS bh FROM rsig"
-      }.mkString(" UNION ALL ")
-      s"""WITH rth AS (SELECT doc_id, $tokThList AS h FROM documents),
-          rkeyed AS (SELECT doc_id, list_sort(list_distinct(h)) AS ths FROM rth),
-          rreps AS (SELECT min(doc_id) AS doc_id, any_value(ths) AS ths
-                    FROM rkeyed GROUP BY array_to_string(ths, ',')),
-          rsamp AS (SELECT doc_id, ths, len(ths) AS nt FROM rreps
-                    WHERE doc_id % $RecallSampleMod = 0),
-          rtruth AS (SELECT x.doc_id AS ra, y.doc_id AS rb,
-                            CAST(len(list_intersect(x.ths, y.ths)) AS DOUBLE)
-                              / (x.nt + y.nt - len(list_intersect(x.ths, y.ths))) AS jac
-                     FROM rsamp x JOIN rsamp y ON x.doc_id < y.doc_id
-                     WHERE jac >= $RecallMinJac),
-          rsig AS (SELECT doc_id, $ms FROM rsamp),
-          rbands AS ($bands),
-          rcand AS (SELECT DISTINCT x.doc_id AS ca, y.doc_id AS cb
-                    FROM rbands x JOIN rbands y
-                      ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-          rhit AS (SELECT t.jac, CASE WHEN c.ca IS NULL THEN 0 ELSE 1 END AS hit
-                   FROM rtruth t LEFT JOIN rcand c
-                     ON t.ra = c.ca AND t.rb = c.cb),
-          rbkt AS (SELECT CASE WHEN jac >= 0.95 THEN '[0.95,1.00]'
-                               WHEN jac >= 0.90 THEN '[0.90,0.95)'
-                               WHEN jac >= 0.85 THEN '[0.85,0.90)'
-                               ELSE '[0.80,0.85)' END AS bucket, hit FROM rhit)
-          SELECT bucket, count(*) AS n_true,
-                 CAST(SUM(hit) AS BIGINT) AS n_caught,
-                 CAST(SUM(hit) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
-          FROM rbkt GROUP BY bucket ORDER BY bucket"""
-    },
-    "q_dedup_shingle" ->
-      s"""WITH $shingleCtesCapped
-          SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""",
-    // winnowing (positional fingerprints): per-position shingle hashes, then
-    // window minima, distinct per doc; df-capped fp self-join; integer counts
-    "q_dedup_winnow" -> {
-      import graft.llm.Dedup.{WinnowWindow => W, WinnowMaxDf, WinnowMinShared}
-      val n = TextHash.ShingleLen
-      s"""WITH th AS (SELECT doc_id,
-                 [${dTokHash(s"substring(text, i, $n)")} % ${TextHash.P}
-                  for i in generate_series(1, greatest(length(coalesce(text, '')) - ${n - 1}, 1))] AS h
-               FROM documents),
-          fp AS (SELECT DISTINCT doc_id,
-                 unnest([list_min(h[j:j+${W - 1}])
-                         for j in generate_series(1, greatest(len(h) - ${W - 1}, 1))]) AS fp
-               FROM th),
-          kept AS (SELECT doc_id, fp FROM (
-                 SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS df FROM fp)
-               WHERE df <= $WinnowMaxDf)
-          SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS n_shared
-          FROM kept x JOIN kept y ON x.fp = y.fp AND x.doc_id < y.doc_id
-          GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared
-          ORDER BY doc_a, doc_b"""
-    },
-    // exact-substring audit: every W-token window hashed (identical window
-    // string: array slice joined on ' '), cross-doc frequency over DISTINCT
-    // (doc, hash) postings, per-doc exact fraction
-    "q_dedup_substring" -> {
-      val w = graft.llm.Dedup.SubstringW
-      s"""WITH sdt AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk
-                       FROM documents),
-          sdw AS (SELECT doc_id, unnest(generate_series(1, len(tk) - ${w - 1})) AS j, tk
-                  FROM sdt WHERE len(tk) >= $w),
-          sdh AS (SELECT doc_id,
-                         ${dTokHash(s"array_to_string(tk[j:j+${w - 1}], ' ')")} % ${TextHash.P} AS wh
-                  FROM sdw),
-          sdd AS (SELECT wh, count(*) AS dfd FROM (SELECT DISTINCT doc_id, wh FROM sdh)
-                  GROUP BY 1)
-          SELECT h.doc_id, count(*) AS n_windows,
-                 CAST(SUM(CASE WHEN d.dfd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-                 CAST(SUM(CASE WHEN d.dfd >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
-                   / CAST(count(*) AS DOUBLE) AS dup_frac
-          FROM sdh h JOIN sdd d USING (wh)
-          GROUP BY 1 ORDER BY 1"""
-    },
-    // transitive closure via a recursive CTE: reach(s, d) = d reachable from
-    // s through jaccard-verified edges; component = min reachable doc.
-    "q_dedup_components" -> dedupComponentsSql,
-    // split-leakage audit: the components twin wrapped as a subquery joined
-    // to the content-keyed split rule — a near-dup class whose members
-    // carry different text can straddle splits (exact dups cannot)
-    "q_split_leakage" ->
-      s"""WITH comp AS (SELECT doc_id, component_id FROM ($dedupComponentsSql)),
-          spl AS (SELECT doc_id,
-                    CASE WHEN ${dTokHash("'split-v1' || '|' || coalesce(text, '')")} % 100 < 80 THEN 'train'
-                         WHEN ${dTokHash("'split-v1' || '|' || coalesce(text, '')")} % 100 < 90 THEN 'val'
-                         ELSE 'test' END AS split
-                  FROM documents),
-          lj AS (SELECT c.component_id, s.split
-                 FROM comp c JOIN spl s USING (doc_id))
-          SELECT component_id, count(*) AS n_members,
-                 CAST(count(DISTINCT split) AS BIGINT) AS n_splits,
-                 CAST(CASE WHEN count(DISTINCT split) > 1 THEN 1 ELSE 0 END AS BIGINT) AS leaks
-          FROM lj GROUP BY 1 HAVING count(*) > 1
-          ORDER BY component_id""",
-    // incremental dedup: the twin band-joins ALL docs, then restricts to
-    // (corpus, batch) candidate pairs. The Spark side collapses the corpus
-    // to distinct sets first — identical sets share every band, and rep =
-    // min corpus member, so "min corpus doc among best matches" is the same
-    // winner on both sides.
-    "q_dedup_incremental" ->
-      s"""WITH $minhashCtes,
-          toks AS (SELECT doc_id, list_distinct(h) AS ths, len(list_distinct(h)) AS nt FROM th),
-          cand AS (SELECT y.doc_id AS doc_id, x.doc_id AS corp
-                   FROM bands x JOIN bands y ON x.band = y.band AND x.bh = y.bh
-                   WHERE x.doc_id % ${graft.llm.Dedup.DeltaMod} <> ${graft.llm.Dedup.DeltaMod - 1}
-                     AND y.doc_id % ${graft.llm.Dedup.DeltaMod} = ${graft.llm.Dedup.DeltaMod - 1}),
-          ver AS (SELECT c.doc_id, c.corp,
-                    CAST(len(list_intersect(a.ths, b.ths)) AS DOUBLE)
-                      / (a.nt + b.nt - len(list_intersect(a.ths, b.ths))) AS jac
-                  FROM cand c
-                  JOIN toks a ON c.corp = a.doc_id
-                  JOIN toks b ON c.doc_id = b.doc_id
-                  WHERE jac >= 0.95),
-          best AS (SELECT doc_id, corp, jac,
-                     row_number() OVER (PARTITION BY doc_id ORDER BY jac DESC, corp ASC) AS rn
-                   FROM ver)
-          SELECT d.doc_id, CAST(b.corp AS BIGINT) AS dup_of, b.jac,
-                 b.corp IS NOT NULL AS is_dup
-          FROM (SELECT doc_id FROM documents
-                WHERE doc_id % ${graft.llm.Dedup.DeltaMod} = ${graft.llm.Dedup.DeltaMod - 1}) d
-          LEFT JOIN (SELECT doc_id, corp, jac FROM best WHERE rn = 1) b USING (doc_id)
-          ORDER BY d.doc_id""",
-    "q_decontaminate" -> {
-      val n = graft.llm.Curation.DecontamN
-      val grams =
-        s"[array_to_string(t[i:i+${n - 1}], ' ') for i in generate_series(1, len(t) - ${n - 1})]"
-      s"""WITH g AS (SELECT DISTINCT doc_id, sh FROM (
-                SELECT doc_id, unnest($grams) AS sh
-                FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))),
-          bench AS (SELECT DISTINCT sh FROM g WHERE doc_id % ${graft.llm.Curation.BenchMod} = 0),
-          train AS (SELECT doc_id, sh FROM g WHERE doc_id % ${graft.llm.Curation.BenchMod} <> 0)
-          SELECT doc_id, count(*) AS n_shared_shingles
-          FROM train JOIN bench USING (sh)
-          GROUP BY 1 ORDER BY 1"""
-    },
-    "q_stats_profile" -> {
-      val cols = Seq("l_orderkey", "l_partkey", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax")
-      cols.map { c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n_rows,
-               CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-               count(DISTINCT $c) AS n_distinct,
-               CAST(min($c) AS DOUBLE) AS min_d, CAST(max($c) AS DOUBLE) AS max_d
-           FROM lineitem"""
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    },
-    "q_decontaminate_audit" -> {
-      val n = graft.llm.Curation.ContainN
-      val grams =
-        s"[array_to_string(t[i:i+${n - 1}], ' ') for i in generate_series(1, len(t) - ${n - 1})]"
-      s"""WITH g AS (SELECT DISTINCT doc_id, sh FROM (
-                SELECT doc_id, unnest($grams) AS sh
-                FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))),
-          bench AS (SELECT doc_id AS bench_id, sh FROM g WHERE doc_id % ${graft.llm.Curation.BenchMod} = 0),
-          nb AS (SELECT bench_id, count(*) AS nb FROM bench GROUP BY 1),
-          train AS (SELECT doc_id, sh FROM g WHERE doc_id % ${graft.llm.Curation.BenchMod} <> 0),
-          inter AS (SELECT b.bench_id, t.doc_id, count(*) AS n_shared
-                    FROM train t JOIN bench b USING (sh) GROUP BY 1, 2),
-          scored AS (SELECT i.bench_id, i.doc_id, i.n_shared,
-                       CAST(i.n_shared AS DOUBLE) / z.nb AS containment,
-                       row_number() OVER (PARTITION BY i.bench_id
-                         ORDER BY CAST(i.n_shared AS DOUBLE) / z.nb DESC, i.doc_id ASC) AS rn
-                     FROM inter i JOIN nb z USING (bench_id))
-          SELECT d.doc_id AS bench_id, s.doc_id AS top_doc_id,
-                 s.n_shared, s.containment
-          FROM (SELECT doc_id FROM documents WHERE doc_id % ${graft.llm.Curation.BenchMod} = 0) d
-          LEFT JOIN (SELECT * FROM scored WHERE rn = 1) s ON d.doc_id = s.bench_id
-          ORDER BY bench_id"""
-    },
-    // embedding-space decontamination audit: exact top-K nearest training
-    // vectors per benchmark vector — fixed-order cosine, bit-exact
-    "q_decontaminate_embed" -> {
-      import graft.llm.Curation.{BenchMod, EmbedAuditK}
-      s"""WITH en AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm
-                      FROM embeddings),
-          db AS (SELECT vec_id AS bench_id, embedding AS b_emb, nrm AS b_nrm
-                 FROM en WHERE vec_id % $BenchMod = 0),
-          dtr AS (SELECT * FROM en WHERE vec_id % $BenchMod <> 0),
-          dsc AS (SELECT db.bench_id, dtr.vec_id AS train_id,
-                         ${dDot("db.b_emb", "dtr.embedding")} / (db.b_nrm * dtr.nrm) AS cos
-                  FROM dtr, db),
-          drk AS (SELECT *, CAST(row_number() OVER (PARTITION BY bench_id
-                    ORDER BY cos DESC, train_id) AS BIGINT) AS "rank" FROM dsc)
-          SELECT bench_id, train_id, cos, "rank" FROM drk
-          WHERE "rank" <= $EmbedAuditK ORDER BY bench_id, "rank""""
-    },
-    "q_text_commonness" ->
-      """WITH g AS (SELECT DISTINCT doc_id, g FROM (
-                 SELECT doc_id, unnest([array_to_string(t[i:i+1], ' ')
-                          for i in generate_series(1, len(t) - 1)]) AS g
-                 FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))),
-          df AS (SELECT g, count(*) AS df FROM g GROUP BY 1)
-          SELECT doc_id, CAST(sum(df) AS BIGINT) AS df_sum,
-                 count(*) AS n_grams,
-                 CAST(CAST(sum(df) AS BIGINT) AS DOUBLE) / count(*) AS avg_df
-          FROM g JOIN df USING (g)
-          GROUP BY doc_id ORDER BY doc_id""",
-    "q_split_assign" ->
-      s"""SELECT doc_id,
-                 ${dTokHash("'split-v1' || '|' || coalesce(text, '')")} % 100 AS bucket,
-                 CASE WHEN ${dTokHash("'split-v1' || '|' || coalesce(text, '')")} % 100 < 80 THEN 'train'
-                      WHEN ${dTokHash("'split-v1' || '|' || coalesce(text, '')")} % 100 < 90 THEN 'val'
-                      ELSE 'test' END AS split
-          FROM documents ORDER BY doc_id""",
-    "q_stats_skew" ->
-      """SELECT l_suppkey AS key, count(*) AS n,
-                CAST(count(*) AS DOUBLE) / (SELECT count(*) FROM lineitem) AS pct
-         FROM lineitem GROUP BY 1 ORDER BY n DESC, key LIMIT 20""",
-    "q_sample_stratified" ->
-      s"""SELECT doc_id, source, CAST(rate AS BIGINT) AS sample_rate FROM (
-            SELECT doc_id, source,
-                   CASE WHEN regexp_extract(source, '^src([0-9])$$', 1) <> ''
-                        THEN CASE WHEN CAST(regexp_extract(source, '^src([0-9])$$', 1) AS INT) < 5
-                                  THEN 50 ELSE 25 END
-                        ELSE 10 END AS rate,
-                   ${dTokHash("source || '|' || CAST(doc_id AS VARCHAR)")} AS h
-            FROM documents)
-          WHERE h % 100 < rate ORDER BY doc_id""",
-    "q_sample_per_group" ->
-      s"""SELECT lang, rn, doc_id FROM (
-            SELECT lang, doc_id,
-                   CAST(row_number() OVER (PARTITION BY lang
-                     ORDER BY ${dTokHash("'heldout42|' || CAST(doc_id AS VARCHAR)")}, doc_id) AS BIGINT) AS rn
-            FROM documents)
-          WHERE rn <= ${graft.llm.Curation.HeldoutPerGroup} ORDER BY lang, rn""",
-    "q_text_repetition" -> {
-      def grams(k: Int) =
-        s"[array_to_string(t[i:i+${k - 1}], ' ') for i in generate_series(1, len(t) - ${k - 1})]"
-      def frac(k: Int) =
-        s"""CASE WHEN len(t) >= $k THEN CAST(1 AS DOUBLE)
-              - CAST(len(list_distinct(${grams(k)})) AS DOUBLE) / CAST(len(${grams(k)}) AS DOUBLE)
-            ELSE CAST(0 AS DOUBLE) END"""
-      s"""SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-                 ${frac(2)} AS dup_2gram_frac,
-                 ${frac(3)} AS dup_3gram_frac,
-                 CASE WHEN dup_2gram_frac > 0.6 OR dup_3gram_frac > 0.5
-                      THEN 'drop' ELSE 'keep' END AS label
-          FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-          ORDER BY doc_id"""
-    },
-    "q_text_pii_scrub" -> {
-      import graft.llm.Curation.{EmailRe, IpRe, PhoneRe}
-      s"""WITH a AS (SELECT doc_id,
-                 text || ' contact user' || CAST(doc_id AS VARCHAR)
-                      || '@mail.example.com or +1-555-'
-                      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                      || ' from 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1' AS aug
-          FROM documents)
-          SELECT doc_id,
-                 CAST(len(regexp_extract_all(aug, '$EmailRe')) AS BIGINT) AS n_emails,
-                 CAST(len(regexp_extract_all(aug, '$IpRe')) AS BIGINT) AS n_ips,
-                 CAST(len(regexp_extract_all(aug, '$PhoneRe')) AS BIGINT) AS n_phones,
-                 regexp_replace(regexp_replace(regexp_replace(aug,
-                   '$EmailRe', '<EMAIL>', 'g'), '$IpRe', '<IP>', 'g'),
-                   '$PhoneRe', '<PHONE>', 'g') AS scrubbed
-          FROM a ORDER BY doc_id"""
-    },
-    "q_curate_filter" ->
-      """WITH x AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         y AS (SELECT doc_id,
-                 CAST(len(t) AS BIGINT) AS n_tokens,
-                 CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct,
-                 CAST(len(list_filter(t, tok -> list_contains(
-                   ['the','a','of','and','to','in','is','on','for','with'], tok))) AS BIGINT) AS stop_hits,
-                 CASE WHEN len(t) >= 2
-                      THEN CAST(len(list_distinct(
-                        [array_to_string(t[i:i+1], ' ') for i in generate_series(1, len(t) - 1)])) AS BIGINT)
-                      ELSE 0 END AS n_g2_distinct,
-                 CASE WHEN len(t) >= 2 THEN CAST(len(t) - 1 AS BIGINT) ELSE 0 END AS n_g2
-          FROM x)
-          SELECT doc_id, n_tokens,
-                 (n_tokens >= 5 AND n_tokens <= 5000) AS gate_len,
-                 (n_distinct * 5 >= n_tokens) AS gate_ttr,
-                 (stop_hits * 20 >= n_tokens) AS gate_stop,
-                 (n_g2 = 0 OR n_g2_distinct * 5 >= n_g2 * 2) AS gate_rep,
-                 (gate_len AND gate_ttr AND gate_stop AND gate_rep) AS kept
-          FROM y ORDER BY doc_id""",
-    "q_dedup_simhash" ->
-      s"""WITH $simhashCtes
-          SELECT doc_id, simhash FROM sh ORDER BY doc_id""",
-    "q_dedup_simhash_pairs" -> {
-      val chunks = (0 until 4).map(j =>
-        s"SELECT doc_id, simhash, $j AS ck, (simhash >> ${15 * j}) & 32767 AS cv FROM se")
-        .mkString(" UNION ALL ")
-      s"""WITH $simhashCtes,
-          se AS (SELECT doc_id, simhash FROM (
-                   SELECT doc_id, simhash, row_number() OVER (
-                       PARTITION BY simhash ORDER BY doc_id) AS _rn
-                   FROM sh)
-                 WHERE _rn <= ${graft.llm.Dedup.MinhashMaxClass}),
-          chunks AS ($chunks),
-          cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-                          CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS dist
-                   FROM chunks x JOIN chunks y
-                     ON x.ck = y.ck AND x.cv = y.cv AND x.doc_id < y.doc_id)
-          SELECT doc_a, doc_b, dist FROM cand WHERE dist <= 3 ORDER BY doc_a, doc_b"""
-    },
-    "q_dedup_embed" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding, ${dNorm("embedding")} AS nrm FROM embeddings)
-          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                 ${dDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-          FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-          WHERE cos >= 0.35 ORDER BY vec_a, vec_b""",
-    "q_dedup_embed_lsh" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm,
-                            ${dBucket("embedding", Similarity.MultiProbePlanes)} AS bucket
-                     FROM embeddings)
-          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                 ${dDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-          FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-          WHERE cos >= 0.35 ORDER BY vec_a, vec_b""",
-    "q_pack_sequences" ->
-      s"""SELECT doc_id, source, n_tokens,
-                 tok_before // ${graft.llm.Curation.PackBudget} AS bin_id,
-                 tok_before % ${graft.llm.Curation.PackBudget} AS bin_offset
-          FROM (SELECT doc_id, source,
-                       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                       COALESCE(CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT))
-                         OVER (PARTITION BY source ORDER BY doc_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS tok_before
-                FROM documents)
-          ORDER BY doc_id""",
-    "q_sim_topk" -> simTopkSql,
-    "q_sim_lsh" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm,
-                            ${dBucket("embedding")} AS bucket FROM embeddings),
-          q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm, bucket AS q_bucket
-                FROM e WHERE vec_id < 8),
-          c AS (SELECT q_id, e.vec_id AS n_id,
-                       ${dDot("q_emb", "embedding")} / (q_nrm * nrm) AS cos
-                FROM e JOIN q ON e.bucket = q.q_bucket AND e.vec_id <> q.q_id),
-          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM c)
-          SELECT q_id, n_id, cos, "rank" FROM r WHERE "rank" <= 10 ORDER BY q_id, "rank"""",
-    "q_sim_lsh_multiprobe" -> {
-      val planes = Similarity.MultiProbePlanes
-      s"""WITH e AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm,
-                            ${dBucket("embedding", planes)} AS bucket FROM embeddings),
-          q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm, bucket AS q_bucket
-                FROM e WHERE vec_id < 8),
-          probes AS (SELECT q_id AS p_id, q_emb, q_nrm,
-                            CASE WHEN i = 0 THEN q_bucket
-                                 ELSE xor(q_bucket, (1::BIGINT << (i-1))) END AS pb
-                     FROM q, generate_series(0, $planes) AS g(i)),
-          c AS (SELECT p.p_id AS q_id, e.vec_id AS n_id,
-                       ${dDot("p.q_emb", "e.embedding")} / (p.q_nrm * e.nrm) AS cos
-                FROM e JOIN probes p ON e.bucket = p.pb AND e.vec_id <> p.p_id),
-          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM c)
-          SELECT q_id, n_id, cos, "rank" FROM r WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-    },
-    "q_sim_ivf" ->
-      s"""WITH e AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm FROM embeddings),
-          cent AS (SELECT vec_id AS cent_id, embedding AS c_emb, nrm AS c_nrm
-                   FROM e WHERE vec_id < ${Similarity.Cells}),
-          rc AS (SELECT e.vec_id, e.embedding, e.nrm, cent.cent_id,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${dDot("e.embedding", "cent.c_emb")} / (e.nrm * cent.c_nrm) DESC,
-                                   cent.cent_id) AS crn
-                 FROM e, cent),
-          asg AS (SELECT vec_id, embedding, nrm, cent_id FROM rc WHERE crn = 1),
-          probes AS (SELECT vec_id AS q_id, cent_id FROM rc
-                     WHERE crn <= ${Similarity.NProbe} AND vec_id < 8),
-          q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE vec_id < 8),
-          c AS (SELECT p.q_id, a.vec_id AS n_id,
-                       ${dDot("q.q_emb", "a.embedding")} / (q.q_nrm * a.nrm) AS cos
-                FROM probes p
-                JOIN asg a ON p.cent_id = a.cent_id AND a.vec_id <> p.q_id
-                JOIN q ON q.q_id = p.q_id),
-          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM c)
-          SELECT q_id, n_id, cos, "rank" FROM r WHERE "rank" <= 10 ORDER BY q_id, "rank"""",
-    "q_sim_ivf_trained" -> ivfTrainedSql,
-    "q_sim_ivf_upsert" -> ivfUpsertSql,
-    "q_sim_binary_upsert" -> binaryUpsertSql,
-    "q_sim_binary_drift" -> binaryDriftSql,
-    "q_index_drift" ->
-      s"""WITH $ivfUpCtes,
-          ub AS (SELECT vec_id, c_cos FROM urc WHERE crn = 1),
-          useg AS (SELECT CASE WHEN ub.vec_id >= ut.t THEN 'late' ELSE 'base' END AS segment,
-                          c_cos
-                   FROM ub, ut)
-          SELECT segment, count(*) AS n,
-                 CAST(CAST(SUM(CAST(floor(c_cos * ${Similarity.MeanScale}) AS BIGINT)) AS VARCHAR) AS DOUBLE)
-                   / (CAST(count(*) AS DOUBLE) * ${Similarity.MeanScale}) AS mean_cos,
-                 min(c_cos) AS min_cos
-          FROM useg GROUP BY 1 ORDER BY 1""",
-    "q_sim_pq_codes" ->
-      s"""WITH $pqCtes
-          SELECT vec_id, array_to_string(list(code ORDER BY m), ',') AS codes
-          FROM pcd GROUP BY vec_id ORDER BY vec_id""",
-    "q_sim_pq_topk" ->
-      s"""WITH $pqCtes,
-          pqq AS (SELECT vec_id AS q_id, m, sv AS qsv FROM psv
-                  WHERE vec_id < ${graft.llm.Pq.NQueries}),
-          plut AS (SELECT q.q_id, c.m, c.code, ${dDist2("q.qsv", "c.csv")} AS pd
-                   FROM pqq q JOIN pcf c ON c.m = q.m),
-          pe AS (SELECT l.q_id, cd.vec_id AS n_id,
-                        list_sum(list(l.pd ORDER BY l.m)) AS est_d2
-                 FROM pcd cd JOIN plut l ON l.m = cd.m AND l.code = cd.code
-                 WHERE l.q_id <> cd.vec_id
-                 GROUP BY 1, 2),
-          prk AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                    ORDER BY est_d2, n_id) AS BIGINT) AS "rank" FROM pe)
-          SELECT q_id, n_id, est_d2, "rank" FROM prk
-          WHERE "rank" <= 10 ORDER BY q_id, "rank"""",
-    "q_sim_pq_rerank" ->
-      s"""WITH $pqCtes,
-          pqq AS (SELECT vec_id AS q_id, m, sv AS qsv FROM psv
-                  WHERE vec_id < ${graft.llm.Pq.NQueries}),
-          plut AS (SELECT q.q_id, c.m, c.code, ${dDist2("q.qsv", "c.csv")} AS pd
-                   FROM pqq q JOIN pcf c ON c.m = q.m),
-          pe AS (SELECT l.q_id, cd.vec_id AS n_id,
-                        list_sum(list(l.pd ORDER BY l.m)) AS est_d2
-                 FROM pcd cd JOIN plut l ON l.m = cd.m AND l.code = cd.code
-                 WHERE l.q_id <> cd.vec_id
-                 GROUP BY 1, 2),
-          psl AS (SELECT q_id, n_id FROM (
-                    SELECT *, row_number() OVER (PARTITION BY q_id
-                      ORDER BY est_d2, n_id) AS rn FROM pe)
-                  WHERE rn <= ${graft.llm.Pq.Shortlist}),
-          pre AS (SELECT s.q_id, s.n_id,
-                         ${dDist2("qq.embedding", "nn.embedding")} AS d2
-                  FROM psl s
-                  JOIN embeddings qq ON qq.vec_id = s.q_id
-                  JOIN embeddings nn ON nn.vec_id = s.n_id),
-          prr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                    ORDER BY d2, n_id) AS BIGINT) AS "rank" FROM pre)
-          SELECT q_id, n_id, d2, "rank" FROM prr
-          WHERE "rank" <= 10 ORDER BY q_id, "rank"""",
-    "q_sim_ivfpq" ->
-      s"""WITH $ivfPqCtes,
-          vrk AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                    ORDER BY est_d2, n_id) AS BIGINT) AS "rank" FROM vest)
-          SELECT q_id, n_id, est_d2, "rank" FROM vrk
-          WHERE "rank" <= 10 ORDER BY q_id, "rank"""",
-    "q_sim_ivfpq_rerank" -> ivfPqRerankSql,
-    "q_sim_ivfpq_upsert" -> ivfPqUpsertSql,
-    "q_sim_ivfpq_upsert_rerank" -> ivfPqUpsertRerankSql,
-    "q_sim_ivfpq_drift" -> ivfPqDriftSql,
-    "q_sim_ivfpq_sweep" -> {
-      val npVals = Similarity.SweepProbes
-        .map(p => s"(CAST($p AS BIGINT))").mkString(", ")
-      s"""WITH $ivfPqCtes,
-          np(nprobe) AS (VALUES $npVals),
-          vfan AS (SELECT np.nprobe, v.q_id, v.n_id, v.est_d2
-                   FROM vest v CROSS JOIN np WHERE v.crn <= np.nprobe),
-          vsl AS (SELECT nprobe, q_id, n_id FROM (
-                    SELECT *, row_number() OVER (PARTITION BY nprobe, q_id
-                      ORDER BY est_d2, n_id) AS rn FROM vfan)
-                  WHERE rn <= ${graft.llm.IvfPq.Shortlist}),
-          vre AS (SELECT s.nprobe, s.q_id, s.n_id,
-                         ${dDist2("qq.embedding", "nn.embedding")} AS d2
-                  FROM vsl s
-                  JOIN embeddings qq ON qq.vec_id = s.q_id
-                  JOIN embeddings nn ON nn.vec_id = s.n_id),
-          vtop AS (SELECT nprobe, q_id, n_id FROM (
-                     SELECT *, row_number() OVER (PARTITION BY nprobe, q_id
-                       ORDER BY d2, n_id) AS rn FROM vre)
-                   WHERE rn <= 10),
-          vex AS (SELECT q_id, n_id FROM ($bruteL2Sql)),
-          vh AS (SELECT np.nprobe, e.q_id, e.n_id, a.n_id AS hit
-                 FROM vex e
-                 CROSS JOIN np
-                 LEFT JOIN vtop a ON a.nprobe = np.nprobe
-                                 AND a.q_id = e.q_id AND a.n_id = e.n_id)
-          SELECT nprobe, count(*) AS n_exact,
-                 CAST(SUM(CASE WHEN hit IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-                 CAST(SUM(CASE WHEN hit IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                   / CAST(count(*) AS DOUBLE) AS recall
-          FROM vh GROUP BY 1 ORDER BY nprobe"""
-    },
-    "q_sim_ivfpq_recall" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($bruteL2Sql)),
-          approx AS (SELECT q_id, n_id FROM ($ivfPqRerankSql)),
-          h AS (SELECT e.q_id, count(*) AS n_exact,
-                       CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                FROM exact e LEFT JOIN approx a
-                  ON e.q_id = a.q_id AND e.n_id = a.n_id
-                GROUP BY 1)
-          SELECT q_id, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM h ORDER BY q_id""",
-    "q_sim_binary_codes" ->
-      s"""WITH $binaryCtes
-          SELECT vec_id, h0, h1 FROM bsig ORDER BY vec_id""",
-    "q_sim_binary_topk" -> binaryTopkSql,
-    "q_array_funcs" ->
-      """SELECT vec_id, CAST(len(embedding) AS BIGINT) AS n,
-                CAST(embedding[1] AS DOUBLE) AS e0,
-                list_sum([abs(CAST(embedding[i] AS DOUBLE)) for i in generate_series(1, len(embedding))]) AS l1,
-                list_sum([CAST(embedding[i] AS DOUBLE) for i in generate_series(1, 8)]) AS s8
-         FROM embeddings ORDER BY vec_id""",
-    "q_text_tokens" ->
-      """SELECT token, count(*) AS n
-         FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-         GROUP BY token ORDER BY n DESC, token LIMIT 100""",
-    "q_text_stats" ->
-      """SELECT lang, source, count(*) AS n_docs,
-                CAST(sum(n_chars) AS BIGINT) AS total_chars,
-                CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS total_tokens,
-                CAST(sum(n_chars) AS DOUBLE) / count(*) AS avg_chars
-         FROM documents GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_text_lang" -> {
-      val scoreCols = TextAnalysis.Lexicons.map { case (l, _) => s"${dHits(l)} AS s_$l" }.mkString(", ")
-      val m = TextAnalysis.Lexicons.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-      val cases = TextAnalysis.Lexicons.map { case (l, _) => s"WHEN s_$l = $m THEN '$l'" }.mkString(" ")
-      s"""WITH x AS (SELECT doc_id, lang AS actual_lang, $scoreCols FROM documents)
-          SELECT doc_id, actual_lang, s_de, s_en, s_es, s_fr, s_zh,
-                 CASE WHEN $m = 0 THEN 'unknown' $cases ELSE 'unknown' END AS pred
-          FROM x ORDER BY doc_id"""
-    },
-    "q_text_quality" -> {
-      s"""WITH x AS (SELECT doc_id,
-                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                 CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
-                 ${dHits("en")} AS stop_hits,
-                 CAST(length(text) AS BIGINT) AS clen
-          FROM documents),
-          y AS (SELECT doc_id, n_tokens,
-                 CAST(n_distinct AS DOUBLE) / n_tokens AS ttr,
-                 CAST(stop_hits AS DOUBLE) / n_tokens AS stop_ratio,
-                 (CAST(clen AS DOUBLE) - (n_tokens - 1)) / n_tokens AS avg_tok_len
-          FROM x),
-          z AS (SELECT *, ttr * 0.4 + stop_ratio * 0.4 + least(avg_tok_len / 10.0, 1.0) * 0.2 AS score FROM y)
-          SELECT doc_id, n_tokens, ttr, stop_ratio, avg_tok_len, score,
-                 CASE WHEN score >= 0.35 THEN 'keep' ELSE 'drop' END AS label
-          FROM z ORDER BY doc_id"""
-    },
-    "q_text_fingerprint" ->
-      """SELECT doc_id,
-                CAST(list_reduce(list_prepend(0::BIGINT,
-                       [ascii(substr(text, i, 1)) for i in generate_series(1, length(text))]),
-                     (acc, x) -> (acc * 31 + x) % 1000000007) AS BIGINT) AS fp
-         FROM documents ORDER BY doc_id""",
-    "q_text_tokens_bpe" ->
-      s"""SELECT doc_id,
-                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
-                 CAST(len(regexp_extract_all(text, '${TextAnalysis.BpePattern.replace("'", "''")}')) AS BIGINT) AS n_bpe_tokens
-          FROM documents ORDER BY doc_id""",
-    "q_text_bpe_apply" -> {
-      // DuckDB twin of TextAnalysis.bpeApply: same |sym| encoding, same
-      // rank-ordered replace chain (RE2 backref \1, global flag).
-      val encD = """regexp_replace(replace(p, ' ', '_'), '(.)', '|\1|', 'g')"""
-      val foldedD = TextAnalysis.BpeMerges.foldLeft(encD) { case (e, (l, r)) =>
-        s"replace($e, '|$l||$r|', '|$l$r|')"
-      }
-      val tokD = s"trim(replace($foldedD, '||', ' '), '|')"
-      val cntD = s"(length($foldedD) - length(replace($foldedD, '|', ''))) // 2"
-      val pat = TextAnalysis.BpePattern.replace("'", "''")
-      s"""WITH x AS (SELECT doc_id, regexp_extract_all(text, '$pat') AS pieces FROM documents)
-          SELECT doc_id,
-                 CAST(COALESCE(list_sum([$cntD for p in pieces]), 0) AS BIGINT) AS n_bpe_tokens,
-                 array_to_string([$tokD for p in pieces], ' ') AS bpe_text
-          FROM x ORDER BY doc_id"""
-    },
-    "q_multimodal_phash" ->
-      s"""WITH $phashCtes
-          SELECT media_id, kind, phash FROM ph ORDER BY media_id""",
-    "q_multimodal_dedup" -> {
-      import graft.multimodal.Multimodal.{PhashBands, PhashBits, PhashHamMax}
-      val bandBits = PhashBits / PhashBands
-      val mask = (1L << bandBits) - 1
-      s"""WITH $phashCtes,
-          phe AS (SELECT media_id, phash FROM (
-                    SELECT media_id, phash, row_number() OVER (
-                        PARTITION BY phash ORDER BY media_id) AS _rn
-                    FROM ph)
-                  WHERE _rn <= ${graft.llm.Dedup.MinhashMaxClass}),
-          bands AS (SELECT media_id, phash, g.b AS band,
-                           (phash >> (g.b * $bandBits)) & $mask AS bh
-                    FROM phe, generate_series(0, ${PhashBands - 1}) AS g(b)),
-          pr AS (SELECT DISTINCT x.media_id AS media_a, y.media_id AS media_b,
-                        CAST(bit_count(xor(x.phash, y.phash)) AS BIGINT) AS dist
-                 FROM bands x JOIN bands y
-                   ON x.band = y.band AND x.bh = y.bh
-                      AND x.media_id < y.media_id)
-          SELECT media_a, media_b, dist FROM pr
-          WHERE dist <= $PhashHamMax ORDER BY media_a, media_b"""
-    },
-    "q_multimodal_decode" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-                           ['image','audio','video'][(doc_id % 3) + 1] AS kind, text
-                    FROM documents),
-          h AS (SELECT media_id, kind,
-                       list_reduce(list_prepend(17::BIGINT,
-                         [ascii(substr(text, i, 1)) for i in generate_series(1, length(text))]),
-                         (acc, x) -> (acc * 31 + x) % 1000000007) AS hv,
-                       CAST(length(text) AS BIGINT) AS blen
-                FROM m),
-          d AS (SELECT media_id, kind,
-                       (hv % 640) + 16 AS width,
-                       ((hv // 640) % 480) + 16 AS height,
-                       CASE WHEN kind = 'video' THEN (hv % 120) + 2 ELSE 1 END AS n_frames,
-                       blen
-                FROM h)
-          SELECT kind, count(*) AS n,
-                 CAST(sum(width) AS BIGINT) AS sum_w,
-                 CAST(sum(height) AS BIGINT) AS sum_h,
-                 CAST(sum(n_frames) AS BIGINT) AS sum_frames,
-                 CAST(sum(blen) AS BIGINT) AS sum_bytes
-          FROM d GROUP BY kind ORDER BY kind""",
-    // resize scale mirrors Multimodal.resize exactly: least(1.0, 256/m) over
-    // IEEE doubles then floor — both engines produce the identical double,
-    // so the floor is identical (the repo's float discipline)
-    "q_multimodal_resize" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-                           ['image','audio','video'][(doc_id % 3) + 1] AS kind, text
-                    FROM documents),
-          h AS (SELECT media_id, kind,
-                       list_reduce(list_prepend(17::BIGINT,
-                         [ascii(substr(text, i, 1)) for i in generate_series(1, length(text))]),
-                         (acc, x) -> (acc * 31 + x) % 1000000007) AS hv
-                FROM m),
-          d AS (SELECT media_id, kind,
-                       CAST((hv % 640) + 16 AS INT) AS width,
-                       CAST(((hv // 640) % 480) + 16 AS INT) AS height
-                FROM h)
-          SELECT media_id, kind, width, height,
-                 CAST(floor(width * least(1.0, 256.0 / greatest(width, height))) AS INT) AS out_width,
-                 CAST(floor(height * least(1.0, 256.0 / greatest(width, height))) AS INT) AS out_height
-          FROM d ORDER BY media_id""",
-    "q_multimodal_frames" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-                           ['image','audio','video'][(doc_id % 3) + 1] AS kind, text
-                    FROM documents),
-          h AS (SELECT media_id, kind,
-                       list_reduce(list_prepend(17::BIGINT,
-                         [ascii(substr(text, i, 1)) for i in generate_series(1, length(text))]),
-                         (acc, x) -> (acc * 31 + x) % 1000000007) AS hv
-                FROM m),
-          d AS (SELECT media_id, CAST((hv % 120) + 2 AS INT) AS n_frames
-                FROM h WHERE kind = 'video')
-          SELECT media_id, n_frames,
-                 CAST(unnest(generate_series(0, n_frames - 1, 8)) AS INT) AS frame_idx
-          FROM d ORDER BY media_id, frame_idx""",
-    "q_sessionize" ->
-      s"""WITH x AS (SELECT user_id, event_id, value, epoch_ns(ts) AS ts_ns,
-                 lag(epoch_ns(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ns
-          FROM events),
-          y AS (SELECT *, CASE WHEN prev_ns IS NULL OR ts_ns - prev_ns > 1800000000000 THEN 1 ELSE 0 END AS is_new FROM x),
-          z AS (SELECT *, CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts_ns, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM y)
-          SELECT user_id, session_id, count(*) AS n_events,
-                 CAST(min(ts_ns) // 1000000 AS BIGINT) AS start_ms,
-                 CAST(max(ts_ns) // 1000000 AS BIGINT) AS end_ms,
-                 ${dsum("value")} AS total_value
-          FROM z GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_window_tumbling" ->
-      s"""SELECT CAST((epoch_ms(ts) // 3600000) * 3600000 AS BIGINT) AS hour_ms,
-                 event_type, count(*) AS n, ${dsum("value")} AS total
-          FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    // sliding 1h/30min: size/slide = 2 windows per event, with starts
-    // m·slide and (m−1)·slide for m = t // slide — the closed form of
-    // Spark's window() assignment when size is a multiple of slide
-    "q_window_sliding" ->
-      s"""SELECT CAST(((epoch_ms(ts) // 1800000) - k.k) * 1800000 AS BIGINT) AS start_ms,
-                 event_type, count(*) AS n, ${dsum("value")} AS total
-          FROM events, (SELECT unnest([0, 1]) AS k) k
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_agg_mode" ->
-      """WITH c AS (SELECT o_orderpriority, o_orderstatus, count(*) AS n
-                    FROM orders GROUP BY 1, 2),
-          r AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
-                          ORDER BY n DESC, o_orderstatus) AS rn FROM c)
-          SELECT o_orderpriority, o_orderstatus AS mode_status, n
-          FROM r WHERE rn = 1 ORDER BY o_orderpriority""",
-    // chi-square drift: exact-integer counts, (o-e)^2/e terms on the
-    // sources x bins domain, summed by an ORDERED fold (list ORDER BY bin
-    // twins Spark's array_sort + aggregate) - no log, no engine libm
-    "q_stats_drift" ->
-      """WITH d AS (SELECT source, n_chars // 64 AS bin FROM documents),
-          nb AS (SELECT bin, count(*) AS nb FROM d GROUP BY 1),
-          nt AS (SELECT count(*) AS n FROM d),
-          ns AS (SELECT source, count(*) AS ns FROM d GROUP BY 1),
-          o AS (SELECT source, bin, count(*) AS o FROM d GROUP BY 1, 2),
-          terms AS (SELECT g.source, g.ns, g.bin,
-                           ((CAST(COALESCE(o.o, 0) AS DOUBLE) - CAST(g.ns * g.nb AS DOUBLE) / CAST(nt.n AS DOUBLE))
-                            * (CAST(COALESCE(o.o, 0) AS DOUBLE) - CAST(g.ns * g.nb AS DOUBLE) / CAST(nt.n AS DOUBLE)))
-                           / (CAST(g.ns * g.nb AS DOUBLE) / CAST(nt.n AS DOUBLE)) AS term
-                    FROM (SELECT ns.source, ns.ns, nb.bin, nb.nb FROM ns CROSS JOIN nb) g
-                    CROSS JOIN nt
-                    LEFT JOIN o ON g.source = o.source AND g.bin = o.bin)
-          SELECT source, CAST(max(ns) AS BIGINT) AS n_docs, count(*) AS n_bins,
-                 list_sum(list(term ORDER BY bin)) AS chi2
-          FROM terms GROUP BY 1 ORDER BY 1""",
-    // trailing 7-day distinct users: the constant 7-way fan-out over the
-    // distinct (user, day) domain — the same linear shape as the operator
-    "q_active_users" ->
-      """WITH du AS (SELECT DISTINCT user_id,
-                            CAST(epoch_ms(ts) // 86400000 AS BIGINT) AS day
-                     FROM events),
-          mx AS (SELECT max(day) AS mxd FROM du),
-          t AS (SELECT du.user_id, du.day + k.k AS day
-                FROM du, (SELECT unnest([0, 1, 2, 3, 4, 5, 6]) AS k) k)
-          SELECT CAST(t.day * 86400000 AS BIGINT) AS day_ms,
-                 count(DISTINCT t.user_id) AS wau
-          FROM t, mx WHERE t.day <= mx.mxd GROUP BY 1 ORDER BY 1""",
-    // sketch accuracy gates: the Spark side computes the within-tolerance
-    // verdict against the exact value; the oracle is the same group grid
-    // with literal TRUE — a drifting sketch now fails the hash compare
-    "q_agg_approx_distinct_bound" ->
-      """SELECT l_returnflag, true AS within_tol
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_agg_sketch_merge_bound" ->
-      """SELECT o_orderpriority, true AS within_tol
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    // theta/KMV set operations: the hash is an explicit integer congruence,
-    // so unlike the HLL family the ESTIMATES themselves replay bit-exactly
-    // — this twin recomputes the full sketch pipeline, not a rows-only check
-    "q_agg_theta_ops" -> {
-      import Aggregates.{ThetaK, ThetaP, ThetaA, ThetaB2}
-      s"""WITH du AS (SELECT DISTINCT o_orderpriority AS p,
-                        (o_custkey * $ThetaA + $ThetaB2) % $ThetaP AS h
-                      FROM orders),
-          rk AS (SELECT p, h, row_number() OVER (PARTITION BY p ORDER BY h) AS rn
-                 FROM du),
-          sk AS (SELECT p, h FROM rk WHERE rn <= $ThetaK),
-          th AS (SELECT p, CASE WHEN max(rn) < $ThetaK THEN $ThetaP
-                                ELSE max(CASE WHEN rn = $ThetaK THEN h END)
-                           END AS theta
-                 FROM rk GROUP BY p),
-          pr AS (SELECT ta.p AS pa, tb.p AS pb, least(ta.theta, tb.theta) AS thab
-                 FROM th ta, th tb WHERE ta.p < tb.p),
-          blo AS (SELECT pr.pa, pr.pb, pr.thab, a.h
-                  FROM pr JOIN sk a ON a.p = pr.pa AND a.h < pr.thab),
-          mi AS (SELECT pa, pb, count(*) AS m FROM blo
-                 WHERE EXISTS (SELECT 1 FROM sk b WHERE b.p = blo.pb AND b.h = blo.h)
-                 GROUP BY pa, pb),
-          md AS (SELECT pa, pb, count(*) AS m FROM blo
-                 WHERE NOT EXISTS (SELECT 1 FROM sk b WHERE b.p = blo.pb AND b.h = blo.h)
-                 GROUP BY pa, pb)
-          SELECT pr.pa, pr.pb,
-                 CAST(coalesce(mi.m, 0) AS DOUBLE) * CAST($ThetaP AS DOUBLE)
-                   / CAST(pr.thab AS DOUBLE) AS est_inter,
-                 CAST(coalesce(md.m, 0) AS DOUBLE) * CAST($ThetaP AS DOUBLE)
-                   / CAST(pr.thab AS DOUBLE) AS est_diff
-          FROM pr
-          LEFT JOIN mi ON mi.pa = pr.pa AND mi.pb = pr.pb
-          LEFT JOIN md ON md.pa = pr.pa AND md.pb = pr.pb
-          ORDER BY pr.pa, pr.pb"""
-    },
-    "q_agg_theta_ops_bound" ->
-      """WITH ps AS (SELECT DISTINCT o_orderpriority AS p FROM orders)
-         SELECT a.p AS pa, b.p AS pb,
-                true AS inter_within_tol, true AS diff_within_tol
-         FROM ps a, ps b WHERE a.p < b.p ORDER BY pa, pb""",
-    "q_agg_percentile_approx_bound" ->
-      """SELECT o_orderstatus, true AS p50_within_rank_tol,
-                true AS p90_within_rank_tol
-         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "q_active_users_sketch_bound" ->
-      """WITH du AS (SELECT DISTINCT user_id,
-                            CAST(epoch_ms(ts) // 86400000 AS BIGINT) AS day
-                     FROM events),
-          mx AS (SELECT max(day) AS mxd FROM du),
-          t AS (SELECT du.user_id, du.day + k.k AS day
-                FROM du, (SELECT unnest([0, 1, 2, 3, 4, 5, 6]) AS k) k)
-          SELECT DISTINCT CAST(t.day * 86400000 AS BIGINT) AS day_ms,
-                 true AS within_tol
-          FROM t, mx WHERE t.day <= mx.mxd ORDER BY day_ms""",
-    // z-score over the gap-filled series: exact-BIGINT numerator and
-    // radicand, then one cast each + one sqrt + one division — the
-    // minimal float tail, same expression tree both engines
-    "q_anomaly_zscore" ->
-      """WITH h AS (SELECT event_type,
-                           CAST((epoch_ms(ts) // 3600000) * 3600000 AS BIGINT) AS hour_ms,
-                           count(*) AS n
-                    FROM events GROUP BY 1, 2),
-          b AS (SELECT event_type, min(hour_ms) AS mn, max(hour_ms) AS mx FROM h GROUP BY 1),
-          grid AS (SELECT event_type, unnest(generate_series(mn, mx, 3600000)) AS hour_ms FROM b),
-          f AS (SELECT grid.event_type, grid.hour_ms, CAST(COALESCE(h.n, 0) AS BIGINT) AS n
-                FROM grid LEFT JOIN h ON grid.event_type = h.event_type AND grid.hour_ms = h.hour_ms),
-          st AS (SELECT event_type, CAST(SUM(n) AS BIGINT) AS sx,
-                        CAST(SUM(n * n) AS BIGINT) AS sxx, count(*) AS cnt
-                 FROM f GROUP BY 1),
-          zz AS (SELECT f.event_type, f.hour_ms, f.n,
-                        CAST(f.n * st.cnt - st.sx AS DOUBLE) /
-                          sqrt(CAST(st.cnt * st.sxx - st.sx * st.sx AS DOUBLE)) AS z
-                 FROM f JOIN st ON f.event_type = st.event_type)
-          SELECT event_type, hour_ms, n, z, abs(z) > 3.0 AS is_anomaly
-          FROM zz ORDER BY 1, 2""",
-    // gap-fill: the grid is generate_series over per-type bounds — the
-    // aggregate domain, so the oracle's shape mirrors the operator's
-    "q_timeseries_gapfill" ->
-      """WITH h AS (SELECT event_type,
-                           CAST((epoch_ms(ts) // 3600000) * 3600000 AS BIGINT) AS hour_ms,
-                           count(*) AS n
-                    FROM events GROUP BY 1, 2),
-          b AS (SELECT event_type, min(hour_ms) AS mn, max(hour_ms) AS mx FROM h GROUP BY 1),
-          grid AS (SELECT event_type, unnest(generate_series(mn, mx, 3600000)) AS hour_ms FROM b)
-          SELECT grid.event_type, grid.hour_ms, CAST(COALESCE(h.n, 0) AS BIGINT) AS n
-          FROM grid LEFT JOIN h ON grid.event_type = h.event_type AND grid.hour_ms = h.hour_ms
-          ORDER BY 1, 2""",
-    "q_event_funnel" ->
-      """WITH e AS (SELECT user_id, event_type,
-                 CAST(epoch_ns(ts) // 1000000 AS BIGINT) AS ms FROM events),
-         s1 AS (SELECT user_id, min(ms) AS t_signup FROM e
-                WHERE event_type = 'signup' GROUP BY 1),
-         s2 AS (SELECT e.user_id, min(ms) AS t_view FROM e JOIN s1 USING (user_id)
-                WHERE event_type = 'view' AND ms >= t_signup GROUP BY 1),
-         s3 AS (SELECT e.user_id, min(ms) AS t_click FROM e JOIN s2 USING (user_id)
-                WHERE event_type = 'click' AND ms >= t_view GROUP BY 1),
-         s4 AS (SELECT e.user_id, min(ms) AS t_purchase FROM e JOIN s3 USING (user_id)
-                WHERE event_type = 'purchase' AND ms >= t_click GROUP BY 1)
-         SELECT s1.user_id, t_signup, t_view, t_click, t_purchase,
-                CAST(CASE WHEN t_purchase IS NOT NULL THEN 4
-                          WHEN t_click IS NOT NULL THEN 3
-                          WHEN t_view IS NOT NULL THEN 2
-                          ELSE 1 END AS BIGINT) AS stage_reached
-         FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-              LEFT JOIN s4 USING (user_id)
-         ORDER BY user_id""",
-    "q_event_paths" ->
-      """WITH e AS (SELECT user_id, event_type,
-                 CAST(epoch_ns(ts) // 1000000 AS BIGINT) AS ms, event_id FROM events),
-         p AS (SELECT event_type AS e1,
-                 lead(event_type, 1) OVER w AS e2,
-                 lead(event_type, 2) OVER w AS e3
-               FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id))
-         SELECT e1 || '>' || e2 || '>' || e3 AS path, count(*) AS n
-         FROM p WHERE e3 IS NOT NULL
-         GROUP BY 1 ORDER BY n DESC, path""",
-    "q_retention" ->
-      """WITH days AS (SELECT DISTINCT user_id, epoch_ms(ts) // 86400000 AS day FROM events),
-         firsts AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY 1)
-         SELECT cohort_day, day - cohort_day AS day_offset,
-                CAST(count(*) AS BIGINT) AS n_users
-         FROM days JOIN firsts USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_scd2_history" ->
-      """WITH ordered AS (
-           SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-                  lag(o_orderstatus) OVER (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS prev
-           FROM orders),
-         changes AS (SELECT * FROM ordered WHERE prev IS NULL OR prev <> o_orderstatus),
-         hist AS (
-           SELECT o_custkey, o_orderstatus AS status, o_orderdate AS valid_from,
-                  lead(o_orderdate) OVER (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS valid_to
-           FROM changes)
-         SELECT o_custkey, status, valid_from, valid_to,
-                (valid_to IS NULL) AS is_current
-         FROM hist ORDER BY o_custkey, valid_from, status""",
-    "q_chunk_tokens" ->
-      s"""WITH $chunkCtes
-          SELECT doc_id, chunk_idx, tok_start, n_tokens, chunk_hash
-          FROM chks ORDER BY doc_id, chunk_idx""",
-    "q_dedup_chunk" ->
-      s"""WITH $chunkCtes
-          SELECT chunk_hash, min(doc_id) AS rep_doc_id, count(*) AS n_copies,
-                 count(DISTINCT doc_id) AS n_docs
-          FROM chks GROUP BY 1 ORDER BY chunk_hash""",
-    "q_quality_logit" ->
-      s"""WITH x AS (SELECT doc_id,
-                 string_split(coalesce(text, ''), ' ') AS toks,
-                 coalesce(text, '') AS text, coalesce(n_chars, 0) AS n_chars FROM documents),
-          f AS (SELECT doc_id,
-                 CAST(len(toks) AS BIGINT) AS f_tokens,
-                 n_chars AS f_chars,
-                 CAST(len(list_filter(toks, tk -> list_contains($allStopList, tk))) AS BIGINT) AS f_stop,
-                 CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS f_digits,
-                 CAST(len(list_distinct(toks)) AS BIGINT) AS f_distinct
-              FROM x)
-          SELECT doc_id, f_tokens, f_chars, f_stop, f_digits, f_distinct,
-                 -2000 + f_tokens * 3 + f_chars * 1 + f_stop * 40
-                       + f_distinct * 10 - f_digits * 25 AS logit_milli,
-                 CAST(logit_milli > 0 AS INT) AS keep
-          FROM f ORDER BY doc_id""",
-    "q_event_attribution" ->
-      """WITH x AS (
-           SELECT event_id, user_id, ts, value, event_type,
-                  last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
-                    OVER w AS attr_type,
-                  last_value(CASE WHEN event_type <> 'purchase' THEN ts END IGNORE NULLS)
-                    OVER w AS attr_ts
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-         SELECT event_id, user_id, epoch_ms(ts) AS ts_ms, attr_type,
-                epoch_ms(attr_ts) AS attr_ms, value
-         FROM x WHERE event_type = 'purchase' ORDER BY event_id""",
-    "q_embed_quantize" ->
-      """WITH qz AS (SELECT vec_id, embedding,
-               list_max([abs(CAST(embedding[i] AS DOUBLE)) for i in generate_series(1, len(embedding))]) AS maxabs
-             FROM embeddings),
-          c AS (SELECT vec_id, maxabs, embedding,
-                  CASE WHEN maxabs > 0 THEN
-                    [CAST(floor(CAST(embedding[i] AS DOUBLE) * 127.0 / maxabs + 0.5) AS INT)
-                     for i in generate_series(1, len(embedding))]
-                  ELSE [0 for i in generate_series(1, len(embedding))] END AS codes
-                FROM qz)
-          SELECT vec_id, maxabs,
-                 array_to_string(codes, ',') AS codes_str,
-                 CASE WHEN maxabs > 0 THEN
-                   list_sum([(CAST(embedding[i] AS DOUBLE) - CAST(codes[i] AS DOUBLE) * maxabs / 127.0)
-                             * (CAST(embedding[i] AS DOUBLE) - CAST(codes[i] AS DOUBLE) * maxabs / 127.0)
-                             for i in generate_series(1, len(embedding))])
-                 ELSE CAST(0 AS DOUBLE) END AS l2_err
-          FROM c ORDER BY vec_id""",
-    "q_sim_ivf_quantized" ->
-      s"""WITH $dequantCtes,
-          cent AS (SELECT vec_id AS cent_id, embedding AS c_emb, nrm AS c_nrm
-                   FROM e WHERE vec_id < ${Similarity.Cells}),
-          rc AS (SELECT e.vec_id, e.embedding, e.nrm, cent.cent_id,
-                        row_number() OVER (PARTITION BY e.vec_id
-                          ORDER BY ${dDot("e.embedding", "cent.c_emb")} / (e.nrm * cent.c_nrm) DESC,
-                                   cent.cent_id) AS crn
-                 FROM e, cent),
-          asg AS (SELECT vec_id, embedding, nrm, cent_id FROM rc WHERE crn = 1),
-          probes AS (SELECT vec_id AS q_id, cent_id FROM rc
-                     WHERE crn <= ${Similarity.NProbe} AND vec_id < 8),
-          q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE vec_id < 8),
-          c AS (SELECT p.q_id, a.vec_id AS n_id,
-                       ${dDot("q.q_emb", "a.embedding")} / (q.q_nrm * a.nrm) AS cos
-                FROM probes p
-                JOIN asg a ON p.cent_id = a.cent_id AND a.vec_id <> p.q_id
-                JOIN q ON q.q_id = p.q_id),
-          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS BIGINT) AS "rank" FROM c)
-          SELECT q_id, n_id, cos, "rank" FROM r WHERE "rank" <= 10 ORDER BY q_id, "rank"""",
-    "q_join_ship_priority" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-           AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-         GROUP BY 1, 2, 3
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q_join_region_revenue" ->
-      """SELECT n_name,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-                count(*) AS n
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-           AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY 1 ORDER BY revenue DESC, n_name""",
-    // tf-idf in the log-free rational form: score = tf·N/df is ONE
-    // correctly-rounded IEEE division of exact BIGINT operands — log()
-    // would hand the value to each platform's libm
-    "q_text_tfidf" ->
-      """WITH dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-         tf AS (SELECT doc_id, token, count(*) AS tf FROM dt GROUP BY 1, 2),
-         df AS (SELECT token, count(*) AS df
-                FROM (SELECT DISTINCT doc_id, token FROM dt) GROUP BY 1),
-         n AS (SELECT count(*) AS n_docs FROM documents),
-         sc AS (SELECT tf.doc_id, tf.token, tf.tf, df.df,
-                       CAST(tf.tf * n.n_docs AS DOUBLE) / CAST(df.df AS DOUBLE) AS score,
-                       CAST(row_number() OVER (PARTITION BY tf.doc_id
-                         ORDER BY CAST(tf.tf * n.n_docs AS DOUBLE) / CAST(df.df AS DOUBLE) DESC,
-                                  tf.token) AS BIGINT) AS rnk
-                FROM tf JOIN df USING (token), n)
-         SELECT doc_id, rnk, token, tf, df, score
-         FROM sc WHERE rnk <= 3 ORDER BY doc_id, rnk""",
-    // BM25 with the log-free rational idf (same discipline as tfidf); the
-    // score expression is SPLICED from TextAnalysis.bm25ScoreSql so the
-    // IEEE operation order matches the Spark plan by construction
-    "q_text_bm25" -> {
-      import graft.llm.TextAnalysis.{Bm25QTerms, Bm25TopK}
-      s"""WITH dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-          tfx AS (SELECT doc_id, token, count(*) AS tf FROM dt GROUP BY 1, 2),
-          dfx AS (SELECT token, count(*) AS df FROM tfx GROUP BY 1),
-          qt AS (SELECT token, df FROM dfx ORDER BY df, token LIMIT $Bm25QTerms),
-          dlx AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-          st AS (SELECT count(*) AS n_docs, SUM(len(string_split(text, ' '))) AS tot
-                 FROM documents),
-          sc AS (SELECT tfx.doc_id, ${graft.llm.TextAnalysis.bm25ScoreSql} AS score_t
-                 FROM tfx JOIN qt USING (token)
-                 JOIN dlx ON dlx.doc_id = tfx.doc_id, st)
-          SELECT doc_id, count(*) AS n_terms,
-                 CAST(CAST(SUM(CAST(score_t AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS score
-          FROM sc GROUP BY doc_id
-          ORDER BY score DESC, doc_id LIMIT $Bm25TopK"""
-    },
-    // Twin of LexMaintenance.upsertServe: counting is exact and additive,
-    // so the base∪delta serve equals this full-corpus replay bit-for-bit
-    // (the same q_text_bm25 derivation plus the is_new flag).
-    "q_text_bm25_upsert" -> {
-      import graft.llm.TextAnalysis.{Bm25QTerms, Bm25TopK}
-      s"""WITH dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-          dcut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
-                   FROM documents),
-          tfx AS (SELECT doc_id, token, count(*) AS tf FROM dt GROUP BY 1, 2),
-          dfx AS (SELECT token, count(*) AS df FROM tfx GROUP BY 1),
-          qt AS (SELECT token, df FROM dfx ORDER BY df, token LIMIT $Bm25QTerms),
-          dlx AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-          st AS (SELECT count(*) AS n_docs, SUM(len(string_split(text, ' '))) AS tot
-                 FROM documents),
-          sc AS (SELECT tfx.doc_id, ${graft.llm.TextAnalysis.bm25ScoreSql} AS score_t
-                 FROM tfx JOIN qt USING (token)
-                 JOIN dlx ON dlx.doc_id = tfx.doc_id, st),
-          agg AS (SELECT doc_id, count(*) AS n_terms,
-                 CAST(CAST(SUM(CAST(score_t AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS score
-          FROM sc GROUP BY doc_id
-          ORDER BY score DESC, doc_id LIMIT $Bm25TopK)
-          SELECT doc_id, n_terms, score,
-                 CAST(CASE WHEN doc_id >= dcut.t THEN 1 ELSE 0 END AS BIGINT) AS is_new
-          FROM agg, dcut ORDER BY score DESC, doc_id"""
-    },
-    // Twin of LexMaintenance.drift: the frozen BASE vocabulary's fit per
-    // segment — OOV token mass and new-type count vs the docs < cut vocab.
-    "q_text_bm25_drift" ->
-      s"""WITH dcut AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
-                        FROM documents),
-          tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-          sg AS (SELECT CASE WHEN tk.doc_id >= dcut.t THEN 'late' ELSE 'base' END AS segment,
-                        tk.doc_id, tk.token
-                 FROM tk, dcut),
-          bv AS (SELECT DISTINCT tk.token FROM tk, dcut WHERE tk.doc_id < dcut.t),
-          tot AS (SELECT segment, count(DISTINCT doc_id) AS n_docs, count(*) AS n_tokens
-                  FROM sg GROUP BY 1),
-          ov AS (SELECT segment, count(*) AS oov_tokens,
-                        count(DISTINCT token) AS new_types
-                 FROM sg WHERE NOT EXISTS (SELECT 1 FROM bv WHERE bv.token = sg.token)
-                 GROUP BY 1)
-          SELECT t.segment, t.n_docs, t.n_tokens,
-                 CAST(COALESCE(o.oov_tokens, 0) AS BIGINT) AS oov_tokens,
-                 CAST(COALESCE(o.new_types, 0) AS BIGINT) AS new_types,
-                 CAST(COALESCE(o.oov_tokens, 0) AS DOUBLE) / CAST(t.n_tokens AS DOUBLE) AS oov_rate
-          FROM tot t LEFT JOIN ov o USING (segment) ORDER BY segment""",
-    "q_chunk_pack" ->
-      s"""WITH $chunkCtes,
-          cs AS (SELECT chks.*, $packShardSql AS pack_shard FROM chks),
-          p AS (SELECT doc_id, chunk_idx, source, pack_shard, n_tokens,
-                  COALESCE(CAST(SUM(n_tokens) OVER (PARTITION BY source, pack_shard
-                    ORDER BY doc_id, chunk_idx
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS tok_before
-                FROM cs)
-          SELECT doc_id, chunk_idx, source, n_tokens,
-                 tok_before // ${graft.llm.Curation.PackBudget} AS bin_id,
-                 tok_before % ${graft.llm.Curation.PackBudget} AS bin_offset,
-                 pack_shard
-          FROM p ORDER BY doc_id, chunk_idx""",
-    // semantic dedup clusters: transitive closure over the LSH-blocked
-    // cosine edges (same edge definition as q_dedup_embed_lsh) via a
-    // recursive CTE; component = min reachable vec_id
-    "q_dedup_embed_components" ->
-      s"""WITH RECURSIVE ee AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm,
-                  ${dBucket("embedding", Similarity.MultiProbePlanes)} AS bucket
-               FROM embeddings),
-          edges AS (SELECT a.vec_id AS va, b.vec_id AS vb,
-                  ${dDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-                FROM ee a JOIN ee b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-                WHERE cos >= 0.35),
-          und AS (SELECT va AS s, vb AS d FROM edges
-                  UNION ALL SELECT vb, va FROM edges),
-          reach(s, d) AS (
-            SELECT vec_id, vec_id FROM embeddings
-            UNION
-            SELECT u.s, r.d FROM und u JOIN reach r ON u.d = r.s),
-          comp AS (SELECT s AS vec_id, min(d) AS component_id FROM reach GROUP BY s)
-          SELECT c.vec_id, CAST(c.component_id AS BIGINT) AS component_id,
-                 CAST(z.n AS BIGINT) AS n_members
-          FROM comp c JOIN (SELECT component_id, count(*) AS n FROM comp GROUP BY 1) z
-            ON c.component_id = z.component_id
-          ORDER BY c.vec_id""",
-    // α=1/2 temperature mixing: √ and ÷ are correctly-rounded IEEE ops, so
-    // the per-source rate is bit-identical across engines (general-α pow is
-    // each platform's libm)
-    "q_sample_temperature" ->
-      s"""WITH c AS (SELECT source, count(*) AS n_source FROM documents GROUP BY 1),
-          m AS (SELECT min(n_source) AS n_min FROM c),
-          r AS (SELECT source, n_source,
-                  CAST(floor(1000000.0 * sqrt(CAST(n_min AS DOUBLE))
-                             / sqrt(CAST(n_source AS DOUBLE))) AS BIGINT) AS rate_ppm
-                FROM c, m)
-          SELECT d.doc_id, d.source, r.n_source, r.rate_ppm
-          FROM documents d JOIN r USING (source)
-          WHERE ${dTokHash("'mix-v1|' || CAST(doc_id AS VARCHAR)")} % 1000000 < rate_ppm
-          ORDER BY d.doc_id""",
-    "q_join_volume" ->
-      """SELECT supp_nation, cust_nation, l_year,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS volume
-         FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                      CAST(year(l_shipdate) AS BIGINT) AS l_year,
-                      l_extendedprice, l_discount
-               FROM lineitem
-               JOIN supplier ON l_suppkey = s_suppkey
-               JOIN orders ON l_orderkey = o_orderkey
-               JOIN customer ON o_custkey = c_custkey
-               JOIN nation n1 ON s_nationkey = n1.n_nationkey
-               JOIN nation n2 ON c_nationkey = n2.n_nationkey
-               WHERE n1.n_name <> n2.n_name
-                 AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-                 AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00')
-         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    // MLE bigram LM score in the rational form: both sums are exact
-    // BIGINTs, so the one double division is bit-stable — never a sum of
-    // per-bigram doubles, whose accumulation order a cluster does not fix
-    "q_text_lm_score" ->
-      """WITH d AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks FROM documents),
-         bg AS (SELECT doc_id,
-                  unnest([toks[i] for i in generate_series(1, len(toks) - 1)]) AS p,
-                  unnest([toks[i] || ' ' || toks[i+1] for i in generate_series(1, len(toks) - 1)]) AS g
-                FROM d),
-         cbg AS (SELECT g, count(*) AS c_bg FROM bg GROUP BY 1),
-         cpre AS (SELECT p, count(*) AS c_pre FROM bg GROUP BY 1),
-         agg AS (SELECT doc_id, count(*) AS n_bigrams,
-                        CAST(sum(c_bg) AS BIGINT) AS sup_bg,
-                        CAST(sum(c_pre) AS BIGINT) AS sup_pre
-                 FROM bg JOIN cbg USING (g) JOIN cpre USING (p) GROUP BY 1)
-         SELECT d.doc_id, COALESCE(a.n_bigrams, 0) AS n_bigrams, a.sup_bg, a.sup_pre,
-                CAST(a.sup_bg AS DOUBLE) / CAST(a.sup_pre AS DOUBLE) AS lm_score
-         FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         ORDER BY d.doc_id""",
-    "q_chunk_overlap" ->
-      s"""WITH $chunkCtes,
-          ch AS (SELECT DISTINCT doc_id, chunk_hash FROM chks),
-          kept AS (SELECT doc_id, chunk_hash FROM (
-                     SELECT doc_id, chunk_hash,
-                            count(*) OVER (PARTITION BY chunk_hash) AS df FROM ch)
-                   WHERE df <= ${graft.llm.Curation.OverlapMaxDf}),
-          nch AS (SELECT doc_id, count(*) AS n_chunks FROM ch GROUP BY 1),
-          pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-                 FROM kept a JOIN kept b
-                   ON a.chunk_hash = b.chunk_hash AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2)
-          SELECT doc_a, doc_b, n_shared, na.n_chunks AS n_a, nb.n_chunks AS n_b,
-                 CAST(n_shared AS DOUBLE) / CAST(least(na.n_chunks, nb.n_chunks) AS DOUBLE) AS containment
-          FROM pr JOIN nch na ON pr.doc_a = na.doc_id
-                  JOIN nch nb ON pr.doc_b = nb.doc_id
-          WHERE CAST(n_shared AS DOUBLE) / CAST(least(na.n_chunks, nb.n_chunks) AS DOUBLE)
-                  >= ${graft.llm.Curation.OverlapMin}
-          ORDER BY doc_a, doc_b""",
-    // same LSH blocking as q_dedup_embed_components (MultiProbePlanes = the
-    // sf0.01 planesFor value), unthresholded, ranked per vector
-    "q_sim_knn_graph" ->
-      s"""WITH ee AS (SELECT vec_id, embedding, ${dNorm("embedding")} AS nrm,
-                  ${dBucket("embedding", Similarity.MultiProbePlanes)} AS bucket
-               FROM embeddings),
-          edges AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-                  ${dDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
-                FROM ee a JOIN ee b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
-          sym AS (SELECT src, dst, cos FROM edges
-                  UNION ALL SELECT dst, src, cos FROM edges),
-          r AS (SELECT src AS vec_id, dst AS n_id, cos,
-                       CAST(row_number() OVER (PARTITION BY src
-                         ORDER BY cos DESC, dst) AS BIGINT) AS rnk
-                FROM sym)
-          SELECT vec_id, rnk, n_id, cos FROM r
-          WHERE rnk <= ${Similarity.GraphK} ORDER BY vec_id, rnk""",
-    // graph-probe ANN: the same kNN graph, then SearchIters unrolled
-    // expand/score/beam rounds (fixed iteration count, fixed-order cosine,
-    // ties to the lower neighbor id — the trainCentroids unroll discipline)
-    "q_sim_graph_search" -> graphSearchSql,
-    "q_sim_graph_insert" -> graphInsertSql,
-    "q_sim_graph_upsert" -> graphUpsertSql,
-    // twin of GraphMaintenance.drift: base best links from the frozen base
-    // descent graph (d{DescentIters} rnk=1), late best links from the
-    // insert twin's fin (rnk=1); the floor-quantized mean is the
-    // q_index_drift discipline (DuckDB SUM(BIGINT) is HUGEINT — matches
-    // Spark's Decimal(38,0) accumulator)
-    "q_graph_drift" ->
-      s"""WITH $graphInsertCtes,
-          gdb AS (SELECT cos, 'base' AS segment
-                  FROM d${Similarity.DescentIters} WHERE rnk = 1
-                  UNION ALL
-                  SELECT cos, 'late' AS segment FROM fin WHERE rnk = 1)
-          SELECT segment, count(*) AS n,
-                 CAST(CAST(SUM(CAST(floor(cos * ${Similarity.MeanScale}) AS BIGINT)) AS VARCHAR) AS DOUBLE)
-                   / (CAST(count(*) AS DOUBLE) * ${Similarity.MeanScale}) AS mean_cos,
-                 min(cos) AS min_cos
-          FROM gdb GROUP BY 1 ORDER BY 1""",
-    // NN-descent: deterministic long-link init, then DescentIters unrolled
-    // rounds of (edges ∪ reversed ∪ two-hop) → exact score → keep-GraphK
-    "q_sim_nndescent" -> {
-      import Similarity.{DescentIters, GraphK}
-      s"""WITH $ndCtes
-          SELECT src AS vec_id, rnk, dst AS n_id, cos FROM d$DescentIters
-          WHERE rnk <= $GraphK ORDER BY vec_id, rnk"""
-    },
-    // soft dedup: weight = 1/n_copies is one IEEE division of an exact
-    // BIGINT class size — bit-stable, order-free
-    "q_dedup_soft" ->
-      """SELECT doc_id,
-                count(*) OVER (PARTITION BY sha256(text)) AS n_copies,
-                CAST(1.0 AS DOUBLE) / CAST(count(*) OVER (PARTITION BY sha256(text)) AS DOUBLE) AS weight
-         FROM documents ORDER BY doc_id""",
-    // Gram matrix: each product is one IEEE multiply of exactly-widened
-    // floats, decimal-staged before the order-free sum (dsum discipline)
-    "q_embed_gram" ->
-      """WITH x AS (SELECT vec_id,
-                      unnest(generate_series(1, len(embedding))) - 1 AS i,
-                      unnest([CAST(e AS DOUBLE) for e in embedding]) AS xi
-                    FROM embeddings)
-         SELECT a.i, b.i AS j,
-                CAST(CAST(SUM(CAST(a.xi * b.xi AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS g,
-                count(*) AS n
-         FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    // 2^48-scaled exact-BIGINT sums (trainCentroids discipline) — raw
-    // embedding values tie at DECIMAL(·,10) half-way points, where the two
-    // engines' rounding modes differ (HALF_UP vs HALF_EVEN)
-    "q_embed_mean" ->
-      s"""WITH x AS (SELECT unnest(generate_series(1, len(embedding))) - 1 AS i,
-                      unnest([CAST(CAST(e AS DOUBLE) * ${Similarity.MeanScale}.0 AS BIGINT)
-                              for e in embedding]) AS sx
-                    FROM embeddings),
-          g AS (SELECT i, CAST(SUM(sx) AS BIGINT) AS ssx, count(*) AS n FROM x GROUP BY 1)
-          SELECT i,
-                 CAST(ssx AS DOUBLE) / ${Similarity.MeanScale}.0 AS sum_x,
-                 n,
-                 CAST(ssx AS DOUBLE) / (CAST(n AS DOUBLE) * ${Similarity.MeanScale}.0) AS mean_x
-          FROM g ORDER BY 1""",
-    // covariance from the two exact statistics: G and the scaled-BIGINT
-    // mean sums are bit-exact, and cov = g/n − mean_i·mean_j is the same
-    // three-op IEEE expression tree on both engines
-    "q_embed_covariance" ->
-      s"""WITH $covCtes
-          SELECT g.i, g.j,
-                 g.g / CAST(g.n AS DOUBLE) - mi.mean_x * mj.mean_x AS cov,
-                 g.n
-          FROM g JOIN mm mi ON g.i = mi.i JOIN mm mj ON g.j = mj.i
-          ORDER BY 1, 2""",
-    // whitening: scaled-BIGINT mean + decimal-staged diagonal second
-    // moment per dim, then (x-mu)/sd per coordinate - the subtraction and
-    // division are the same two IEEE ops both engines
-    "q_embed_whiten" ->
-      s"""WITH x AS (SELECT unnest(generate_series(1, len(embedding))) - 1 AS i,
-                      unnest([CAST(e AS DOUBLE) for e in embedding]) AS xi
-                    FROM embeddings),
-          st AS (SELECT i,
-                        CAST(SUM(CAST(xi * ${Similarity.MeanScale}.0 AS BIGINT)) AS BIGINT) AS ssx,
-                        CAST(CAST(SUM(CAST(xi * xi AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS gii,
-                        count(*) AS n
-                 FROM x GROUP BY 1),
-          ms AS (SELECT i,
-                        CAST(ssx AS DOUBLE) / (CAST(n AS DOUBLE) * ${Similarity.MeanScale}.0) AS mu,
-                        sqrt(gii / CAST(n AS DOUBLE)
-                             - (CAST(ssx AS DOUBLE) / (CAST(n AS DOUBLE) * ${Similarity.MeanScale}.0))
-                               * (CAST(ssx AS DOUBLE) / (CAST(n AS DOUBLE) * ${Similarity.MeanScale}.0))) AS sd
-                 FROM st),
-          ml AS (SELECT list(mu ORDER BY i) AS ml, list(sd ORDER BY i) AS sl FROM ms)
-          SELECT e.vec_id,
-                 CAST(unnest(generate_series(1, len(e.embedding))) - 1 AS BIGINT) AS i,
-                 unnest([(CAST(e.embedding[t] AS DOUBLE) - ml.ml[t]) / ml.sl[t]
-                         for t in generate_series(1, len(e.embedding))]) AS w
-          FROM embeddings e, ml ORDER BY e.vec_id, i""",
-    // top-PC projection: the covariance CTEs feed ten unrolled power
-    // iterations (list_sum is the left-to-right fold — the dDot-proven
-    // order match for Spark's ascending-index loops), then the projection
-    // is the same ordered dot against v10
-    "q_embed_pca_project" -> pcaOracle,
-    "q_join_cust_returns" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         WHERE l_returnflag = 'R'
-           AND o_orderdate >= TIMESTAMP '1996-10-01 00:00:00'
-           AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY 1, 2, 3, 4
-         ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "q_join_large_orders" ->
-      """WITH big AS (SELECT l_orderkey,
-                             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_qty
-                      FROM lineitem GROUP BY 1
-                      HAVING CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) > 300.0)
-         SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, sum_qty
-         FROM big
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-    // Q21 shape stated declaratively (the engine's window rewrite must
-    // hash-match this): late = shipped > 90 days after a finished order
-    "q_join_blame_supplier" ->
-      """WITH sl AS (SELECT l_orderkey, l_suppkey,
-                            max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
-                                     THEN 1 ELSE 0 END) AS late
-                     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                     WHERE o_orderstatus = 'F'
-                     GROUP BY 1, 2),
-          w AS (SELECT l_suppkey, late,
-                       count(*) OVER (PARTITION BY l_orderkey) AS n_supp,
-                       sum(late) OVER (PARTITION BY l_orderkey) AS n_late
-                FROM sl)
-         SELECT s_name, count(*) AS numwait
-         FROM w JOIN supplier ON l_suppkey = s_suppkey
-         WHERE late = 1 AND n_supp > 1 AND n_late = 1
-         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20""",
-    // Q22 shape: division-free above-mean compare (bal·n > total in exact
-    // decimal — a decimal quotient would round differently per engine)
-    "q_join_dormant_cust" ->
-      s"""WITH th AS (SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS total,
-                            COUNT(*) AS n
-                      FROM customer WHERE c_acctbal > 0.0),
-          cand AS (SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
-                   FROM customer c, th
-                   WHERE c.c_acctbal > 0.0
-                     AND CAST(c.c_acctbal AS DECIMAL(18,2)) * th.n > th.total
-                     AND NOT EXISTS (SELECT 1 FROM orders o
-                                     WHERE o.o_custkey = c.c_custkey
-                                       AND o.o_orderdate >= TIMESTAMP '2000-01-01'))
-          SELECT n_name, count(*) AS numcust, ${dsum("c_acctbal")} AS totacctbal
-          FROM cand JOIN nation ON c_nationkey = n_nationkey
-          GROUP BY 1 ORDER BY 1""",
-    // data-calibrated quality gate: the cut is the exact 20th-percentile
-    // logit via a value HISTOGRAM (cardinality = logit domain, not corpus);
-    // `5·cum ≥ N` is the integer form of cum ≥ ⌈N/5⌉ — no float anywhere
-    "q_quality_threshold" ->
-      s"""WITH x AS (SELECT doc_id,
-                 string_split(coalesce(text, ''), ' ') AS toks,
-                 coalesce(text, '') AS text, coalesce(n_chars, 0) AS n_chars FROM documents),
-          f AS (SELECT doc_id,
-                 CAST(len(toks) AS BIGINT) AS f_tokens,
-                 n_chars AS f_chars,
-                 CAST(len(list_filter(toks, tk -> list_contains($allStopList, tk))) AS BIGINT) AS f_stop,
-                 CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS f_digits,
-                 CAST(len(list_distinct(toks)) AS BIGINT) AS f_distinct
-              FROM x),
-          lg AS (SELECT doc_id,
-                 -2000 + f_tokens * 3 + f_chars * 1 + f_stop * 40
-                       + f_distinct * 10 - f_digits * 25 AS logit_milli
-              FROM f),
-          hist AS (SELECT logit_milli, count(*) AS cnt FROM lg GROUP BY 1),
-          n AS (SELECT count(*) AS n_docs FROM lg),
-          cum AS (SELECT logit_milli,
-                    sum(cnt) OVER (ORDER BY logit_milli
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                  FROM hist),
-          thr AS (SELECT min(logit_milli) AS threshold FROM cum, n
-                  WHERE cum * ${graft.llm.Curation.ThresholdDen} >= n_docs)
-          SELECT lg.doc_id, lg.logit_milli, thr.threshold
-          FROM lg, thr WHERE lg.logit_milli >= thr.threshold
-          ORDER BY lg.doc_id""",
-    // token-budget selection: per source, quality-ranked greedy fill until
-    // half the source's token mass is spent (tok_before discipline — the
-    // crossing doc is admitted); all integer arithmetic
-    "q_select_budget" ->
-      s"""WITH x AS (SELECT doc_id, source,
-                 string_split(coalesce(text, ''), ' ') AS toks,
-                 coalesce(text, '') AS text, coalesce(n_chars, 0) AS n_chars FROM documents),
-          f AS (SELECT doc_id, source,
-                 CAST(len(toks) AS BIGINT) AS f_tokens,
-                 n_chars AS f_chars,
-                 CAST(len(list_filter(toks, tk -> list_contains($allStopList, tk))) AS BIGINT) AS f_stop,
-                 CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS f_digits,
-                 CAST(len(list_distinct(toks)) AS BIGINT) AS f_distinct
-              FROM x),
-          lg AS (SELECT doc_id, source, f_tokens,
-                 -2000 + f_tokens * 3 + f_chars * 1 + f_stop * 40
-                       + f_distinct * 10 - f_digits * 25 AS logit_milli
-              FROM f),
-          wnd AS (SELECT doc_id, source, f_tokens, logit_milli,
-                 CAST(sum(f_tokens) OVER (PARTITION BY source) AS BIGINT) AS source_tokens,
-                 CAST(COALESCE(sum(f_tokens) OVER (PARTITION BY source
-                   ORDER BY logit_milli DESC, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_before
-              FROM lg)
-          SELECT doc_id, source, f_tokens, logit_milli, tok_before, source_tokens
-          FROM wnd WHERE tok_before * 2 < source_tokens
-          ORDER BY doc_id""",
-    // Pearson corr / sample cov from exact decimal cross-moments; only the
-    // final arithmetic is IEEE, as one shared expression tree (q_agg_stats
-    // discipline, two variables)
-    "q_agg_corr" ->
-      """WITH a AS (SELECT l_returnflag, count(*) AS n,
-                 CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sx,
-                 CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sy,
-                 CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-                 CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS syy,
-                 CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sxy
-          FROM lineitem GROUP BY 1)
-          SELECT l_returnflag, n,
-                 (sxy - sx * sy / n) / (n - 1) AS cov_samp,
-                 (sxy - sx * sy / n) /
-                   sqrt((sxx - sx * sx / n) * (syy - sy * sy / n)) AS corr_xy
-          FROM a ORDER BY l_returnflag""",
-    // incremental maintenance: the oracle RECOMPUTES from scratch — equality
-    // proves merge-of-partials == recompute (count and decimal sum are
-    // associative)
-    "q_agg_incremental" ->
-      s"""SELECT o_orderpriority, count(*) AS n, ${dsum("o_totalprice")} AS total
-          FROM orders GROUP BY 1 ORDER BY 1""",
-    "q_histogram" ->
-      """SELECT bucket, bucket * 50000.0 AS lo, count(*) AS n
-         FROM (SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket
-               FROM orders)
-         GROUP BY bucket ORDER BY bucket""",
-    "q_join_full_outer" ->
-      """SELECT CAST(COALESCE(c.nk, s.nk) AS BIGINT) AS nationkey,
-                COALESCE(c.n_rich_cust, 0) AS n_rich_cust,
-                COALESCE(s.n_poor_supp, 0) AS n_poor_supp
-         FROM (SELECT c_nationkey AS nk, count(*) AS n_rich_cust
-               FROM customer WHERE c_acctbal > 9000.0 GROUP BY 1) c
-         FULL OUTER JOIN
-              (SELECT s_nationkey AS nk, count(*) AS n_poor_supp
-               FROM supplier WHERE s_acctbal < 3000.0 GROUP BY 1) s
-         ON c.nk = s.nk
-         ORDER BY nationkey""",
-    "q_dq_audit" ->
-      """SELECT * FROM (
-           SELECT 'orders_pk_duplicate' AS check_name,
-                  count(*) - count(DISTINCT o_orderkey) AS violations FROM orders
-           UNION ALL
-           SELECT 'orders_custkey_null',
-                  count(*) FILTER (WHERE o_custkey IS NULL) FROM orders
-           UNION ALL
-           SELECT 'orders_totalprice_nonpositive',
-                  count(*) FILTER (WHERE o_totalprice <= 0.0) FROM orders
-           UNION ALL
-           SELECT 'lineitem_quantity_nonpositive',
-                  count(*) FILTER (WHERE l_quantity <= 0.0) FROM lineitem
-           UNION ALL
-           SELECT 'lineitem_discount_range',
-                  count(*) FILTER (WHERE l_discount < 0.0 OR l_discount > 1.0) FROM lineitem
-           UNION ALL
-           SELECT 'lineitem_shipdate_null',
-                  count(*) FILTER (WHERE l_shipdate IS NULL) FROM lineitem
-           UNION ALL
-           SELECT 'lineitem_fk_orders_orphan', count(*)
-           FROM lineitem l WHERE NOT EXISTS
-             (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-           UNION ALL
-           SELECT 'orders_fk_customer_orphan', count(*)
-           FROM orders o WHERE o.o_custkey IS NOT NULL AND NOT EXISTS
-             (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-         ) ORDER BY check_name""",
-    // relational (self-join) form of the pair count — the registered query
-    // uses the bounded collect_set + pair-explode form; equality proves them
-    // equivalent
-    "q_event_cooccurrence" ->
-      """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events)
-         SELECT a.event_type AS type_a, b.event_type AS type_b,
-                count(*) AS n_users
-         FROM ut a JOIN ut b
-           ON a.user_id = b.user_id AND a.event_type < b.event_type
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    // scaled-BIGINT fixed-point PageRank: five unrolled iterations replay the
-    // registered loop bit-for-bit (integer div only; DuckDB // == Spark div
-    // on non-negative operands); HUGEINT intermediate sums cast back at the end
-    "q_graph_pagerank" ->
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-          e AS (SELECT DISTINCT a.p AS src, b.p AS dst
-                FROM pp a JOIN pp b ON a.o = b.o AND a.p <> b.p),
-          deg AS (SELECT src, count(*) AS d FROM e GROUP BY 1),
-          nn AS (SELECT count(*) AS n_nodes FROM deg),
-          tele AS (SELECT (15 * (1000000000000 // n_nodes)) // 100 AS t FROM nn),
-          r0 AS (SELECT src AS node, 1000000000000 // n_nodes AS rank FROM deg, nn),
-          r1 AS (SELECT e.dst AS node,
-                   (SELECT t FROM tele) + (85 * sum(r.rank // d.d)) // 100 AS rank
-                 FROM e JOIN r0 r ON r.node = e.src JOIN deg d ON d.src = e.src
-                 GROUP BY e.dst),
-          r2 AS (SELECT e.dst AS node,
-                   (SELECT t FROM tele) + (85 * sum(r.rank // d.d)) // 100 AS rank
-                 FROM e JOIN r1 r ON r.node = e.src JOIN deg d ON d.src = e.src
-                 GROUP BY e.dst),
-          r3 AS (SELECT e.dst AS node,
-                   (SELECT t FROM tele) + (85 * sum(r.rank // d.d)) // 100 AS rank
-                 FROM e JOIN r2 r ON r.node = e.src JOIN deg d ON d.src = e.src
-                 GROUP BY e.dst),
-          r4 AS (SELECT e.dst AS node,
-                   (SELECT t FROM tele) + (85 * sum(r.rank // d.d)) // 100 AS rank
-                 FROM e JOIN r3 r ON r.node = e.src JOIN deg d ON d.src = e.src
-                 GROUP BY e.dst),
-          r5 AS (SELECT e.dst AS node,
-                   (SELECT t FROM tele) + (85 * sum(r.rank // d.d)) // 100 AS rank
-                 FROM e JOIN r4 r ON r.node = e.src JOIN deg d ON d.src = e.src
-                 GROUP BY e.dst)
-          SELECT node AS part_key, CAST(rank AS BIGINT) AS rank_scaled
-          FROM r5 ORDER BY rank_scaled DESC, part_key LIMIT 50""",
-    // degree-ordered orientation: each triangle p≺q≺r is the wedge p→q→r
-    // closed by p→r, counted once
-    "q_graph_triangles" ->
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-          canon AS (SELECT DISTINCT a.p AS src, b.p AS dst
-                    FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
-          deg AS (SELECT node, count(*) AS d FROM
-                    (SELECT src AS node FROM canon
-                     UNION ALL SELECT dst FROM canon) GROUP BY 1),
-          o AS (SELECT
-                  CASE WHEN du.d < dv.d OR (du.d = dv.d AND c.src < c.dst)
-                       THEN c.src ELSE c.dst END AS x,
-                  CASE WHEN du.d < dv.d OR (du.d = dv.d AND c.src < c.dst)
-                       THEN c.dst ELSE c.src END AS y
-                FROM canon c JOIN deg du ON du.node = c.src
-                             JOIN deg dv ON dv.node = c.dst),
-          tri AS (SELECT o1.x AS a, o1.y AS b, o2.y AS c
-                  FROM o o1 JOIN o o2 ON o2.x = o1.y
-                            JOIN o o3 ON o3.x = o1.x AND o3.y = o2.y)
-          SELECT part_key, count(*) AS n_tri FROM (
-            SELECT a AS part_key FROM tri
-            UNION ALL SELECT b FROM tri
-            UNION ALL SELECT c FROM tri)
-          GROUP BY 1 ORDER BY n_tri DESC, part_key LIMIT 50""",
-    "q_graph_degree_dist" ->
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-          canon AS (SELECT DISTINCT a.p AS src, b.p AS dst
-                    FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
-          deg AS (SELECT node, count(*) AS d FROM
-                    (SELECT src AS node FROM canon
-                     UNION ALL SELECT dst FROM canon) GROUP BY 1)
-          SELECT d AS degree, count(*) AS n_nodes
-          FROM deg GROUP BY 1 ORDER BY degree""",
-    "q_agg_revenue_slice" ->
-      """SELECT CAST(CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-                count(*) AS n
-         FROM lineitem
-         WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-           AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-           AND l_discount >= 0.04 AND l_discount <= 0.06
-           AND l_quantity < 24.0""",
-    "q_join_promo_share" ->
-      """WITH a AS (SELECT
-                 CAST(CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
-                       THEN l_extendedprice*(1-l_discount) ELSE 0.0 END
-                     AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS promo_rev,
-                 CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount)
-                     AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_rev,
-                 count(*) AS n
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-            AND l_shipdate <  TIMESTAMP '1996-10-01 00:00:00')
-          SELECT promo_rev, total_rev,
-                 100.0 * promo_rev / total_rev AS promo_share_pct, n
-          FROM a""",
-    "q_join_disjunctive" ->
-      """SELECT p_brand,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS revenue,
-                count(*) AS n
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-                AND l_quantity BETWEEN 1.0 AND 11.0)
-            OR (p_brand = 'Brand#21' AND p_size BETWEEN 10 AND 30
-                AND l_quantity BETWEEN 10.0 AND 20.0)
-            OR (p_brand = 'Brand#5' AND p_size BETWEEN 20 AND 50
-                AND l_quantity BETWEEN 20.0 AND 30.0)
-         GROUP BY 1 ORDER BY 1""",
-    // quartile-boundary thresholds broadcast back over the per-user
-    // aggregate — 0.25/0.75 are binary-exact, so quantile_cont interpolates
-    // the same doubles Spark's percentile() does
-    "q_event_rfm" ->
-      """WITH p AS (SELECT user_id, epoch_ms(ts) // 86400000 AS day, value
-                    FROM events WHERE event_type = 'purchase'),
-          u AS (SELECT user_id, max(day) AS last_day, count(*) AS frequency,
-                       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS monetary
-                FROM p GROUP BY 1),
-          mx AS (SELECT max(last_day) AS max_day FROM u),
-          b AS (SELECT user_id, max_day - last_day AS recency_days,
-                       frequency, monetary FROM u, mx),
-          th AS (SELECT quantile_cont(recency_days, 0.25) AS r1,
-                        quantile_cont(recency_days, 0.75) AS r2,
-                        quantile_cont(frequency, 0.25) AS f1,
-                        quantile_cont(frequency, 0.75) AS f2,
-                        quantile_cont(monetary, 0.25) AS m1,
-                        quantile_cont(monetary, 0.75) AS m2 FROM b)
-          SELECT user_id, recency_days, frequency, monetary,
-                 CAST(CASE WHEN recency_days <= r1 THEN 1
-                      WHEN recency_days <= r2 THEN 2 ELSE 3 END AS BIGINT) AS r_seg,
-                 CAST(CASE WHEN frequency <= f1 THEN 1
-                      WHEN frequency <= f2 THEN 2 ELSE 3 END AS BIGINT) AS f_seg,
-                 CAST(CASE WHEN monetary <= m1 THEN 1
-                      WHEN monetary <= m2 THEN 2 ELSE 3 END AS BIGINT) AS m_seg
-          FROM b, th ORDER BY user_id""",
-    "q_agg_weighted_avg" ->
-      """WITH a AS (SELECT l_returnflag,
-                 CAST(CAST(SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS wsum,
-                 CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS wmass,
-                 count(*) AS n
-          FROM lineitem GROUP BY 1)
-          SELECT l_returnflag, wsum, wmass, wsum / wmass AS wavg_price, n
-          FROM a ORDER BY l_returnflag""",
-    // sentence split is a lookaround-free regex (identical in Java regex and
-    // RE2); DuckDB zips unnest + generate_subscripts over the same list
-    "q_chunk_sentences" ->
-      """WITH s0 AS (SELECT doc_id,
-                 unnest(regexp_extract_all(coalesce(text, ''), '[^.!?]+[.!?]*')) AS sent,
-                 CAST(generate_subscripts(regexp_extract_all(coalesce(text, ''), '[^.!?]+[.!?]*'), 1) AS BIGINT) AS sent_idx
-               FROM documents),
-          t1 AS (SELECT doc_id, sent_idx,
-                 CAST(len(string_split(trim(sent), ' ')) AS BIGINT) AS n_tokens FROM s0),
-          t2 AS (SELECT doc_id, sent_idx, n_tokens,
-                 CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY doc_id ORDER BY sent_idx
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_before
-               FROM t1)
-          SELECT doc_id, sent_idx, n_tokens, tok_before,
-                 tok_before // 48 AS chunk_id
-          FROM t2 ORDER BY doc_id, sent_idx""",
-    "q_sample_target_mix" ->
-      """WITH c AS (SELECT source, count(*) AS n_source FROM documents GROUP BY 1),
-          tot AS (SELECT CAST(sum(n_source) AS BIGINT) AS n_total,
-                         count(*) AS n_sources FROM c)
-          SELECT source, n_source, n_total,
-                 least(1000000, (n_total * 1000000) // (n_sources * n_source)) AS rate_ppm,
-                 (n_source * least(1000000, (n_total * 1000000) // (n_sources * n_source))) // 1000000 AS expected_kept
-          FROM c, tot ORDER BY source""",
-    "q_window_ntile" ->
-      s"""WITH q AS (SELECT o_orderpriority, o_totalprice,
-                 CAST(ntile(4) OVER (PARTITION BY o_orderpriority
-                                     ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS quartile
-          FROM orders)
-          SELECT o_orderpriority, quartile, count(*) AS n,
-                 ${dsum("o_totalprice")} AS total,
-                 min(o_totalprice) AS lo, max(o_totalprice) AS hi
-          FROM q GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_event_transitions" ->
-      """WITH e AS (SELECT user_id, event_type,
-                 CAST(epoch_ns(ts) // 1000000 AS BIGINT) AS ms, event_id FROM events),
-          x AS (SELECT event_type AS src,
-                       lead(event_type) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS dst
-                FROM e),
-          c AS (SELECT src, dst, count(*) AS n FROM x WHERE dst IS NOT NULL GROUP BY 1, 2)
-          SELECT src, dst, n,
-                 CAST((n * 1000) // sum(n) OVER (PARTITION BY src) AS BIGINT) AS p_milli
-          FROM c ORDER BY src, dst""",
-    "q_scd2_asof" ->
-      s"""WITH ch AS (SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-                 lag(o_orderstatus) OVER (PARTITION BY o_custkey
-                                          ORDER BY o_orderdate, o_orderkey) AS prev
-          FROM orders),
-          hist AS (SELECT o_custkey, o_orderstatus AS status,
-                          o_orderdate AS valid_from,
-                          lead(o_orderdate) OVER (PARTITION BY o_custkey
-                                                  ORDER BY o_orderdate, o_orderkey) AS valid_to
-                   FROM ch WHERE prev IS NULL OR prev <> o_orderstatus)
-          SELECT h.status, count(*) AS n_items, ${dsum("l.l_extendedprice")} AS revenue
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN hist h ON o.o_custkey = h.o_custkey
-                     AND h.valid_from <= l.l_shipdate
-                     AND (h.valid_to IS NULL OR l.l_shipdate < h.valid_to)
-          GROUP BY 1 ORDER BY 1""",
-    "q_table_checksum" -> {
-      // twin of DataQuality.tableChecksum: same canonical serialization
-      // (ints verbatim, money via scale-padded DECIMAL(18,2) render,
-      // timestamps as epoch micros), same 60-bit md5 row hash
-      def sig(name: String, table: String, cols: String*) = {
-        val row = cols.mkString("concat_ws('|', ", ", ", ")")
-        s"""SELECT '$name' AS table_name, count(*) AS n_rows,
-               bit_xor(${dTokHash(row)}) AS xor_sig,
-               CAST(CAST(sum(${dTokHash(row)}) AS DECIMAL(38,0)) AS VARCHAR) AS sum_sig
-            FROM $table"""
-      }
-      Seq(
-        sig("orders", "orders", "o_orderkey", "o_custkey", "o_orderstatus",
-          "CAST(o_totalprice AS DECIMAL(18,2))", "epoch_us(o_orderdate)",
-          "o_orderpriority"),
-        sig("customer", "customer", "c_custkey", "c_name", "c_nationkey",
-          "CAST(c_acctbal AS DECIMAL(18,2))", "c_mktsegment"),
-        sig("lineitem", "lineitem", "l_orderkey", "l_linenumber",
-          "CAST(l_quantity AS DECIMAL(18,2))",
-          "CAST(l_extendedprice AS DECIMAL(18,2))", "l_returnflag",
-          "epoch_us(l_shipdate)"))
-        .mkString("", " UNION ALL ", " ORDER BY table_name")
-    },
-    "q_text_ngrams" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
-          bg AS (SELECT unnest([t[i] || ' ' || t[i+1]
-                                for i in generate_series(1, len(t) - 1)]) AS bigram
-                 FROM toks WHERE len(t) >= 2)
-          SELECT bigram, count(*) AS n FROM bg
-          GROUP BY 1 ORDER BY n DESC, bigram LIMIT 50""",
-    "q_agg_topk" ->
-      """SELECT o_orderpriority,
-                array_to_string([CAST(CAST(x AS DECIMAL(18,2)) AS VARCHAR)
-                                 for x in (list(o_totalprice ORDER BY o_totalprice DESC))[1:5]],
-                                '|') AS top5,
-                count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    // the oracle is the UNFILTERED join: bloom has no false negatives and
-    // the exact join removes false positives, so the hash match proves the
-    // runtime-pruned rewrite
-    "q_join_bloom" ->
-      s"""SELECT l.l_returnflag, count(*) AS n, ${dsum("l.l_extendedprice")} AS revenue
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderstatus = 'O'
-          GROUP BY 1 ORDER BY 1""",
-    "q_agg_argmax" ->
-      """SELECT o_orderpriority,
-                arg_max(o_orderkey,
-                        CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS DECIMAL(38,0))
-                          * 10000000000 + o_orderkey) AS top_orderkey,
-                max(o_totalprice) AS top_price,
-                count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    "q_window_pct" ->
-      """WITH x AS (SELECT p_brand, p_partkey, p_retailprice,
-                 percent_rank() OVER w AS pr, cume_dist() OVER w AS cd
-          FROM part WINDOW w AS (PARTITION BY p_brand
-                                 ORDER BY p_retailprice, p_partkey))
-          SELECT p_brand, p_partkey, p_retailprice, pr, cd FROM x
-          WHERE pr <= 0.02 OR pr >= 0.98 ORDER BY p_brand, p_partkey""",
-    "q_sample_weighted" ->
-      s"""WITH d AS (SELECT doc_id,
-                 CAST(len(string_split(coalesce(text, ''), ' ')) // 64 + 1 AS BIGINT) AS w
-          FROM documents),
-          tick AS (SELECT doc_id, w, unnest(generate_series(1, w)) AS tick FROM d),
-          pri AS (SELECT doc_id, max(w) AS w,
-                         max(${dTokHash("concat_ws(':', 'wsample-v1', doc_id, tick)")}) AS priority
-                  FROM tick GROUP BY doc_id)
-          SELECT doc_id, w, priority FROM pri
-          ORDER BY priority DESC, doc_id LIMIT 100""",
-    // DSIR-style importance in the log-free rational form: exact BIGINT
-    // support sums, HUGEINT/decimal-staged cross products, ONE division
-    "q_sample_importance" -> {
-      val tgt = graft.llm.Curation.ImportanceTarget
-      s"""WITH itok AS (SELECT doc_id, source,
-                 unnest(string_split(coalesce(text, ''), ' ')) AS tok
-               FROM documents),
-          icr AS (SELECT tok, count(*) AS c_raw FROM itok GROUP BY 1),
-          ict AS (SELECT tok, count(*) AS c_tgt FROM itok
-                  WHERE source = '$tgt' GROUP BY 1),
-          itot AS (SELECT count(*) AS n_raw,
-                          CAST(SUM(CASE WHEN source = '$tgt' THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n_tgt
-                   FROM itok),
-          iper AS (SELECT i.doc_id, count(*) AS n_toks,
-                          CAST(SUM(coalesce(t.c_tgt, 0)) AS BIGINT) AS sup_tgt,
-                          CAST(SUM(r.c_raw) AS BIGINT) AS sup_raw
-                   FROM itok i
-                   JOIN icr r ON i.tok = r.tok
-                   LEFT JOIN ict t ON i.tok = t.tok
-                   GROUP BY 1)
-          SELECT doc_id, n_toks, sup_tgt, sup_raw,
-                 CAST(CAST(CAST(sup_tgt AS HUGEINT) * n_raw AS VARCHAR) AS DOUBLE)
-                   / CAST(CAST(CAST(sup_raw AS HUGEINT) * n_tgt AS VARCHAR) AS DOUBLE) AS imp
-          FROM iper, itot ORDER BY doc_id"""
-    },
-    // the oracle REBUILDS the full SCD2 history from scratch — the hash
-    // match proves incremental apply ≡ full rebuild (see GroupA.scd2Merge)
-    "q_scd2_merge" ->
-      """WITH ordered AS (
-           SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-                  lag(o_orderstatus) OVER (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS prev
-           FROM orders),
-         changes AS (SELECT * FROM ordered WHERE prev IS NULL OR prev <> o_orderstatus),
-         hist AS (
-           SELECT o_custkey, o_orderstatus AS status, o_orderdate AS valid_from,
-                  lead(o_orderdate) OVER (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS valid_to
-           FROM changes)
-         SELECT o_custkey, status, valid_from, valid_to,
-                (valid_to IS NULL) AS is_current
-         FROM hist ORDER BY o_custkey, valid_from, status""",
-    "q_fuzzy_match" ->
-      """WITH n AS (SELECT DISTINCT p_name, string_split(p_name, ' ')[-1] AS blk FROM part)
-          SELECT a.p_name AS name_a, b.p_name AS name_b,
-                 CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-          FROM n a JOIN n b ON a.blk = b.blk AND a.p_name < b.p_name
-          WHERE levenshtein(a.p_name, b.p_name) <= 4
-          ORDER BY name_a, name_b""",
-    // pruning is plan-only; the oracle is the plain dim-filtered join
-    "q_join_dpp" ->
-      s"""WITH f AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, o_totalprice FROM orders),
-          d AS (SELECT DISTINCT CAST(year(o_orderdate) AS BIGINT) AS d_year FROM orders),
-          e AS (SELECT d_year,
-                       CASE WHEN d_year < 1999 THEN 'classic' ELSE 'modern' END AS era
-                FROM d)
-          SELECT f.o_year, count(*) AS n, ${dsum("f.o_totalprice")} AS total
-          FROM f JOIN e ON f.o_year = e.d_year
-          WHERE e.era = 'modern'
-          GROUP BY 1 ORDER BY 1""",
-    // same oracle as q_join_asof2 — the native merge operator must produce
-    // exactly what DuckDB's ASOF LEFT JOIN produces
-    "q_join_asof_native" ->
-      """WITH trades AS (SELECT event_id, user_id, value AS t_value, ts FROM events WHERE event_type='purchase'),
-              quotes AS (SELECT user_id, value AS q_value, ts FROM events WHERE event_type='view')
-         SELECT t.event_id, t.user_id, t.t_value, epoch_ms(t.ts) AS ts_ms,
-                epoch_ms(q.ts) AS quote_ts_ms, q.q_value AS quote_value
-         FROM trades t ASOF LEFT JOIN quotes q ON t.user_id = q.user_id AND t.ts >= q.ts
-         ORDER BY event_id""",
-    // the oracle is the NAIVE theta-join — the hash match proves the
-    // three-bucket binned rewrite loses no pair and invents none
-    "q_join_band" ->
-      """WITH e AS (SELECT event_id, event_type,
-                 CAST(epoch_ns(ts) // 1000000 AS BIGINT) AS ms FROM events),
-          p AS (SELECT event_id AS p_id, ms AS p_ms FROM e WHERE event_type = 'purchase'),
-          v AS (SELECT event_id AS v_id, ms AS v_ms FROM e WHERE event_type = 'view')
-          SELECT p_id, p_ms, count(*) AS n_nearby_views
-          FROM p JOIN v ON abs(v_ms - p_ms) <= 3600000
-          GROUP BY 1, 2 ORDER BY p_id""",
-    "q_histogram_depth" ->
-      """WITH b AS (SELECT quantile_cont(o_totalprice, 0.25) AS q1,
-                           quantile_cont(o_totalprice, 0.5)  AS q2,
-                           quantile_cont(o_totalprice, 0.75) AS q3 FROM orders),
-          x AS (SELECT CASE WHEN o_totalprice <= q1 THEN 0
-                            WHEN o_totalprice <= q2 THEN 1
-                            WHEN o_totalprice <= q3 THEN 2
-                            ELSE 3 END AS bucket, o_totalprice
-                FROM orders, b)
-          SELECT CAST(bucket AS BIGINT) AS bucket, count(*) AS n,
-                 min(o_totalprice) AS lo, max(o_totalprice) AS hi
-          FROM x GROUP BY 1 ORDER BY 1""",
-    // CMS estimates over a DOMAIN-BOUNDED key set at eps=0.001 (width 2719
-    // vs 5 keys — no collisions), so the estimate EQUALS the exact count
-    // and the exact count is the oracle; CmsSpec pins the one-sided error
-    // property independently
-    "q_agg_cms_topk" ->
-      """SELECT o_orderpriority, count(*) AS approx_n
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    // ——— round 6: remaining TPC-H report shapes (Reports.scala) ———
-    // Q4 shape: EXISTS stated declaratively; the engine's semi join with the
-    // lateness condition inside must match it exactly
-    "q_join_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-         FROM orders
-         WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-           AND o_orderdate <  TIMESTAMP '1996-10-01 00:00:00'
-           AND EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey
-                         AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-         GROUP BY 1 ORDER BY 1""",
-    // Q8 shape: numerator and denominator are exact decimal sums; the share
-    // is one IEEE division of two bit-identical doubles
-    "q_join_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                CAST(CAST(SUM(CAST(CASE WHEN sn.n_name = 'NATION_5'
-                       THEN l_extendedprice*(1-l_discount) ELSE 0.0 END
-                     AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS nation_rev,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount)
-                     AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS total_rev,
-                CAST(CAST(SUM(CAST(CASE WHEN sn.n_name = 'NATION_5'
-                       THEN l_extendedprice*(1-l_discount) ELSE 0.0 END
-                     AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE)
-                / CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount)
-                     AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS mkt_share
-         FROM lineitem
-         JOIN orders   ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation cn ON c_nationkey = cn.n_nationkey
-         JOIN region   ON cn.n_regionkey = r_regionkey
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation sn ON s_nationkey = sn.n_nationkey
-         WHERE r_name = 'ASIA'
-         GROUP BY 1 ORDER BY 1""",
-    // Q9 shape (no partsupp: supply cost modeled as 60% of retail price);
-    // the whole per-row profit expression is written identically on both
-    // engines before the decimal-staged sum
-    "q_join_product_profit" ->
-      """SELECT n_name AS nation,
-                CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount)
-                       - 0.6*p_retailprice*l_quantity
-                     AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE) AS sum_profit
-         FROM lineitem
-         JOIN part     ON l_partkey = p_partkey
-         JOIN orders   ON l_orderkey = o_orderkey
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation   ON s_nationkey = n_nationkey
-         WHERE p_name LIKE '%bolt%'
-         GROUP BY 1, 2 ORDER BY nation, o_year DESC""",
-    // Q12 shape (no shipmode column: lines bucket by integer ship delay)
-    "q_join_ship_delay" ->
-      """SELECT CASE WHEN d <= 30 THEN '00-30'
-                     WHEN d <= 60 THEN '31-60'
-                     WHEN d <= 90 THEN '61-90'
-                     ELSE '90+' END AS delay_bucket,
-                CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-                CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-         FROM (SELECT o_orderpriority,
-                      date_diff('day', CAST(o_orderdate AS DATE),
-                                CAST(l_shipdate AS DATE)) AS d
-               FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-         GROUP BY 1 ORDER BY 1""",
-    // Q13 shape: LEFT join preserves zero-order customers; pure integers
-    "q_join_cust_dist" ->
-      """WITH pc AS (SELECT c_custkey, count(o_custkey) AS c_count
-                     FROM customer
-                     LEFT JOIN (SELECT o_custkey FROM orders
-                                WHERE o_orderpriority <> '4-NOT SPECIFIED') o
-                       ON c_custkey = o.o_custkey
-                     GROUP BY 1)
-         SELECT c_count, count(*) AS custdist
-         FROM pc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""",
-    // Q15 shape: the max is a scalar over the same exact decimal sums, so
-    // the equality join-back is bit-safe
-    "q_join_top_supplier" ->
-      """WITH rev AS (SELECT l_suppkey,
-                             CAST(CAST(SUM(CAST(l_extendedprice*(1-l_discount)
-                                  AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE)
-                               AS total_revenue
-                      FROM lineitem
-                      WHERE l_shipdate >= TIMESTAMP '1996-07-01 00:00:00'
-                        AND l_shipdate <  TIMESTAMP '1996-10-01 00:00:00'
-                      GROUP BY 1),
-          mx AS (SELECT max(total_revenue) AS mx FROM rev)
-         SELECT s_suppkey, s_name, total_revenue
-         FROM rev
-         CROSS JOIN mx
-         JOIN supplier ON l_suppkey = s_suppkey
-         WHERE total_revenue = mx.mx
-         ORDER BY s_suppkey""",
-    // Q16 shape: part-supplier relation derived from shipments; complaint
-    // suppliers stand in as negative balances
-    "q_join_parts_supplier" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-         SELECT p_brand, p_type, p_size,
-                count(DISTINCT l_suppkey) AS supplier_cnt
-         FROM pairs
-         JOIN part ON l_partkey = p_partkey
-         WHERE p_brand <> 'Brand#12' AND p_type <> 'PROMO'
-           AND p_size IN (3, 9, 14, 19, 23, 36, 45, 49)
-           AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                                 WHERE s_acctbal < 0.0)
-         GROUP BY 1, 2, 3
-         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-    // Q17 shape: 20%-of-mean compare cross-multiplied in exact decimal
-    // (5·qty·n < sum); only the final /7 is IEEE
-    "q_join_small_qty" ->
-      """WITH pq AS (SELECT l_partkey AS pk,
-                            SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty,
-                            count(*) AS n_qty
-                     FROM lineitem GROUP BY 1)
-         SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-                  AS VARCHAR) AS DOUBLE) / 7.0 AS avg_yearly,
-                count(*) AS n
-         FROM lineitem
-         JOIN part ON l_partkey = p_partkey
-         JOIN pq   ON l_partkey = pk
-         WHERE p_brand = 'Brand#5' AND p_type = 'SMALL'
-           AND CAST(l_quantity AS DECIMAL(18,2)) * n_qty * 5 < sum_qty""",
-    // Q20 shape: half-share compare cross-multiplied in exact decimal
-    "q_join_excess_supp" ->
-      """WITH ps AS (SELECT l_partkey, l_suppkey,
-                            SUM(CAST(l_quantity AS DECIMAL(18,2))) AS supp_qty
-                     FROM lineitem
-                     JOIN part ON l_partkey = p_partkey
-                     WHERE p_name LIKE 'small%'
-                       AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-                       AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-                     GROUP BY 1, 2),
-          w AS (SELECT l_suppkey, supp_qty,
-                       SUM(supp_qty) OVER (PARTITION BY l_partkey) AS part_qty
-                FROM ps)
-         SELECT DISTINCT s_name, n_name
-         FROM w
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation   ON s_nationkey = n_nationkey
-         WHERE supp_qty * 2 > part_qty
-         ORDER BY s_name""",
-    // Q2 shape (no partsupp: "cost" is the supplier's balance, relation
-    // from shipments); ties break on suppkey so the argmin is total
-    "q_join_min_bal_supp" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-          sup AS (SELECT s_suppkey, s_name, s_acctbal, n_name
-                  FROM supplier
-                  JOIN nation ON s_nationkey = n_nationkey
-                  JOIN region ON n_regionkey = r_regionkey
-                  WHERE r_name = 'EUROPE'),
-          ranked AS (SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
-                            row_number() OVER (PARTITION BY p_partkey
-                              ORDER BY s_acctbal, s_suppkey) AS rn
-                     FROM pairs
-                     JOIN part ON l_partkey = p_partkey
-                     JOIN sup  ON l_suppkey = s_suppkey
-                     WHERE p_type = 'STANDARD' AND p_size < 16)
-         SELECT s_acctbal, s_name, n_name, p_partkey, p_name
-         FROM ranked WHERE rn = 1
-         ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-         LIMIT 100""",
-    "q_agg_flags" ->
-      """SELECT o_orderpriority,
-                CAST(count(*) FILTER (WHERE o_totalprice > 100000.0) AS BIGINT) AS n_big,
-                bool_or(o_orderstatus = 'F') AS any_finished,
-                bool_and(o_totalprice > 0.0) AS all_positive,
-                max(CASE WHEN o_orderstatus = 'F' THEN o_totalprice END) AS max_finished_price
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    "q_join_lateral" ->
-      """SELECT n_name, c.c_custkey, c.c_name, c.c_acctbal
-         FROM nation,
-         LATERAL (SELECT c_custkey, c_name, c_acctbal
-                  FROM customer
-                  WHERE c_nationkey = n_nationkey
-                  ORDER BY c_acctbal DESC, c_custkey
-                  LIMIT 2) c
-         ORDER BY n_name, c_acctbal DESC, c_custkey""",
-    // euclidean k-means, two deterministic Lloyd rounds: distances are
-    // SEQUENTIAL double folds (the vec_dot/list_sum twin discipline — a
-    // decimal cast of a full-mantissa double is a cross-engine coin flip),
-    // centroid means use the 2^48 integer-scaling trick, argmin ties break
-    // on the lower cluster id, empty clusters keep the previous centroid
-    "q_cluster_kmeans" -> kmeansCtes(
-      """SELECT vec_id, cluster, d2 AS dist2 FROM a2 ORDER BY vec_id"""),
-    // serve ≡ train: assigning against the PUBLISHED round-2 centroids must
-    // reproduce the training run's final assignment exactly
-    "q_cluster_assign" -> kmeansCtes(
-      """SELECT vec_id, cluster, d2 AS dist2 FROM a2 ORDER BY vec_id"""),
-    // BPE training, rounds unrolled (pagerank discipline): same |sym|
-    // encoding and literal-replace merge as the q_text_bpe_apply twin;
-    // winner per round = (count desc, a, b) — a total order
-    "q_text_bpe_train" -> {
-      val pat = TextAnalysis.BpePattern.replace("'", "''")
-      val encD = """regexp_replace(replace(piece, ' ', '_'), '(.)', '|\1|', 'g')"""
-      val rounds = (1 to TextAnalysis.BpeTrainRounds).map { r =>
-        val prev = s"w${r - 1}"
-        s"""sy$r AS (SELECT string_split(trim(w, '|'), '||') AS s, cnt FROM $prev),
-            p$r AS (SELECT s[i] AS a, s[i+1] AS b,
-                           CAST(SUM(cnt) AS BIGINT) AS pair_count
-                    FROM (SELECT s, cnt,
-                                 unnest(generate_series(1, len(s) - 1)) AS i
-                          FROM sy$r)
-                    GROUP BY 1, 2),
-            m$r AS (SELECT CAST($r AS BIGINT) AS merge_rank, a, b, pair_count
-                    FROM p$r ORDER BY pair_count DESC, a, b LIMIT 1),
-            w$r AS (SELECT replace(w, '|' || m.a || '||' || m.b || '|',
-                                   '|' || m.a || m.b || '|') AS w, cnt
-                    FROM $prev, m$r m)"""
-      }.mkString(",\n")
-      val union = (1 to TextAnalysis.BpeTrainRounds)
-        .map(r => s"SELECT * FROM m$r").mkString(" UNION ALL ")
-      s"""WITH vocab AS (SELECT piece, count(*) AS cnt FROM
-                           (SELECT unnest(regexp_extract_all(text, '$pat')) AS piece
-                            FROM documents)
-                         GROUP BY 1),
-          w0 AS (SELECT $encD AS w, cnt FROM vocab),
-          $rounds
-          SELECT merge_rank, a AS lhs, b AS rhs, pair_count
-          FROM ($union) ORDER BY merge_rank"""
-    },
-    // per-cluster mean distance quantizes d2 at 2^-48 (explicit floor =
-    // Spark's positive-double→long truncation) so the cross-member sum is
-    // order-free integer math
-    "q_cluster_sizes" -> kmeansCtes(
-      s"""SELECT cluster, count(*) AS n,
-                 CAST(CAST(SUM(CAST(floor(d2 * ${Similarity.MeanScale}) AS BIGINT)) AS VARCHAR) AS DOUBLE)
-                   / (CAST(count(*) AS DOUBLE) * ${Similarity.MeanScale}) AS mean_dist2
-          FROM a2 GROUP BY 1 ORDER BY 1"""),
-    // Q11 shape (no partsupp: supply value from shipments); the 2×-mean
-    // compare is cross-multiplied in exact decimal (value·n > 2·total)
-    "q_join_important_stock" ->
-      """WITH pp AS (SELECT l_partkey,
-                            SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS v
-                     FROM lineitem
-                     WHERE l_suppkey IN (SELECT s_suppkey FROM supplier
-                                         JOIN nation ON s_nationkey = n_nationkey
-                                         WHERE n_name = 'NATION_3')
-                     GROUP BY 1),
-          tot AS (SELECT SUM(v) AS total, count(*) AS n FROM pp)
-         SELECT l_partkey AS p_partkey,
-                CAST(CAST(v AS VARCHAR) AS DOUBLE) AS supply_value
-         FROM pp, tot WHERE v * n > total * 2
-         ORDER BY supply_value DESC, p_partkey""",
-    // twin of Fusion.fusedTopK: the three member twins as subqueries, two
-    // chained FULL JOIN USING (coalesced keys, the standard semantics Spark's
-    // full_outer-with-Seq mirrors), the RRF terms added in the IDENTICAL
-    // textual order (ivf + graph + binary) with explicit double division
-    // (DuckDB's bare 1.0 literal is DECIMAL — the CAST keeps both engines on
-    // one correctly-rounded IEEE op per term)
-    "q_sim_fused" -> fusedSql,
-    // rank-aware retrieval quality: MRR + nDCG@10 per serve family vs the
-    // exact top-10. The log2 discounts and the IDCG are shortest-repr
-    // literals shared with the Spark side (RankEval.Discounts), and the
-    // DCG is the same fixed-order term sum — transcendental-free in both
-    // engines at query time
-    "q_sim_rank_quality" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          exact_l2 AS (SELECT q_id, n_id FROM ($bruteL2Sql)),
-          m_ivf AS (${rankMetricsCte("ivf", ivfTrainedSql)}),
-          m_graph AS (${rankMetricsCte("graph", graphSearchSql)}),
-          m_bin AS (${rankMetricsCte("binary", binaryTopkSql)}),
-          m_fused AS (${rankMetricsCte("fused", fusedSql)}),
-          m_ivfpq AS (${rankMetricsCte("ivfpq", ivfPqRerankSql, "exact_l2")}),
-          m_hybrid AS (${rankMetricsCte("hybrid", hybridTopkSql)}),
-          m AS (SELECT * FROM m_ivf UNION ALL SELECT * FROM m_graph
-                UNION ALL SELECT * FROM m_bin UNION ALL SELECT * FROM m_fused
-                UNION ALL SELECT * FROM m_ivfpq UNION ALL SELECT * FROM m_hybrid),
-          md AS (SELECT family, q_id, first_hit, rr,
-                        ${graft.llm.RankEval.dcgSqlExpr} AS dcg
-                 FROM m)
-          SELECT family, q_id, first_hit, rr, dcg,
-                 dcg / CAST(${graft.llm.RankEval.IdcgLit} AS DOUBLE) AS ndcg
-          FROM md ORDER BY family, q_id""",
-    // the serve-version change feed (r13): per (family, q_id) top-10
-    // churn between the frozen-base and freshness serves — all exact
-    // integer counts/rank sums, the six family twins composed pairwise
-    "q_sim_rank_diff" ->
-      s"""SELECT * FROM (
-          ${rankDiffSql("ivf", ivfTrainedSql, ivfUpsertSql)}
-          UNION ALL ${rankDiffSql("graph", graphSearchSql, graphUpsertSql)}
-          UNION ALL ${rankDiffSql("binary", binaryTopkSql, binaryUpsertSql)}
-          UNION ALL ${rankDiffSql("ivfpq", ivfPqRerankSql, ivfPqUpsertRerankSql)}
-          UNION ALL ${rankDiffSql("fused", fusedSql, fusedUpsertSql)}
-          UNION ALL ${rankDiffSql("hybrid", hybridTopkSql, hybridUpsertSql)})
-          ORDER BY family, q_id""",
-    // curriculum ordering: stage quartiles from the logit histogram (ceil
-    // via (a + n - 1) // n — BIGINTs in both engines), content-hash shard
-    // + within-(stage, shard) row_number
-    "q_curriculum_order" ->
-      s"""WITH $curriculumCtes
-          SELECT doc_id, stage, shard, seq
-          FROM crr ORDER BY stage, shard, seq""",
-    // the dataloader's end-to-end artifact: packed-bin coordinates of
-    // every train chunk joined to the parent doc's curriculum position —
-    // the chunk/pack CTEs (first-wins chunk dedup over the shared chks
-    // frame, per-source running-sum bins over the FULL stream) composed
-    // with the curriculum chain and the content-keyed train filter
-    "q_curriculum_pack" ->
-      s"""WITH $chunkCtes,
-          u AS (SELECT doc_id, chunk_idx, source, n_tokens,
-                       $packShardSql AS pack_shard FROM (
-                  SELECT chks.*, row_number() OVER (PARTITION BY chunk_hash
-                    ORDER BY doc_id, chunk_idx) AS rn FROM chks)
-                WHERE rn = 1),
-          p AS (SELECT doc_id, chunk_idx, source, pack_shard, n_tokens,
-                  COALESCE(CAST(SUM(n_tokens) OVER (PARTITION BY source, pack_shard
-                    ORDER BY doc_id, chunk_idx
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS tok_before
-                FROM u),
-          trn AS (SELECT doc_id FROM documents
-                  WHERE ${dTokHash("'split-v1' || '|' || coalesce(text, '')")} % 100 < 80),
-          $curriculumCtes
-          SELECT p.doc_id, p.chunk_idx, p.source, p.n_tokens,
-                 p.tok_before // ${graft.llm.Curation.PackBudget} AS bin_id,
-                 p.tok_before % ${graft.llm.Curation.PackBudget} AS bin_offset,
-                 o.stage, o.shard, o.seq, p.pack_shard
-          FROM p JOIN trn USING (doc_id) JOIN crr o ON o.doc_id = p.doc_id
-          ORDER BY o.stage, o.shard, o.seq, p.chunk_idx""",
-    // the pack-upsert twin: the SAME chunk/dedup/pack CTEs run per
-    // segment around the corpus cut — base pack identical to a base-only
-    // run (first-wins over the full stream restricted to base rows ≡ the
-    // base-time dedup, since base doc_ids precede the cut), delta bins
-    // start past each source's high-water base bin, the delta curriculum
-    // is its own addendum chain with stages offset by CurriculumStages
-    "q_curriculum_pack_upsert" ->
-      s"""WITH $chunkCtes,
-          u AS (SELECT doc_id, chunk_idx, source, n_tokens,
-                       $packShardSql AS pack_shard FROM (
-                  SELECT chks.*, row_number() OVER (PARTITION BY chunk_hash
-                    ORDER BY doc_id, chunk_idx) AS rn FROM chks)
-                WHERE rn = 1),
-          cutt AS (SELECT CAST(floor(count(*) * ${graft.llm.Segments.BaseFrac}) AS BIGINT) AS t
-                   FROM documents),
-          ub AS (SELECT u.* FROM u, cutt WHERE doc_id < t),
-          ud AS (SELECT u.* FROM u, cutt WHERE doc_id >= t),
-          pb AS (SELECT doc_id, chunk_idx, source, pack_shard, n_tokens,
-                   COALESCE(CAST(SUM(n_tokens) OVER (PARTITION BY source, pack_shard
-                     ORDER BY doc_id, chunk_idx
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS tok_before
-                 FROM ub),
-          pbb AS (SELECT doc_id, chunk_idx, source, pack_shard, n_tokens,
-                    tok_before // ${graft.llm.Curation.PackBudget} AS bin_id,
-                    tok_before % ${graft.llm.Curation.PackBudget} AS bin_offset,
-                    CAST(0 AS BIGINT) AS is_new
-                  FROM pb),
-          hw AS (SELECT source, pack_shard, MAX(bin_id) AS hw_bin
-                 FROM pbb GROUP BY source, pack_shard),
-          pd0 AS (SELECT doc_id, chunk_idx, source, pack_shard, n_tokens,
-                    COALESCE(CAST(SUM(n_tokens) OVER (PARTITION BY source, pack_shard
-                      ORDER BY doc_id, chunk_idx
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS tok_before
-                  FROM ud),
-          pdd AS (SELECT pd0.doc_id, pd0.chunk_idx, pd0.source, pd0.pack_shard, pd0.n_tokens,
-                    COALESCE(hw_bin + 1, 0) + tok_before // ${graft.llm.Curation.PackBudget} AS bin_id,
-                    tok_before % ${graft.llm.Curation.PackBudget} AS bin_offset,
-                    CAST(1 AS BIGINT) AS is_new
-                  FROM pd0 LEFT JOIN hw USING (source, pack_shard)),
-          pall AS (SELECT * FROM pbb UNION ALL SELECT * FROM pdd),
-          trn AS (SELECT doc_id FROM documents
-                  WHERE ${dTokHash("'split-v1' || '|' || coalesce(text, '')")} % 100 < 80),
-          ${curriculumCtesFor("cb", "doc_id < (SELECT t FROM cutt)")},
-          ${curriculumCtesFor("cd", "doc_id >= (SELECT t FROM cutt)")},
-          crru AS (SELECT doc_id, stage, shard, seq FROM crrcb
-                   UNION ALL
-                   SELECT doc_id, stage + ${graft.llm.Curation.CurriculumStages} AS stage,
-                          shard, seq FROM crrcd)
-          SELECT p.doc_id, p.chunk_idx, p.source, p.n_tokens,
-                 p.bin_id, p.bin_offset, o.stage, o.shard, o.seq, p.is_new,
-                 p.pack_shard
-          FROM pall p JOIN trn USING (doc_id) JOIN crru o ON o.doc_id = p.doc_id
-          ORDER BY o.stage, o.shard, o.seq, p.chunk_idx""",
-    // the ensemble freshness twin: the three UPSERT member twins fused
-    // with the identical fixed-order RRF; is_new re-derives from the
-    // shared base cut (one scalar CTE), not from the members' flags
-    "q_sim_fused_upsert" -> fusedUpsertSql,
-    // the freshness rank audit: the same six-family MRR/nDCG chain as
-    // q_sim_rank_quality, over the upsert member twins (and the fused /
-    // hybrid freshness twins), against the same full-corpus exact sides
-    "q_sim_rank_quality_upsert" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          exact_l2 AS (SELECT q_id, n_id FROM ($bruteL2Sql)),
-          m_ivf AS (${rankMetricsCte("ivf", ivfUpsertSql)}),
-          m_graph AS (${rankMetricsCte("graph", graphUpsertSql)}),
-          m_bin AS (${rankMetricsCte("binary", binaryUpsertSql)}),
-          m_fused AS (${rankMetricsCte("fused", fusedUpsertSql)}),
-          m_ivfpq AS (${rankMetricsCte("ivfpq", ivfPqUpsertRerankSql, "exact_l2")}),
-          m_hybrid AS (${rankMetricsCte("hybrid", hybridUpsertSql)}),
-          m AS (SELECT * FROM m_ivf UNION ALL SELECT * FROM m_graph
-                UNION ALL SELECT * FROM m_bin UNION ALL SELECT * FROM m_fused
-                UNION ALL SELECT * FROM m_ivfpq UNION ALL SELECT * FROM m_hybrid),
-          md AS (SELECT family, q_id, first_hit, rr,
-                        ${graft.llm.RankEval.dcgSqlExpr} AS dcg
-                 FROM m)
-          SELECT family, q_id, first_hit, rr, dcg,
-                 dcg / CAST(${graft.llm.RankEval.IdcgLit} AS DOUBLE) AS ndcg
-          FROM md ORDER BY family, q_id""",
-    "q_retrieve_hybrid" -> hybridTopkSql,
-    // the hybrid's tower ablation: recall@10 of lex-only / dense-only /
-    // fused, all three candidate frames from the shared hybrid CTE chain
-    "q_retrieve_sweep" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          ${hybridSqlCtes(ivfTrainedSql)},
-          cand AS (SELECT 'dense' AS tower, q_id, n_id FROM hd
-                   UNION ALL SELECT 'hybrid', q_id, n_id FROM hr WHERE "rank" <= 10
-                   UNION ALL SELECT 'lex', q_id, n_id FROM hl),
-          tw AS (SELECT unnest(['dense', 'hybrid', 'lex']) AS tower),
-          hits AS (SELECT c.tower, count(*) AS n_hit
-                   FROM cand c JOIN exact e
-                     ON c.q_id = e.q_id AND c.n_id = e.n_id
-                   GROUP BY 1),
-          ne AS (SELECT count(*) AS n_exact FROM exact)
-          SELECT t.tower, CAST(ne.n_exact AS BIGINT) AS n_exact,
-                 CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-                 CAST(coalesce(h.n_hit, 0) AS DOUBLE)
-                   / CAST(ne.n_exact AS DOUBLE) AS recall
-          FROM tw t LEFT JOIN hits h USING (tower), ne
-          ORDER BY tower""",
-    // the two-tower freshness twin: the same lexical CTEs (the merged
-    // snapshot equals the full-corpus counts bit-for-bit) fused with the
-    // frozen-centroid dense upsert twin; per-tower staleness flags
-    "q_retrieve_hybrid_upsert" -> hybridUpsertSql,
-    // recall@10 audit of the two-tower hybrid vs the exact cosine top-10
-    // (VERDICT r9 item 2): both sides are already-oracle-checked twins;
-    // hit counts are integers, recall one IEEE division
-    "q_retrieve_recall" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          approx AS (SELECT q_id, n_id FROM ($hybridTopkSql)),
-          h AS (SELECT e.q_id, count(*) AS n_exact,
-                       CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                FROM exact e LEFT JOIN approx a
-                  ON e.q_id = a.q_id AND e.n_id = a.n_id
-                GROUP BY 1)
-          SELECT q_id, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM h ORDER BY q_id""",
-    // ensemble ablation twin: the k=1 fused top-10 IS the ivf top-10 (rrf
-    // is monotone in one rank), k=2/3 are the fixed-order coalesce fusions;
-    // hit counts aggregate over all queries into one row per member count
-    "q_sim_fused_sweep" -> {
-      val k = graft.llm.Fusion.FusionK
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          fi AS (SELECT q_id, n_id, "rank" AS r_ivf FROM ($ivfTrainedSql)),
-          fg AS (SELECT q_id, n_id, "rank" AS r_graph FROM ($graphSearchSql)),
-          fb AS (SELECT q_id, n_id, "rank" AS r_bin FROM ($binaryTopkSql)),
-          f2 AS (SELECT q_id, n_id,
-                        coalesce(CAST(1 AS DOUBLE) / ($k + r_ivf), CAST(0 AS DOUBLE)) +
-                        coalesce(CAST(1 AS DOUBLE) / ($k + r_graph), CAST(0 AS DOUBLE)) AS rrf
-                 FROM fi FULL OUTER JOIN fg USING (q_id, n_id)),
-          t2 AS (SELECT q_id, n_id FROM (
-                   SELECT *, row_number() OVER (PARTITION BY q_id
-                     ORDER BY rrf DESC, n_id) AS rn FROM f2)
-                 WHERE rn <= 10),
-          f3 AS (SELECT q_id, n_id,
-                        coalesce(CAST(1 AS DOUBLE) / ($k + r_ivf), CAST(0 AS DOUBLE)) +
-                        coalesce(CAST(1 AS DOUBLE) / ($k + r_graph), CAST(0 AS DOUBLE)) +
-                        coalesce(CAST(1 AS DOUBLE) / ($k + r_bin), CAST(0 AS DOUBLE)) AS rrf
-                 FROM fi FULL OUTER JOIN fg USING (q_id, n_id)
-                 FULL OUTER JOIN fb USING (q_id, n_id)),
-          t3 AS (SELECT q_id, n_id FROM (
-                   SELECT *, row_number() OVER (PARTITION BY q_id
-                     ORDER BY rrf DESC, n_id) AS rn FROM f3)
-                 WHERE rn <= 10),
-          h1 AS (SELECT CAST(1 AS BIGINT) AS n_members, count(*) AS n_exact,
-                        CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                 FROM exact e LEFT JOIN fi a ON e.q_id = a.q_id AND e.n_id = a.n_id),
-          h2 AS (SELECT CAST(2 AS BIGINT) AS n_members, count(*) AS n_exact,
-                        CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                 FROM exact e LEFT JOIN t2 a ON e.q_id = a.q_id AND e.n_id = a.n_id),
-          h3 AS (SELECT CAST(3 AS BIGINT) AS n_members, count(*) AS n_exact,
-                        CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                 FROM exact e LEFT JOIN t3 a ON e.q_id = a.q_id AND e.n_id = a.n_id)
-          SELECT n_members, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM (SELECT * FROM h1 UNION ALL SELECT * FROM h2 UNION ALL SELECT * FROM h3)
-          ORDER BY n_members"""
-    },
-    // weighted-ensemble twin: the leave-one-out decision replays in SQL —
-    // four candidate fusions on the tune half (q_id even) against exact,
-    // keep flags as one scalar row (>= keeps on ties; all-dropped falls
-    // back to all-kept), then ONE three-way-join fusion whose terms are
-    // CASE-gated by the flags: dropped/absent terms add an explicit
-    // CAST(0 AS DOUBLE), so the sum is the Spark fold bit-for-bit
-    "q_sim_fused_weighted" -> {
-      val k = graft.llm.Fusion.FusionK
-      def term(r: String, keepFlag: String) =
-        s"CASE WHEN $keepFlag THEN coalesce(CAST(1 AS DOUBLE) / ($k + $r), CAST(0 AS DOUBLE)) ELSE CAST(0 AS DOUBLE) END"
-      def tuneTop(name: String, kIvf: Boolean, kG: Boolean, kB: Boolean) = {
-        def t(r: String, on: Boolean) =
-          if (on) s"coalesce(CAST(1 AS DOUBLE) / ($k + $r), CAST(0 AS DOUBLE))"
-          else "CAST(0 AS DOUBLE)"
-        s"""$name AS (SELECT q_id, n_id FROM (
-              SELECT q_id, n_id,
-                     row_number() OVER (PARTITION BY q_id ORDER BY
-                       ${t("r_ivf", kIvf)} + ${t("r_graph", kG)} + ${t("r_bin", kB)} DESC,
-                       n_id) AS rn
-              FROM fj WHERE q_id % 2 = 0)
-            WHERE rn <= 10)"""
-      }
-      def hitsOf(src: String) =
-        s"""(SELECT count(*) FROM $src t
-             JOIN (SELECT q_id, n_id FROM ($simTopkSql)) e
-               ON t.q_id = e.q_id AND t.n_id = e.n_id)"""
-      s"""WITH fi AS (SELECT q_id, n_id, "rank" AS r_ivf FROM ($ivfTrainedSql)),
-          fg AS (SELECT q_id, n_id, "rank" AS r_graph FROM ($graphSearchSql)),
-          fb AS (SELECT q_id, n_id, "rank" AS r_bin FROM ($binaryTopkSql)),
-          fj AS (SELECT q_id, n_id, r_ivf, r_graph, r_bin
-                 FROM fi
-                 FULL OUTER JOIN fg USING (q_id, n_id)
-                 FULL OUTER JOIN fb USING (q_id, n_id)),
-          ${tuneTop("tall", kIvf = true, kG = true, kB = true)},
-          ${tuneTop("tgb", kIvf = false, kG = true, kB = true)},
-          ${tuneTop("tib", kIvf = true, kG = false, kB = true)},
-          ${tuneTop("tig", kIvf = true, kG = true, kB = false)},
-          rawdec AS (SELECT ${hitsOf("tall")} >= ${hitsOf("tgb")} AS r_keep_ivf,
-                            ${hitsOf("tall")} >= ${hitsOf("tib")} AS r_keep_g,
-                            ${hitsOf("tall")} >= ${hitsOf("tig")} AS r_keep_b),
-          dec AS (SELECT r_keep_ivf OR NOT (r_keep_ivf OR r_keep_g OR r_keep_b) AS keep_ivf,
-                         r_keep_g OR NOT (r_keep_ivf OR r_keep_g OR r_keep_b) AS keep_g,
-                         r_keep_b OR NOT (r_keep_ivf OR r_keep_g OR r_keep_b) AS keep_b
-                  FROM rawdec),
-          fw AS (SELECT q_id, n_id,
-                        ${term("r_ivf", "keep_ivf")} +
-                        ${term("r_graph", "keep_g")} +
-                        ${term("r_bin", "keep_b")} AS rrf,
-                        concat_ws(',', CASE WHEN keep_ivf THEN 'ivf' END,
-                                       CASE WHEN keep_g THEN 'graph' END,
-                                       CASE WHEN keep_b THEN 'bin' END) AS kept
-                 FROM fj, dec),
-          fr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                   ORDER BY rrf DESC, n_id) AS BIGINT) AS "rank" FROM fw)
-          SELECT q_id, n_id, rrf, "rank", kept FROM fr
-          WHERE "rank" <= 10 ORDER BY q_id, "rank""""
-    },
-    "q_sim_fused_recall" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          fi AS (SELECT q_id, n_id, "rank" AS r_ivf FROM ($ivfTrainedSql)),
-          fg AS (SELECT q_id, n_id, "rank" AS r_graph FROM ($graphSearchSql)),
-          fb AS (SELECT q_id, n_id, "rank" AS r_bin FROM ($binaryTopkSql)),
-          fj AS (SELECT q_id, n_id, r_ivf, r_graph, r_bin
-                 FROM fi
-                 FULL OUTER JOIN fg USING (q_id, n_id)
-                 FULL OUTER JOIN fb USING (q_id, n_id)),
-          fs AS (SELECT q_id, n_id,
-                        coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_ivf), CAST(0 AS DOUBLE)) +
-                        coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_graph), CAST(0 AS DOUBLE)) +
-                        coalesce(CAST(1 AS DOUBLE) / (${graft.llm.Fusion.FusionK} + r_bin), CAST(0 AS DOUBLE)) AS rrf
-                 FROM fj),
-          approx AS (SELECT q_id, n_id FROM (
-                       SELECT *, row_number() OVER (PARTITION BY q_id
-                         ORDER BY rrf DESC, n_id) AS rn FROM fs)
-                     WHERE rn <= 10),
-          h AS (SELECT e.q_id, count(*) AS n_exact,
-                       CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                FROM exact e LEFT JOIN approx a
-                  ON e.q_id = a.q_id AND e.n_id = a.n_id
-                GROUP BY 1)
-          SELECT q_id, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM h ORDER BY q_id""",
-    // recall@10 audit: both sides are the already-oracle-checked exact and
-    // trained-IVF queries; hit counts are integers, recall one IEEE division
-    "q_sim_recall" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          approx AS (SELECT q_id, n_id FROM ($ivfTrainedSql)),
-          h AS (SELECT e.q_id, count(*) AS n_exact,
-                       CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                FROM exact e LEFT JOIN approx a
-                  ON e.q_id = a.q_id AND e.n_id = a.n_id
-                GROUP BY 1)
-          SELECT q_id, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM h ORDER BY q_id""",
-    "q_sim_graph_recall" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          approx AS (SELECT q_id, n_id FROM ($graphSearchSql)),
-          h AS (SELECT e.q_id, count(*) AS n_exact,
-                       CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                FROM exact e LEFT JOIN approx a
-                  ON e.q_id = a.q_id AND e.n_id = a.n_id
-                GROUP BY 1)
-          SELECT q_id, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM h ORDER BY q_id""",
-    "q_sim_binary_recall" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($simTopkSql)),
-          approx AS (SELECT q_id, n_id FROM ($binaryTopkSql)),
-          h AS (SELECT e.q_id, count(*) AS n_exact,
-                       CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                FROM exact e LEFT JOIN approx a
-                  ON e.q_id = a.q_id AND e.n_id = a.n_id
-                GROUP BY 1)
-          SELECT q_id, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM h ORDER BY q_id""",
-    // contrastive pair mining (twin of llm/Mining): same cosine operands
-    // as simTopkSql, label predicates in the candidate joins
-    "q_mine_hard_negatives" -> mineHardNegSql,
-    "q_mine_hard_negatives_ivf" -> mineHardNegIvfSql,
-    "q_mine_recall" ->
-      s"""WITH exact AS (SELECT q_id, n_id FROM ($mineHardNegSql)),
-          approx AS (SELECT q_id, n_id FROM ($mineHardNegIvfSql)),
-          h AS (SELECT e.q_id, count(*) AS n_exact,
-                       CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-                FROM exact e LEFT JOIN approx a
-                  ON e.q_id = a.q_id AND e.n_id = a.n_id
-                GROUP BY 1)
-          SELECT q_id, n_exact, n_hit,
-                 CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE) AS recall
-          FROM h ORDER BY q_id""",
-    "q_mine_triplets" ->
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, embedding,
-                            ${dNorm("embedding")} AS nrm FROM embeddings),
-          q AS (SELECT vec_id AS q_id, label AS q_label, embedding AS q_emb,
-                       nrm AS q_nrm FROM e WHERE vec_id < 8),
-          sc AS (SELECT q.q_id, q.q_label, e.vec_id, e.label,
-                        ${dDot("q_emb", "embedding")} / (q_nrm * nrm) AS cos
-                 FROM e, q WHERE e.vec_id <> q.q_id),
-          p AS (SELECT q_id, vec_id AS pos_id, cos AS pos_cos,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, vec_id) AS pr
-                FROM sc WHERE label = q_label),
-          pos AS (SELECT q_id, pos_id, pos_cos FROM p WHERE pr = 1),
-          nc AS (SELECT s.q_id, pos.pos_id, pos.pos_cos,
-                        s.vec_id AS neg_id, s.cos AS neg_cos
-                 FROM sc s JOIN pos ON s.q_id = pos.q_id
-                 WHERE s.label <> s.q_label AND s.cos < pos.pos_cos),
-          nr AS (SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-                     ORDER BY neg_cos DESC, neg_id) AS BIGINT) AS "rank" FROM nc)
-          SELECT q_id, pos_id, pos_cos, neg_id, neg_cos,
-                 pos_cos - neg_cos AS margin, "rank"
-          FROM nr WHERE "rank" <= ${graft.llm.Mining.TripletNegK}
-          ORDER BY q_id, "rank"""",
-    // data-constrained epoch schedule (twin of Curation.mixEpochs);
-    // HUGEINT staging mirrors the Spark DECIMAL(38,0) overflow discipline
-    "q_mix_epochs" ->
-      s"""WITH $mixEpochsCtes
-          SELECT lang, n_docs, avail_tokens, alloc_tokens, epochs_ppm,
-                 CAST((CAST(avail_tokens AS HUGEINT) * epochs_ppm) // 1000000 AS BIGINT)
-                   AS planned_tokens
-          FROM k ORDER BY lang""",
-    // schedule materialization (twin of Curation.mixApply): full epochs +
-    // md5-lottery fractional epoch, realized-vs-planned audit
-    "q_mix_apply" ->
-      s"""WITH $mixEpochsCtes,
-          sched AS (SELECT lang, epochs_ppm,
-                           CAST((CAST(avail_tokens AS HUGEINT) * epochs_ppm) // 1000000 AS BIGINT)
-                             AS planned_tokens
-                    FROM k),
-          d AS (SELECT doc_id, lang,
-                       len(string_split(coalesce(text, ''), ' ')) AS toks
-                FROM documents),
-          sc AS (SELECT d.doc_id, d.lang, d.toks,
-                        s.epochs_ppm // 1000000 AS full_epochs,
-                        s.epochs_ppm % 1000000 AS rem_ppm
-                 FROM d JOIN sched s USING (lang)),
-          sc2 AS (SELECT *, CASE WHEN
-                    ${dTokHash("'mix-v1:' || CAST(doc_id AS VARCHAR) || ':' || CAST(full_epochs AS VARCHAR)")}
-                      % 1000000 < rem_ppm THEN 1 ELSE 0 END AS extra
-                  FROM sc),
-          rws AS (SELECT doc_id, lang, toks,
-                         unnest(generate_series(0, CAST(full_epochs + extra - 1 AS BIGINT)))
-                           AS epoch_idx
-                  FROM sc2 WHERE full_epochs + extra > 0),
-          realized AS (SELECT lang, count(*) AS n_rows,
-                              CAST(sum(toks) AS BIGINT) AS realized_tokens
-                       FROM rws GROUP BY 1)
-          SELECT s.lang, s.epochs_ppm, s.planned_tokens,
-                 COALESCE(r.n_rows, 0) AS n_rows,
-                 COALESCE(r.realized_tokens, 0) AS realized_tokens,
-                 CAST((CAST(abs(COALESCE(r.realized_tokens, 0) - s.planned_tokens) AS HUGEINT)
-                       * 1000000) // greatest(s.planned_tokens, 1) AS BIGINT) AS gap_ppm
-          FROM sched s LEFT JOIN realized r USING (lang) ORDER BY s.lang""",
-    "q_sim_ivf_sweep" -> ivfSweepSql,
-    // tokenizer fertility (twin of TextAnalysis.fertility): the bpeApply
-    // |sym| encoding + replace chain, aggregated per language
-    "q_text_fertility" -> {
-      val encD = """regexp_replace(replace(p, ' ', '_'), '(.)', '|\1|', 'g')"""
-      val foldedD = graft.llm.TextAnalysis.BpeMerges.foldLeft(encD) {
-        case (e, (l, r)) => s"replace($e, '|$l||$r|', '|$l$r|')"
-      }
-      val cntD = s"(length($foldedD) - length(replace($foldedD, '|', ''))) // 2"
-      val pat = graft.llm.TextAnalysis.BpePattern.replace("'", "''")
-      s"""WITH x AS (SELECT lang, length(text) AS chars,
-                            len(string_split(text, ' ')) AS ws,
-                            regexp_extract_all(text, '$pat') AS pieces
-                     FROM documents),
-          y AS (SELECT lang, chars, ws,
-                       CAST(COALESCE(list_sum([$cntD for p in pieces]), 0) AS BIGINT) AS bpe
-                FROM x),
-          g AS (SELECT lang, count(*) AS n_docs,
-                       CAST(sum(chars) AS BIGINT) AS total_chars,
-                       CAST(sum(ws) AS BIGINT) AS total_ws_tokens,
-                       CAST(sum(bpe) AS BIGINT) AS total_bpe_tokens
-                FROM y GROUP BY 1)
-          SELECT lang, n_docs, total_chars, total_ws_tokens, total_bpe_tokens,
-                 CAST(total_bpe_tokens AS DOUBLE) / CAST(total_ws_tokens AS DOUBLE) AS fertility,
-                 CAST(total_chars AS DOUBLE) / CAST(total_bpe_tokens AS DOUBLE) AS chars_per_token
-          FROM g ORDER BY lang"""
-    },
-    // export-shard manifest (twin of Curation.shardManifest): md5 lottery
-    // mod the supply-derived shard count
-    "q_export_shards" ->
-      s"""WITH d AS (SELECT doc_id,
-                            len(string_split(coalesce(text, ''), ' ')) AS toks
-                     FROM documents),
-          tot AS (SELECT CAST(sum(toks) AS BIGINT) AS total_tokens FROM d),
-          sh AS (SELECT doc_id, toks,
-                        ${dTokHash("'shard-v1:' || CAST(doc_id AS VARCHAR)")}
-                          % greatest(total_tokens // ${graft.llm.Curation.ShardTokens}, 1)
-                          AS shard_id
-                 FROM d, tot)
-          SELECT shard_id, count(*) AS n_docs,
-                 CAST(sum(toks) AS BIGINT) AS n_tokens,
-                 (CAST(sum(toks) AS BIGINT) * 1000000)
-                   // ${graft.llm.Curation.ShardTokens} AS fill_ppm
-          FROM sh GROUP BY 1 ORDER BY shard_id""",
-  )
-
-  /** Sequential squared-euclidean fold (twin of Clustering.dist2Sql —
-    * list_sum runs the same left-to-right IEEE op order as Spark's
-    * aggregate-over-zip_with). */
-  private def dDist2(x: String, c: String): String =
-    s"list_sum([(CAST($x[i] AS DOUBLE) - $c[i]) * (CAST($x[i] AS DOUBLE) - $c[i]) for i in generate_series(1, len($x))])"
-
-  /** Shared k-means CTE pipeline (DuckDB twin of graft.llm.Clustering):
-    * e/c0 (seed = vec_id 0..K-1) → d1/a1 (round-1 assign) → s1/u1/c1
-    * (integer-scaled recenter, empty clusters coalesce to the previous
-    * centroid) → dd2/a2 (round-2 assign). */
-  private def kmeansCtes(tail: String): String = {
-    val S = Similarity.MeanScale
-    val K = graft.llm.Clustering.K
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        c0 AS (SELECT vec_id AS cluster,
-                      [CAST(embedding[i] AS DOUBLE) for i in generate_series(1, len(embedding))] AS cemb
-               FROM embeddings WHERE vec_id < $K),
-        d1 AS (SELECT e.vec_id, e.embedding, c.cluster,
-                      ${dDist2("e.embedding", "c.cemb")} AS d2
-               FROM e, c0 c),
-        a1 AS (SELECT vec_id, embedding, cluster FROM
-                 (SELECT vec_id, embedding, cluster,
-                         row_number() OVER (PARTITION BY vec_id
-                           ORDER BY d2, cluster) AS rn FROM d1)
-               WHERE rn = 1),
-        s1 AS (SELECT cluster, d,
-                      SUM(CAST(CAST(embedding[d] AS DOUBLE) * $S AS BIGINT)) AS sm,
-                      COUNT(*) AS n
-               FROM a1, generate_series(1, 64) AS g(d) GROUP BY 1, 2),
-        u1 AS (SELECT cluster,
-                      list(CAST(CAST(sm AS VARCHAR) AS DOUBLE)
-                        / (CAST(n AS DOUBLE) * $S) ORDER BY d) AS cemb
-               FROM s1 GROUP BY 1),
-        c1 AS (SELECT p.cluster, COALESCE(u.cemb, p.cemb) AS cemb
-               FROM c0 p LEFT JOIN u1 u USING (cluster)),
-        dd2 AS (SELECT e.vec_id, c.cluster,
-                       ${dDist2("e.embedding", "c.cemb")} AS d2
-                FROM e, c1 c),
-        a2 AS (SELECT vec_id, cluster, d2 FROM
-                 (SELECT vec_id, cluster, d2,
-                         row_number() OVER (PARTITION BY vec_id
-                           ORDER BY d2, cluster) AS rn FROM dd2)
-               WHERE rn = 1)
-        $tail"""
+  /** The union of `families` as a map. A name defined twice, within one
+    * family or across two, throws instead of letting the later twin win. */
+  private[graft] def disjoint(families: Seq[(String, String)]*): Map[String, String] = {
+    val all = families.flatten
+    val twice = all.groupBy(_._1).collect { case (k, v) if v.size > 1 => k }
+    require(twice.isEmpty, s"oracle twin defined twice: ${twice.toSeq.sorted.mkString(", ")}")
+    all.toMap
   }
 }

@@ -20,6 +20,20 @@ class QueriesSpec extends SparkSpec {
     assert(orphans.isEmpty, s"oracle SQL without query: $orphans")
   }
 
+  test("exactly the four engine-specific sketch queries have no oracle") {
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
+      Set("q_active_users_sketch", "q_agg_approx_distinct",
+        "q_agg_percentile_approx", "q_agg_sketch_merge"))
+  }
+
+  test("an oracle name defined twice throws instead of shadowing") {
+    val a = Seq("q_x" -> "SELECT 1")
+    assert(SparkEntry.disjoint(a, Seq("q_y" -> "SELECT 2")).keySet == Set("q_x", "q_y"))
+    val across = intercept[IllegalArgumentException](SparkEntry.disjoint(a, Seq("q_x" -> "SELECT 2")))
+    assert(across.getMessage.contains("q_x"))
+    intercept[IllegalArgumentException](SparkEntry.disjoint(a ++ a))
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sf)

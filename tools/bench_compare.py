@@ -7,8 +7,9 @@ emits per-query calibrated ratios against EACH baseline, the medians
 that matter (the machine has uniform noise phases, so the per-query
 calibrated MEDIAN across mostly-untouched queries is the only trustable
 total-movement signal), and flags every >= threshold reading so it can
-be adjudicated with a same-phase standalone Prof run instead of being
-mistaken for a regression.
+be adjudicated with a same-phase standalone run of that query
+(`graft.Bench <query>`, SPARK_GRAFT_REPS reps) instead of being mistaken
+for a regression.
 
 Artifacts are the FULL bench dumps (bench_out_sf0.1.json — the file the
 `full` field of the stdout line points at). A baseline from an earlier
@@ -21,9 +22,9 @@ Usage:
       [--adjudicated=q_name=prof_secs,q_name2=prof_secs]
       [--json]
 
---adjudicated records same-phase standalone Prof medians for flagged
-queries: the flag line then shows the Prof-based ratio next to the
-artifact ratio, and the markdown marks the reading adjudicated.
+--adjudicated records same-phase standalone medians for flagged queries:
+the flag line then shows the standalone ratio next to the artifact ratio,
+and the markdown marks the reading adjudicated.
 """
 import json
 import statistics
@@ -112,7 +113,7 @@ def main(argv):
             f = {"query": q, "cand_sec": cq[q], "base_sec": bq[q],
                  "calibrated_ratio": round(r, 3)}
             if q in adjudicated:
-                # same-phase standalone Prof median, calibrated the same way
+                # same-phase standalone median, calibrated the same way
                 f["prof_sec"] = adjudicated[q]
                 f["prof_ratio"] = round((adjudicated[q] / ccal)
                                         / (bq[q] / bcal), 3)
@@ -153,10 +154,10 @@ def main(argv):
         if not b["flags"]:
             print(f"- no calibrated reading >= {threshold}x")
         for f in b["flags"]:
-            adj = (f" — ADJUDICATED: same-phase Prof {f['prof_sec']} s "
+            adj = (f" — ADJUDICATED: same-phase standalone {f['prof_sec']} s "
                    f"-> ratio {f['prof_ratio']}" if f["adjudicated"]
                    else " — UNADJUDICATED: run "
-                        f"`sbt \"runMain graft.Prof {f['query']}\"` in the "
+                        f"`sbt \"runMain graft.Bench {f['query']}\"` in the "
                         "same phase before calling it a regression")
             print(f"- FLAG {f['query']}: {f['base_sec']} -> {f['cand_sec']} s "
                   f"(calibrated {f['calibrated_ratio']}x){adj}")

@@ -2,6 +2,7 @@
 """Dev-only local oracle harness (mirrors the driver's DuckDB compare).
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--digests <file>]
+       python3 tools/check.py --same-sql <before/oracle_sql.json> <after/oracle_sql.json>
 Reads each <outDir>/<name> parquet (Spark output) and runs the matching
 oracle SQL from <outDir>/oracle_sql.json in DuckDB over the sfDir tables,
 then compares schema + values with columns sorted by name.
@@ -11,6 +12,13 @@ columns sorted by name, rows sorted by all columns, each value normalized
 as the compare does. `--digests <file>` also writes {name: digest} for
 every output dir (no-oracle rows included) as JSON, so two Verify runs
 compare by diffing their digest files.
+
+`--same-sql` compares two oracle_sql.json files query by query and calls
+each one `identical`, `whitespace-only` (equal once every run of
+whitespace outside '...' and "..." literals is one space) or `different`.
+A `--` comment outside a literal makes any change `different`: joining two
+lines would change what the comment covers. It exits 1 on any `different`
+query or any key present on one side only.
 """
 import sys, json, math, glob, os, hashlib
 import duckdb
@@ -137,8 +145,54 @@ def main(sf_dir, out_dir, digests_path=None):
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} no-oracle")
     return 1 if n_fail else 0
 
+def squeeze(sql):
+    """(sql with whitespace runs outside literals collapsed, has a comment)."""
+    out, quote, comment, i = [], None, False, 0
+    while i < len(sql):
+        c = sql[i]
+        if quote:
+            out.append(c)
+            if c == quote:
+                quote = None
+        elif c in "'\"":
+            out.append(c)
+            quote = c
+        elif c.isspace():
+            while i + 1 < len(sql) and sql[i + 1].isspace():
+                i += 1
+            out.append(" ")
+        else:
+            comment |= sql.startswith("--", i)
+            out.append(c)
+        i += 1
+    return "".join(out).strip(), comment
+
+def same_sql(before_path, after_path):
+    before = json.load(open(before_path))
+    after = json.load(open(after_path))
+    counts = {"identical": 0, "whitespace-only": 0, "different": 0}
+    for name in sorted(before.keys() & after.keys()):
+        a, b = before[name], after[name]
+        if a == b:
+            kind = "identical"
+        else:
+            (sa, ca), (sb, cb) = squeeze(a), squeeze(b)
+            kind = "whitespace-only" if sa == sb and not (ca or cb) else "different"
+        counts[kind] += 1
+        print(f"{kind} {name}")
+    only = ([f"only-before {n}" for n in sorted(before.keys() - after.keys())] +
+            [f"only-after {n}" for n in sorted(after.keys() - before.keys())])
+    for line in only:
+        print(line)
+    print(f"\n{counts['identical']} identical, {counts['whitespace-only']} "
+          f"whitespace-only, {counts['different']} different, "
+          f"{len(only)} keys on one side only")
+    return 1 if counts["different"] or only else 0
+
 if __name__ == "__main__":
     args = sys.argv[1:]
+    if args and args[0] == "--same-sql":
+        sys.exit(same_sql(args[1], args[2]))
     digests_path = None
     if "--digests" in args:
         i = args.index("--digests")
