@@ -37,21 +37,20 @@ object ScaleBench {
       // ——— k-means passes ———
       val e0 = Tables.t(spark, dir, "embeddings").select("vec_id", "embedding")
       val maxId = e0.agg(max("vec_id")).collect()(0).getLong(0) + 1L
-      val cents = e0.filter(col("vec_id") < graft.llm.Clustering.K)
-        .select(col("vec_id").as("cluster"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("c_emb"))
-        .localCheckpoint()
+      val km = graft.llm.Clustering
+      val seed = e0.filter(col("vec_id") < km.K).localCheckpoint()
+      val cents = km.clusters.seed(seed).localCheckpoint()
       for (m <- mults) {
         val e = (0 until m).map(i =>
           e0.select((col("vec_id") + lit(i * maxId)).as("vec_id"),
             col("embedding"))).reduce(_ unionByName _).localCheckpoint()
         val n = e.count()
-        val tAssign = med(graft.llm.Clustering.assign(e, cents).count())
-        // the recenter consumer must READ c_emb: a bare count() lets the
-        // optimizer ELIMINATE the aggregated right side of recenter's outer
-        // join (unique keys, no referenced columns) and times an 8-row scan
-        val tRecenter = med(graft.llm.Clustering
-          .recenter(graft.llm.Clustering.assign(e, cents), cents)
+        val tAssign = med(km.assign(km.clusters)(e, cents).count())
+        // one Lloyd round (assign + recenter) from the same seed; the
+        // consumer must READ c_emb: a bare count() lets the optimizer
+        // ELIMINATE the aggregated right side of recenter's outer join
+        // (unique keys, no referenced columns) and times an 8-row scan
+        val tRecenter = med(km.lloyd(km.clusters, e, seed, 1)()
           .select(expr("aggregate(c_emb, 0D, (a, x) -> a + x)").as("s"))
           .agg(sum(col("s"))).collect().length.toLong)
         println(f"[scalebench] kmeans m=$m%-3d n=$n%-8d assign=$tAssign%.2f s assign+recenter=$tRecenter%.2f s")

@@ -55,6 +55,22 @@ object Tables {
   /** Exact sum of a derived per-row double expression at scale 10, as double. */
   def dsum10(c: Column): Column = sum(c.cast(DecimalType(28, 10))).cast(DoubleType)
 
+  /** 2^48: every fixture float (components need ≤ 2^-43 resolution; 2^48
+    * leaves margin), and every value on the 2^-48 grid, times this scale
+    * is an exact integer. */
+  val MeanScale: Long = 1L << 48
+
+  /** Exact order-free mean: ⌊x·2^48⌋ summed as DECIMAL(38,0) (no row count
+    * overflows it), decimal → string → double, divided once by `n`·2^48
+    * (exact in double for any n < 2^53). A value on the 2^-48 grid loses
+    * nothing to the floor, any other value is quantized down to the grid,
+    * and the division is the one rounding, so the DuckDB twin's
+    * VARCHAR-mediated form gives the same bits in any row order. `n`
+    * defaults to the row count; `lit(1)` gives the exact sum. */
+  def exactMean(x: Column, n: Column = count(lit(1))): Column =
+    sum(floor(x.cast(DoubleType) * MeanScale.toDouble).cast(DecimalType(38, 0)))
+      .cast(StringType).cast(DoubleType) / (n.cast(DoubleType) * MeanScale.toDouble)
+
   /** Long-ns column → epoch milliseconds (integer division, truncating). */
   def nsToMs(name: String): Column = expr(s"$name div 1000000")
 

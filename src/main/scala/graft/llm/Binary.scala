@@ -30,14 +30,15 @@ import graft.Tables._
   *    of the signature ARE an LSH bucket id, so the same banding that
   *    bounds `q_sim_lsh` applies when a deployment wants to skip the scan.
   *
-  * Numeric discipline: the mean uses the 2^48-scaled exact-BIGINT sums
-  * (`Similarity.meanVector` — tie-free, order-free, overflow-staged in
-  * DECIMAL(38,0)); each bit is one strict `>` compare of two bit-exact
-  * doubles; the packed halves are exact integer sums of distinct powers of
-  * two. Signatures are split into two 32-bit halves so no engine ever
-  * shifts into a 64-bit sign bit (DuckDB raises on BIGINT overflow where
-  * two's-complement would wrap) — Hamming distance is the sum of two
-  * bit_count(xor(...)) calls on both engines, bit-identical. */
+  * Numeric discipline: the mean is Tables.exactMean per dimension
+  * (`Clustering.dimMeans`, as in `Similarity.meanVector` — tie-free,
+  * order-free, overflow-staged in DECIMAL(38,0)); each bit is one strict
+  * `>` compare of two bit-exact doubles; the packed halves are exact
+  * integer sums of distinct powers of two. Signatures are split into two
+  * 32-bit halves so no engine ever shifts into a 64-bit sign bit (DuckDB
+  * raises on BIGINT overflow where two's-complement would wrap) — Hamming
+  * distance is the sum of two bit_count(xor(...)) calls on both engines,
+  * bit-identical. */
 object Binary {
 
   /** Bits per signature half (two BIGINT halves cover the fixture's 64
@@ -51,23 +52,12 @@ object Binary {
     * convention). */
   val Shortlist = 50
 
-  private val S = Similarity.MeanScale
-
   /** Per-dimension corpus means as driver-side doubles (d-row metadata,
-    * the whitenVecs collection tier), bit-exact by the scaled-BIGINT
-    * discipline. */
+    * the whitenVecs collection tier), bit-exact by Clustering.dimMeans. */
   private def muArray(s: SparkSession, dir: String): Array[Double] =
-    t(s, dir, "embeddings")
-      .select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .select(col("i").cast("long").as("i"),
-        (col("xi").cast("double") * S).cast("long").as("sx"))
-      .groupBy("i")
-      .agg(sum(col("sx").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-        .as("ssx"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getLong(0),
-        r.getDecimal(1).doubleValue / (r.getLong(2).toDouble * S.toDouble)))
-      .sortBy(_._1).map(_._2)
+    Clustering.dimMeans(t(s, dir, "embeddings"), Nil, "embedding")
+      .select("pos", "mean").collect()
+      .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2)
 
   /** One packed half: sum over bit positions `off .. off+HalfBits-1` of
     * (x_i > mu_i) << (i - off). Exact integer arithmetic, bit i set iff the

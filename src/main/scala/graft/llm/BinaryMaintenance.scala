@@ -29,23 +29,15 @@ import graft.Tables._
 object BinaryMaintenance {
 
   private val NQueries = Binary.NQueries
-  private val S = Similarity.MeanScale
 
   private[llm] def muTarget(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "binary", "up_mu", dir, "embeddings")
 
-  /** Per-dimension means of an embeddings slice, by the scaled-BIGINT
-    * exact discipline (Binary.muArray's arithmetic with a slice filter). */
+  /** Per-dimension means (i, mu) of an embeddings slice, by
+    * Clustering.dimMeans (Binary.muArray's arithmetic with a slice filter). */
   private def sliceMeans(df: DataFrame): DataFrame =
-    df.select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .select(col("i").cast("long").as("i"),
-        (col("xi").cast("double") * S).cast("long").as("sx"))
-      .groupBy("i")
-      .agg(sum(col("sx").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-        .as("ssx"), count(lit(1)).as("n"))
-      .select(col("i"),
-        (col("ssx").cast("string").cast("double") /
-          (col("n").cast("double") * lit(S.toDouble))).as("mu"))
+    Clustering.dimMeans(df, Nil, "embedding")
+      .select(col("pos").cast("long").as("i"), col("mean").as("mu"))
 
   /** The FROZEN per-dimension means, trained on the base slice and
     * published once (d-row metadata; doubles round-trip parquet exactly). */
@@ -149,19 +141,13 @@ object BinaryMaintenance {
     val mu = publishedMu(s, dir, cut)
     val d = mu.length
     val seg = Segments.segment(col("vec_id"), cut)
+    // one row per (vector, dimension): the mean runs over n·d deviations
     val adev = graft.Tables.withBroadcastArray(
         t(s, dir, "embeddings"), "mu", mu.toSeq)
-      .select(col("vec_id"), expr(
-        s"""aggregate(transform(sequence(0, ${d - 1}), i ->
-              CAST(floor(abs(CAST(element_at(embedding, i + 1) AS DOUBLE)
-                             - element_at(mu, i + 1)) * ${S}L) AS BIGINT)),
-            CAST(0 AS BIGINT), (acc, v) -> acc + v)""").as("sadev"))
-      .groupBy(seg.as("segment"))
-      .agg(count(lit(1)).as("n"),
-        (sum(col("sadev").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("string").cast("double") /
-          (count(lit(1)).cast("double") * lit(d.toDouble) * lit(S.toDouble)))
-          .as("mean_adev"))
+      .select(seg.as("segment"), explode(expr(
+        "zip_with(embedding, mu, (x, m) -> abs(CAST(x AS DOUBLE) - m))")).as("adev"))
+      .groupBy("segment")
+      .agg(expr(s"count(1) div $d").as("n"), exactMean(col("adev")).as("mean_adev"))
     val bits = sigs.read(s, dir)
       .groupBy(seg.as("segment"))
       .agg((sum(expr("bit_count(h0) + bit_count(h1)")).cast("double") /

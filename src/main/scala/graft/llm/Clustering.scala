@@ -7,45 +7,43 @@ import graft.Tables._
 
 /** Distributed EUCLIDEAN k-means over the embedding corpus — the clustering
   * stage a training-data pipeline uses for domain discovery and semantic
-  * mix balancing (cluster → inspect → reweight). Complements the spherical
-  * form inside Similarity.trainCentroids (which exists to build an IVF
-  * index) by declaring the assignment itself as the product.
+  * mix balancing (cluster → inspect → reweight) — and the one Lloyd loop
+  * every trained index shares: k-means here, the spherical IVF cells
+  * (Similarity.trainCentroidsOn, cosine assign) and the PQ codebooks
+  * (Pq.lloydBooks, per subspace). A caller names its `Space` (code, group,
+  * point and centroid columns), its seed points, its recenter count and,
+  * for IVF, its own assign; the seeding, the exact recenter, the
+  * empty-centroid rule and the lineage policy live here once, mirroring
+  * oracle.Sql.lloyd on the DuckDB side.
   *
   * Shape, built for 100 TB:
   *   - centroids are DIMENSION-TIER state (k·d doubles — 4 KB here, ~1 MB
   *     at k=4096·d=1024) and BROADCAST each round, exactly like pagerank's
-  *     rank state and the IVF centroids;
+  *     rank state;
   *   - each Lloyd round is ONE pass over the corpus: vectors meet the
   *     broadcast centroid table in a nested-loop broadcast join (k rows per
   *     vector, never pairwise in N), the argmin is a per-vec window over
-  *     that map-side stream, and the recenter is a (cluster, dim)-keyed
+  *     that map-side stream, and the recenter is a (keys, dim)-keyed
   *     aggregate whose domain is k·d — work is O(N·d·k), shuffles are
   *     domain-keyed, nothing is driver-side;
-  *   - iteration count is FIXED (2 Lloyd rounds) so the declared query is
-  *     deterministic and oracle-expressible; production would loop the same
-  *     stages to convergence with a localCheckpoint per round (the
-  *     trainCentroids/pagerank discipline).
+  *   - round counts are FIXED so every declared query is deterministic and
+  *     oracle-expressible; the centroid frame is localCheckpointed between
+  *     rounds, so a longer loop keeps constant-size plans.
   *
-  * Exactness discipline (everything the DuckDB oracle hash-checks) — the
-  * same three tools the similarity family proved out:
+  * Exactness discipline (everything the DuckDB oracle hash-checks):
   *   - squared distances are SEQUENTIAL left-to-right double folds over the
   *     dims (the vec_dot/list_sum twin pair) — both engines run the
   *     identical IEEE op sequence, so the argmin is bit-safe; never a
   *     decimal cast of a full-mantissa double (scale-10 rounding of an
   *     irrational-ish value is a cross-engine coin flip, measured: 1 flip
   *     in ~500k casts);
-  *   - centroid means use the 2^48 integer-scaling trick
-  *     (Similarity.MeanScale): float-backed inputs times a power of two are
-  *     EXACT integers, so the per-dim sum is integer-exact and the mean is
-  *     one IEEE division;
-  *   - per-cluster mean distance quantizes d2 at 2^-48 by an explicit
-  *     floor — Spark's double→long truncation and DuckDB's
-  *     CAST(floor(...)) are then the same exact integer;
-  *   - argmin ties break on the lower cluster id (row_number, total order);
-  *   - empty clusters keep their previous centroid (left-join coalesce,
-  *     the trainCentroids rule).
+  *   - centroid means, the per-dimension corpus means (`dimMeans`) and the
+  *     per-cluster mean distance are all Tables.exactMean: the 2^48
+  *     scaled-integer sum in DECIMAL(38,0), divided once;
+  *   - argmin ties break on the lower code (row_number, total order);
+  *   - empty centroids keep their previous vector (left-join coalesce).
   *
-  * Init is deterministic: centroid j = the embedding of vec_id j (stable
+  * Init is deterministic: centroid j = the point of vec_id j (stable
   * fixture ids). k-means++ would sample — fine in production, unverifiable
   * against a SQL oracle.
   */
@@ -53,7 +51,6 @@ object Clustering {
 
   val K = 8
   val Iters = 2
-  private val S = Similarity.MeanScale // 2^48: float×S is an exact integer
 
   /** Sequential (left-to-right) squared-euclidean fold — the dist² twin of
     * Similarity.hofDotSql; DuckDB's list_sum comprehension runs the same
@@ -67,96 +64,99 @@ object Clustering {
     if (s.catalog.functionExists("vec_dist2")) s"vec_dist2($x, $c)"
     else dist2Sql(x, c)
 
-  /** One Lloyd assignment pass: k broadcast centroid rows per vector,
-    * argmin by a per-vec window (ties → lower cluster id).
+  /** What a Lloyd loop trains (the engine twin of oracle.Sql.Space):
+    * centroids keyed by `code` (within each `group` value, if any), each a
+    * double array `vec` fit to the points' array column `point`. */
+  final case class Space(code: String, group: Option[String], point: String,
+                         vec: String) {
+    def keys: Seq[String] = group.toSeq :+ code
+    /** Seed centroids: one per row of `from`, coded by its vec_id. */
+    def seed(from: DataFrame): DataFrame =
+      from.select(group.map(col).toSeq ++ Seq(col("vec_id").as(code),
+        expr(s"transform($point, x -> CAST(x AS DOUBLE))").as(vec)): _*)
+  }
+
+  /** k-means clusters over whole embeddings. */
+  val clusters: Space = Space("cluster", None, "embedding", "c_emb")
+
+  /** One squared-L2 assignment pass: each point (per `group` value) meets
+    * the broadcast centroids and keeps the nearest, ties to the lower code.
+    * Point columns pass through; `d2` is the winning distance.
     * `private[graft]` so ScaleBench can time the pass at synthetic N×. */
-  private[graft] def assign(e: DataFrame, cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        expr(dist2For(e.sparkSession)("embedding", "c_emb")))
+  private[graft] def assign(sp: Space)(points: DataFrame, cents: DataFrame): DataFrame = {
+    val c = broadcast(cents)
+    sp.group.fold(points.crossJoin(c))(points.join(c, _))
+      .withColumn("d2", expr(dist2For(points.sparkSession)(sp.point, sp.vec)))
       .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("d2"), col("cluster"))))
+        Window.partitionBy(("vec_id" +: sp.group.toSeq).map(col): _*)
+          .orderBy(col("d2"), col(sp.code))))
       .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "cluster", "d2")
-
-  /** Element-wise mean per surviving cluster (integer-scaled exact sums;
-    * k·d-bounded reassembly), empty clusters keeping `prev`'s centroid.
-    *
-    * Overflow posture (found by ScaleBench at 512 k synthetic vectors, NOT
-    * by the fixture): the per-row scaled long is exact, but a LONG sum of
-    * them overflows at ~4 M rows/cluster and a LONG `n·2^48` denominator
-    * at just 32 768 — so the sum stages into DECIMAL(38,0) (exact at any
-    * n) and the denominator multiplies in DOUBLE (n·2^48 is exactly
-    * representable for any n < 2^53). Values are bit-identical to the
-    * long forms wherever those didn't overflow: both numerator paths are
-    * correctly-rounded to double, and the denominator is exact either
-    * way. */
-  private[graft] def recenter(assigned: DataFrame, prev: DataFrame): DataFrame = {
-    val upd = assigned
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy("cluster", "pos")
-      .agg(sum((col("x").cast("double") * S).cast("long")
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("sm"),
-        count(lit(1)).as("n"))
-      .withColumn("mean",
-        col("sm").cast("string").cast("double") /
-          (col("n").cast("double") * lit(S.toDouble)))
-      .groupBy("cluster")
-      .agg(collect_list(struct(col("pos"), col("mean"))).as("pm"))
-      .select(col("cluster"),
-        expr("transform(array_sort(pm), p -> p.mean)").as("c_emb"))
-    prev.alias("p").join(upd.alias("u"), Seq("cluster"), "left")
-      .select(col("cluster"),
-        coalesce(col("u.c_emb"), col("p.c_emb")).as("c_emb"))
+      .drop("rn")
   }
 
-  /** `Iters` fixed Lloyd rounds from the deterministic seed centroids;
-    * returns (final centroids, final assignment). */
-  private def trained(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    var cents = e.filter(col("vec_id") < K)
-      .select(col("vec_id").as("cluster"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("c_emb"))
-    var assigned = assign(e, cents)
-    for (_ <- 2 to Iters) {
-      cents = recenter(assigned, cents)
-      assigned = assign(e, cents)
+  /** Per-(keys, pos) exact means of the array column `x` (Tables
+    * .exactMean per element position): one (keys…, pos, n, sum, mean) row
+    * per key and position, so the domain is keys·d. */
+  private[graft] def dimMeans(df: DataFrame, keys: Seq[String], x: String): DataFrame =
+    df.select(keys.map(col) :+ posexplode(col(x)).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(count(lit(1)).as("n"), exactMean(col("x"), lit(1)).as("sum"),
+        exactMean(col("x")).as("mean"))
+
+  /** Element-wise mean per surviving centroid, reassembled in position
+    * order (k·d-bounded); an empty centroid keeps `prev`'s vector. */
+  private def recenter(sp: Space, assigned: DataFrame, prev: DataFrame): DataFrame = {
+    val upd = dimMeans(assigned, sp.keys, sp.point)
+      .groupBy(sp.keys.map(col): _*)
+      .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), " +
+        "p -> p.mean)").as(sp.vec))
+    prev.alias("p").join(upd.alias("u"), sp.keys, "left")
+      .select(sp.keys.map(col) :+
+        coalesce(col(s"u.${sp.vec}"), col(s"p.${sp.vec}")).as(sp.vec): _*)
+  }
+
+  /** The Lloyd loop: centroids seeded from the `seed` points, then `rounds`
+    * recenters, each over a `nearest` pass of every point. The k×d
+    * centroid frame is localCheckpointed after each round another round
+    * follows (constant-size plans, nothing left cached), and not after the
+    * last, whose one consumer is a publish or the final assign. */
+  private[graft] def lloyd(sp: Space, points: DataFrame, seed: DataFrame, rounds: Int)(
+      nearest: (DataFrame, DataFrame) => DataFrame = assign(sp)): DataFrame =
+    (1 to rounds).foldLeft(sp.seed(seed)) { (cents, r) =>
+      val next = recenter(sp, nearest(points, cents), cents)
+      if (r < rounds) next.localCheckpoint() else next
     }
-    (cents, assigned)
+
+  /** `Iters` assignment passes (`Iters − 1` recenters) from the seed
+    * points; returns (final centroids, final assignment). */
+  private def trained(e0: DataFrame, seed: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val e = e0.select("vec_id", "embedding")
+    val cents = lloyd(clusters, e, seed(e), Iters - 1)()
+    (cents, assign(clusters)(e, cents))
   }
+
+  /** The declared queries' training: seeded by vec_ids 0..K-1. */
+  private def trained(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    trained(t(s, dir, "embeddings"), _.filter(col("vec_id") < K))
 
   private def rounds(s: SparkSession, dir: String): DataFrame =
     trained(s, dir)._2
 
-  /** The same two Lloyd rounds over a caller-supplied (vec_id, embedding)
+  /** The same Lloyd rounds over a caller-supplied (vec_id, embedding)
     * frame, seeded by the K SMALLEST ids present — the deployment-real
     * seed rule for corpora whose id space has holes (post-dedup kept
     * sets); on the full fixture it picks ids 0..K-1, identical to the
     * declared queries' literal filter. Used by EmbeddingPipeline's
     * semantic-balance stage. */
-  private[graft] def roundsOf(e0: DataFrame): DataFrame = {
-    val e = e0.select("vec_id", "embedding")
-    var cents = e.orderBy("vec_id").limit(K)
-      .select(col("vec_id").as("cluster"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("c_emb"))
-    var assigned = assign(e, cents)
-    for (_ <- 2 to Iters) {
-      cents = recenter(assigned, cents)
-      assigned = assign(e, cents)
-    }
-    assigned
-  }
+  private[graft] def roundsOf(e0: DataFrame): DataFrame =
+    trained(e0, _.orderBy("vec_id").limit(K))._2
 
   /** The per-cluster balance aggregation over an assignment frame (shared
     * by q_cluster_sizes and the pipeline stage). */
   private[graft] def sizesOf(assigned: DataFrame): DataFrame =
     assigned
       .groupBy("cluster")
-      .agg(count(lit(1)).as("n"),
-        (sum((col("d2") * S).cast("long")
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("string").cast("double") /
-          (count(lit(1)).cast("double") * lit(S.toDouble))).as("mean_dist2"))
+      .agg(count(lit(1)).as("n"), exactMean(col("d2")).as("mean_dist2"))
       .orderBy("cluster")
 
   /** q_cluster_assign — the SERVE face of k-means, train-once/serve-many:
@@ -177,7 +177,7 @@ object Clustering {
         graft.etl.Warehouse.publish(s, _, trained(s, dir)._1))
       .select("cluster", "c_emb")
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    assign(e, cents)
+    assign(clusters)(e, cents)
       .select(col("vec_id"), col("cluster"), col("d2").as("dist2"))
       .orderBy("vec_id")
   }

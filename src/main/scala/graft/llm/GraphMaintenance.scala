@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables.exactMean
 
 /** GRAPH-INDEX MAINTENANCE — the incremental INSERT of the graph-ANN
   * family (the HNSW/NSG insert algorithm, Malkov & Yashunin 2016, public:
@@ -118,7 +119,6 @@ object GraphMaintenance {
     * two published adjacency tables and aggregates to 2 rows — monitoring
     * at metadata cost, no beam pass, so a deployment runs it per batch. */
   def drift(s: SparkSession, dir: String): DataFrame = {
-    val S = Similarity.MeanScale
     val best = publishedBaseGraph(s, dir)
       .filter(col("rnk") === 1)
       .select(col("cos"), Segments.label(late = false).as("segment"))
@@ -126,11 +126,7 @@ object GraphMaintenance {
         .filter(col("rnk") === 1)
         .select(col("cos"), Segments.label(late = true).as("segment")))
     best.groupBy("segment")
-      .agg(count(lit(1)).as("n"),
-        (sum(floor(col("cos") * S)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("string").cast("double") /
-          (count(lit(1)).cast("double") * lit(S.toDouble))).as("mean_cos"),
+      .agg(count(lit(1)).as("n"), exactMean(col("cos")).as("mean_cos"),
         min(col("cos")).as("min_cos"))
       .orderBy("segment")
   }

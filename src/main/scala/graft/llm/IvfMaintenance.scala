@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables.exactMean
 
 /** IVF INDEX MAINTENANCE — the incremental-add path every serving vector
   * warehouse runs between rebuilds: an index is trained and published once,
@@ -115,16 +116,11 @@ object IvfMaintenance {
   def drift(s: SparkSession, dir: String): DataFrame = {
     val cut = Segments.cut(s, dir, "embeddings")
     val cs = cents(s, dir, cut)
-    val S = Similarity.MeanScale
     Similarity.rankAgainst(Similarity.withNorm(s, dir), cs)
       .filter(col("crn") === 1)
       .withColumn("segment", Segments.segment(col("vec_id"), cut))
       .groupBy("segment")
-      .agg(count(lit(1)).as("n"),
-        (sum(floor(col("c_cos") * S)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("string").cast("double") /
-          (count(lit(1)).cast("double") * lit(S.toDouble))).as("mean_cos"),
+      .agg(count(lit(1)).as("n"), exactMean(col("c_cos")).as("mean_cos"),
         min(col("c_cos")).as("min_cos"))
       .orderBy("segment")
   }

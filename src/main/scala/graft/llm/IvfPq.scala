@@ -52,16 +52,14 @@ object IvfPq {
   val NQueries: Int = Pq.NQueries
   val Shortlist: Int = Pq.Shortlist
 
-  private val S = Similarity.MeanScale
-
   /** Grid-snapped residual of one component (see object scaladoc). Both
     * engines evaluate the identical IEEE op sequence: double multiply,
     * floor, exact BIGINT subtract, one power-of-two division.
     * `private[graft]`: the streaming encode-add twin (StreamTwins.ivfpqAdd)
     * splices the IDENTICAL string so drained codes are bit-equal. */
   private[graft] def residSql(x: String, c: String): String =
-    s"(CAST(CAST($x AS DOUBLE) * $S AS BIGINT) - " +
-      s"CAST(FLOOR($c * $S) AS BIGINT)) / CAST($S AS DOUBLE)"
+    s"(CAST(CAST($x AS DOUBLE) * $MeanScale AS BIGINT) - " +
+      s"CAST(FLOOR($c * $MeanScale) AS BIGINT)) / CAST($MeanScale AS DOUBLE)"
 
   /** (vec_id, cent_id, m, sv): every vector's M residual subvectors against
     * its own cell's snapped centroid — one map pass over the published
@@ -408,14 +406,10 @@ object IvfPq {
       .join(upCodes.read(s, dir).select("vec_id", "m", "code"),
         Seq("vec_id", "m"))
       .join(broadcast(upBooks(s, dir)), Seq("m", "code"))
-      .select(col("vec_id"), expr(
-        s"CAST(FLOOR(${dd("sv", "csv")} * $S.0) AS BIGINT)").as("sqe"))
+      .select(col("vec_id"), expr(dd("sv", "csv")).as("qe"))
     qe.groupBy(Segments.segment(col("vec_id"), cut).as("segment"))
       .agg(countDistinct(col("vec_id")).as("n"),
-        (sum(col("sqe").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-          .cast("string").cast("double") /
-          (countDistinct(col("vec_id")).cast("double") * lit(S.toDouble)))
-          .as("mean_qerr"))
+        exactMean(col("qe"), countDistinct(col("vec_id"))).as("mean_qerr"))
       .orderBy("segment")
   }
 

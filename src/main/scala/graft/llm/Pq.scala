@@ -29,8 +29,8 @@ import graft.Tables._
   *    ORDER-FIXED fold over the M partial distances (m ascending), so the
   *    DuckDB twin's list_sum(list(pd ORDER BY m)) replays it bit-for-bit.
   *
-  * Numeric discipline: recenter uses the 2^48 decimal-staged integer sums
-  * (trainCentroids / Clustering.recenter — overflow-safe at any corpus);
+  * Numeric discipline: training is the shared Lloyd loop (Clustering
+  * .lloyd — Tables.exactMean recenter, overflow-safe at any corpus);
   * assignment ties break to the LOWER code id; all distances go through
   * the codegen'd vec_dist2 with the bit-identical HOF fallback. */
 object Pq {
@@ -47,7 +47,9 @@ object Pq {
   /** Query sample for ADC top-k (the q_sim_topk convention). */
   val NQueries = 8
 
-  private val S = Similarity.MeanScale
+  /** The M codebooks the shared Lloyd loop trains: per subspace `m`,
+    * codewords `csv` over the `sv` subvectors. */
+  private val subspaces = Clustering.Space("code", Some("m"), "sv", "csv")
 
   /** (vec_id, m, sv): all M subvectors of every vector in ONE map pass —
     * the fan-out is the constant M, never a shuffle. */
@@ -60,52 +62,24 @@ object Pq {
       .select(col("vec_id"), col("t.m").as("m"), col("t.sv").as("sv"))
 
   /** One assignment pass: per (vector, subspace) the nearest codebook entry
-    * (ties → lower code id, the Clustering.assign tie-break). Extra columns
-    * on `sv` (e.g. IvfPq's cell id) pass through untouched.
-    * `private[llm]` so the residual quantizer (IvfPq) shares it. */
-  private[llm] def assign(sv: DataFrame, books: DataFrame): DataFrame = {
-    val dd = Clustering.dist2For(sv.sparkSession) _
-    sv.join(broadcast(books), "m")
-      .withColumn("d2", expr(dd("sv", "csv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id", "m").orderBy(col("d2"), col("code"))))
-      .filter(col("rn") === 1)
-  }
+    * (Clustering.assign, ties → lower code id). Extra columns on `sv`
+    * (e.g. IvfPq's cell id) pass through untouched. `private[llm]` so the
+    * residual quantizer (IvfPq) shares it. */
+  private[llm] def assign(sv: DataFrame, books: DataFrame): DataFrame =
+    Clustering.assign(subspaces)(sv, books)
 
   /** Train the M codebooks: `Iters` Lloyd rounds over the subvector frame,
-    * integer-scaled recenter, empty codes coalesce to their previous
-    * centroid. Codebooks localCheckpoint per round (M·K metadata rows;
-    * constant-size plans). */
+    * seeded by the first K vectors' subvectors. */
   def trainBooks(s: SparkSession, dir: String): DataFrame =
     lloydBooks(subvecs(s, dir))
 
-  /** The Lloyd loop over an ARBITRARY (vec_id, m, sv) subvector frame —
-    * shared verbatim by the raw-vector quantizer (trainBooks) and the
-    * residual quantizer (IvfPq.trainBooks): the two differ only in what
-    * the subvectors are measured against, never in how codebooks train. */
-  private[llm] def lloydBooks(sv: DataFrame): DataFrame = {
-    var books = sv.filter(col("vec_id") < K)
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("csv"))
-    for (_ <- 1 to Iters) {
-      val a = assign(sv, books).select("m", "code", "sv")
-      val sums = a
-        .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("m", "code", "pos")
-        .agg(sum((col("x") * S).cast("long")
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("sm"),
-          count(lit(1)).as("n"))
-        .withColumn("mean", col("sm").cast("string").cast("double") /
-          (col("n").cast("double") * lit(S.toDouble)))
-      val upd = sums.groupBy("m", "code")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), " +
-          "p -> p.mean)").as("csv"))
-      books = books.alias("o").join(upd.alias("u"), Seq("m", "code"), "left")
-        .select(col("m"), col("code"),
-          coalesce(col("u.csv"), col("o.csv")).as("csv"))
-        .localCheckpoint()
-    }
-    books
-  }
+  /** The Lloyd loop (Clustering.lloyd) over an ARBITRARY (vec_id, m, sv)
+    * subvector frame — shared verbatim by the raw-vector quantizer
+    * (trainBooks) and the residual quantizer (IvfPq.trainBooks): the two
+    * differ only in what the subvectors are measured against, never in how
+    * codebooks train. */
+  private[llm] def lloydBooks(sv: DataFrame): DataFrame =
+    Clustering.lloyd(subspaces, sv, sv.filter(col("vec_id") < K), Iters)()
 
   /** Published-codebook location (a state-store root). */
   private[graft] def pqTarget(s: SparkSession, dir: String): String =

@@ -227,14 +227,12 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("crn"), col("cent_id"))
   }
 
-  /** Number of Lloyd iterations for IVF k-means training, and the power-of-2
-    * scale that maps every fixture float exactly to an integer (components
-    * need ≤ 2^-43 resolution; 2^48 leaves margin). Centroid means are
-    * computed as exact BIGINT sums divided once in double — bit-identical in
-    * Spark and DuckDB regardless of aggregation order, which is what makes a
-    * TRAINED IVF oracle-checkable (VERDICT r1 item 4). */
+  /** Lloyd recenters for IVF k-means training (each mean is
+    * Tables.exactMean, so a TRAINED IVF is oracle-checkable). */
   val TrainIters = 2
-  val MeanScale: Long = 1L << 48
+
+  /** The IVF cells the shared Lloyd loop trains. */
+  private val cellSpace = Clustering.Space("cent_id", None, "embedding", "c_emb")
 
   private def genericDot(a: String, b: String): String =
     s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
@@ -256,54 +254,19 @@ object Similarity {
 
   /** Distributed Lloyd training (spherical k-means, public algorithm):
     * deterministic seed = the first `Cells` vectors by id; `TrainIters`
-    * fixed iterations of assign (cosine argmax) + update (element-wise mean
-    * as an aggregate — posexplode, exact integer sum per (cell, dim), one
-    * double division). Empty cells keep their previous centroid. Everything
-    * is DataFrame algebra: the per-iteration state is k×d centroid rows,
-    * never driver-collected. */
+    * recenters over a cosine-argmax assign. Everything is DataFrame
+    * algebra: the per-iteration state is k×d centroid rows, never
+    * driver-collected. */
   def trainCentroids(s: SparkSession, dir: String, cells: Int = Cells): DataFrame =
     trainCentroidsOn(withNorm(s, dir), cells)
 
-  /** The Lloyd loop over an ARBITRARY (vec_id, embedding, nrm) corpus frame
-    * — shared by the full-corpus training above and the base-only training
-    * of the index-maintenance path (IvfMaintenance), which freezes
-    * centroids before late batches arrive. */
-  private[llm] def trainCentroidsOn(e: DataFrame, cells: Int = Cells): DataFrame = {
-    val s = e.sparkSession
-    var cents = e.filter(col("vec_id") < cells).select(
-      col("vec_id").as("cent_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("c_emb"))
-    for (_ <- 1 to TrainIters) {
-      val assigned = rankAgainst(e, cents).filter(col("crn") === 1)
-        .select("vec_id", "embedding", "cent_id")
-      // overflow posture (ScaleBench finding, see Clustering.recenter): the
-      // LONG sum overflows at ~4M rows/cell and the LONG n·2^48 at 32 768 —
-      // decimal-staged sum + double denominator, bit-identical where the
-      // long forms didn't overflow
-      val sums = assigned
-        .select(col("cent_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("cent_id", "pos")
-        .agg(sum((col("x").cast("double") * MeanScale).cast("long")
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"),
-          count(lit(1)).as("n"))
-        .withColumn("mean", col("s").cast("string").cast("double") /
-          (col("n").cast("double") * lit(MeanScale.toDouble)))
-      val upd = sums.groupBy("cent_id")
-        .agg(collect_list(struct(col("pos"), col("mean"))).as("pm"))
-        .select(col("cent_id"),
-          expr("transform(array_sort(pm), p -> p.mean)").as("c_emb"))
-      cents = cents.alias("o").join(upd.alias("u"), Seq("cent_id"), "left")
-        .select(col("cent_id"),
-          coalesce(col("u.c_emb"), col("o.c_emb")).as("c_emb"))
-      // centroids are k×d rows (metadata-sized at any corpus scale);
-      // materializing each iteration stops the lineage from re-running every
-      // previous assignment pass — the same reason MLlib k-means keeps
-      // centroids out of the lineage entirely.
-      cents = cents.cache()
-      cents.count()
-    }
-    cents
-  }
+  /** The Lloyd loop (Clustering.lloyd) over an ARBITRARY (vec_id,
+    * embedding, nrm) corpus frame — shared by the full-corpus training
+    * above and the base-only training of the index-maintenance path
+    * (IvfMaintenance), which freezes centroids before late batches arrive. */
+  private[llm] def trainCentroidsOn(e: DataFrame, cells: Int = Cells): DataFrame =
+    Clustering.lloyd(cellSpace, e, e.filter(col("vec_id") < cells), TrainIters)(
+      rankAgainst(_, _).filter(col("crn") === 1))
 
   /** Published-index location for a corpus dir: a state-store root
     * (graft.etl.State), keyed by the fixture files and the code, so neither
@@ -613,32 +576,17 @@ object Similarity {
   /** Per-dimension MEAN of the embedding corpus — the Gram matrix's
     * companion statistic (mean + Gram = covariance, the whitening inputs).
     * One explode + partial+final aggregate: the exchange carries d rows per
-    * partition. Sums use the 2^48-scaled exact-BIGINT discipline of
-    * `trainCentroids`, NOT a decimal stage: raw embedding values (exact
+    * partition (Clustering.dimMeans). Sums are Tables.exactMean's 2^48
+    * scaled integers, NOT a scale-10 decimal stage: raw embedding values (exact
     * multiples of 2^-43) land exactly on DECIMAL(·,10) half-way points,
     * where Spark rounds HALF_UP and DuckDB HALF_EVEN — the scaled integer
     * sum is tie-free by construction. The surfaced sum and mean are then
     * single correctly-rounded int64→double conversions and divisions. */
-  def meanVector(s: SparkSession, dir: String): DataFrame = {
-    val S = MeanScale.toDouble
-    // the scaled per-row longs are exact; their SUM stages into
-    // DECIMAL(38,0) so no corpus size can overflow it (the ScaleBench
-    // class — a LONG sum dies at ~4M rows). decimal→string→double is the
-    // same correctly-rounded value the old long→double path produced.
-    t(s, dir, "embeddings")
-      .select(posexplode(col("embedding")).as(Seq("i", "xi")))
-      .select(col("i").cast("long").as("i"),
-        (col("xi").cast("double") * S).cast("long").as("sx"))
-      .groupBy("i")
-      .agg(sum(col("sx").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-        .as("ssx"), count(lit(1)).as("n"))
-      .select(col("i"),
-        (col("ssx").cast("string").cast("double") / S).as("sum_x"),
-        col("n"),
-        (col("ssx").cast("string").cast("double") /
-          (col("n").cast("double") * S)).as("mean_x"))
+  def meanVector(s: SparkSession, dir: String): DataFrame =
+    Clustering.dimMeans(t(s, dir, "embeddings"), Nil, "embedding")
+      .select(col("pos").cast("long").as("i"), col("sum").as("sum_x"),
+        col("n"), col("mean").as("mean_x"))
       .orderBy("i")
-  }
 
   /** COVARIANCE matrix of the embedding corpus (upper triangle), composed
     * from the two exact statistics: cov[i,j] = G[i,j]/n − mean_i·mean_j.
@@ -666,34 +614,26 @@ object Similarity {
     * input transform SemDeDup-style pipelines apply before clustering so
     * no dimension dominates the cosine. Needs only the DIAGONAL second
     * moment, so no d² Gram pass: one explode + partial-aggregated rollup
-    * computes (scaled-BIGINT Σx, decimal-staged Σx², n) per dimension —
+    * computes (exact mean, decimal-staged Σx², n) per dimension —
     * O(n·d) rows map-side-collapsed to d per partition. The d-row
     * statistic is driver-collected (corpus-independent metadata) and
     * applied as one codegen'd map stage; μ and σ reuse the meanVector /
     * Gram-diagonal numeric disciplines, so the DuckDB twin matches every
     * whitened coordinate bit-for-bit. */
   def whitenVecs(s: SparkSession, dir: String): DataFrame = {
-    val S = MeanScale.toDouble
-    // overflow-free sum (ScaleBench class): decimal-staged scaled longs;
-    // BigDecimal.doubleValue is the same correctly-rounded double the old
-    // long→double path produced
+    // one pass for both moments: μ is the exact mean, Σx² decimal-staged
     val st = t(s, dir, "embeddings")
       .select(posexplode(col("embedding")).as(Seq("i", "xi")))
       .select(col("i").cast("long").as("i"), col("xi").cast("double").as("xi"))
       .groupBy("i")
-      .agg(sum((col("xi") * S).cast("long")
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("ssx"),
+      .agg(exactMean(col("xi")).as("mu"),
         graft.Tables.dsum10(col("xi") * col("xi")).as("gii"),
         count(lit(1)).as("n"))
       .collect()
-      .map(r => (r.getLong(0),
-        (r.getDecimal(1).doubleValue, r.getDouble(2), r.getLong(3))))
+      .map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2), r.getLong(3))))
       .sortBy(_._1).map(_._2)
-    val mu = st.map { case (ssx, _, n) => ssx / (n.toDouble * S) }
-    val sd = st.map { case (ssx, gii, n) =>
-      val m = ssx / (n.toDouble * S)
-      math.sqrt(gii / n.toDouble - m * m)
-    }
+    val mu = st.map(_._1)
+    val sd = st.map { case (m, gii, n) => math.sqrt(gii / n.toDouble - m * m) }
     // μ/σ ride in as one broadcast row, not d plan literals (Tables
     // .withBroadcastArray — constant plan size at any dimensionality)
     graft.Tables.withBroadcastArray(

@@ -7,7 +7,7 @@ import graft.llm.{Segments, Similarity, TextAnalysis}
   * text. */
 private[oracle] object Sql {
 
-  private val S = Similarity.MeanScale
+  private val S = graft.Tables.MeanScale
 
   /** DECIMAL-staged exact sum, surfaced as DOUBLE (matches Tables.dsum2).
     * The VARCHAR hop makes DuckDB's decimal→double conversion correctly

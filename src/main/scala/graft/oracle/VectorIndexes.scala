@@ -8,7 +8,7 @@ import Sql._
   * fusion, rank audits, embedding statistics, k-means and pair mining. */
 private[graft] object VectorIndexes {
 
-  private val S = Similarity.MeanScale
+  private val S = graft.Tables.MeanScale
 
   // ---- exact and IVF cosine serves ----
 

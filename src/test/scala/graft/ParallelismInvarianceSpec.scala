@@ -38,7 +38,9 @@ class ParallelismInvarianceSpec extends SparkSpec {
     "q_curriculum_pack",  // + chunk dedup windows and bin running sums (r11)
     "q_curriculum_pack_upsert", // + per-(source, pack_shard) delta chains (r13)
     "q_sim_rank_diff",    // churn counts over published-ranking joins (r13)
-    "q_retrieve_sweep"))  // driver hit-count folds over Q·10 serves (r10)
+    "q_retrieve_sweep",   // driver hit-count folds over Q·10 serves (r10)
+    "q_embed_mean",       // per-dimension exact means (Tables.exactMean)
+    "q_graph_drift"))     // exact segment means over best-link cosines
     test(s"$q is byte-identical at shuffle.partitions=197") {
       val fn = SparkEntry.queries(q)
       val want = fn(spark, sf).collect().map(_.toString).toSeq
@@ -65,6 +67,23 @@ class ParallelismInvarianceSpec extends SparkSpec {
   test("IVF-PQ residual-book construction is byte-identical at shuffle.partitions=197") {
     def built(s: org.apache.spark.sql.SparkSession): Seq[String] =
       graft.llm.IvfPq.trainBooks(s, sf)
+        .orderBy("m", "code").collect().map(_.toString).toSeq
+    assert(built(wide) == built(spark))
+  }
+
+  // IVF centroid and raw-PQ book CONSTRUCTION: the shared Lloyd loop
+  // (Clustering.lloyd) with its cosine and squared-L2 assigns, recentered
+  // by exact means re-combined under a different exchange.
+  test("IVF centroid construction is byte-identical at shuffle.partitions=197") {
+    def built(s: org.apache.spark.sql.SparkSession): Seq[String] =
+      graft.llm.Similarity.trainCentroids(s, sf)
+        .orderBy("cent_id").collect().map(_.toString).toSeq
+    assert(built(wide) == built(spark))
+  }
+
+  test("raw-PQ book construction is byte-identical at shuffle.partitions=197") {
+    def built(s: org.apache.spark.sql.SparkSession): Seq[String] =
+      graft.llm.Pq.trainBooks(s, sf)
         .orderBy("m", "code").collect().map(_.toString).toSeq
     assert(built(wide) == built(spark))
   }

@@ -21,7 +21,7 @@ class BinarySpec extends SparkSpec {
   /** From-scratch mean/sign recount mirroring the production numeric
     * discipline (scaled-BIGINT sums in BigInt space, double denominator). */
   private lazy val expectedSigs: Map[Long, (Long, Long)] = {
-    val S = Similarity.MeanScale
+    val S = graft.Tables.MeanScale
     val d = embs.head._2.length
     val mu = (0 until d).map { i =>
       val ssx = embs.map { case (_, v) => BigInt((v(i) * S).toLong) }.sum

@@ -115,14 +115,24 @@ class ClusteringSpec extends SparkSpec {
     import s.implicits._
     val e = s.range(40000).select(col("id").as("vec_id"),
       expr("array(CAST(0.25 AS FLOAT), CAST(-0.5 AS FLOAT))").as("embedding"))
-    val cents = Seq((0L, Seq(0.25d, -0.5d)), (1L, Seq(100d, 100d)))
-      .toDF("cluster", "c_emb")
-    val out = Clustering.recenter(Clustering.assign(e, cents), cents)
+    // seed points: cluster 0 at the vector, cluster 1 at (100, 100)
+    val seed = Seq((0L, Seq(0.25f, -0.5f)), (1L, Seq(100f, 100f)))
+      .toDF("vec_id", "embedding")
+    val out = Clustering.lloyd(Clustering.clusters, e, seed, 1)()
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     // all 40k vectors are identical and land in cluster 0: its mean is
     // EXACTLY the vector; cluster 1 is empty and keeps its previous centroid
     assert(out(0L) == Seq(0.25, -0.5))
     assert(out(1L) == Seq(100.0, 100.0))
+  }
+
+  test("Lloyd training leaves no centroid plan in the cache manager") {
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    Similarity.trainCentroids(spark, sf).collect()
+    Pq.trainBooks(spark, sf).collect()
+    assert(cm.isEmpty,
+      "Lloyd rounds must cut lineage without caching the centroid frames")
   }
 
   test("plan: centroids broadcast; no corpus-sized collect or cartesian blowup") {

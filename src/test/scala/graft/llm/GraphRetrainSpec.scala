@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * batch with itself, so the per-segment best-link gap collapses. */
 class GraphRetrainSpec extends SparkSpec {
 
-  private val S = Similarity.MeanScale
+  private val S = graft.Tables.MeanScale
 
   /** Per-segment floor-quantized mean best-link cosine of an arbitrary
     * adjacency frame — the monitor's math, parameterized so it can re-run

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * corpus), so the spec also proves the two paths share one encode. */
 class IvfPqRetrainSpec extends SparkSpec {
 
-  private val S = Similarity.MeanScale
+  private val S = graft.Tables.MeanScale
 
   /** Per-segment mean ADC reconstruction error under an arbitrary
     * (residual subvectors, codes, books) triple — the monitor's math,

@@ -28,7 +28,7 @@ class MeanVectorSpec extends SparkSpec {
 
   test("matches the scaled-integer recomputation exactly (bit-for-bit)") {
     val d = vectors.head.length
-    val S = Similarity.MeanScale.toDouble
+    val S = graft.Tables.MeanScale.toDouble
     (0 until d).foreach { i =>
       val ssx = vectors.map(v => (v(i) * S).toLong).sum
       val (sumX, n, meanX) = rows(i.toLong)

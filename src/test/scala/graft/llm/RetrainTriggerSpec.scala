@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * a NEW version — nothing here mutates the frozen one. */
 class RetrainTriggerSpec extends SparkSpec {
 
-  private val S = Similarity.MeanScale
+  private val S = graft.Tables.MeanScale
 
   /** Per-segment floor-quantized mean best-centroid fit against an
     * arbitrary centroid frame — the drift measurement re-run against a
