@@ -28,7 +28,7 @@ object Probe {
     java.nio.file.Files.copy(fixture, java.nio.file.Paths.get(s"$sroot/raw/dump.json"))
     val q = streaming.StreamTwins.ingest(spark, s"$sroot/raw", s"$sroot/sink", s"$sroot/cp").start()
     q.awaitTermination(60000)
-    println(s"[probe] streamed rows=${spark.read.parquet(s"$sroot/sink").count()}")
+    println(s"[probe] streamed rows=${Tables.parquet(spark, s"$sroot/sink").count()}")
 
     // 3. composed curation pipeline: gate → dedup → decontaminate → chunk
     //    → pack → split over the sf0.001 corpus

@@ -162,7 +162,7 @@ object ScaleBench {
           dAll.withColumn("doc_id", col("doc_id") + lit(i * maxDoc0)))
           .reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$dirM/documents.parquet")
-        val nD = spark.read.parquet(s"$dirM/documents.parquet").count()
+        val nD = Tables.parquet(spark, s"$dirM/documents.parquet").count()
         val tMinhash = med(graft.llm.Dedup.minhashPairs(spark, dirM).count())
         val tComp = med(graft.llm.Dedup.components(spark, dirM).count())
         println(f"[scalebench] dedup  m=$m%-3d docs=$nD%-7d minhash_pairs=$tMinhash%.2f s components=$tComp%.2f s")
@@ -204,7 +204,7 @@ object ScaleBench {
             .withColumn("ts", col("ts") + lit(i * spanNs)))
           .reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$dirM/events.parquet")
-        val nEv = spark.read.parquet(s"$dirM/events.parquet").count()
+        val nEv = Tables.parquet(spark, s"$dirM/events.parquet").count()
         val tSess = med(graft.llm.Sessions.sessionize(spark, dirM).count())
         val tBand = med(graft.ops.Joins.bandJoin(spark, dirM).count())
         println(f"[scalebench] events m=$m%-3d events=$nEv%-8d sessionize=$tSess%.2f s band_join=$tBand%.2f s")
@@ -224,7 +224,7 @@ object ScaleBench {
           emb0.withColumn("vec_id", col("vec_id") + lit(i * maxVec)))
           .reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$dirM/embeddings.parquet")
-        val nV = spark.read.parquet(s"$dirM/embeddings.parquet").count()
+        val nV = Tables.parquet(spark, s"$dirM/embeddings.parquet").count()
         val tTrain = med(graft.llm.Pq.trainBooks(spark, dirM).count())
         val tCodes = med(graft.llm.Pq.codes(spark, dirM).count())
         val tAdc = med(graft.llm.Pq.adcTopK(spark, dirM).count())
@@ -347,7 +347,7 @@ object ScaleBench {
         for (tb <- Seq("part", "supplier", "nation"))
           Tables.t(spark, dir, tb)
             .write.mode("overwrite").parquet(s"$dirM/$tb.parquet")
-        val nL = spark.read.parquet(s"$dirM/lineitem.parquet").count()
+        val nL = Tables.parquet(spark, s"$dirM/lineitem.parquet").count()
         val tBlame = med(graft.ops.Joins.blameSupplier(spark, dirM).count())
         val tExcess = med(graft.ops.Reports.excessSupplier(spark, dirM).count())
         println(f"[scalebench] report m=$m%-3d lineitem=$nL%-9d blame_supplier=$tBlame%.2f s excess_supp=$tExcess%.2f s")
@@ -358,7 +358,7 @@ object ScaleBench {
         // label with the table theta_ops actually scans (ADVICE r8: nL is
         // the replicated LINEITEM count — printing it as orders= mislabeled
         // the corpus the timing ran against)
-        val nO = spark.read.parquet(s"$dirM/orders.parquet").count()
+        val nO = Tables.parquet(spark, s"$dirM/orders.parquet").count()
         println(f"[scalebench] theta  m=$m%-3d orders=$nO%-9d theta_ops=$tTheta%.2f s")
       }
     }
@@ -417,7 +417,7 @@ object ScaleBench {
           dAll.withColumn("doc_id", col("doc_id") + lit(i * maxDoc0)))
           .reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$dirM/documents.parquet")
-        val nD = spark.read.parquet(s"$dirM/documents.parquet").count()
+        val nD = Tables.parquet(spark, s"$dirM/documents.parquet").count()
         val tOrder = med(graft.llm.Curation.curriculumOrder(spark, dirM).count())
         println(f"[scalebench] currl  m=$m%-3d docs=$nD%-8d order=$tOrder%.2f s")
         // this family multiplies the FULL documents table (ADVICE r10):
@@ -453,7 +453,7 @@ object ScaleBench {
             .withColumn("text", concat_ws(" ", lit(s"copytag$i"), col("text"))))
           .reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$dirM/documents.parquet")
-        val nD = spark.read.parquet(s"$dirM/documents.parquet").count()
+        val nD = Tables.parquet(spark, s"$dirM/documents.parquet").count()
         val tPack = med(graft.llm.Curation.chunkPack(spark, dirM).count())
         val fan = graft.llm.Curation.chunkPack(spark, dirM)
           .agg(countDistinct(col("source"), col("pack_shard")).as("parts"),

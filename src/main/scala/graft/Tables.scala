@@ -13,16 +13,63 @@ import org.apache.spark.sql.types._
   * events.ts is parquet TIMESTAMP(NANOS); Spark 4 reads it only as raw Long ns
   * (spark.sql.legacy.parquet.nanosAsLong). All ns→ms/timestamp conversions are
   * integer ops on Long (double division would lose precision above 2^53).
+  *
+  * Every parquet input whose schema the engine does not own — fixture
+  * tables, pipeline stage dirs, stream sinks — is read through
+  * [[parquet]]: Spark infers such a schema from the footers with one Spark
+  * job per read, while the query is still being planned, and [[parquet]]
+  * pays that job once per file listing instead. (Warehouse versions carry
+  * their own `_SCHEMA` sidecar.)
   */
 object Tables {
   val tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** `name:len:mtime` of every entry directly under `path` (the file itself
+    * when `path` is a file), sorted and `|`-joined. One driver-side listing,
+    * no Spark job. A rewrite that changes no entry's name, length or mtime
+    * does not change it. Throws `FileNotFoundException` for a missing path. */
+  def listing(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString("|")
+  }
+
+  /** The session settings that change how a parquet footer is typed. */
+  private val ParquetTyping = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema")
+
+  private final case class Inferred(listing: String, typing: Seq[Option[String]], schema: StructType)
+
+  /** Driver-side memo: path → the schema inferred from its last listing. */
+  private val inferred = new java.util.concurrent.ConcurrentHashMap[String, Inferred]()
+
+  /** Read parquet at `path` with the schema Spark infers from its footers,
+    * inferring (one Spark job) only when the path's [[listing]] or the
+    * parquet-typing settings differ from the last inference of the same
+    * path; otherwise the remembered schema is handed to the reader and no
+    * job runs. A missing path or an un-inferable dir throws what
+    * `spark.read.parquet` throws. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val typing = ParquetTyping.map(spark.conf.getOption)
+    val seen = try Some(listing(spark, path)) catch { case _: java.io.FileNotFoundException => None }
+    val schema = Option(inferred.get(path)).filter(e => seen.contains(e.listing) && e.typing == typing) match {
+      case Some(e) => e.schema
+      case None =>
+        val fresh = spark.read.parquet(path).schema
+        seen.foreach(l => inferred.put(path, Inferred(l, typing, fresh)))
+        fresh
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // defensive: a driver-built session may lack this (runtime-settable) conf;
     // without it any TIMESTAMP(NANOS) events.parquet read throws
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     // The generated events.ts has shipped as both TIMESTAMP(NANOS) (read as
     // raw Long ns under the conf above) and TIMESTAMP(MICROS) (read as a
     // timestamp). Normalize to the engine's canonical form — Long epoch

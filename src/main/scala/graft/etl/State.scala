@@ -50,13 +50,8 @@ object State {
 
   /** The state key of artifacts derived from `$dir/$table.parquet` under
     * code fingerprint `code`. Metadata-only: one driver-side listing. */
-  def key(spark: SparkSession, dir: String, table: String, code: String = codeFingerprint): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val parts = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    md5(s"$dir|$table|$parts|$code".getBytes("UTF-8"))
-  }
+  def key(spark: SparkSession, dir: String, table: String, code: String = codeFingerprint): String =
+    md5(s"$dir|$table|${graft.Tables.listing(spark, s"$dir/$table.parquet")}|$code".getBytes("UTF-8"))
 
   /** Where artifact `name` of `family`, derived from `$dir/$table.parquet`,
     * lives. */

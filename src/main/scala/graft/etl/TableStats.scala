@@ -29,7 +29,7 @@ object TableStats {
     * then served from the published manifest. */
   def rowCount(spark: SparkSession, dir: String, table: String): Long =
     State.memo(spark, statsTarget(spark, dir, table)) { target =>
-      val n = spark.read.parquet(s"$dir/$table.parquet").count()
+      val n = graft.Tables.parquet(spark, s"$dir/$table.parquet").count()
       Warehouse.publish(spark, target, spark.createDataFrame(
         java.util.Collections.singletonList(org.apache.spark.sql.Row(n)),
         org.apache.spark.sql.types.StructType(Seq(

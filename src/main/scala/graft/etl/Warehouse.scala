@@ -85,12 +85,13 @@ object Warehouse {
 
   /** Read one immutable version dir. With its `_SCHEMA` sidecar the schema is
     * handed to the reader, so no footer-inference job runs; a dir published
-    * before sidecars existed falls back to inference. */
+    * before sidecars existed is read through `Tables.parquet` (inferred once
+    * per listing). */
   private def readDir(spark: SparkSession, dir: String): DataFrame =
     readSmall(fs(spark, dir), schemaSidecar(dir)) match {
       case Some(json) =>
         spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dir)
-      case None => spark.read.parquet(dir)
+      case None => graft.Tables.parquet(spark, dir)
     }
 
   private def currentOrFail(spark: SparkSession, target: String): String =

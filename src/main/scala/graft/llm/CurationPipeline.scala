@@ -40,7 +40,7 @@ class CurationPipeline(s: SparkSession, srcDir: String, root: String) {
     val d = s"$root/$stage"
     df.select(docCols.map(col): _*)
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    stageRows :+= (stage, s.read.parquet(s"$d/documents.parquet").count())
+    stageRows :+= (stage, parquet(s, s"$d/documents.parquet").count())
     d
   }
 
@@ -78,7 +78,7 @@ class CurationPipeline(s: SparkSession, srcDir: String, root: String) {
     val merges = TextAnalysis.bpeTrain(s, d3)
     merges.write.mode("overwrite").parquet(s"$root/s3b_tokenizer/merges.parquet")
     stageRows :+= (("s3b_tokenizer",
-      s.read.parquet(s"$root/s3b_tokenizer/merges.parquet").count()))
+      parquet(s, s"$root/s3b_tokenizer/merges.parquet").count()))
     // 4. chunk, then dedup AT CHUNK GRANULARITY: the first occurrence
     // (smallest doc_id, then position) of each chunk_hash survives — the
     // ONE shared definition (Curation.uniqChunks)
@@ -90,24 +90,24 @@ class CurationPipeline(s: SparkSession, srcDir: String, root: String) {
       .select("doc_id", "chunk_idx", "source", "pack_shard", "n_tokens",
         "chunk_hash", "bin_id", "bin_offset", "split")
     out.write.mode("overwrite").parquet(s"$root/packed.parquet")
-    stageRows :+= ("packed", s.read.parquet(s"$root/packed.parquet").count())
+    stageRows :+= ("packed", parquet(s, s"$root/packed.parquet").count())
     // 7. training order: the curriculum schedule (quality-quartile stages,
     // content-hash within-stage shuffle — q_curriculum_order) computed on
     // the CLEANED corpus, inherited by every TRAIN chunk from its parent
     // doc. The dataloader consumes (stage, shard, seq, chunk_idx) order;
     // val/test chunks carry no training position by definition.
-    val ordered = s.read.parquet(s"$root/packed.parquet")
+    val ordered = parquet(s, s"$root/packed.parquet")
       .filter(col("split") === "train")
       .join(Curation.curriculumOrder(s, d3), "doc_id")
       .select("doc_id", "chunk_idx", "source", "pack_shard", "n_tokens",
         "chunk_hash", "bin_id", "bin_offset", "stage", "shard", "seq")
     ordered.write.mode("overwrite").parquet(s"$root/s7_order/ordered.parquet")
     stageRows :+= (("s7_order",
-      s.read.parquet(s"$root/s7_order/ordered.parquet").count()))
+      parquet(s, s"$root/s7_order/ordered.parquet").count()))
     s"$root/packed.parquet"
   }
 
-  def packed(): DataFrame = s.read.parquet(s"$root/packed.parquet")
+  def packed(): DataFrame = parquet(s, s"$root/packed.parquet")
 
-  def ordered(): DataFrame = s.read.parquet(s"$root/s7_order/ordered.parquet")
+  def ordered(): DataFrame = parquet(s, s"$root/s7_order/ordered.parquet")
 }

@@ -34,7 +34,7 @@ class EmbeddingPipeline(s: SparkSession, srcDir: String, root: String) {
   private def write(df: DataFrame, stage: String, file: String): String = {
     val d = s"$root/$stage"
     df.write.mode("overwrite").parquet(s"$d/$file")
-    stageRows :+= (stage, s.read.parquet(s"$d/$file").count())
+    stageRows :+= (stage, parquet(s, s"$d/$file").count())
     d
   }
 

@@ -126,7 +126,7 @@ object Multimodal {
     * real blobs; at scale this is `spark.read.format("binaryFile")`. */
   def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.parquet(spark, s"$dir/documents.parquet")
       .select(
         col("doc_id").as("media_id"),
         element_at(array(lit("image"), lit("audio"), lit("video")),

@@ -245,12 +245,15 @@ object GroupA {
   }
 
   /** O16: TRUNCATE + reload ≡ overwrite snapshot, then scan of post-overwrite
-    * state (/root/reference/coininsights.py:173,185). */
+    * state (/root/reference/coininsights.py:173,185). The scratch table lives
+    * under the JVM temp dir, like every derived path. Every overwrite names
+    * its part files afresh, so the table is read back with the schema it was
+    * written with: a listing-keyed memo would infer again on each call. */
   def snapshotOverwrite(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_snapshot_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
-    t(s, dir, "orders").filter(col("o_orderstatus") === "O")
-      .write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+    val path = s"${sys.props("java.io.tmpdir")}/graft_snapshot_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val open = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
+    open.write.mode("overwrite").parquet(path)
+    s.read.schema(open.schema).parquet(path)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total"))
       .orderBy("o_orderpriority")
