@@ -30,6 +30,10 @@ import graft.Tables._
   *    of the signature ARE an LSH bucket id, so the same banding that
   *    bounds `q_sim_lsh` applies when a deployment wants to skip the scan.
   *
+  * One signing projection (`sign`) and one serve (`serve`) cover the base
+  * index, the maintained base ∪ delta signatures (BinaryMaintenance) and
+  * the streaming signing twin.
+  *
   * Numeric discipline: the mean is Tables.exactMean per dimension
   * (`Clustering.dimMeans`, as in `Similarity.meanVector` — tie-free,
   * order-free, overflow-staged in DECIMAL(38,0)); each bit is one strict
@@ -62,28 +66,32 @@ object Binary {
   /** One packed half: sum over bit positions `off .. off+HalfBits-1` of
     * (x_i > mu_i) << (i - off). Exact integer arithmetic, bit i set iff the
     * coordinate clears its dimension mean. Expects `embedding` and `mu`
-    * columns in scope (shared with the streaming signing twin). */
-  private[graft] def halfSql(off: Int): String =
+    * columns in scope. */
+  private def halfSql(off: Int): String =
     s"""aggregate(transform(sequence(0, ${HalfBits - 1}), i ->
           IF(CAST(element_at(embedding, i + ${off + 1}) AS DOUBLE)
                > element_at(mu, i + ${off + 1}),
              shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),
         CAST(0 AS BIGINT), (acc, v) -> acc + v)"""
 
-  /** (vec_id, h0, h1): the signature frame shared by the codes query and
-    * the serve path's scan stage. Pure map stage after the d-row mean
-    * statistic. */
-  private def signed(s: SparkSession, dir: String): DataFrame = {
-    val mu = muArray(s, dir)
-    // the d-element mean joins as one broadcast row, not d plan literals
-    // (the streaming twin keeps the literal form — its mu is already a
-    // bounded twin-supplied constant and stream-static layout is its own
-    // spec-pinned contract)
-    graft.Tables.withBroadcastArray(t(s, dir, "embeddings"), "mu", mu.toSeq)
-      .withColumn("h0", expr(halfSql(0)))
+  /** THE signing projection: (vec_id, h0, h1) of a frame carrying
+    * `embedding` and the per-dimension means `mu` — shared by the codes
+    * query, the serve, the maintenance slices and the streaming signing
+    * twin (which supplies `mu` as a literal). Pure map stage. */
+  private[graft] def sign(df: DataFrame): DataFrame =
+    df.withColumn("h0", expr(halfSql(0)))
       .withColumn("h1", expr(halfSql(HalfBits)))
       .select("vec_id", "h0", "h1")
-  }
+
+  /** `df` signed against the driver-side means `mu`: the d-element mean
+    * joins as one broadcast row, not d plan literals. */
+  private[llm] def signAgainst(df: DataFrame, mu: Seq[Double]): DataFrame =
+    sign(graft.Tables.withBroadcastArray(df, "mu", mu))
+
+  /** The signature frame of the corpus against its own means (the d-row
+    * statistic, then a pure map stage). */
+  private def signed(s: SparkSession, dir: String): DataFrame =
+    signAgainst(t(s, dir, "embeddings"), muArray(s, dir).toSeq)
 
   /** q_sim_binary_codes: the stored representation — two BIGINT halves
     * holding the 64 centered sign bits (8 bytes where the raw vector is
@@ -97,8 +105,14 @@ object Binary {
     * vec_id and the two halves), then an exact cosine re-rank that joins
     * raw embeddings for the Q·Shortlist shortlist rows only. Ties break on
     * neighbor id at both stages. */
-  def topK(s: SparkSession, dir: String): DataFrame = {
-    val sigs = signed(s, dir)
+  def topK(s: SparkSession, dir: String): DataFrame =
+    serve(s, dir, signed(s, dir)).orderBy("q_id", "rank")
+
+  /** THE binary serve — one body for the base signatures and the
+    * base ∪ delta snapshot (BinaryMaintenance): Hamming shortlist over
+    * `sigs` (vec_id, h0, h1), exact cosine re-rank of the shortlist rows;
+    * (q_id, n_id, hd, cos, rank), unordered. */
+  private[llm] def serve(s: SparkSession, dir: String, sigs: DataFrame): DataFrame = {
     val qSig = sigs.filter(col("vec_id") < NQueries).select(
       col("vec_id").as("q_id"), col("h0").as("q0"), col("h1").as("q1"))
     // the Hamming scan frame is corpus-sized — shortlist through the
@@ -126,7 +140,6 @@ object Binary {
       .withColumn("rank", row_number().over(wCos).cast("long"))
       .filter(col("rank") <= 10)
       .select(col("q_id"), col("n_id"), col("hd"), col("cos"), col("rank"))
-      .orderBy("q_id", "rank")
   }
 
 }

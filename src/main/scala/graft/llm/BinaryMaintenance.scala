@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -25,10 +24,10 @@ import graft.Tables._
   * (how far each segment sits from the frozen centering plane) plus the
   * per-segment set-bit rate (a well-fit sign quantizer keeps every bit
   * ~half set; a drifted batch skews it). Both are one scan + a 2-row
-  * aggregate — the q_index_drift cost tier, runnable per batch. */
+  * aggregate — the q_index_drift cost tier, runnable per batch. Signing
+  * and serving are Binary.sign / Binary.serve over the frozen means and
+  * the resolved signature frame. */
 object BinaryMaintenance {
-
-  private val NQueries = Binary.NQueries
 
   private[llm] def muTarget(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "binary", "up_mu", dir, "embeddings")
@@ -51,14 +50,9 @@ object BinaryMaintenance {
     * base member (pred = < cut) and the incremental add (pred = >= cut).
     * Pure map stage; the add's plan scans only the new rows. */
   private def signSlice(s: SparkSession, dir: String, mu: Array[Double],
-                        cut: Long, newRows: Boolean): DataFrame = {
-    val e = t(s, dir, "embeddings")
-      .filter(if (newRows) col("vec_id") >= cut else col("vec_id") < cut)
-    graft.Tables.withBroadcastArray(e, "mu", mu.toSeq)
-      .withColumn("h0", expr(Binary.halfSql(0)))
-      .withColumn("h1", expr(Binary.halfSql(Binary.HalfBits)))
-      .select("vec_id", "h0", "h1")
-  }
+                        cut: Long, newRows: Boolean): DataFrame =
+    Binary.signAgainst(t(s, dir, "embeddings")
+      .filter(if (newRows) col("vec_id") >= cut else col("vec_id") < cut), mu.toSeq)
 
   /** The signature snapshot: base and delta signed against the frozen
     * means (`mu` is read once for both members). Signatures are per-row
@@ -72,39 +66,14 @@ object BinaryMaintenance {
     (signSlice(s, dir, mu, cut, newRows = false), signSlice(s, dir, mu, cut, newRows = true))
   })
 
-  /** The binary serve over a given signature frame: Hamming shortlist
-    * through the k-bounded heap, exact cosine re-rank on the Q·Shortlist
-    * raw rows only, `is_new` on served neighbors (Binary.topK's shape +
-    * the IvfMaintenance.upsertServe flag). */
+  /** Both serves are `Binary.serve` over the signature frame they
+    * resolved, with `is_new` on served neighbors. */
   private def serveOver(s: SparkSession, dir: String, sigs: DataFrame,
-                        cut: Long): DataFrame = {
-    val qSig = sigs.filter(col("vec_id") < NQueries).select(
-      col("vec_id").as("q_id"), col("h0").as("q0"), col("h1").as("q1"))
-    val hamCands = sigs.join(broadcast(qSig), col("vec_id") =!= col("q_id"))
-      .withColumn("hds", (expr("bit_count(h0 ^ q0)") +
-        expr("bit_count(h1 ^ q1)")).cast("double"))
-      .select("q_id", "vec_id", "hds")
-    val shortlist = Ranking.topKPerGroup(hamCands,
-        "q_id", "hds", "vec_id", Binary.Shortlist, asc = true, "hds", "n_id")
-      .select(col("q_id"), col("n_id"), col("hds").cast("long").as("hd"))
-    val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"),
-      expr(s"sqrt(${Similarity.dotFor(s)("embedding", "embedding")})").as("nrm"))
-    val wCos = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    val ranked = shortlist
-      .join(raw.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm")), "n_id")
-      .join(broadcast(raw.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"))), "q_id")
-      .withColumn("cos", expr(Similarity.dotFor(s)("q_emb", "n_emb")) /
-        (col("q_nrm") * col("n_nrm")))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .filter(col("rank") <= 10)
-    Segments.withFlag(ranked, "n_id", cut)
+                        cut: Long): DataFrame =
+    Segments.withFlag(Binary.serve(s, dir, sigs), "n_id", cut)
       .select(col("q_id"), col("n_id"), col("hd"), col("cos"),
         col("rank"), col("is_new"))
       .orderBy("q_id", "rank")
-  }
 
   /** q_sim_binary_upsert: the post-add serve — Hamming scan over
     * base ∪ delta signatures (one snapshot resolve, so a concurrent
@@ -119,12 +88,8 @@ object BinaryMaintenance {
     * serve bit-for-bit. */
   private[llm] def rebuildServe(s: SparkSession, dir: String): DataFrame = {
     val cut = Segments.cut(s, dir, "embeddings")
-    val all = graft.Tables.withBroadcastArray(
-        t(s, dir, "embeddings"), "mu", publishedMu(s, dir, cut).toSeq)
-      .withColumn("h0", expr(Binary.halfSql(0)))
-      .withColumn("h1", expr(Binary.halfSql(Binary.HalfBits)))
-      .select("vec_id", "h0", "h1")
-    serveOver(s, dir, all, cut)
+    serveOver(s, dir,
+      Binary.signAgainst(t(s, dir, "embeddings"), publishedMu(s, dir, cut).toSeq), cut)
   }
 
   /** q_sim_binary_drift: the frozen-means STALENESS MONITOR — per segment

@@ -232,11 +232,21 @@ object Fusion {
 
   /** The LEXICAL tower's own top-10 per sample query, from the published
     * index — extracted from hybridTopK so the tower-ablation sweep serves
-    * the SAME frame the hybrid fuses. The scored frame is the query
-    * terms' POSTING LISTS (a literal IN over the token-clustered
-    * postings), never doc×vocab and never a corpus tokenize; per-(query,
-    * doc) BM25 sums are decimal-staged (order-free, exact). */
-  private[llm] def lexTopK(s: SparkSession, dir: String): DataFrame = {
+    * the SAME frame the hybrid fuses. */
+  private[llm] def lexTopK(s: SparkSession, dir: String): DataFrame =
+    lexTower(s, dir, LexIndex.vocab(s, dir), LexIndex.postings(s, dir),
+      LexIndex.stats(s, dir))
+
+  /** THE lexical tower — one body over a resolved (vocab, postings, stats)
+    * triple: the published index or the merged base ∪ delta snapshot
+    * (LexMaintenance.merged). The scored frame is the query terms' POSTING
+    * LISTS (a literal IN over the token-clustered postings), never
+    * doc×vocab and never a corpus tokenize; df comes from the dictionary
+    * slice the terms were selected with (equal to the base postings'
+    * denormalized df; the only live df for a snapshot); per-(query, doc)
+    * BM25 sums are decimal-staged (order-free, exact). */
+  private def lexTower(s: SparkSession, dir: String, vocab: DataFrame,
+                       post: DataFrame, stats: DataFrame): DataFrame = {
     // query-side tokenize: ONLY the sample query docs (pushed filter);
     // array_distinct reproduces the distinct (doc, token) pairs the tf
     // frame carried in the pre-published form
@@ -245,27 +255,27 @@ object Fusion {
       .select(col("doc_id").as("q_id"),
         explode(array_distinct(TextHash.tokens(col("text")))).as("token"))
     val wq = Window.partitionBy("q_id").orderBy(col("df"), col("token"))
-    // the (q_id, token) query-term frame is ≤ Q·HybridQTerms rows BY
+    // the (q_id, token, df) query-term frame is ≤ Q·HybridQTerms rows BY
     // CONTRACT — metadata tier (the probed-cell-ids discipline), so it
     // collects ONCE and re-enters as a literal: the selection subtree
     // (query-doc tokenize ⋈ vocab + window) would otherwise recompute for
     // the IN-filter, the broadcast join, and each downstream action
-    val qtRows = broadcast(qtoks).join(LexIndex.vocab(s, dir), "token")
+    val qtRows = broadcast(qtoks).join(vocab, "token")
       .withColumn("trn", row_number().over(wq))
       .filter(col("trn") <= HybridQTerms)
-      .select("q_id", "token")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
+      .select("q_id", "token", "df")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     import s.implicits._
-    val qt = qtRows.toSeq.toDF("q_id", "token")
+    val qt = qtRows.toSeq.toDF("q_id", "token", "df")
     // the literal IN is what prunes the token-clustered postings scan to
     // row groups
     val terms = qtRows.map(_._2).distinct.toSeq
     val wl = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id"))
-    LexIndex.postings(s, dir)
+    post.select("token", "doc_id", "tf", "dl")
       .filter(col("token").isInCollection(terms))
       .join(broadcast(qt), "token")
       .filter(col("doc_id") =!= col("q_id"))
-      .crossJoin(broadcast(LexIndex.stats(s, dir)))
+      .crossJoin(broadcast(stats))
       .withColumn("score_t", expr(TextAnalysis.bm25ScoreSql))
       .groupBy("q_id", "doc_id")
       .agg(graft.Tables.dsum10(col("score_t")).as("score"))
@@ -275,7 +285,8 @@ object Fusion {
   }
 
   /** The two-tower RRF tail (lex ranks ⋈ dense ranks, fixed textual term
-    * order) — shared by the base hybrid serve and the tower sweep. */
+    * order) — shared by the base and upsert hybrid serves and the tower
+    * sweep. */
   private def rrf2(lex: DataFrame, dense: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("rrf").desc, col("n_id"))
     lex.join(dense, Seq("q_id", "n_id"), "full_outer")
@@ -312,9 +323,11 @@ object Fusion {
     * metadata-tier join (rrf2). Every division is one correctly-rounded
     * IEEE op — hash-checked end to end. */
   def hybridTopK(s: SparkSession, dir: String): DataFrame =
-    rrf2(Rankings.lex(s, dir),
-      Rankings.ivf(s, dir)
-        .select(col("q_id"), col("n_id"), col("rank").as("r_dense")))
+    rrf2(Rankings.lex(s, dir), denseSide(Rankings.ivf(s, dir)))
+
+  /** A dense ranking as the RRF tail's dense side: (q_id, n_id, r_dense). */
+  private def denseSide(ranking: DataFrame): DataFrame =
+    ranking.select(col("q_id"), col("n_id"), col("rank").as("r_dense"))
 
   /** q_retrieve_sweep: the hybrid's TOWER ABLATION — recall@10 vs the
     * exact cosine top-10 for the lexical tower alone, the dense tower
@@ -337,9 +350,7 @@ object Fusion {
     // over them are parquet re-reads of metadata, no checkpoint needed
     val lex = Rankings.lex(s, dir)
     val dense = Rankings.ivf(s, dir)
-    val hybrid = rrf2(lex,
-      dense.select(col("q_id"), col("n_id"), col("rank").as("r_dense")))
-    val rows = Seq("dense" -> dense, "hybrid" -> hybrid, "lex" -> lex)
+    val rows = Seq("dense" -> dense, "hybrid" -> rrf2(lex, denseSide(dense)), "lex" -> lex)
       .map { case (tower, df) =>
         val hits = pairsOf(df).count(exact.contains)
         (tower, exact.size.toLong, hits.toLong,
@@ -368,43 +379,14 @@ object Fusion {
   def recallHybrid(s: SparkSession, dir: String): DataFrame =
     Similarity.recallOf(s, dir, hybridTopK(s, dir))
 
-  /** The lexical tower's UPSERT-aware ranking — per-query selective terms
-    * from the MERGED dictionary (base + delta df — exact integer sums,
-    * identical to the full-corpus derivation), BM25 over base ∪ delta
-    * posting members with merged stats — posting lists only, never a
-    * corpus tokenize. Extracted from hybridUpsertTopK so it publishes as
-    * its own ranking variant (Rankings.lexUpsert). */
+  /** The lexical tower's UPSERT-aware ranking — `lexTower` over the
+    * MERGED snapshot: per-query selective terms from the merged dictionary
+    * (base + delta df — exact integer sums, identical to the full-corpus
+    * derivation), BM25 over base ∪ delta posting members with merged
+    * stats. Published as its own ranking variant (Rankings.lexUpsert). */
   private[llm] def lexUpsertTopK(s: SparkSession, dir: String): DataFrame = {
     val m = LexMaintenance.merged(s, dir, LexMaintenance.current(s, dir))
-    val qtoks = graft.Tables.t(s, dir, "documents")
-      .filter(col("doc_id") < HybridQueries)
-      .select(col("doc_id").as("q_id"),
-        explode(array_distinct(TextHash.tokens(col("text")))).as("token"))
-    val wq = Window.partitionBy("q_id").orderBy(col("df"), col("token"))
-    // ≤ Q·HybridQTerms rows BY CONTRACT — metadata tier, collected once
-    // (the hybridTopK discipline); carrying df through the collect means
-    // the MERGED dictionary aggregates exactly once per call instead of
-    // re-running for the scoring join's broadcast dictionary slice
-    val qtRows = broadcast(qtoks).join(m.vocab, "token")
-      .withColumn("trn", row_number().over(wq))
-      .filter(col("trn") <= HybridQTerms)
-      .select("q_id", "token", "df")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    import s.implicits._
-    val qt = qtRows.toSeq.toDF("q_id", "token", "df")
-    val terms = qtRows.map(_._2).distinct.toSeq
-    val wl = Window.partitionBy("q_id").orderBy(col("score").desc, col("doc_id"))
-    m.post
-      .filter(col("token").isInCollection(terms))
-      .join(broadcast(qt), "token")
-      .filter(col("doc_id") =!= col("q_id"))
-      .crossJoin(broadcast(m.stats))
-      .withColumn("score_t", expr(TextAnalysis.bm25ScoreSql))
-      .groupBy("q_id", "doc_id")
-      .agg(graft.Tables.dsum10(col("score_t")).as("score"))
-      .withColumn("r_lex", row_number().over(wl).cast("long"))
-      .filter(col("r_lex") <= 10)
-      .select(col("q_id"), col("doc_id").as("n_id"), col("r_lex"))
+    lexTower(s, dir, m.vocab, m.post, m.stats)
   }
 
   /** q_retrieve_hybrid_upsert: the two-tower serve's FRESHNESS leg — BOTH
@@ -420,23 +402,11 @@ object Fusion {
     * so the serve exposes BOTH staleness flags — is_new_lex /
     * is_new_dense — rather than pretending one cut covers both id
     * spaces. */
-  def hybridUpsertTopK(s: SparkSession, dir: String): DataFrame = {
-    val lexCut = Segments.cut(s, dir, "documents")
-    val denseCut = Segments.cut(s, dir, "embeddings")
-    val lex = Rankings.lexUpsert(s, dir)
-    val dense = Rankings.ivfUpsert(s, dir)
-      .select(col("q_id"), col("n_id"), col("rank").as("r_dense"))
-    val w = Window.partitionBy("q_id").orderBy(col("rrf").desc, col("n_id"))
-    lex.join(dense, Seq("q_id", "n_id"), "full_outer")
-      .withColumn("rrf", expr(
-        s"coalesce(CAST(1 AS DOUBLE) / ($FusionK + r_lex), 0D) + " +
-          s"coalesce(CAST(1 AS DOUBLE) / ($FusionK + r_dense), 0D)"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 10)
-      .withColumn("is_new_lex", Segments.flag(col("n_id"), lexCut))
-      .withColumn("is_new_dense", Segments.flag(col("n_id"), denseCut))
+  def hybridUpsertTopK(s: SparkSession, dir: String): DataFrame =
+    rrf2(Rankings.lexUpsert(s, dir), denseSide(Rankings.ivfUpsert(s, dir)))
+      .withColumn("is_new_lex", Segments.flag(col("n_id"), Segments.cut(s, dir, "documents")))
+      .withColumn("is_new_dense", Segments.flag(col("n_id"), Segments.cut(s, dir, "embeddings")))
       .select("q_id", "n_id", "rrf", "rank", "is_new_lex", "is_new_dense")
       .orderBy("q_id", "rank")
-  }
 
 }

@@ -24,10 +24,8 @@ import graft.Tables.exactMean
   * would produce (UpsertIvfSpec pins the equivalence) — the freshness gap
   * of real systems is only the centroids' staleness, surfaced here by the
   * is_new flag on served neighbors. The base/delta storage is a
-  * Segments.Root. */
+  * Segments.Root; both serves are Similarity.probeServe over it. */
 object IvfMaintenance {
-
-  private val NQueries = 8
 
   private[graft] def centsTarget(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "ivf", "up_cents", dir, "embeddings")
@@ -49,10 +47,13 @@ object IvfMaintenance {
                                  newRows: Boolean): DataFrame = {
     val e = Similarity.withNorm(s, dir)
       .filter(if (newRows) col("vec_id") >= cut else col("vec_id") < cut)
-    Similarity.rankAgainst(e, cents(s, dir, cut))
-      .filter(col("crn") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
+    members(e, cents(s, dir, cut))
   }
+
+  /** List members of `e` under their nearest frozen centroid. */
+  private def members(e: DataFrame, cs: DataFrame): DataFrame =
+    Similarity.nearestCell(e, cs)
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
 
   /** The inverted lists: base and delta members hive-partitioned by cell,
     * so every serve prunes both to the probed cells. Compaction (`compact`)
@@ -69,30 +70,14 @@ object IvfMaintenance {
     (assignSlice(s, dir, cut, newRows = false), assignSlice(s, dir, cut, newRows = true))
   })
 
-  /** The probe/score/rank tail of both serves: the 8 sample queries probe
-    * their `NProbe` nearest frozen centroids, `all` is read pruned to the
-    * probed cells, candidates rank through the k-bounded heap, and `is_new`
-    * marks late neighbors. */
+  /** Both serves are `Similarity.probeServe` over the frozen centroids
+    * and the list frame they resolved; `is_new` marks late neighbors. */
   private def serveOver(s: SparkSession, dir: String, all: DataFrame,
-                        cs: DataFrame, cut: Long): DataFrame = {
-    val q = Similarity.withNorm(s, dir).filter(col("vec_id") < NQueries)
-    val probes = Similarity.rankAgainst(q, cs)
-      .filter(col("crn") <= Similarity.NProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cent_id"))
-    val cellIds = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val cands = all.filter(col("cent_id").isInCollection(cellIds))
-      .join(broadcast(probes), "cent_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr(Similarity.dotFor(s)("q_emb", "embedding")) /
-        (col("q_nrm") * col("nrm")))
-      .select("q_id", "vec_id", "cos")
-    Segments.withFlag(Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10,
-        asc = false, "cos", "n_id"), "n_id", cut)
+                        cs: DataFrame, cut: Long): DataFrame =
+    Segments.withFlag(Similarity.probeServe(Similarity.sampleQueries(s, dir), cs, all),
+        "n_id", cut)
       .select("q_id", "n_id", "cos", "rank", "is_new")
       .orderBy("q_id", "rank")
-  }
 
   /** q_sim_ivf_upsert: the post-add serve — top-10 per sample query over
     * base ∪ delta lists, both read cell-pruned (PartitionFilters on each).
@@ -116,8 +101,7 @@ object IvfMaintenance {
   def drift(s: SparkSession, dir: String): DataFrame = {
     val cut = Segments.cut(s, dir, "embeddings")
     val cs = cents(s, dir, cut)
-    Similarity.rankAgainst(Similarity.withNorm(s, dir), cs)
-      .filter(col("crn") === 1)
+    Similarity.nearestCell(Similarity.withNorm(s, dir), cs)
       .withColumn("segment", Segments.segment(col("vec_id"), cut))
       .groupBy("segment")
       .agg(count(lit(1)).as("n"), exactMean(col("c_cos")).as("mean_cos"),
@@ -132,10 +116,7 @@ object IvfMaintenance {
   private[llm] def rebuildServe(s: SparkSession, dir: String): DataFrame = {
     val cut = Segments.cut(s, dir, "embeddings")
     val cs = cents(s, dir, cut)
-    val all = Similarity.rankAgainst(Similarity.withNorm(s, dir), cs)
-      .filter(col("crn") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
-    serveOver(s, dir, all, cs, cut)
+    serveOver(s, dir, members(Similarity.withNorm(s, dir), cs), cs, cut)
   }
 
 }

@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -29,6 +28,11 @@ import graft.Tables._
   *    that distinguishes it from flat ADC) — metadata-tier, broadcast;
   *  - candidate estimates rank through the k-bounded `top_structs` heap
   *    (Ranking.topKPerGroup): Q×k rows cross the exchange, never Q×N.
+  *
+  * Every serve — base, sweep, upsert — is one residual split (`split`),
+  * one ADC estimate (`adcEstimate`) over the state it resolved, the
+  * shared ranking tail (Pq.adcRank) and the shared exact-L2 rerank
+  * (Pq.rerank).
   *
   * Numeric discipline — what makes a TRAINED composite oracle-checkable:
   * raw fixture components are exact on the 2^-48 grid, but a trained
@@ -61,20 +65,27 @@ object IvfPq {
     s"(CAST(CAST($x AS DOUBLE) * $MeanScale AS BIGINT) - " +
       s"CAST(FLOOR($c * $MeanScale) AS BIGINT)) / CAST($MeanScale AS DOUBLE)"
 
-  /** (vec_id, cent_id, m, sv): every vector's M residual subvectors against
-    * its own cell's snapped centroid — one map pass over the published
-    * inverted lists joined to the broadcast k×d centroid frame; the M
-    * fan-out is a constant, never a shuffle. */
-  private[llm] def residualSubvecs(s: SparkSession, dir: String): DataFrame =
-    Similarity.publishedAssignments(s, dir)
-      .join(broadcast(Similarity.centroids(s, dir)), "cent_id")
-      .withColumn("r", expr(
+  /** THE residual split: each row's grid-snapped residual (`embedding` −
+    * its cell's `c_emb`) cut into M subvectors — (keys…, m, `sv`). One map
+    * pass; the M fan-out is a constant, never a shuffle. Shared by the
+    * list residuals (base and frozen-coarse) and the query residuals of
+    * every ADC estimate. */
+  private def split(df: DataFrame, keys: Seq[String], sv: String): DataFrame =
+    df.withColumn("r", expr(
         s"zip_with(embedding, c_emb, (x, c) -> ${residSql("x", "c")})"))
-      .select(col("vec_id"), col("cent_id"), explode(expr(
+      .select(keys.map(col) :+ explode(expr(
         s"transform(sequence(0, ${M - 1}), m -> struct(m AS m, " +
-          s"slice(r, m * $SubDim + 1, $SubDim) AS sv))")).as("t"))
-      .select(col("vec_id"), col("cent_id"),
-        col("t.m").as("m"), col("t.sv").as("sv"))
+          s"slice(r, m * $SubDim + 1, $SubDim) AS sv))")).as("t"): _*)
+      .select(keys.map(col) ++ Seq(col("t.m").as("m"), col("t.sv").as(sv)): _*)
+
+  /** (vec_id, cent_id, m, sv) of every list member against its own cell's
+    * snapped centroid — the lists joined to the broadcast k×d centroids. */
+  private def residuals(lists: DataFrame, cents: DataFrame): DataFrame =
+    split(lists.join(broadcast(cents), "cent_id"), Seq("vec_id", "cent_id"), "sv")
+
+  /** The residual subvectors of the published trained IVF lists. */
+  private[llm] def residualSubvecs(s: SparkSession, dir: String): DataFrame =
+    residuals(Similarity.publishedAssignments(s, dir), Similarity.centroids(s, dir))
 
   /** Train the M RESIDUAL codebooks — Pq.lloydBooks verbatim over the
     * residual subvector frame (seed = first K vectors' residuals, scaled-
@@ -108,18 +119,43 @@ object IvfPq {
       // partition-column inference reads dir names as int — restore long
       .select(col("vec_id"), col("m"), col("code"), col("cent_id").cast("long").as("cent_id"))
 
-  /** ADC shortlist per sample query. The LUT is PER PROBED CELL (query
-    * residual re-expressed against each probed centroid): NQueries × NProbe
-    * × M × K exact partial distances — 4096 doubles at the fixture tier,
-    * broadcast. Candidates come ONLY from the probed cells' partition
-    * directories (the literal IN below is what becomes PartitionFilters);
-    * each candidate costs M lookups folded in fixed m-ascending order (the
-    * DuckDB twin's list_sum(list(pd ORDER BY m)) — bit-identical). */
-  private def adcShortlist(s: SparkSession, dir: String, k: Int): DataFrame =
-    Ranking.topKPerGroup(estimates(s, dir).select("q_id", "n_id", "est_d2"),
-      "q_id", "est_d2", "n_id", k, asc = true, "est_d2", "n_id")
+  /** THE IVFADC estimate — one body for the base serves, the sweep and
+    * the upsert serves; each passes the state it resolved: `probes`
+    * (q_id, cent_id[, crn]) of the sample queries, the `cents` they probed,
+    * the residual `books` and the cell-partitioned `codes`. The LUT is PER
+    * PROBED CELL (query residual re-expressed against each probed
+    * centroid): NQueries × NProbe × M × K exact partial distances — 4096
+    * doubles at the fixture tier, broadcast. Candidates come ONLY from the
+    * probed cells' partition directories (the literal IN below is what
+    * becomes PartitionFilters); each costs M lookups folded in fixed
+    * m-ascending order (Pq.adcSum — the DuckDB twin's
+    * list_sum(list(pd ORDER BY m)), bit-identical). A `crn` probe column
+    * carries through: a candidate lives in exactly one cell, so min is THE
+    * probe rank. */
+  private def adcEstimate(s: SparkSession, dir: String, probes: DataFrame,
+                          cents: DataFrame, books: DataFrame,
+                          codes: DataFrame): DataFrame = {
+    val dd = Clustering.dist2For(s) _
+    val keys = probes.columns.toSeq
+    val q = t(s, dir, "embeddings").filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("q_id"), col("embedding"))
+    val qres = split(probes.join(broadcast(q), "q_id")
+      .join(broadcast(cents), "cent_id"), keys, "qsv")
+    val lut = qres.join(broadcast(books), "m")
+      .select(keys.map(col) ++ Seq(col("m"), col("code"),
+        expr(dd("qsv", "csv")).as("pd")): _*)
+    // probed cell ids: ≤ min(cells, Q·nprobe) longs — metadata tier
+    val cellIds = probes.select("cent_id").distinct()
+      .collect().map(_.getLong(0)).toSeq
+    codes.filter(col("cent_id").isInCollection(cellIds))
+      .join(broadcast(lut), Seq("cent_id", "m", "code"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .groupBy(col("q_id"), col("vec_id").as("n_id"))
+      .agg(Pq.adcSum.as("est_d2"),
+        (if (keys.contains("crn")) Seq(min(col("crn")).as("crn")) else Nil): _*)
+  }
 
-  /** Every probed-cell candidate's ADC estimate, computed ONCE, carrying
+  /** Every base-index candidate's ADC estimate, computed ONCE, carrying
     * its cell's probe rank (crn) — the shared pass behind the fixed-nprobe
     * serves AND the operating-curve sweep (a curve point is a crn filter
     * over this frame, never a re-scan of the code lists). */
@@ -136,40 +172,14 @@ object IvfPq {
     require(Similarity.SweepProbes.max <= Similarity.NProbe,
       s"SweepProbes max ${Similarity.SweepProbes.max} exceeds NProbe " +
         s"${Similarity.NProbe}: estimates() only carries NProbe-deep probes")
-    val dd = Clustering.dist2For(s) _
-    val probes = Similarity.probeCells(s, dir).select("q_id", "crn", "cent_id")
-    val q = t(s, dir, "embeddings").filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    val qres = probes.join(broadcast(q), "q_id")
-      .join(broadcast(Similarity.centroids(s, dir)), "cent_id")
-      .withColumn("qr", expr(
-        s"zip_with(embedding, c_emb, (x, c) -> ${residSql("x", "c")})"))
-      .select(col("q_id"), col("crn"), col("cent_id"), explode(expr(
-        s"transform(sequence(0, ${M - 1}), m -> struct(m AS m, " +
-          s"slice(qr, m * $SubDim + 1, $SubDim) AS qsv))")).as("t"))
-      .select(col("q_id"), col("crn"), col("cent_id"),
-        col("t.m").as("m"), col("t.qsv").as("qsv"))
-    val lut = qres.join(broadcast(books(s, dir)), "m")
-      .select(col("q_id"), col("crn"), col("cent_id"), col("m"), col("code"),
-        expr(dd("qsv", "csv")).as("pd"))
-    // probed cell ids: ≤ min(cells, Q·nprobe) longs — metadata tier
-    val cellIds = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    publishedCodes(s, dir)
-      .filter(col("cent_id").isInCollection(cellIds))
-      .join(broadcast(lut), Seq("cent_id", "m", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg(expr("aggregate(transform(array_sort(collect_list(struct(m, pd))), " +
-        "p -> p.pd), 0D, (acc, x) -> acc + x)").as("est_d2"),
-        // a candidate lives in exactly one cell, so min is THE probe rank
-        min(col("crn")).as("crn"))
+    adcEstimate(s, dir, Similarity.probeCells(s, dir).select("q_id", "crn", "cent_id"),
+      Similarity.centroids(s, dir), books(s, dir), publishedCodes(s, dir))
   }
 
   /** q_sim_ivfpq: IVFADC top-10 per sample query — cell-pruned scan of the
     * published code lists, ADC estimates, heap ranking. */
   def adcTopK(s: SparkSession, dir: String): DataFrame =
-    adcShortlist(s, dir, 10)
+    Pq.adcRank(estimates(s, dir), 10)
       .select("q_id", "n_id", "est_d2", "rank")
       .orderBy("q_id", "rank")
 
@@ -178,22 +188,10 @@ object IvfPq {
     * embeddings are fetched for the exact euclidean re-rank. At 100 TB the
     * exact pass touches NQueries·Shortlist vectors, never the corpus; the
     * re-rank window runs over ≤ Q·Shortlist rows. */
-  def rerankTopK(s: SparkSession, dir: String): DataFrame = {
-    val dd = Clustering.dist2For(s) _
-    val e = t(s, dir, "embeddings")
-    adcShortlist(s, dir, Shortlist)
-      .select("q_id", "n_id")
-      .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), "n_id")
-      .join(broadcast(e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"))), "q_id")
-      .withColumn("d2", expr(dd("qe", "ne")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("d2"), col("n_id")))
-        .cast("long"))
-      .filter(col("rank") <= 10)
+  def rerankTopK(s: SparkSession, dir: String): DataFrame =
+    Pq.rerank(s, dir, Pq.adcRank(estimates(s, dir), Shortlist).select("q_id", "n_id"), "q_id")
       .select("q_id", "n_id", "d2", "rank")
       .orderBy("q_id", "rank")
-  }
 
   /** q_sim_ivfpq_sweep: the recall@10-vs-nprobe OPERATING CURVE for the
     * COMPOSITE's production serve (ADC shortlist + exact re-rank at each
@@ -206,7 +204,6 @@ object IvfPq {
     * size (the q_sim_recall posture). Integer hit counts, one IEEE
     * division per row — oracle-hashable. */
   def sweep(s: SparkSession, dir: String): DataFrame = {
-    val dd = Clustering.dist2For(s) _
     import s.implicits._
     val np = Similarity.SweepProbes.map(_.toLong).toDF("nprobe")
     val fanned = estimates(s, dir).crossJoin(broadcast(np))
@@ -218,25 +215,8 @@ object IvfPq {
         Shortlist, asc = true, "est_d2", "n_id")
       .select(expr("gk div 1024").as("nprobe"), expr("gk % 1024").as("q_id"),
         col("n_id"))
-    val e = t(s, dir, "embeddings")
-    val reranked = short
-      .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), "n_id")
-      .join(broadcast(e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"))), "q_id")
-      .withColumn("d2", expr(dd("qe", "ne")))
-      .withColumn("rn", row_number().over(Window
-        .partitionBy("nprobe", "q_id").orderBy(col("d2"), col("n_id"))))
-      .filter(col("rn") <= 10)
-      .select(col("nprobe"), col("q_id"), col("n_id"), lit(1L).as("hit"))
-    Rankings.exactL2(s, dir).select("q_id", "n_id")
-      .crossJoin(broadcast(np))
-      .join(reranked, Seq("nprobe", "q_id", "n_id"), "left")
-      .groupBy("nprobe")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("recall",
-        col("n_hit").cast("double") / col("n_exact").cast("double"))
-      .orderBy("nprobe")
+    Ranking.recall(Rankings.exactL2(s, dir).select("q_id", "n_id").crossJoin(broadcast(np)),
+      Pq.rerank(s, dir, short, "nprobe", "q_id"), "nprobe")
   }
 
   // ———— composite maintenance: freeze coarse AND books, encode-add ————
@@ -251,19 +231,9 @@ object IvfPq {
     * IvfMaintenance lists — base assignment and the O(batch) adds alike)
     * joined to the broadcast frozen centroids, grid-snap residuals, M-way
     * split. One map pass. */
-  private def upResidualSubvecs(s: SparkSession, dir: String): DataFrame = {
-    val cut = Segments.cut(s, dir, "embeddings")
-    IvfMaintenance.lists.read(s, dir)
-      .join(broadcast(IvfMaintenance.cents(s, dir, cut)
-        .select(col("cent_id"), col("c_emb"))), "cent_id")
-      .withColumn("r", expr(
-        s"zip_with(embedding, c_emb, (x, c) -> ${residSql("x", "c")})"))
-      .select(col("vec_id"), col("cent_id"), explode(expr(
-        s"transform(sequence(0, ${M - 1}), m -> struct(m AS m, " +
-          s"slice(r, m * $SubDim + 1, $SubDim) AS sv))")).as("t"))
-      .select(col("vec_id"), col("cent_id"),
-        col("t.m").as("m"), col("t.sv").as("sv"))
-  }
+  private def upResidualSubvecs(s: SparkSession, dir: String): DataFrame =
+    residuals(IvfMaintenance.lists.read(s, dir),
+      IvfMaintenance.cents(s, dir, Segments.cut(s, dir, "embeddings")))
 
   /** Books trained on the BASE slice's residuals only (Pq.lloydBooks over
     * the filtered frame — the freeze), published once. */
@@ -308,13 +278,11 @@ object IvfPq {
     * no training ever saw. The composite's add is two map passes per batch
     * (assign cell, encode residual) — the full maintenance symmetry with
     * q_sim_ivf_upsert at the composite's 8-bytes-per-vector scan cost. */
-  def upsertAdcTopK(s: SparkSession, dir: String): DataFrame = {
-    val cut = Segments.cut(s, dir, "embeddings")
-    Segments.withFlag(Ranking.topKPerGroup(upsertEst(s, dir), "q_id", "est_d2",
-        "n_id", 10, asc = true, "est_d2", "n_id"), "n_id", cut)
+  def upsertAdcTopK(s: SparkSession, dir: String): DataFrame =
+    Segments.withFlag(Pq.adcRank(upsertEst(s, dir), 10), "n_id",
+        Segments.cut(s, dir, "embeddings"))
       .select("q_id", "n_id", "est_d2", "rank", "is_new")
       .orderBy("q_id", "rank")
-  }
 
   /** q_sim_ivfpq_upsert_rerank: the composite's PRODUCTION freshness
     * serve (r12) — the freshness rank audit measured the ADC-only upsert
@@ -325,63 +293,22 @@ object IvfPq {
     * candidates from base ∪ delta codes, ONLY those rows' raw embeddings
     * are fetched for the exact euclidean re-rank (Q·Shortlist vectors at
     * any corpus size), `is_new` flags late neighbors. */
-  def upsertRerankTopK(s: SparkSession, dir: String): DataFrame = {
-    val dd = Clustering.dist2For(s) _
-    val cut = Segments.cut(s, dir, "embeddings")
-    val e = t(s, dir, "embeddings")
-    val reranked = Ranking.topKPerGroup(upsertEst(s, dir), "q_id", "est_d2", "n_id",
-        Shortlist, asc = true, "est_d2", "n_id")
-      .select("q_id", "n_id")
-      .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), "n_id")
-      .join(broadcast(e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"))), "q_id")
-      .withColumn("d2", expr(dd("qe", "ne")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("d2"), col("n_id")))
-        .cast("long"))
-      .filter(col("rank") <= 10)
-    Segments.withFlag(reranked, "n_id", cut)
+  def upsertRerankTopK(s: SparkSession, dir: String): DataFrame =
+    Segments.withFlag(Pq.rerank(s, dir,
+        Pq.adcRank(upsertEst(s, dir), Shortlist).select("q_id", "n_id"), "q_id"),
+        "n_id", Segments.cut(s, dir, "embeddings"))
       .select("q_id", "n_id", "d2", "rank", "is_new")
       .orderBy("q_id", "rank")
-  }
 
   /** The shared base ∪ delta ADC estimate frame (frozen two-stage
     * quantizer) — the serve unit upsertAdcTopK ranks to 10 and the
-    * production rerank shortlists. */
+    * production rerank shortlists: `adcEstimate` over the frozen
+    * centroids' probes, the frozen books and the code snapshot. */
   private def upsertEst(s: SparkSession, dir: String): DataFrame = {
-    val dd = Clustering.dist2For(s) _
-    val cut = Segments.cut(s, dir, "embeddings")
-    val cs = IvfMaintenance.cents(s, dir, cut).select("cent_id", "c_emb")
-    val e = t(s, dir, "embeddings")
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id"), col("embedding"),
-        expr(Similarity.normFor(s)("embedding")).as("nrm"))
-    val probes = Similarity.rankAgainst(q, cs)
-      .filter(col("crn") <= Similarity.NProbe)
-      .select(col("vec_id").as("q_id"), col("cent_id"))
-    val qres = probes
-      .join(broadcast(q.select(col("vec_id").as("q_id"), col("embedding"))), "q_id")
-      .join(broadcast(cs), "cent_id")
-      .withColumn("qr", expr(
-        s"zip_with(embedding, c_emb, (x, c) -> ${residSql("x", "c")})"))
-      .select(col("q_id"), col("cent_id"), explode(expr(
-        s"transform(sequence(0, ${M - 1}), m -> struct(m AS m, " +
-          s"slice(qr, m * $SubDim + 1, $SubDim) AS qsv))")).as("t"))
-      .select(col("q_id"), col("cent_id"),
-        col("t.m").as("m"), col("t.qsv").as("qsv"))
-    val lut = qres.join(broadcast(upBooks(s, dir)), "m")
-      .select(col("q_id"), col("cent_id"), col("m"), col("code"),
-        expr(dd("qsv", "csv")).as("pd"))
-    val cellIds = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val est = upCodes.read(s, dir)
-      .filter(col("cent_id").isInCollection(cellIds))
-      .join(broadcast(lut), Seq("cent_id", "m", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg(expr("aggregate(transform(array_sort(collect_list(struct(m, pd))), " +
-        "p -> p.pd), 0D, (acc, x) -> acc + x)").as("est_d2"))
-    est
+    val cs = IvfMaintenance.cents(s, dir, Segments.cut(s, dir, "embeddings"))
+    adcEstimate(s, dir, Similarity.probesOf(Similarity.sampleQueries(s, dir), cs)
+        .select(col("vec_id").as("q_id"), col("cent_id")),
+      cs, upBooks(s, dir), upCodes.read(s, dir))
   }
 
   /** q_sim_ivfpq_drift: the COMPOSITE's STALENESS MONITOR — how well the
@@ -433,18 +360,8 @@ object IvfPq {
     * re-ranked IVFADC top-10 measured against the exact L2 top-10 per
     * query (integer hit counts, one IEEE division — hash-checkable, the
     * q_sim_recall posture: index drift fails the driver gate). */
-  def recallAudit(s: SparkSession, dir: String): DataFrame = {
-    val exact = Rankings.exactL2(s, dir).select("q_id", "n_id")
-    val approx = Rankings.ivfpq(s, dir)
-      .select(col("q_id").as("a_q"), col("n_id").as("a_n"), lit(1L).as("hit"))
-    exact.join(approx,
-        col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("recall",
-        col("n_hit").cast("double") / col("n_exact").cast("double"))
-      .orderBy("q_id")
-  }
+  def recallAudit(s: SparkSession, dir: String): DataFrame =
+    Ranking.recall(Rankings.exactL2(s, dir).select("q_id", "n_id"),
+      Rankings.ivfpq(s, dir), "q_id")
 
 }

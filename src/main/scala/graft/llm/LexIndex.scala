@@ -46,7 +46,8 @@ import TextHash.tokens
   * IEEE score the inline derivation produced — the DuckDB twins are
   * unchanged and the hashes must not move. Targets are state-store roots
   * (graft.etl.State), the index-build-id analog: a rewritten corpus or a
-  * code change can never serve a stale index. */
+  * code change can never serve a stale index. The tower that serves this
+  * index and the maintained snapshot alike is Fusion.lexTower. */
 object LexIndex {
 
   /** Part-files for the clustered postings (the DescentFiles tier at the

@@ -67,14 +67,19 @@ object Mining {
         expr(Similarity.dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
       .filter(col("cos") <= NearDupCeiling)
       .select("q_id", "vec_id", "cos")
-    val ranked = Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id",
-        NegK, asc = false, "cos", "n_id")
-      .join(broadcast(q.select(col("q_id"), col("q_label"))), "q_id")
+    labeled(e, Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id",
+        NegK, asc = false, "cos", "n_id"))
+  }
+
+  /** The miners' shared tail: each ranked (q_id, n_id) negative with both
+    * labels — the anchors×k winner frame broadcast against the corpus, no
+    * shuffle. */
+  private def labeled(e: DataFrame, ranked: DataFrame): DataFrame =
     e.select(col("vec_id").as("n_id"), col("label").as("n_label"))
-      .join(broadcast(ranked), "n_id")
+      .join(broadcast(ranked.join(
+        broadcast(anchors(e).select(col("q_id"), col("q_label"))), "q_id")), "n_id")
       .select("q_id", "q_label", "n_id", "n_label", "cos", "rank")
       .orderBy("q_id", "rank")
-  }
 
   /** q_mine_triplets: FaceNet-style SEMI-HARD triplet mining. Per anchor:
     * the top-1 same-label vector is the positive (excluding the anchor
@@ -128,29 +133,12 @@ object Mining {
     * is the ground-truth SAMPLE path, this is the serve. Output schema
     * matches `hardNegatives` exactly. */
   def hardNegativesIvf(s: SparkSession, dir: String): DataFrame = {
-    val cents = Similarity.centroids(s, dir)
-    val lists = Similarity.publishedAssignments(s, dir)
     val e = corpus(s, dir)
-    val probes = Similarity.rankAgainst(e.filter(col("vec_id") < 8), cents)
-      .filter(col("crn") <= Similarity.NProbe)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"), col("nrm").as("q_nrm"), col("cent_id"))
-    val cellIds = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val cands = lists.filter(col("cent_id").isInCollection(cellIds))
-      .join(broadcast(probes), "cent_id")
-      .filter(col("label") =!= col("q_label"))
-      .withColumn("cos",
-        expr(Similarity.dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
-      .filter(col("cos") <= NearDupCeiling)
-      .select("q_id", "vec_id", "cos")
-    val ranked = Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id",
-        NegK, asc = false, "cos", "n_id")
-      .join(broadcast(probes.select("q_id", "q_label").distinct()), "q_id")
-    e.select(col("vec_id").as("n_id"), col("label").as("n_label"))
-      .join(broadcast(ranked), "n_id")
-      .select("q_id", "q_label", "n_id", "n_label", "cos", "rank")
-      .orderBy("q_id", "rank")
+    labeled(e, Similarity.probeServe(e.filter(col("vec_id") < 8),
+      Similarity.centroids(s, dir), Similarity.publishedAssignments(s, dir),
+      carry = Seq(col("label").as("q_label")),
+      keep = col("label") =!= col("q_label"),
+      cap = Some(col("cos") <= NearDupCeiling), k = NegK))
   }
 
   /** q_mine_recall: recall@NegK of the IVF-served miner against the exact
@@ -158,17 +146,7 @@ object Mining {
     * store-shaped path honest (the q_sim_recall discipline applied to
     * mining: integer hit counts, one IEEE division, so quality drift
     * fails the driver's hash gate mechanically). */
-  def mineRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = hardNegatives(s, dir).select(col("q_id"), col("n_id"))
-    val approx = hardNegativesIvf(s, dir)
-      .select(col("q_id").as("a_q"), col("n_id").as("a_n"), lit(1L).as("hit"))
-    exact.join(approx,
-        col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("recall",
-        col("n_hit").cast("double") / col("n_exact").cast("double"))
-      .orderBy("q_id")
-  }
+  def mineRecall(s: SparkSession, dir: String): DataFrame =
+    Ranking.recall(hardNegatives(s, dir).select(col("q_id"), col("n_id")),
+      hardNegativesIvf(s, dir), "q_id")
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -123,14 +123,42 @@ object Pq {
       .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qsv"))
     val lut = q.join(broadcast(books(s, dir)), "m")
       .select(col("q_id"), col("m"), col("code"), expr(dd("qsv", "csv")).as("pd"))
-    val est = codesOf(s, dir)
+    adcRank(codesOf(s, dir)
       .join(broadcast(lut), Seq("m", "code"))
       .filter(col("q_id") =!= col("vec_id"))
       .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg(expr("aggregate(transform(array_sort(collect_list(struct(m, pd))), " +
-        "p -> p.pd), 0D, (acc, x) -> acc + x)").as("est_d2"))
-    Ranking.topKPerGroup(est, "q_id", "est_d2", "n_id", k, asc = true,
-      "est_d2", "n_id")
+      .agg(adcSum.as("est_d2")), k)
+  }
+
+  /** A candidate's ADC estimate: its M partial distances `pd` folded in
+    * FIXED m-ascending order. */
+  private[llm] def adcSum: Column = expr("aggregate(transform(array_sort(" +
+    "collect_list(struct(m, pd))), p -> p.pd), 0D, (acc, x) -> acc + x)")
+
+  /** The ADC ranking tail of the flat and composite serves: the best `k`
+    * (q_id, n_id) per query by estimate, ties to the lower id, through the
+    * k-bounded heap. */
+  private[llm] def adcRank(est: DataFrame, k: Int): DataFrame =
+    Ranking.topKPerGroup(est.select("q_id", "n_id", "est_d2"),
+      "q_id", "est_d2", "n_id", k, asc = true, "est_d2", "n_id")
+
+  /** The exact-L2 rerank of every PQ-family serve: the (…, q_id, n_id)
+    * shortlist joins ONLY its rows' raw embeddings and the broadcast query
+    * vectors, and keeps the best 10 per `part` group by (d2, n_id) as
+    * `rank` — Q·Shortlist vectors touched at any corpus size. */
+  private[llm] def rerank(s: SparkSession, dir: String, short: DataFrame,
+                          part: String*): DataFrame = {
+    val dd = Clustering.dist2For(s) _
+    val e = t(s, dir, "embeddings")
+    short
+      .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), "n_id")
+      .join(broadcast(e.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe"))), "q_id")
+      .withColumn("d2", expr(dd("qe", "ne")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(part.map(col): _*).orderBy(col("d2"), col("n_id")))
+        .cast("long"))
+      .filter(col("rank") <= 10)
   }
 
   /** q_sim_pq_topk: ADC top-10 per sample query. */
@@ -144,20 +172,8 @@ object Pq {
     * raw embeddings are read for an exact re-rank (PqSpec measures the
     * recall lift over raw ADC). At 100 TB the exact pass touches
     * NQueries·Shortlist vectors, never the corpus. */
-  def rerankTopK(s: SparkSession, dir: String): DataFrame = {
-    val dd = Clustering.dist2For(s) _
-    val e = t(s, dir, "embeddings")
-    adcShortlist(s, dir, Shortlist)
-      .select("q_id", "n_id")
-      .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), "n_id")
-      .join(broadcast(e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"))), "q_id")
-      .withColumn("d2", expr(dd("qe", "ne")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("d2"), col("n_id")))
-        .cast("long"))
-      .filter(col("rank") <= 10)
+  def rerankTopK(s: SparkSession, dir: String): DataFrame =
+    rerank(s, dir, adcShortlist(s, dir, Shortlist).select("q_id", "n_id"), "q_id")
       .select("q_id", "n_id", "d2", "rank")
       .orderBy("q_id", "rank")
-  }
 }

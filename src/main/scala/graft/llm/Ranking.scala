@@ -47,4 +47,19 @@ object Ranking {
         .select(col(grp), col(id).as(outId), col(score).as(outScore), col("rank"))
     }
   }
+
+  /** The recall tail every ANN audit shares: `exact` (its key columns,
+    * e.g. q_id, n_id) left-joined to the `approx` rows with the same keys,
+    * then per `by` group the integer `n_exact` / `n_hit` counts and one
+    * IEEE division for `recall` — oracle-hashable. */
+  def recall(exact: DataFrame, approx: DataFrame, by: String): DataFrame = {
+    val keys = exact.columns.toSeq
+    exact.join(approx.select(keys.map(col) :+ lit(1L).as("hit"): _*), keys, "left")
+      .groupBy(by)
+      .agg(count(lit(1)).as("n_exact"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+      .withColumn("recall",
+        col("n_hit").cast("double") / col("n_exact").cast("double"))
+      .orderBy(by)
+  }
 }

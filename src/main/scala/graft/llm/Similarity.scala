@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -14,6 +14,11 @@ import graft.Tables._
   *  - lshTopK: random-hyperplane LSH — 8 sign bits → 256 buckets; candidates
   *    share a bucket, exact cosine only within. The bucket join is the scale
   *    path: shuffle by bucket, never Q×N.
+  *
+  * The IVF family has one serve over published lists, `probeServe`, which
+  * every list-reading variant (trained, upsert, rebuild, sweep, quantized,
+  * mining) calls with the state it resolved, and one all-in-plan serve,
+  * `serveIvf`; every cell ranking goes through `rankAgainst`.
   *
   * All arithmetic is double-precision with a fixed accumulation order, so the
   * DuckDB oracle reproduces every value bit-for-bit (left-to-right fold; see
@@ -114,12 +119,8 @@ object Similarity {
     * scan into Q sort tasks). */
   def bruteTopK(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(s, dir)
-    val q = queries(e)
-    val cands = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
-      .select("q_id", "vec_id", "cos")
-    Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10, asc = false, "cos", "n_id")
-      .orderBy("q_id", "rank")
+    rankTop10(e.join(broadcast(queries(e)), col("vec_id") =!= col("q_id"))
+      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm"))))
   }
 
   /** Scored LSH candidate stage shared by the single- and multi-probe
@@ -146,9 +147,9 @@ object Similarity {
   }
 
   private def rankTop10(c: DataFrame): DataFrame =
-    // k-bounded heap aggregate, not a per-query window: the LSH candidate
-    // frame is linear in N (Q·(planes+1)·N/2^planes), so ranking it must
-    // not concentrate into Q partitions (the bruteTopK rationale)
+    // k-bounded heap aggregate, not a per-query window: the brute, LSH and
+    // all-in-plan IVF candidate frames are linear in N, so ranking them
+    // must not concentrate into Q partitions (the bruteTopK rationale)
     Ranking.topKPerGroup(c.select("q_id", "vec_id", "cos"),
         "q_id", "cos", "vec_id", 10, asc = false, "cos", "n_id")
       .orderBy("q_id", "rank")
@@ -178,54 +179,40 @@ object Similarity {
   /** IVF-bucketed ANN: each vector is assigned to its nearest centroid cell;
     * a query probes its NProbe nearest cells and ranks candidates by exact
     * cosine within them. The cell id is the join/shuffle key — the classic
-    * inverted-file layout. This is the ALL-IN-PLAN form (assignment
-    * recomputed per call): it shows the topology and serves ad-hoc corpora
-    * with no index; the production serves are `ivfTrainedTopK` /
-    * `ivfQuantizedTopK`, which read PUBLISHED cell-partitioned lists and
-    * prune to the probed directories. */
+    * inverted-file layout. This is the ALL-IN-PLAN form (`serveIvf` over
+    * the first-`Cells`-ids centroids, assignment recomputed per call): it
+    * shows the topology and serves ad-hoc corpora with no index; the
+    * production serves are `ivfTrainedTopK` / `ivfQuantizedTopK`, which
+    * read PUBLISHED cell-partitioned lists through `probeServe`. */
   def ivfTopK(s: SparkSession, dir: String): DataFrame =
-    ivfFirstCellsTopK(s, withNorm(s, dir))
+    serveIvf(s, dir, firstCells(withNorm(s, dir)))
 
-  /** The untrained-IVF serving plan (first-`Cells`-ids centroids) over an
-    * arbitrary (vec_id, embedding, nrm) corpus frame — shared by the float
-    * path (`ivfTopK`) and the int8-dequant path (`ivfQuantizedTopK`). */
-  private def ivfFirstCellsTopK(s: SparkSession, e: DataFrame): DataFrame = {
-    val cent = e.filter(col("vec_id") < Cells).select(
-      col("vec_id").as("cent_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    // rank every (vector, centroid) pair once; reused for assignment (rn=1)
-    // and query probing (rn<=NProbe)
-    val rankedCells = e.crossJoin(broadcast(cent))
-      .withColumn("c_cos", expr(dotFor(s)("embedding", "c_emb")) / (col("nrm") * col("c_nrm")))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("cent_id"))))
-    val assigned = rankedCells.filter(col("crn") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
-    val probes = rankedCells.filter(col("crn") <= NProbe && col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("cent_id"))
-    val q = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    // probed candidates are a corpus fraction (Q·NProbe·N/cells rows) —
-    // rank through the k-bounded heap aggregate, never a per-query window
-    val cands = probes.join(assigned, "cent_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(q), "q_id")
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
-      .select("q_id", "vec_id", "cos")
-    Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10, asc = false, "cos", "n_id")
-      .orderBy("q_id", "rank")
-  }
+  /** The untrained-IVF centroids of a (vec_id, embedding, …) frame: its
+    * first-`Cells`-ids vectors as (cent_id, c_emb) — a deterministic
+    * stand-in for training, shared by the float and int8 paths. */
+  private def firstCells(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < Cells)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
+
+  /** The 8 sample query vectors (vec_id < 8) with their norms — the query
+    * side of every IVF serve. */
+  private[llm] def sampleQueries(s: SparkSession, dir: String): DataFrame =
+    withNorm(s, dir).filter(col("vec_id") < 8)
+
+  /** Each query row's `nprobe` best cells by centroid cosine (`crn` is the
+    * probe rank) — the probe stage of every IVF and IVF-PQ serve. */
+  private[llm] def probesOf(q: DataFrame, cents: DataFrame,
+                            nprobe: Int = NProbe): DataFrame =
+    rankAgainst(q, cents).filter(col("crn") <= nprobe)
 
   /** The trained serve's CELL-PROBE stage in isolation — each sample query's
     * `NProbe` best cells by centroid cosine, (q_id, crn, cent_id). Publishes
     * on first call like ivfTrainedTopK. This is the batch face of the
     * streaming routing twin (StreamTwins.ivfProbe); StreamTwinsSpec pins
     * drained ≡ batch on it. */
-  private[graft] def probeCells(s: SparkSession, dir: String): DataFrame = {
-    val cents = centroids(s, dir)
-    val e = withNorm(s, dir).filter(col("vec_id") < 8)
-    rankAgainst(e, cents).filter(col("crn") <= NProbe)
+  private[graft] def probeCells(s: SparkSession, dir: String): DataFrame =
+    probesOf(sampleQueries(s, dir), centroids(s, dir))
       .select(col("vec_id").as("q_id"), col("crn"), col("cent_id"))
-  }
 
   /** Lloyd recenters for IVF k-means training (each mean is
     * Tables.exactMean, so a TRAINED IVF is oracle-checkable). */
@@ -234,17 +221,16 @@ object Similarity {
   /** The IVF cells the shared Lloyd loop trains. */
   private val cellSpace = Clustering.Space("cent_id", None, "embedding", "c_emb")
 
-  private def genericDot(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
-
   /** One spherical-k-means assignment pass: every vector ranked against every
     * centroid by cosine (centroids are metadata-sized — broadcast; the only
-    * per-corpus work is the N×k scoring, partitioned by vector). Uses the
-    * codegen'd vec_dot (float×double overload) when registered; the HOF form
-    * is bit-identical on foreign sessions. */
+    * per-corpus work is the N×k scoring, partitioned by vector). The ONE
+    * cell ranking of the IVF family: training, assignment, probing and the
+    * all-in-plan serve all call it. Scores through `dotFor` (the codegen'd
+    * vec_dot, float×double overload, or the bit-identical HOF form on
+    * foreign sessions). Columns of `e` beyond (vec_id, embedding, nrm)
+    * pass through. */
   private[llm] def rankAgainst(e: DataFrame, cents: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    val dot = if (s.catalog.functionExists("vec_dot")) dotSql _ else genericDot _
+    val dot = dotFor(e.sparkSession) _
     val c = cents.withColumn("c_nrm", expr(s"sqrt(${dot("c_emb", "c_emb")})"))
     e.crossJoin(broadcast(c))
       .withColumn("c_cos", expr(dot("embedding", "c_emb")) / (col("nrm") * col("c_nrm")))
@@ -266,7 +252,12 @@ object Similarity {
     * (IvfMaintenance), which freezes centroids before late batches arrive. */
   private[llm] def trainCentroidsOn(e: DataFrame, cells: Int = Cells): DataFrame =
     Clustering.lloyd(cellSpace, e, e.filter(col("vec_id") < cells), TrainIters)(
-      rankAgainst(_, _).filter(col("crn") === 1))
+      nearestCell)
+
+  /** Every row of `e` under its nearest cell (crn = 1) — the assignment
+    * pass of training, the published lists and the maintenance slices. */
+  private[llm] def nearestCell(e: DataFrame, cents: DataFrame): DataFrame =
+    rankAgainst(e, cents).filter(col("crn") === 1)
 
   /** Published-index location for a corpus dir: a state-store root
     * (graft.etl.State), keyed by the fixture files and the code, so neither
@@ -317,8 +308,7 @@ object Similarity {
       val e = t(s, dir, "embeddings").select(
         col("vec_id"), col("embedding"), col("label").cast("long").as("label"),
         expr(normFor(s)("embedding")).as("nrm"))
-      val assigned = rankAgainst(e, cents)
-        .filter(col("crn") === 1)
+      val assigned = nearestCell(e, cents)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("label"),
           col("cent_id"))
       graft.etl.Warehouse.publishPartitioned(s, target, assigned, "cent_id")
@@ -339,24 +329,42 @@ object Similarity {
     * the probed lists joined to the broadcast query frame; ranking is the
     * k-bounded heap aggregate. Output is row-identical to ivfServeTopK
     * (same cosine expression over the same operands). */
-  def ivfTrainedTopK(s: SparkSession, dir: String): DataFrame = {
-    val cents = centroids(s, dir)
-    val lists = publishedAssignments(s, dir)
-    val q = withNorm(s, dir).filter(col("vec_id") < 8)
-    val probes = rankAgainst(q, cents).filter(col("crn") <= NProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cent_id"))
-    // probed cell ids: ≤ min(Cells, Q·NProbe) longs — metadata tier; the
-    // literal IN is what turns into a partition-pruning filter
+  def ivfTrainedTopK(s: SparkSession, dir: String): DataFrame =
+    probeServe(sampleQueries(s, dir), centroids(s, dir), publishedAssignments(s, dir))
+      .orderBy("q_id", "rank")
+
+  /** THE cell-pruned IVF serve — one body for every variant that reads
+    * inverted lists (trained, upsert, rebuild, sweep, quantized, mining);
+    * each passes only the state it resolved: the query rows `q` (vec_id,
+    * embedding, nrm, …), the frozen centroids `cents` (cent_id, c_emb) and
+    * the `lists` (vec_id, embedding, nrm, cent_id, …). The queries rank
+    * against the broadcast centroids (Q×k scoring — metadata) and keep
+    * their `nprobe` best cells; the ≤ min(Cells, Q·nprobe) probed cell ids
+    * collect once and re-enter as a literal IN, the filter that becomes
+    * static partition pruning (only the probed cell directories are read —
+    * IvfPersistSpec pins the PartitionFilters). Candidates are the pruned
+    * lists joined to the broadcast probe frame (`fan` reshapes it first,
+    * `carry` adds query columns), filtered by `keep`, scored by the
+    * fixed-order cosine (then `cap`), and ranked per `grp` through the
+    * k-bounded heap: (grp, n_id, cos, rank), unordered. */
+  private[llm] def probeServe(q: DataFrame, cents: DataFrame, lists: DataFrame,
+                              nprobe: Int = NProbe, carry: Seq[Column] = Nil,
+                              fan: DataFrame => DataFrame = identity,
+                              grp: String = "q_id",
+                              keep: Column = col("vec_id") =!= col("q_id"),
+                              cap: Option[Column] = None, k: Int = 10): DataFrame = {
+    val s = q.sparkSession
+    val probes = probesOf(q, cents, nprobe)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("nrm").as("q_nrm"), col("cent_id"), col("crn")) ++ carry: _*)
     val cellIds = probes.select("cent_id").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val cands = lists.filter(col("cent_id").isInCollection(cellIds))
-      .join(broadcast(probes), "cent_id")
-      .filter(col("vec_id") =!= col("q_id"))
+    val scored = lists.filter(col("cent_id").isInCollection(cellIds))
+      .join(broadcast(fan(probes)), "cent_id")
+      .filter(keep)
       .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
-      .select("q_id", "vec_id", "cos")
-    Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10, asc = false, "cos", "n_id")
-      .orderBy("q_id", "rank")
+    Ranking.topKPerGroup(cap.fold(scored)(scored.filter).select(grp, "vec_id", "cos"),
+      grp, "cos", "vec_id", k, asc = false, "cos", "n_id")
   }
 
   /** Probe counts for the q_sim_ivf_sweep operating curve. */
@@ -379,42 +387,24 @@ object Similarity {
     * corpus size (the q_sim_recall posture). All counts are integers; each
     * recall is one IEEE division — oracle-hashable. */
   def ivfSweep(s: SparkSession, dir: String): DataFrame = {
-    val cents = centroids(s, dir)
-    val lists = publishedAssignments(s, dir)
-    val q = withNorm(s, dir).filter(col("vec_id") < 8)
-    val probes = rankAgainst(q, cents).filter(col("crn") <= SweepProbes.max)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cent_id"), col("crn"))
-    val cellIds = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
     import s.implicits._
     val np = SweepProbes.map(_.toLong).toDF("nprobe")
-    val fanned = probes.crossJoin(broadcast(np))
-      .filter(col("crn") <= col("nprobe"))
     // group key packs (nprobe, q_id) so one heap aggregate ranks every
     // curve point; q_id < 8 << 1024, no collision possible
-    val cands = lists.filter(col("cent_id").isInCollection(cellIds))
-      .join(broadcast(fanned), "cent_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
-      .withColumn("gk", col("nprobe") * lit(1024L) + col("q_id"))
-      .select("gk", "vec_id", "cos")
-    val ranked = Ranking.topKPerGroup(cands, "gk", "cos", "vec_id",
-        10, asc = false, "cos", "n_id")
+    val ranked = probeServe(sampleQueries(s, dir), centroids(s, dir),
+        publishedAssignments(s, dir), nprobe = SweepProbes.max,
+        fan = _.crossJoin(broadcast(np)).filter(col("crn") <= col("nprobe"))
+          .withColumn("gk", col("nprobe") * lit(1024L) + col("q_id")),
+        grp = "gk")
       .select(expr("gk div 1024").as("nprobe"), expr("gk % 1024").as("q_id"),
-        col("n_id"), lit(1L).as("hit"))
-    val exact = Rankings.exactCos(s, dir).select(col("q_id"), col("n_id"))
-    exact.crossJoin(broadcast(np))
-      .join(ranked, Seq("nprobe", "q_id", "n_id"), "left")
-      .groupBy("nprobe")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("recall",
-        col("n_hit").cast("double") / col("n_exact").cast("double"))
-      .orderBy("nprobe")
+        col("n_id"))
+    Ranking.recall(Rankings.exactCos(s, dir).select(col("q_id"), col("n_id"))
+      .crossJoin(broadcast(np)), ranked, "nprobe")
   }
 
-  /** The `ivfTopK` serving plan over an arbitrary centroid set. */
+  /** The all-in-plan IVF serve over an arbitrary centroid set (cent_id,
+    * c_emb): one `rankAgainst` pass ranks every (vector, centroid) pair,
+    * reused for assignment (crn = 1) and query probing (crn ≤ NProbe). */
   private def serveIvf(s: SparkSession, dir: String, cents: DataFrame): DataFrame = {
     val e = withNorm(s, dir)
     val rankedCells = rankAgainst(e, cents)
@@ -422,17 +412,13 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
     val probes = rankedCells.filter(col("crn") <= NProbe && col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("cent_id"))
-    val q = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    // same corpus-fraction candidate frame as ivfFirstCellsTopK: the
-    // ranking is the k-bounded heap aggregate, never a per-query window
+    // probed candidates are a corpus fraction (Q·NProbe·N/cells rows) —
+    // rank through the k-bounded heap aggregate, never a per-query window
     val cands = probes.join(assigned, "cent_id")
       .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(q), "q_id")
+      .join(broadcast(queries(e)), "q_id")
       .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
-      .select("q_id", "vec_id", "cos")
-    Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10, asc = false, "cos", "n_id")
-      .orderBy("q_id", "rank")
+    rankTop10(cands)
   }
 
   /** Array-function surface over embeddings (q_array_funcs). */
@@ -492,37 +478,27 @@ object Similarity {
     * dequantized values, so the DuckDB oracle reproduces ranks AND cosines
     * bit-for-bit. Recall vs the float serve is asserted in
     * QuantizedServeSpec. */
-  def ivfQuantizedTopK(s: SparkSession, dir: String): DataFrame = {
-    val lists = publishedQuantLists(s, dir)
+  def ivfQuantizedTopK(s: SparkSession, dir: String): DataFrame =
     // centroid and query sides: 16- and 8-row scans (vec_id predicates push
     // through quantCodes' projection chain into the parquet read),
     // quantize→dequantize in-plan — the same dequant values the build wrote
-    def deqOf(df: DataFrame): DataFrame = df
-      .select(col("vec_id"),
-        expr("transform(codes, q -> CAST(q AS DOUBLE) * maxabs / 127.0D)").as("embedding"))
-      .withColumn("nrm", expr(normFor(s)("embedding")))
-    val cent = deqOf(quantCodes(s, dir).filter(col("vec_id") < Cells)).select(
-      col("vec_id").as("cent_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    val probes = deqOf(quantCodes(s, dir).filter(col("vec_id") < 8))
-      .crossJoin(broadcast(cent))
-      .withColumn("c_cos", expr(dotFor(s)("embedding", "c_emb")) / (col("nrm") * col("c_nrm")))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("cent_id"))))
-      .filter(col("crn") <= NProbe)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cent_id"))
-    val cellIds = probes.select("cent_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val cands = lists.filter(col("cent_id").isInCollection(cellIds))
-      .withColumn("embedding",
-        expr("transform(codes, q -> CAST(q AS DOUBLE) * maxabs / 127.0D)"))
-      .join(broadcast(probes), "cent_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
-      .select("q_id", "vec_id", "cos")
-    Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id", 10, asc = false, "cos", "n_id")
+    probeServe(dequantized(quantCodes(s, dir).filter(col("vec_id") < 8)),
+        quantCells(s, dir),
+        publishedQuantLists(s, dir).withColumn("embedding", expr(DequantSql)))
       .orderBy("q_id", "rank")
-  }
+
+  /** An int8 code row's dequantized value: `code · maxabs / 127`. */
+  private val DequantSql = "transform(codes, q -> CAST(q AS DOUBLE) * maxabs / 127.0D)"
+
+  /** `quantCodes` rows with `embedding` replaced by its dequantized value
+    * and `nrm` its norm. */
+  private def dequantized(codes: DataFrame): DataFrame =
+    codes.withColumn("embedding", expr(DequantSql))
+      .withColumn("nrm", expr(normFor(codes.sparkSession)("embedding")))
+
+  /** The quantized serve's cells: the first-`Cells` dequantized vectors. */
+  private def quantCells(s: SparkSession, dir: String): DataFrame =
+    firstCells(dequantized(quantCodes(s, dir)))
 
   /** Published int8 CODE LISTS for the quantized serve: (vec_id, maxabs,
     * codes, nrm, cent_id) hive-partitioned by cell — the 4×-smaller
@@ -534,17 +510,7 @@ object Similarity {
     * identical bytes from any writer. */
   private[graft] def publishedQuantLists(s: SparkSession, dir: String): DataFrame =
     graft.etl.State.memo(s, graft.etl.State.root(s, "ivf", "qlists", dir, "embeddings")) { target =>
-      val deq = quantCodes(s, dir)
-        .withColumn("demb",
-          expr("transform(codes, q -> CAST(q AS DOUBLE) * maxabs / 127.0D)"))
-        .withColumn("nrm", expr(normFor(s)("demb")))
-      val cent = deq.filter(col("vec_id") < Cells).select(
-        col("vec_id").as("cent_id"), col("demb").as("c_emb"), col("nrm").as("c_nrm"))
-      val assigned = deq.crossJoin(broadcast(cent))
-        .withColumn("c_cos", expr(dotFor(s)("demb", "c_emb")) / (col("nrm") * col("c_nrm")))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("cent_id"))))
-        .filter(col("crn") === 1)
+      val assigned = nearestCell(dequantized(quantCodes(s, dir)), quantCells(s, dir))
         .select(col("vec_id"), col("maxabs"), col("codes"), col("nrm"), col("cent_id"))
       graft.etl.Warehouse.publishPartitioned(s, target, assigned, "cent_id")
     }.select(col("vec_id"), col("maxabs"),
@@ -709,7 +675,7 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy(_._1).map(_._2)
     graft.Tables.withBroadcastArray(t(s, dir, "embeddings"), "pc", v.toSeq)
-      .select(col("vec_id"), expr(genericDot("embedding", "pc")).as("score"))
+      .select(col("vec_id"), expr(hofDotSql("embedding", "pc")).as("score"))
       .orderBy("vec_id")
   }
 
@@ -1075,17 +1041,7 @@ object Similarity {
     * (Rankings.exactCos — the audits treat rankings as input evidence,
     * VERDICT r11 item 1): a Q·10 ⋈ Q·10 metadata join. */
   private[llm] def recallOf(s: SparkSession, dir: String,
-                       approxTopK: DataFrame): DataFrame = {
-    val exact = Rankings.exactCos(s, dir).select(col("q_id"), col("n_id"))
-    val approx = approxTopK
-      .select(col("q_id").as("a_q"), col("n_id").as("a_n"), lit(1L).as("hit"))
-    exact.join(approx,
-        col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-      .groupBy("q_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("recall",
-        col("n_hit").cast("double") / col("n_exact").cast("double"))
-      .orderBy("q_id")
-  }
+                            approxTopK: DataFrame): DataFrame =
+    Ranking.recall(Rankings.exactCos(s, dir).select(col("q_id"), col("n_id")),
+      approxTopK, "q_id")
 }

@@ -516,10 +516,7 @@ object StreamTwins {
     * integer arithmetic of the batch path, so drained output is
     * bit-identical to Binary.codes on the same rows. */
   def binarySign(embs: DataFrame, mu: Seq[Double]): DataFrame =
-    embs.withColumn("mu", array(mu.map(lit(_)): _*))
-      .withColumn("h0", expr(graft.llm.Binary.halfSql(0)))
-      .withColumn("h1", expr(graft.llm.Binary.halfSql(graft.llm.Binary.HalfBits)))
-      .select("vec_id", "h0", "h1")
+    graft.llm.Binary.sign(embs.withColumn("mu", array(mu.map(lit(_)): _*)))
 
   /** Streaming INCREMENTAL PACK add — the streaming face of
     * Curation.packDeltaBins (the 6th maintenance family's add): arriving

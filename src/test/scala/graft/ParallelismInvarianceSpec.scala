@@ -40,7 +40,15 @@ class ParallelismInvarianceSpec extends SparkSpec {
     "q_sim_rank_diff",    // churn counts over published-ranking joins (r13)
     "q_retrieve_sweep",   // driver hit-count folds over Q·10 serves (r10)
     "q_embed_mean",       // per-dimension exact means (Tables.exactMean)
-    "q_graph_drift"))     // exact segment means over best-link cosines
+    "q_graph_drift",      // exact segment means over best-link cosines
+    // the serves that resolve published State: one shared body per family
+    // over base or base ∪ delta state, heap-ranked across partitions
+    "q_sim_ivf_upsert",
+    "q_sim_binary_upsert",
+    "q_sim_ivfpq_upsert_rerank",
+    "q_sim_ivf_sweep",
+    "q_sim_ivf_quantized",
+    "q_mine_hard_negatives_ivf"))
     test(s"$q is byte-identical at shuffle.partitions=197") {
       val fn = SparkEntry.queries(q)
       val want = fn(spark, sf).collect().map(_.toString).toSeq

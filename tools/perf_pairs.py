@@ -18,6 +18,10 @@ declares, it prints:
     the median gap exceeds the parent's interquartile range, and the change
     failed no more runs than the parent.
 
+It also prints each side's median `attempted` over its successful runs: the
+run's timed ops plus its output checks (a fixed number per workload), so it
+moves with the number of samples behind a per-op figure such as `op_cpu_s`.
+
 Usage (from anywhere; both checkouts must hold perfbench/ and BENCHMARK.json):
 
   python3 tools/perf_pairs.py --parent ../parent --change . \\
@@ -105,6 +109,7 @@ def main():
     metrics = [(m["name"], m["better"]) for m in spec["end_to_end"]]
 
     pairs, failures = [], []
+    attempted = {"parent": [], "change": []}
     for i in range(args.pairs):
         seed = args.seed0 + i
         order = [("parent", parent), ("change", change)]
@@ -118,8 +123,10 @@ def main():
                 print(f"pair {i} seed {seed} {side}: FAILED ({wall:.0f} s) {err}", file=sys.stderr)
                 continue
             got[side] = {m: res["metrics"][m]["value"] for m, _ in metrics}
+            attempted[side].append(res["attempted"])
             vals = " ".join(f"{m}={got[side][m]:.4g}" for m, _ in metrics)
-            print(f"pair {i} seed {seed} {side}: {vals} ({wall:.0f} s)", file=sys.stderr)
+            print(f"pair {i} seed {seed} {side}: {vals} attempted={res['attempted']} "
+                  f"({wall:.0f} s)", file=sys.stderr)
         if len(got) == 2:
             pairs.append((got["parent"], got["change"]))
 
@@ -127,6 +134,9 @@ def main():
     print(f"workload {args.workload}: {len(pairs)} complete pairs of {args.pairs}, "
           f"seeds {args.seed0}..{args.seed0 + args.pairs - 1}, --seconds {seconds}, "
           f"failed runs: parent {failed['parent']}, change {failed['change']}")
+    print("attempted per run (timed ops + checks), median [min, max]: " + ", ".join(
+        f"{side} {statistics.median(xs):g} [{min(xs)}, {max(xs)}]" if xs else f"{side} none"
+        for side, xs in attempted.items()))
     if pairs:
         for m, better in metrics:
             s = summarize(m, better, pairs, args.pairs, failed)
