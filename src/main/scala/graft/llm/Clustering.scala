@@ -27,8 +27,8 @@ import graft.Tables._
   *     aggregate whose domain is k·d — work is O(N·d·k), shuffles are
   *     domain-keyed, nothing is driver-side;
   *   - round counts are FIXED so every declared query is deterministic and
-  *     oracle-expressible; the centroid frame is localCheckpointed between
-  *     rounds, so a longer loop keeps constant-size plans.
+  *     oracle-expressible; the centroid frame is the `graft.Rounds` state,
+  *     so a longer loop keeps constant-size plans.
   *
   * Exactness discipline (everything the DuckDB oracle hash-checks):
   *   - squared distances are SEQUENTIAL left-to-right double folds over the
@@ -116,15 +116,11 @@ object Clustering {
   }
 
   /** The Lloyd loop: centroids seeded from the `seed` points, then `rounds`
-    * recenters, each over a `nearest` pass of every point. The k×d
-    * centroid frame is localCheckpointed after each round another round
-    * follows (constant-size plans, nothing left cached), and not after the
-    * last, whose one consumer is a publish or the final assign. */
+    * recenters, each over a `nearest` pass of every point. */
   private[graft] def lloyd(sp: Space, points: DataFrame, seed: DataFrame, rounds: Int)(
       nearest: (DataFrame, DataFrame) => DataFrame = assign(sp)): DataFrame =
-    (1 to rounds).foldLeft(sp.seed(seed)) { (cents, r) =>
-      val next = recenter(sp, nearest(points, cents), cents)
-      if (r < rounds) next.localCheckpoint() else next
+    graft.Rounds.run(sp.seed(seed), rounds) { cents =>
+      recenter(sp, nearest(points, cents), cents)
     }
 
   /** `Iters` assignment passes (`Iters − 1` recenters) from the seed

@@ -706,17 +706,6 @@ object Dedup {
     val cross = graft.etl.Warehouse.read(s, s"$target/edges")
     val und = cross.unionByName(
       cross.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))).cache()
-    // Iterative loops MUST truncate lineage, not just cache: cache() keeps
-    // the full logical plan, so each round's union+join+agg DOUBLES the plan
-    // of the next — exponential plan growth that OOMs the driver around
-    // round ~15 (seen at sf0.1) long before any executor breaks a sweat.
-    // localCheckpoint (eager) materializes AND cuts the plan to a leaf, so
-    // every round starts from a constant-size plan — the same discipline
-    // GraphX/GraphFrames apply; a multi-executor deployment would point
-    // sc.setCheckpointDir at durable storage and use checkpoint() instead
-    // (localCheckpoint blocks die with an executor).
-    var changed = 1L
-    var rounds = 0
     // The loop's working set is the rep graph — orders of magnitude smaller
     // than the corpus. Size its shuffles from the MEASURED edge count
     // (≥20k edges/partition, never above the session setting — at 100 TB the
@@ -731,11 +720,10 @@ object Dedup {
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.shuffle.partitions",
       math.min(partsPrev.toLong, edgeCount / 20000 + 1).toString)
-    var labels: DataFrame = null
-    try {
-    labels = und.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("comp", col("doc_id")).localCheckpoint()
-    while (changed > 0 && rounds < 64) {
+    val labels = try graft.Rounds.run(
+        und.select(col("doc_a").as("doc_id")).distinct().withColumn("comp", col("doc_id")),
+        64, _.filter(col("comp") =!= col("old")).count() == 0) { tagged =>
+      val labels = tagged.select("doc_id", "comp")
       val nbr = und.join(labels, und("doc_b") === labels("doc_id"))
         .select(col("doc_a").as("doc_id"), col("comp"))
       val prop = labels.unionByName(nbr)
@@ -747,23 +735,18 @@ object Dedup {
       // round's label rides along as `old` so the convergence check is a
       // filter-count over the checkpoint leaf, not a second join pipeline —
       // each round is exactly two jobs (checkpoint + leaf count).
-      val tagged = prop
+      prop
         .join(prop.select(col("doc_id").as("comp"), col("comp").as("jmp")),
           Seq("comp"), "left")
         .join(labels.select(col("doc_id"), col("comp").as("old")), "doc_id")
         .select(col("doc_id"), coalesce(col("jmp"), col("comp")).as("comp"),
           col("old"))
-        .localCheckpoint()
-      changed = tagged.filter(col("comp") =!= col("old")).count()
-      labels = tagged.select("doc_id", "comp")
-      rounds += 1
-    }
     } finally {
       conf.set("spark.sql.adaptive.enabled", aqePrev)
       conf.set("spark.sql.shuffle.partitions", partsPrev)
     }
     und.unpersist()
-    labels
+    labels.select("doc_id", "comp")
   }
 
   /** Semantic-dedup clusters (the embedding analog of `components`, the

@@ -156,15 +156,13 @@ object GraphMaintenance {
     // base graph's top in-degree hubs
     val graph = baseLayer(s, dir, cut)
     val entries = Similarity.topInDegree(publishedBaseGraph(s, dir))
-    // per-round localCheckpoint: the frontier is batch·beam rows — TOO BIG
-    // for the 8-query serve's driver-state walk — and each round references
-    // it three times, so a lazily-composed walk recomputes round r-1 per
-    // reference (combinatorial in depth; the pre-r9 beamServe A/B measured
-    // 2.7-3.7 s checkpointed vs 4.6-10 s composed at sf0.1)
-    var frontier = score(
-        q.select("q_id").crossJoin(broadcast(entries)))
-      .localCheckpoint()
-    for (_ <- 1 to Similarity.SearchIters) {
+    // the frontier is batch·beam rows — TOO BIG for the 8-query serve's
+    // driver-state walk — and each round references it three times, so a
+    // lazily-composed walk recomputes round r-1 per reference
+    // (combinatorial in depth; the pre-r9 beamServe A/B measured 2.7-3.7 s
+    // checkpointed vs 4.6-10 s composed at sf0.1)
+    val beam = graft.Rounds.run(score(
+        q.select("q_id").crossJoin(broadcast(entries))), Similarity.SearchIters) { frontier =>
       val expanded = frontier.select("q_id", "n_id")
         .join(graph, col("n_id") === col("src"))
         .select(col("q_id"), col("dst").as("n_id"))
@@ -175,14 +173,13 @@ object GraphMaintenance {
       // caps the exchange at groups·BeamWidth rows per map task
       // (bit-identical order, the Ranking contract — verified byte-equal at
       // sf0.01; r9 Prof A/B at sf0.1: 4.9 → 4.4 s median)
-      frontier = Ranking.topKPerGroup(score(cand), "q_id", "cos", "n_id",
+      Ranking.topKPerGroup(score(cand), "q_id", "cos", "n_id",
           Similarity.BeamWidth, asc = false, "cos", "n_id")
         .select("q_id", "n_id", "cos")
-        .localCheckpoint()
     }
     // the final beam is batch·BeamWidth rows — the per-node link ranking
     // keeps the same heap shape
-    Ranking.topKPerGroup(frontier, "q_id", "cos", "n_id",
+    Ranking.topKPerGroup(beam, "q_id", "cos", "n_id",
         Similarity.GraphK, asc = false, "cos", "n_id")
       .select(col("q_id").as("vec_id"), col("rank").as("rnk"),
         col("n_id"), col("cos"))

@@ -59,23 +59,30 @@ object LexIndex {
   private def target(s: SparkSession, dir: String, member: String): String =
     graft.etl.State.root(s, "lex", member, dir, "documents")
 
-  /** The build frames of all three members over one corpus tokenize plan;
-    * df derives FROM tf (the tfidf vocabulary-exchange shape); postings
-    * join tf ⋈ df ⋈ dl on the build side so serves never pay those joins.
-    * Each member publishes on its first read. */
+  /** The exact counts of a (doc_id, text) frame over one tokenize plan:
+    * tf (doc_id, token, tf), df (token, df) derived FROM tf (the tfidf
+    * vocabulary-exchange shape), dl (doc_id, dl) and the 1-row stats
+    * (n_docs, tot). The published index, the maintenance members and the
+    * from-scratch control all count through here. */
+  private[llm] final case class Counts(tf: DataFrame, df: DataFrame, dl: DataFrame,
+                                       stats: DataFrame)
+
+  private[llm] def counts(docs: DataFrame): Counts = {
+    val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
+      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    Counts(tf, tf.select("token").groupBy("token").agg(count(lit(1)).as("df")),
+      docs.select(col("doc_id"), size(tokens(col("text"))).cast("long").as("dl")),
+      docs.agg(count(lit(1)).as("n_docs"),
+        sum(size(tokens(col("text"))).cast("long")).as("tot")))
+  }
+
+  /** The build frames of all three members over the corpus counts;
+    * postings join tf ⋈ df ⋈ dl on the build side so serves never pay
+    * those joins. Each member publishes on its first read. */
   private def build(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val docs = t(s, dir, "documents")
-    val docToks = docs.select(col("doc_id"),
-      explode(tokens(col("text"))).as("token"))
-    val tf = docToks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfx = tf.select("token").groupBy("token").agg(count(lit(1)).as("df"))
-    val dl = docs.select(col("doc_id"),
-      size(tokens(col("text"))).cast("long").as("dl"))
-    val post = tf.join(dfx, "token").join(dl, "doc_id")
-      .select("token", "doc_id", "tf", "df", "dl")
-    val st = docs.agg(count(lit(1)).as("n_docs"),
-      sum(size(tokens(col("text"))).cast("long")).as("tot"))
-    (post, dfx, st)
+    val c = counts(t(s, dir, "documents"))
+    (c.tf.join(c.df, "token").join(c.dl, "doc_id")
+      .select("token", "doc_id", "tf", "df", "dl"), c.df, c.stats)
   }
 
   /** The published inverted index: (token, doc_id, tf, df, dl), clustered

@@ -38,7 +38,7 @@ import TextHash.tokens
   * output is 2 rows at any corpus size. */
 object LexMaintenance {
 
-  import TextAnalysis.{Bm25QTerms, Bm25TopK, bm25ScoreSql}
+  import TextAnalysis.Bm25QTerms
 
   private[graft] def snapRoot(s: SparkSession, dir: String): String =
     graft.etl.State.root(s, "lex", "up", dir, "documents")
@@ -50,18 +50,16 @@ object LexMaintenance {
   private def sliceMembers(s: SparkSession, dir: String, cut: Long,
                            newRows: Boolean): Seq[(String, DataFrame)] = {
     val tag = if (newRows) "delta" else "base"
-    val docs = t(s, dir, "documents")
-      .filter(if (newRows) col("doc_id") >= cut else col("doc_id") < cut)
-    val docToks = docs.select(col("doc_id"),
-      explode(tokens(col("text"))).as("token"))
-    val tf = docToks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dl = docs.select(col("doc_id"),
-      size(tokens(col("text"))).cast("long").as("dl"))
-    val post = tf.join(dl, "doc_id").select("token", "doc_id", "tf", "dl")
-    val dfx = tf.select("token").groupBy("token").agg(count(lit(1)).as("df"))
-    val st = docs.agg(count(lit(1)).as("n_docs"),
-      sum(size(tokens(col("text"))).cast("long")).as("tot"))
-    Seq(s"post_$tag" -> post, s"vocab_$tag" -> dfx, s"stats_$tag" -> st)
+    val m = members(t(s, dir, "documents")
+      .filter(if (newRows) col("doc_id") >= cut else col("doc_id") < cut))
+    Seq(s"post_$tag" -> m.post, s"vocab_$tag" -> m.vocab, s"stats_$tag" -> m.stats)
+  }
+
+  /** The index members of a document frame: postings (token, doc_id, tf,
+    * dl) without df, the dictionary and the stats. */
+  private def members(docs: DataFrame): Merged = {
+    val c = LexIndex.counts(docs)
+    Merged(c.tf.join(c.dl, "doc_id").select("token", "doc_id", "tf", "dl"), c.df, c.stats)
   }
 
   /** The current index snapshot (publishing the initial base+delta member
@@ -102,9 +100,17 @@ object LexMaintenance {
     * doc×vocab. Scores consume the same exact integers the full rebuild
     * would, in the same IEEE order, so the result equals q_text_bm25 plus
     * the is_new column (LexUpsertSpec pins the bit-equality). */
-  def upsertServe(s: SparkSession, dir: String): DataFrame = {
+  def upsertServe(s: SparkSession, dir: String): DataFrame =
+    serve(s, dir, merged(s, dir, current(s, dir)))
+
+  /** The from-scratch control for LexUpsertSpec: the snapshot serve over
+    * the members of the whole corpus (one full-corpus tokenize). Counting
+    * is exact, so this must equal the snapshot serve bit-for-bit. */
+  private[llm] def rebuildServe(s: SparkSession, dir: String): DataFrame =
+    serve(s, dir, members(t(s, dir, "documents")))
+
+  private def serve(s: SparkSession, dir: String, m: Merged): DataFrame = {
     val cut = Segments.cut(s, dir, "documents")
-    val m = merged(s, dir, current(s, dir))
     // ≤ Bm25QTerms (token, df) rows — the probed-cell-ids metadata tier;
     // collected WITH their merged df so the dictionary aggregates once
     // per call (the scoring join's slice re-enters as a literal)
@@ -113,46 +119,9 @@ object LexMaintenance {
     val terms = termRows.map(_._1).toSeq
     import s.implicits._
     val termDf = termRows.toSeq.toDF("token", "df")
-    val scored = m.post
+    val scored = TextAnalysis.bm25Top(m.post
       .filter(col("token").isInCollection(terms))
-      .join(broadcast(termDf), "token")
-      .crossJoin(broadcast(m.stats))
-      .withColumn("score_t", expr(bm25ScoreSql))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        graft.Tables.dsum10(col("score_t")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(Bm25TopK)
-    Segments.withFlag(scored, "doc_id", cut)
-      .select("doc_id", "n_terms", "score", "is_new")
-  }
-
-  /** The from-scratch control for LexUpsertSpec: one full-corpus tokenize,
-    * inline tf/df/dl/stats, identical score expression. Counting is exact,
-    * so this must equal the snapshot serve bit-for-bit. */
-  private[llm] def rebuildServe(s: SparkSession, dir: String): DataFrame = {
-    val cut = Segments.cut(s, dir, "documents")
-    val docs = t(s, dir, "documents")
-    val docToks = docs.select(col("doc_id"),
-      explode(tokens(col("text"))).as("token"))
-    val tf = docToks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfx = tf.select("token").groupBy("token").agg(count(lit(1)).as("df"))
-    val dl = docs.select(col("doc_id"),
-      size(tokens(col("text"))).cast("long").as("dl"))
-    val st = docs.agg(count(lit(1)).as("n_docs"),
-      sum(size(tokens(col("text"))).cast("long")).as("tot"))
-    val terms = dfx.orderBy(col("df"), col("token")).limit(Bm25QTerms)
-      .select("token").collect().map(_.getString(0)).toSeq
-    val scored = tf.filter(col("token").isInCollection(terms))
-      .join(broadcast(dfx.filter(col("token").isInCollection(terms))), "token")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(st))
-      .withColumn("score_t", expr(bm25ScoreSql))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        graft.Tables.dsum10(col("score_t")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(Bm25TopK)
+      .join(broadcast(termDf), "token"), m.stats)
     Segments.withFlag(scored, "doc_id", cut)
       .select("doc_id", "n_terms", "score", "is_new")
   }

@@ -934,10 +934,9 @@ object Similarity {
     * node for degree d = GraphK+links — LINEAR in N with a constant
     * factor; scoring joins the corpus twice on (src, dst) id keys (two
     * bucket shuffles, nothing quadratic); the graph state is N·GraphK
-    * rows, localCheckpointed per round (iterated corpus-sized state — the
-    * connected-components discipline). Every score is the fixed-order
-    * cosine with ties to the lower neighbor id, so the refinement
-    * trajectory is fully deterministic. */
+    * rows, checkpointed per round by `graft.Rounds` (iterated corpus-sized
+    * state). Every score is the fixed-order cosine with ties to the lower
+    * neighbor id, so the refinement trajectory is fully deterministic. */
   def nnDescent(s: SparkSession, dir: String): DataFrame =
     publishedDescent(s, dir)
       .filter(col("rnk") <= GraphK)
@@ -986,32 +985,26 @@ object Similarity {
                                   iters: Int): DataFrame = {
     val s = e.sparkSession
     val w = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
-    def scoreEdges(edges: DataFrame): DataFrame =
+    // the best `DescentK` scored edges per src
+    def keepBest(edges: DataFrame): DataFrame =
       edges.join(e.select(col("vec_id").as("src"), col("embedding").as("se"),
           col("nrm").as("sn")), "src")
         .join(e.select(col("vec_id").as("dst"), col("embedding").as("de"),
           col("nrm").as("dn")), "dst")
         .withColumn("cos", expr(dotFor(s)("se", "de")) / (col("sn") * col("dn")))
         .select("src", "dst", "cos")
-    var g = scoreEdges(longLinks(e, n).distinct())
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= DescentK)
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
+        .withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= DescentK)
+    graft.Rounds.run(keepBest(longLinks(e, n).distinct()), iters) { g =>
       val base = g.select("src", "dst")
         .unionByName(g.select(col("dst").as("src"), col("src").as("dst")))
       val twoHop = base.join(
           base.select(col("src").as("mid"), col("dst").as("dst2")),
           col("dst") === col("mid"))
         .select(col("src"), col("dst2").as("dst"))
-      val cand = base.unionByName(twoHop)
-        .filter(col("dst") =!= col("src")).distinct()
-      g = scoreEdges(cand)
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= DescentK)
-        .localCheckpoint()
+      keepBest(base.unionByName(twoHop)
+        .filter(col("dst") =!= col("src")).distinct())
     }
-    g
   }
 
   /** q_sim_recall: the recall@10 audit every real ANN deployment runs —

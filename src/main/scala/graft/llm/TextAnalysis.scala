@@ -131,16 +131,22 @@ object TextAnalysis {
     val terms = LexIndex.vocab(s, dir)
       .orderBy(col("df"), col("token")).limit(Bm25QTerms)
       .select("token").collect().map(_.getString(0)).toSeq
-    LexIndex.postings(s, dir)
-      .filter(col("token").isInCollection(terms))
-      .crossJoin(broadcast(LexIndex.stats(s, dir)))
+    bm25Top(LexIndex.postings(s, dir).filter(col("token").isInCollection(terms)),
+        LexIndex.stats(s, dir))
+      .select("doc_id", "n_terms", "score")
+  }
+
+  /** The single-query BM25 tail over a posting slice carrying (doc_id, tf,
+    * df, dl): the 1-row stats broadcast, the per-term score, the
+    * decimal-staged per-doc sum and the top-`Bm25TopK` cut — shared by
+    * this serve and the snapshot serve (LexMaintenance.upsertServe). */
+  private[llm] def bm25Top(slice: DataFrame, stats: DataFrame): DataFrame =
+    slice.crossJoin(broadcast(stats))
       .withColumn("score_t", expr(bm25ScoreSql))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"), graft.Tables.dsum10(col("score_t")).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(Bm25TopK)
-      .select("doc_id", "n_terms", "score")
-  }
 
   /** q_text_fertility: TOKENIZER FERTILITY per language — subword tokens
     * per whitespace word and chars per subword token, under the engine's
@@ -296,22 +302,22 @@ object TextAnalysis {
     *     the merge applies as ONE literal `replace` over the same `|sym|`
     *     encoding bpeApply uses (leftmost non-overlapping, match can never
     *     start mid-symbol);
-    *   - vocabulary and winner localCheckpoint per round (the pagerank
-    *     discipline) so round r+1's plan does not replay rounds 1..r.
+    *   - the vocabulary is the `graft.Rounds` state; each round's winner
+    *     row stays checkpointed for the returned merge table.
     *
     * Space maps to the sentencepiece-style '_' marker before encoding, so
     * learned merges live in the SAME symbol alphabet as `BpeMerges`. */
   val BpeTrainRounds = 4
 
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
-    var vocab = t(s, dir, "documents")
+    val words = t(s, dir, "documents")
       .select(explode(regexp_extract_all(col("text"), lit(BpePattern), lit(0)))
         .as("piece"))
       .groupBy("piece").agg(count(lit(1)).as("cnt"))
       .select(expr("regexp_replace(replace(piece, ' ', '_'), '(.)', '|$1|')")
         .as("w"), col("cnt"))
     var merges: Seq[DataFrame] = Nil
-    for (r <- 1 to BpeTrainRounds) {
+    val vocab = graft.Rounds.run(words, BpeTrainRounds) { vocab =>
       val pairs = vocab
         .select(split(expr("trim(BOTH '|' FROM w)"), "\\|\\|").as("syms"),
           col("cnt"))
@@ -321,18 +327,18 @@ object TextAnalysis {
           .as("p"), col("cnt"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("cnt")).as("pair_count"))
-      val best = pairs
+      val best = graft.Rounds.checkpoint(pairs
         .orderBy(col("pair_count").desc, col("a"), col("b")).limit(1)
-        .withColumn("merge_rank", lit(r.toLong))
-        .localCheckpoint()
+        .withColumn("merge_rank", lit(merges.size + 1L)))
       merges = merges :+ best
-      vocab = vocab
+      vocab
         .crossJoin(broadcast(best.select(col("a").as("ma"), col("b").as("mb"))))
         .withColumn("w", expr(
           "replace(w, concat('|', ma, '||', mb, '|'), concat('|', ma, mb, '|'))"))
         .select("w", "cnt")
-        .localCheckpoint()
     }
+    // the merge table reads only the winners
+    graft.Rounds.release(vocab)
     merges.reduce(_ unionByName _)
       .select(col("merge_rank"), col("a").as("lhs"), col("b").as("rhs"),
         col("pair_count"))

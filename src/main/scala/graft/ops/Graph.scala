@@ -20,10 +20,9 @@ import graft.Tables._
   *
   * Scale shape: pair generation is per-order C(k,2) with k = lines per
   * order — bounded by the order schema (≤7 in TPC-H-shaped data), so edges
-  * are linear in lineitem. The iterative loop follows the
-  * `Dedup.closureLabels` discipline: `localCheckpoint` per round keeps the
-  * plan constant-size (cache alone doubles it per round — driver OOM, seen
-  * at sf0.1 in round 3). Triangle counting orients edges by (degree, id) —
+  * are linear in lineitem. The rounds run through `graft.Rounds` (cache
+  * alone doubled the plan per round — driver OOM, seen at sf0.1 in round
+  * 3). Triangle counting orients edges by (degree, id) —
   * wedges per node are bounded by its OUT-degree in the orientation
   * (O(sqrt(|E|)) for any graph, the standard compact-forward bound), so a
   * hub product cannot make the wedge join quadratic in its frequency. */
@@ -84,11 +83,10 @@ object Graph {
     * matching DuckDB `//` on the non-negative operands) so the five
     * iterations replay bit-for-bit in the oracle's unrolled CTEs. Teleport
     * and initial rank are driver-side Long constants derived from the node
-    * count (1-value global aggregate — q_stats_skew tier). The loop
-    * localCheckpoints each round (constant-size plans); the edge+degree
-    * frame checkpoints once before the loop so iterations never rebuild the
-    * pair join. Every node of this graph has in-edges (undirected), so no
-    * dangling-mass term is needed. */
+    * count (1-value global aggregate — q_stats_skew tier). The rounds run
+    * through `graft.Rounds`; the edge+degree frame checkpoints once before
+    * the loop so iterations never rebuild the pair join. Every node of this
+    * graph has in-edges (undirected), so no dangling-mass term is needed. */
   def pagerank(s: SparkSession, dir: String): DataFrame =
     pagerankOf(edges(s, dir))
 
@@ -115,12 +113,13 @@ object Graph {
 
   /** Prepared PageRank inputs: edge frame and degree frame laid out for the
     * chosen serve path (broadcast vs bucketed), plus the integer constants
-    * every round reuses. `release()` drops the bucketed layout's caches once
-    * the loop is done (no-op on the broadcast path). */
+    * every round reuses. `release()` frees the edge and degree checkpoints
+    * and, on the bucketed path, the layout caches over them once the loop
+    * is done. */
   private[graft] final case class PrPrep(e: DataFrame, deg: DataFrame,
                                          teleV: Long, initRank: Long,
                                          fits: Boolean, parts: Int) {
-    def release(): Unit = { e.unpersist(); deg.unpersist() }
+    def release(): Unit = Seq(e, deg).foreach(graft.Rounds.release)
   }
 
   private[graft] def pagerankPrep(canon: DataFrame): PrPrep = {
@@ -152,16 +151,13 @@ object Graph {
 
   private[graft] def pagerankOf(canon: DataFrame): DataFrame = {
     val p = pagerankPrep(canon)
-    var ranks = p.deg
-      .select(col("node"), col("d"), lit(p.initRank).as("rank"))
-      .localCheckpoint()
-    // the ITERATED state is checkpointed (constant-size plans; cache alone
-    // doubles the plan per round — driver OOM at sf0.1 in round 3); losing
-    // its partitioning is fine: the planner re-keys the node-tier rank rows
-    // into the round, never the cached edge layout
-    for (_ <- 1 to 5)
-      ranks = pagerankRound(p.e, ranks, p.deg, p.teleV, p.fits)
-        .localCheckpoint()
+    // the checkpointed rank state loses its partitioning, which is fine:
+    // the planner re-keys the node-tier rank rows into the round, never
+    // the cached edge layout
+    val ranks = graft.Rounds.run(
+        p.deg.select(col("node"), col("d"), lit(p.initRank).as("rank")), 5) {
+      pagerankRound(p.e, _, p.deg, p.teleV, p.fits)
+    }
     p.release()
     ranks.orderBy(col("rank").desc, col("node"))
       .limit(50)

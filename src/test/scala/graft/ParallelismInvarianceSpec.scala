@@ -9,7 +9,10 @@ package graft
   * .partitions = 197` (co-prime to the pinned 4/32, so every exchange
   * rehashes differently and partial aggregates combine in a different
   * order) and asserts BYTE-IDENTICAL collected output. Each tested query
-  * ends in a total ordering, so row order cannot mask or fake a diff. */
+  * ends in a total ordering, so row order cannot mask or fake a diff. The
+  * sibling session runs in a fresh state store, so every published root a
+  * query reads (lists, snapshots, graphs, row counts) is built at 197
+  * partitions too, not read from the default session's store. */
 class ParallelismInvarianceSpec extends SparkSpec {
 
   private lazy val wide = {
@@ -52,7 +55,7 @@ class ParallelismInvarianceSpec extends SparkSpec {
     test(s"$q is byte-identical at shuffle.partitions=197") {
       val fn = SparkEntry.queries(q)
       val want = fn(spark, sf).collect().map(_.toString).toSeq
-      val got = fn(wide, sf).collect().map(_.toString).toSeq
+      val got = inFreshStore(fn(wide, sf).collect().map(_.toString).toSeq)
       assert(got == want)
     }
 
@@ -65,7 +68,7 @@ class ParallelismInvarianceSpec extends SparkSpec {
     def built(s: org.apache.spark.sql.SparkSession): Seq[String] =
       graft.llm.Similarity.descentGraph(s, sf, graft.llm.Similarity.DescentIters)
         .orderBy("src", "rnk").collect().map(_.toString).toSeq
-    assert(built(wide) == built(spark))
+    assert(inFreshStore(built(wide)) == built(spark))
   }
 
   // IVF-PQ residual-book CONSTRUCTION (the serve reads published bytes —
@@ -76,7 +79,7 @@ class ParallelismInvarianceSpec extends SparkSpec {
     def built(s: org.apache.spark.sql.SparkSession): Seq[String] =
       graft.llm.IvfPq.trainBooks(s, sf)
         .orderBy("m", "code").collect().map(_.toString).toSeq
-    assert(built(wide) == built(spark))
+    assert(inFreshStore(built(wide)) == built(spark))
   }
 
   // IVF centroid and raw-PQ book CONSTRUCTION: the shared Lloyd loop
@@ -86,14 +89,14 @@ class ParallelismInvarianceSpec extends SparkSpec {
     def built(s: org.apache.spark.sql.SparkSession): Seq[String] =
       graft.llm.Similarity.trainCentroids(s, sf)
         .orderBy("cent_id").collect().map(_.toString).toSeq
-    assert(built(wide) == built(spark))
+    assert(inFreshStore(built(wide)) == built(spark))
   }
 
   test("raw-PQ book construction is byte-identical at shuffle.partitions=197") {
     def built(s: org.apache.spark.sql.SparkSession): Seq[String] =
       graft.llm.Pq.trainBooks(s, sf)
         .orderBy("m", "code").collect().map(_.toString).toSeq
-    assert(built(wide) == built(spark))
+    assert(inFreshStore(built(wide)) == built(spark))
   }
 
   // Graph-index INSERT (live computation every call — only the base graph
@@ -103,7 +106,7 @@ class ParallelismInvarianceSpec extends SparkSpec {
   test("graph insert is byte-identical at shuffle.partitions=197") {
     def ins(s: org.apache.spark.sql.SparkSession): Seq[String] =
       graft.llm.GraphMaintenance.insert(s, sf).collect().map(_.toString).toSeq
-    assert(ins(wide) == ins(spark))
+    assert(inFreshStore(ins(wide)) == ins(spark))
   }
 
   // AQE re-plans at runtime (coalesced partitions, join-strategy swaps,

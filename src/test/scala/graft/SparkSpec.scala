@@ -10,6 +10,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf: String = "/root/testdata/sf0.001"
 
+  /** Run `body` with the state store (`etl.State`, rooted at
+    * `java.io.tmpdir`) in a fresh, empty temp dir, so every published root
+    * the body reaches is built by the body itself. */
+  def inFreshStore[A](body: => A): A = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    val prev = sys.props("java.io.tmpdir")
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fresh").toFile
+    System.setProperty("java.io.tmpdir", fresh.getPath)
+    try body
+    finally {
+      System.setProperty("java.io.tmpdir", prev)
+      rm(fresh)
+    }
+  }
+
   /** Jobs started while `body` runs, counted by a listener through the job
     * group. The listener bus is asynchronous, so a sentinel job in a second
     * group runs afterwards and its end is awaited: the bus delivers events

@@ -50,23 +50,6 @@ class ColdWarmSpec extends SparkSpec {
   private def rows(fn: Query): Seq[String] =
     fn(spark, sf).collect().map(_.toString).toSeq.sorted
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rm)
-    f.delete()
-  }
-
-  /** Run `body` with the state store rooted in a fresh, empty temp dir. */
-  private def inFreshStore[A](body: => A): A = {
-    val prev = sys.props("java.io.tmpdir")
-    val fresh = java.nio.file.Files.createTempDirectory("graft_coldwarm").toFile
-    System.setProperty("java.io.tmpdir", fresh.getPath)
-    try body
-    finally {
-      System.setProperty("java.io.tmpdir", prev)
-      rm(fresh)
-    }
-  }
-
   private lazy val cold: Map[String, Seq[String]] =
     coldWarm.map { case (n, fn) =>
       n -> inFreshStore {
