@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -126,6 +127,31 @@ object Tables {
 
   /** 2024-01-15T00:00:00Z in epoch nanoseconds (merge-upsert cutoff). */
   val CutoffNs: Long = 1705276800000000000L
+
+  /** Row bound on the input of a single-partition window (`Window.orderBy`
+    * or `Window.partitionBy()` with no keys), whose rows all sit in ONE
+    * task. The engine's two such windows (ExactPercentile.bounds,
+    * Curation.qualityThreshold) run over a value HISTOGRAM: one row per
+    * distinct value of a bounded domain (cent prices, milli-logits), not
+    * one per table row. Ten million distinct values is past any such domain
+    * and still a single task's sort; above it the input is not the
+    * histogram the plan assumes. */
+  val SingleWindowMaxRows: Long = 10000000L
+
+  /** `df` unchanged while it has at most `bound` rows; above that the query
+    * fails with a `raise_error` naming `what`, the row count and the bound.
+    * The count is a window over `Window.partitionBy()`, the single partition
+    * the caller's window needs anyway, so the guard adds no exchange. */
+  def guardSingleWindow(df: DataFrame, what: String,
+                        bound: Long = SingleWindowMaxRows): DataFrame = {
+    val n = "__window_rows"
+    df.withColumn(n, count(lit(1)).over(Window.partitionBy()))
+      .filter(when(col(n) > bound, raise_error(concat(
+          lit(s"$what: "), col(n).cast(StringType),
+          lit(s" rows enter a single-partition window, above its bound of $bound"))))
+        .otherwise(lit(true)))
+      .drop(n)
+  }
 
   /** Match a CPU-heavy map stage's parallelism to the session when its scan
     * under-splits. A compact parquet table arrives as ONE row group → ONE

@@ -730,11 +730,14 @@ case class HyperplaneBucket(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registers graft's SQL functions; enabled via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (wired in Verify.session, which every entry point uses). */
+/** Registers graft's SQL functions and the native as-of join, and owns one
+  * static session setting: the size of Spark's compiled-code cache
+  * (`GraftExtensions.CodegenCacheEntries`). Enabled via
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (wired in
+  * Verify.session, which every entry point uses). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    GraftExtensions.sizeCodegenCache()
     // the one custom whole-operator extension (SURVEY §4.2 tier c):
     // the native merge as-of join (graft.plans.AsOfJoinPlan/Exec)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
@@ -815,4 +818,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[LongArrayMd5].getName, "long_array_md5"),
       (children: Seq[Expression]) => LongArrayMd5(children.head)))
   }
+}
+
+object GraftExtensions {
+  private val CacheSize = "spark.sql.codegen.cache.maxEntries"
+
+  /** Entries in Spark's cache of compiled generated classes, an LRU keyed on
+    * (class loader, source) that holds 100 by default. In local mode each
+    * whole-stage subtree compiles twice (on the driver, and in the task
+    * under the executor's class loader), and one session serving the whole
+    * registered surface (248 queries at sf0.001) needs 3,138 distinct
+    * classes, so at 100 a warm pass recompiles most of what it ran before.
+    * 4,096 holds the surface with headroom; each class costs metaspace only
+    * while cached. */
+  val CodegenCacheEntries: Int = 4096
+
+  /** Spark reads the cache size once per JVM, when the code generator first
+    * loads, from the session's static conf, which is built from the
+    * SparkContext's conf. Extensions are applied after the context exists
+    * and before the session's shared state, the last point at which the
+    * setting still counts. A deployment that sets it keeps its own value;
+    * a JVM that compiled code before this session keeps the size its cache
+    * was built with, and says so. */
+  private def sizeCodegenCache(): Unit =
+    org.apache.spark.sql.graft.Bridge.activeConf.filterNot(_.contains(CacheSize)).foreach { conf =>
+      conf.set(CacheSize, CodegenCacheEntries.toString)
+      if (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
+        org.slf4j.LoggerFactory.getLogger(classOf[GraftExtensions]).warn(
+          s"$CacheSize=$CodegenCacheEntries is set after this JVM already compiled " +
+            "generated code: the compiled-code cache keeps the size it was built with")
+    }
 }

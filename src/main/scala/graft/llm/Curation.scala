@@ -658,7 +658,7 @@ object Curation {
     val w = org.apache.spark.sql.expressions.Window.orderBy("logit_milli")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val n = lg.agg(count(lit(1)).as("n_docs"))
-    val cutoff = hist.crossJoin(broadcast(n))
+    val cutoff = guardSingleWindow(hist.crossJoin(broadcast(n)), "qualityThreshold histogram")
       .withColumn("cum", sum("cnt").over(w))
       .filter(col("cum") * ThresholdDen >= col("n_docs"))
       .agg(min("logit_milli").as("threshold"))

@@ -32,8 +32,13 @@ object ExactPercentile {
              fracs: Seq[(String, Double)],
              parts: Seq[String] = Nil): DataFrame = {
     val pcols = parts.map(col)
-    val hist = df.groupBy((pcols :+ valueCol.as("v")): _*)
+    val counts = df.groupBy((pcols :+ valueCol.as("v")): _*)
       .agg(count(lit(1)).as("cnt"))
+    // with no partition keys both windows below hold every histogram row
+    // in one task
+    val hist =
+      if (parts.isEmpty) graft.Tables.guardSingleWindow(counts, "ExactPercentile histogram")
+      else counts
     val ord =
       (if (parts.isEmpty) Window.orderBy("v")
        else Window.partitionBy(pcols: _*).orderBy("v"))
