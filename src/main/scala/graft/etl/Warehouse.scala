@@ -18,8 +18,9 @@ import java.nio.charset.StandardCharsets
   *     v_<millis>_<nonce>/   complete, immutable data versions
   *       part-*.parquet        the rows
   *       _SCHEMA               the writer's schema as JSON (partition
-  *                             columns left out), so a read needs no
-  *                             footer-inference job
+  *                             columns included), so a read needs no
+  *                             footer-inference job and partition
+  *                             columns keep their written types
   *       _CLUSTERING           layout contract (clustered / z-ordered only)
   *     _CURRENT              pointer file naming the current version dir
   *
@@ -75,18 +76,17 @@ object Warehouse {
 
   private def schemaSidecar(dir: String) = new Path(dir, "_SCHEMA")
 
-  /** Record the schema a version dir was written with, partition columns
-    * excluded: Spark types those from the directory names on read, as it
-    * would without the sidecar. */
-  private def recordSchema(spark: SparkSession, dir: String, schema: StructType,
-                           partCols: Seq[String] = Nil): Unit =
-    writeSmall(fs(spark, dir), schemaSidecar(dir),
-      StructType(schema.filterNot(c => partCols.contains(c.name))).json)
+  /** Record the full schema a version dir was written with, partition
+    * columns included. */
+  private def recordSchema(spark: SparkSession, dir: String, schema: StructType): Unit =
+    writeSmall(fs(spark, dir), schemaSidecar(dir), schema.json)
 
   /** Read one immutable version dir. With its `_SCHEMA` sidecar the schema is
-    * handed to the reader, so no footer-inference job runs; a dir published
-    * before sidecars existed is read through `Tables.parquet` (inferred once
-    * per listing). */
+    * handed to the reader, so no footer-inference job runs and a partition
+    * column reads back with its written type (directory-name inference
+    * would read `cent_id` bigint, or a source named '2024', as INT); a dir
+    * published before sidecars existed is read through `Tables.parquet`
+    * (inferred once per listing). */
   private def readDir(spark: SparkSession, dir: String): DataFrame =
     readSmall(fs(spark, dir), schemaSidecar(dir)) match {
       case Some(json) =>
@@ -121,12 +121,12 @@ object Warehouse {
     * complete immutable version. */
   def publishPartitioned(spark: SparkSession, target: String, df: DataFrame,
                          partCol: String): String =
-    publishVersion(spark, target, df.schema, Seq(partCol)) { dir =>
+    publishVersion(spark, target, df.schema) { dir =>
       df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(dir)
     }
 
-  /** Materialize a COMPLETE version dir via `write`, record `schema` (minus
-    * `partCols`) in its `_SCHEMA` sidecar, then commit it with the one atomic
+  /** Materialize a COMPLETE version dir via `write`, record `schema` in its
+    * `_SCHEMA` sidecar, then commit it with the one atomic
     * pointer replace. Everything in the dir — part-files, schema and layout
     * sidecars — is immutable together: readers never see a version without
     * its metadata.
@@ -141,8 +141,7 @@ object Warehouse {
     * the dirs it is about to reference. A marker with no rename is a
     * publish that died mid-flight; vacuum reclaims it only after
     * `abandonedMs` (default 24 h — far beyond any real write). */
-  private def publishVersion(spark: SparkSession, target: String, schema: StructType,
-                             partCols: Seq[String] = Nil)
+  private def publishVersion(spark: SparkSession, target: String, schema: StructType)
                             (write: String => Unit): String = {
     val nonce = java.util.UUID.randomUUID.toString.take(8)
     val v = f"v_${System.currentTimeMillis()}%013d_$nonce"
@@ -150,7 +149,7 @@ object Warehouse {
     val tmp = new Path(target, s"_CURRENT.$nonce.tmp")
     writeSmall(f, tmp, v)
     write(s"$target/$v")
-    recordSchema(spark, s"$target/$v", schema, partCols)
+    recordSchema(spark, s"$target/$v", schema)
     commit(spark, f, tmp, pointer(target))
     v
   }
@@ -417,7 +416,7 @@ object Warehouse {
         !written.exists(_.getPath.getName.startsWith("part-")) && !written.exists(_.isDirectory)
       if (emptyPartitioned)
         df.limit(0).coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
-      recordSchema(spark, dir, df.schema, if (emptyPartitioned) Nil else partCol.toSeq)
+      recordSchema(spark, dir, df.schema)
       name -> v
     }
     writeSmall(f, tmp, versions.sortBy(_._1).map { case (n, v) => s"$n=$v" }.mkString("\n"))

@@ -24,8 +24,8 @@ import org.apache.spark.sql.types._
   * elements — heap insertion order never affects it, so any partition
   * order and any merge tree produce identical output (ties are by value;
   * equal doubles are interchangeable). NaNs follow Spark's total order
-  * (NaN sorts above all values, as in sort_array desc), so the fallback
-  * form is bit-identical. Nulls are skipped, like every Spark aggregate.
+  * (NaN sorts above all values, as in sort_array desc), so the
+  * slice(sort_array(collect_list…)) reference is bit-identical. Nulls are skipped, like every Spark aggregate.
   */
 case class TopVals(
     child: Expression,

@@ -184,7 +184,7 @@ case class VecDist2(left: Expression, right: Expression)
 /** `minhash_sig(th)`: the K=16 MinHash minima of a hashed-feature array in
   * ONE pass — `array<long>` in, `array<long>` (length K) out.
   *
-  * Semantics are exactly the HOF fallback's
+  * Semantics are exactly the HOF reference form's
   * (`array_min(transform(th, x -> (Aᵢ·x + Bᵢ) % P))` per i, TextHash
   * constants): same integer arithmetic, so the DuckDB oracle twins are
   * untouched. The HOF form walks the array K times with a lambda dispatch
@@ -272,10 +272,10 @@ case class MinHashSig(child: Expression) extends UnaryExpression {
 /** `simhash_sig(th)`: the 60-bit SimHash signature of a hashed-token array
   * in one pass — `array<long>` in, `long` out.
   *
-  * Semantics are exactly the fallback pipeline's (explode + 60 sign-sums +
-  * bit assembly, graft.llm.Dedup.simhashSig): per bit b, count +1 when the
+  * Semantics are exactly the reference pipeline's (explode + 60 sign-sums +
+  * bit assembly): per bit b, count +1 when the
   * hash has bit b set else −1; signature bit b is set iff the count is
-  * strictly positive. The fallback needs an exchange (groupBy doc) and 60
+  * strictly positive. That pipeline needs an exchange (groupBy doc) and 60
   * conditional aggregates per token row; this is a shuffle-FREE per-row
   * projection. Empty array → 0 (no counter positive), null → null. */
 case class SimHashSig(child: Expression) extends UnaryExpression {
@@ -342,10 +342,10 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
   * DISTINCT character-5-gram shingles of a string, in one pass — string in,
   * `array<long>` out.
   *
-  * Semantics are exactly the built-in fallback's
+  * Semantics are exactly the built-in reference form's
   * (`transform(array_distinct(transform(sequence(...), i ->
   * substring(text, i, 5))), sh -> conv(substring(md5(sh),1,15),16,10) % P)`,
-  * graft.llm.Dedup.hashedShingles): same shingle set — including the
+  * the form KernelSpec checks against): same shingle set — including the
   * whole-short-string shingle for texts under 5 chars — same first-occurrence
   * order, same md5-prefix integer. The HOF form materializes an array of
   * |text| substring objects, string-dedups it, then walks it again through a
@@ -433,10 +433,10 @@ object ShingleHashes {
 /** `winnow_fps(text)`: the DISTINCT winnowing fingerprints of a string in
   * one pass — string in, `array<long>` out.
   *
-  * Semantics are exactly the HOF fallback's (positional mod-P shingle
+  * Semantics are exactly the HOF reference form's (positional mod-P shingle
   * hashes via `transform(sequence(...), i -> substring/md5)`, then
   * `array_distinct(transform(sequence(1, greatest(count-7, 1)), j ->
-  * array_min(slice(th, j, 8))))`, graft.llm.Dedup.winnowPairs): same
+  * array_min(slice(th, j, 8))))`): same
   * positional hash sequence — including substring's end-clamping on short
   * strings — same window set, same first-occurrence distinct order. The
   * HOF form md5s EVERY position (~|text| digests per doc) and rescans each
@@ -479,7 +479,7 @@ case class WinnowFps(child: Expression) extends UnaryExpression {
     val wCount = math.max(count - (W - 1), 1)
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     // monotonic deque of indices with increasing h-values; O(1) amortized
-    // per position vs the fallback's O(w) rescan
+    // per position vs the HOF form's O(w) rescan
     val deque = new Array[Int](count)
     var head = 0; var tail = 0
     var j = 0
@@ -535,7 +535,7 @@ case class WinnowFps(child: Expression) extends UnaryExpression {
   * limit: leading / trailing / consecutive spaces yield empty tokens, and
   * the empty string yields one empty token. Splitting scans BYTES for 0x20,
   * which is exact for UTF-8 (a space byte never occurs inside a multi-byte
-  * sequence). The fallback form md5s into a hex STRING, substrings it and
+  * sequence). The HOF form md5s into a hex STRING, substrings it and
   * string-parses the number per token — three allocations this one-pass
   * digest-to-long form never makes. */
 case class TokenHashes(child: Expression, distinct: Boolean)
@@ -619,13 +619,12 @@ case class TokenHashes(child: Expression, distinct: Boolean)
   * bytes — a collision-safe set DIGEST for the dedup collapse keys
   * (`array<long>` in, `binary` out).
   *
-  * The fallback key is `sha2(concat_ws(',', transform(ths, cast string)))`:
-  * per row that allocates one string per element plus a multi-KB join before
-  * hashing. This digests the raw 8-byte values. The key is INTERNAL (a
-  * grouping/join handle, never query output), so the two forms need not
-  * produce equal bytes — FallbackSpec's output bit-identity still holds
-  * because distinct sets map to distinct keys under either hash (md5's
-  * 128 bits keep the birthday bound beyond corpus scale). */
+  * A string key (`sha2(concat_ws(',', transform(ths, cast string)))`)
+  * would allocate one string per element plus a multi-KB join per row
+  * before hashing; this digests the raw 8-byte values. The key is INTERNAL
+  * (a grouping/join handle, never query output), so it only has to map
+  * distinct sets to distinct keys (md5's 128 bits keep the birthday bound
+  * beyond corpus scale). */
 case class LongArrayMd5(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -741,87 +740,48 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the one custom whole-operator extension (SURVEY §4.2 tier c):
     // the native merge as-of join (graft.plans.AsOfJoinPlan/Exec)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_dist2"),
-      new ExpressionInfo(classOf[VecDist2].getName, "vec_dist2"),
-      (children: Seq[Expression]) => VecDist2(children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("top_vals"),
-      new ExpressionInfo(classOf[TopVals].getName, "top_vals"),
-      (children: Seq[Expression]) => TopVals(children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("top_structs"),
-      new ExpressionInfo(classOf[TopStructs].getName, "top_structs"),
-      (children: Seq[Expression]) =>
-        TopStructs(children.head, children(1), children(2), children(3))))
-    // CMS merge + probe — the serve-many half Spark's built-in
-    // count_min_sketch build aggregate lacks (Aggregates.cmsHeavyHitters)
-    e.injectFunction((
-      FunctionIdentifier("count_min_sketch_merge"),
-      new ExpressionInfo(classOf[CmsMerge].getName, "count_min_sketch_merge"),
-      (children: Seq[Expression]) => CmsMerge(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("count_min_sketch_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "count_min_sketch_estimate"),
-      (children: Seq[Expression]) => CmsEstimate(children.head, children(1))))
-    // Spark's own runtime-filter pair, surfaced as SQL functions so a
-    // selective join can prune its fact scan explicitly (Joins.bloomPrunedJoin)
-    e.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_contains"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (children: Seq[Expression]) => SimHashSig(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (children: Seq[Expression]) => ShingleHashes(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      (children: Seq[Expression]) => WinnowFps(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("token_hashes"),
-      new ExpressionInfo(classOf[TokenHashes].getName, "token_hashes"),
-      (children: Seq[Expression]) => TokenHashes(children.head, distinct = false)))
-    e.injectFunction((
-      FunctionIdentifier("token_hashes_distinct"),
-      new ExpressionInfo(classOf[TokenHashes].getName, "token_hashes_distinct"),
-      (children: Seq[Expression]) => TokenHashes(children.head, distinct = true)))
-    e.injectFunction((
-      FunctionIdentifier("hyperplane_bucket"),
-      new ExpressionInfo(classOf[HyperplaneBucket].getName, "hyperplane_bucket"),
-      (children: Seq[Expression]) => HyperplaneBucket(children.head, children(1))))
-    e.injectFunction((
-      FunctionIdentifier("long_array_md5"),
-      new ExpressionInfo(classOf[LongArrayMd5].getName, "long_array_md5"),
-      (children: Seq[Expression]) => LongArrayMd5(children.head)))
+    GraftExtensions.Kernels.foreach { k =>
+      e.injectFunction((FunctionIdentifier(k.name), new ExpressionInfo(k.cls.getName, k.name), k.build))
+    }
   }
 }
 
 object GraftExtensions {
   private val CacheSize = "spark.sql.codegen.cache.maxEntries"
+
+  /** One SQL function a graft session registers: its name, the class that
+    * implements it and the builder from its argument expressions. */
+  final case class Kernel(name: String, cls: Class[_], build: Seq[Expression] => Expression)
+
+  /** Every SQL function a graft session registers, declared once. The
+    * engine calls each by name with no fallback, so a session built
+    * without `GraftExtensions` fails at analysis naming the function. */
+  val Kernels: Seq[Kernel] = {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    Seq(
+      Kernel("vec_dot", classOf[VecDot], c => VecDot(c(0), c(1))),
+      Kernel("vec_dist2", classOf[VecDist2], c => VecDist2(c(0), c(1))),
+      Kernel("top_vals", classOf[TopVals], c => TopVals(c(0), c(1))),
+      Kernel("top_structs", classOf[TopStructs], c => TopStructs(c(0), c(1), c(2), c(3))),
+      // CMS merge + probe: the serve-many half Spark's built-in
+      // count_min_sketch build aggregate lacks (Aggregates.cmsHeavyHitters)
+      Kernel("count_min_sketch_merge", classOf[CmsMerge], c => CmsMerge(c(0))),
+      Kernel("count_min_sketch_estimate", classOf[CmsEstimate], c => CmsEstimate(c(0), c(1))),
+      // Spark's own runtime-filter pair, surfaced as SQL functions so a
+      // selective join can prune its fact scan explicitly (Joins.bloomPrunedJoin)
+      Kernel("bloom_agg", classOf[BloomFilterAggregate], c => new BloomFilterAggregate(c(0))),
+      Kernel("bloom_contains", classOf[BloomFilterMightContain],
+        c => BloomFilterMightContain(c(0), c(1))),
+      Kernel("minhash_sig", classOf[MinHashSig], c => MinHashSig(c(0))),
+      Kernel("simhash_sig", classOf[SimHashSig], c => SimHashSig(c(0))),
+      Kernel("shingle_hashes", classOf[ShingleHashes], c => ShingleHashes(c(0))),
+      Kernel("winnow_fps", classOf[WinnowFps], c => WinnowFps(c(0))),
+      Kernel("token_hashes", classOf[TokenHashes], c => TokenHashes(c(0), distinct = false)),
+      Kernel("token_hashes_distinct", classOf[TokenHashes], c => TokenHashes(c(0), distinct = true)),
+      Kernel("hyperplane_bucket", classOf[HyperplaneBucket], c => HyperplaneBucket(c(0), c(1))),
+      Kernel("long_array_md5", classOf[LongArrayMd5], c => LongArrayMd5(c(0))))
+  }
 
   /** Entries in Spark's cache of compiled generated classes, an LRU keyed on
     * (class loader, source) that holds 100 by default. In local mode each

@@ -127,7 +127,7 @@ object Binary {
         "q_id", "hds", "vec_id", Shortlist, asc = true, "hds", "n_id")
       .select(col("q_id"), col("n_id"), col("hds").cast("long").as("hd"))
     val raw = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"),
-      expr(s"sqrt(${Similarity.dotFor(s)("embedding", "embedding")})").as("nrm"))
+      expr(Similarity.normSql("embedding")).as("nrm"))
     val wCos = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
     shortlist
       .join(raw.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
@@ -135,7 +135,7 @@ object Binary {
       .join(broadcast(raw.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
           col("nrm").as("q_nrm"))), "q_id")
-      .withColumn("cos", expr(Similarity.dotFor(s)("q_emb", "n_emb")) /
+      .withColumn("cos", expr(Similarity.dotSql("q_emb", "n_emb")) /
         (col("q_nrm") * col("n_nrm")))
       .withColumn("rank", row_number().over(wCos).cast("long"))
       .filter(col("rank") <= 10)

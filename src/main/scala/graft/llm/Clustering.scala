@@ -52,17 +52,11 @@ object Clustering {
   val K = 8
   val Iters = 2
 
-  /** Sequential (left-to-right) squared-euclidean fold — the dist² twin of
-    * Similarity.hofDotSql; DuckDB's list_sum comprehension runs the same
-    * op order. The codegen'd vec_dist2 (graft.functions.VecDist2) emits the
-    * identical op sequence in a tight primitive loop; the HOF form is the
-    * bit-identical fallback on foreign sessions (FallbackSpec). */
-  private def dist2Sql(x: String, c: String): String =
-    s"aggregate(zip_with($x, $c, (a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)), 0D, (acc, v) -> acc + v)"
-
-  private[graft] def dist2For(s: SparkSession)(x: String, c: String): String =
-    if (s.catalog.functionExists("vec_dist2")) s"vec_dist2($x, $c)"
-    else dist2Sql(x, c)
+  /** Sequential (left-to-right) squared-euclidean distance through the
+    * codegen'd vec_dist2 (graft.functions.VecDist2): the op sequence of the
+    * HOF fold `aggregate(zip_with(...))`, which DuckDB's list_sum
+    * comprehension runs too (oracle.Sql.dDist2). */
+  private[graft] def dist2Sql(x: String, c: String): String = s"vec_dist2($x, $c)"
 
   /** What a Lloyd loop trains (the engine twin of oracle.Sql.Space):
     * centroids keyed by `code` (within each `group` value, if any), each a
@@ -86,7 +80,7 @@ object Clustering {
   private[graft] def assign(sp: Space)(points: DataFrame, cents: DataFrame): DataFrame = {
     val c = broadcast(cents)
     sp.group.fold(points.crossJoin(c))(points.join(c, _))
-      .withColumn("d2", expr(dist2For(points.sparkSession)(sp.point, sp.vec)))
+      .withColumn("d2", expr(dist2Sql(sp.point, sp.vec)))
       .withColumn("rn", row_number().over(
         Window.partitionBy(("vec_id" +: sp.group.toSeq).map(col): _*)
           .orderBy(col("d2"), col(sp.code))))

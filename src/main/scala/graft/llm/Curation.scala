@@ -95,14 +95,14 @@ object Curation {
     * DuckDB twin reproduces every row. */
   def decontaminateEmbed(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"),
-      expr(Similarity.normFor(s)("embedding")).as("nrm"))
+      expr(Similarity.normSql("embedding")).as("nrm"))
     val bench = e.filter(col("vec_id") % BenchMod === 0).select(
       col("vec_id").as("bench_id"), col("embedding").as("b_emb"),
       col("nrm").as("b_nrm"))
     val cands = e.filter(col("vec_id") % BenchMod =!= 0)
       .crossJoin(broadcast(bench))
       .withColumn("cos",
-        expr(Similarity.dotFor(s)("b_emb", "embedding")) / (col("b_nrm") * col("nrm")))
+        expr(Similarity.dotSql("b_emb", "embedding")) / (col("b_nrm") * col("nrm")))
       .select(col("bench_id"), col("vec_id"), col("cos"))
     Ranking.topKPerGroup(cands, "bench_id", "cos", "vec_id",
         EmbedAuditK, asc = false, "cos", "train_id")

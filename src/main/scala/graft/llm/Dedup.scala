@@ -68,35 +68,24 @@ object Dedup {
     * `coalesce(text, '')` is semantically a no-op (fixture text is non-null)
     * but makes the derived set-digest key NON-NULLABLE, so equi-joins on it
     * skip the `isnotnull` pre-filter — which would otherwise evaluate the
-    * whole md5+sort+sha2 key expression a second time per row. */
+    * whole token-hash + sort + digest key expression a second time per row. */
   // NOT spread(): token hashing is one md5 per token (~10× lighter than the
   // per-character shingle stages) and every consumer shuffles on the set
   // digest immediately — the extra exchange costs more than it parallelizes
   // (A/B at sf0.1: jaccard 1.0 → 1.5 s WITH spread)
   private def hashedTokens(s: SparkSession, dir: String): DataFrame =
-    hashedTokensOf(s, t(s, dir, "documents"))
+    hashedTokensOf(t(s, dir, "documents"))
 
-  private def hashedTokensOf(s: SparkSession, docs: DataFrame): DataFrame =
-    if (s.catalog.functionExists("token_hashes"))
-      docs.select(
-        col("doc_id"), expr("token_hashes(coalesce(text, ''))").as("th"))
-    else
-      docs.select(
-        col("doc_id"),
-        expr(s"transform(split(coalesce(text, ''), ' '), t -> ${tokHashSql("t")} % ${P}L)").as("th"))
+  private def hashedTokensOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), expr("token_hashes(coalesce(text, ''))").as("th"))
 
   /** Append m0..m{K-1} signature columns computed from hashed-feature column
-    * `src`: one pass through the codegen'd `minhash_sig` expression when
-    * registered (GraftExtensions), else the K-pass HOF fallback — identical
-    * integer arithmetic, bit-equal outputs, same DuckDB twins. */
+    * `src` in one pass through the codegen'd `minhash_sig` expression: the
+    * integer arithmetic of the DuckDB twins. */
   private def withSig(df: DataFrame, src: String, keep: Seq[String]): DataFrame =
-    if (df.sparkSession.catalog.functionExists("minhash_sig"))
-      df.withColumn("_sig", expr(s"minhash_sig($src)"))
-        .select(keep.map(col) ++ (0 until K).map(i =>
-          element_at(col("_sig"), i + 1).as(s"m$i")): _*)
-    else
-      df.select(keep.map(col) ++ (0 until K).map(i =>
-        expr(minHashSql(src, i)).as(s"m$i")): _*)
+    df.withColumn("_sig", expr(s"minhash_sig($src)"))
+      .select(keep.map(col) ++ (0 until K).map(i =>
+        element_at(col("_sig"), i + 1).as(s"m$i")): _*)
 
   /** MinHash signatures: K=16 per-function minima over the hashed tokens. */
   def minhashSignatures(s: SparkSession, dir: String): DataFrame =
@@ -121,31 +110,27 @@ object Dedup {
     * distinct set (rep = min doc_id, the set itself for signatures/verify),
     * `members` is the (skey, rep, m) ASSIGNMENT as rows — a duplicate class
     * with 10⁶ copies is 10⁶ rows spread across tasks, not one 10⁶-element
-    * collect_list row that OOMs a single task. The membership join key is a
-    * sha256 digest of the set, so that exchange carries 32 bytes per row,
-    * not the token array. */
+    * collect_list row that OOMs a single task. The membership join key is an
+    * md5 digest of the set, so that exchange carries 16 bytes per row, not
+    * the token array. */
   private case class SetCollapse(reps: DataFrame, members: DataFrame)
 
   private def setCollapse(s: SparkSession, dir: String): SetCollapse =
     setCollapseOf(hashedTokens(s, dir))
 
+  /** Set-digest grouping key over a sorted-distinct long array: the
+    * codegen'd 16-byte md5 of its raw bytes. The key is internal (grouping
+    * handle, not output), so it only needs injectivity in practice. */
+  private def setKey(ths: Column): Column = call_function("long_array_md5", ths)
+
   /** Collapse over any (doc_id, th: array<long>) hashed-feature input —
     * token hashes for the word-level pipelines, shingle hashes for
     * `shinglePairs`. */
-  /** Set-digest grouping key over a sorted-distinct long array: the codegen'd
-    * 16-byte md5-of-raw-bytes when registered, else sha256 of the
-    * comma-joined decimal string. The key is internal (grouping handle, not
-    * output), so the forms only need injectivity-in-practice, not equality. */
-  private def setKey(s: SparkSession, ths: Column): Column =
-    if (s.catalog.functionExists("long_array_md5"))
-      call_function("long_array_md5", ths)
-    else sha2(concat_ws(",", transform(ths, _.cast("string"))), 256)
-
   private def setCollapseOf(hashed: DataFrame): SetCollapse = {
     val keyed = hashed.select(
       col("doc_id"),
       array_sort(array_distinct(col("th"))).as("ths"))
-      .withColumn("skey", setKey(hashed.sparkSession, col("ths")))
+      .withColumn("skey", setKey(col("ths")))
     val reps = keyed.groupBy("skey")
       .agg(min("doc_id").as("rep"), first("ths").as("ths"), count(lit(1)).as("nm"))
     // membership via windows over ONE keyed scan (not a keyed⋈reps join):
@@ -240,17 +225,8 @@ object Dedup {
   private def hashedShingles(s: SparkSession, dir: String): DataFrame = {
     // per-position shingle extraction + hashing is CPU-bound: unserialize
     // it when the scan under-splits (see Tables.spread)
-    val docs = graft.Tables.spread(t(s, dir, "documents"))
-    if (s.catalog.functionExists("shingle_hashes"))
-      docs.select(
-        col("doc_id"), expr("shingle_hashes(text)").as("th"))
-    else
-      docs.select(
-        col("doc_id"),
-        expr(s"transform(array_distinct(transform(" +
-          s"sequence(1, greatest(length(coalesce(text, '')) - ${ShingleLen - 1}, 1)), " +
-          s"i -> substring(text, i, $ShingleLen))), " +
-          s"sh -> ${tokHashSql("sh")} % ${P}L)").as("th"))
+    graft.Tables.spread(t(s, dir, "documents"))
+      .select(col("doc_id"), expr("shingle_hashes(text)").as("th"))
   }
 
   /** MinHash+LSH near-dup candidates over CHAR-SHINGLE sets — the
@@ -355,26 +331,11 @@ object Dedup {
   }
 
   def winnowPairs(s: SparkSession, dir: String): DataFrame = {
-    val w = WinnowWindow
     // positional hashing is the CPU-heavy stage; spread() unserializes it
     // when the scan under-splits (one row group = one task otherwise)
     val docs = graft.Tables.spread(t(s, dir, "documents"))
-    val fpArrays =
-      if (s.catalog.functionExists("winnow_fps"))
-        docs.select(col("doc_id"), expr("winnow_fps(coalesce(text, ''))").as("fps"))
-      else {
-        // staged th column: referenced twice below, so CollapseProject keeps
-        // the positional hash array materialized once per row
-        val positional =
-          s"transform(sequence(1, greatest(length(coalesce(text, '')) - ${ShingleLen - 1}, 1)), " +
-            s"i -> ${tokHashSql(s"substring(text, i, $ShingleLen)")} % ${P}L)"
-        docs
-          .select(col("doc_id"), expr(positional).as("th"))
-          .select(col("doc_id"), expr(
-            s"array_distinct(transform(sequence(1, greatest(size(th) - ${w - 1}, 1)), " +
-              s"j -> array_min(slice(th, j, $w))))").as("fps"))
-      }
-    val fp = fpArrays.select(col("doc_id"), explode(col("fps")).as("fp"))
+    val fp = docs.select(col("doc_id"), expr("winnow_fps(coalesce(text, ''))").as("fps"))
+      .select(col("doc_id"), explode(col("fps")).as("fp"))
     val dfw = org.apache.spark.sql.expressions.Window.partitionBy("fp")
     val kept = fp.withColumn("df", count(lit(1)).over(dfw))
       .filter(col("df") <= WinnowMaxDf)
@@ -404,7 +365,7 @@ object Dedup {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("skey")
     hashedTokens(s, dir)
       .select(col("doc_id"),
-        setKey(s, array_sort(array_distinct(col("th")))).as("skey"))
+        setKey(array_sort(array_distinct(col("th")))).as("skey"))
       .select(col("doc_id"),
         min("doc_id").over(w).as("rep_id"),
         count(lit(1)).over(w).as("n_members"))
@@ -525,33 +486,12 @@ object Dedup {
 
   /** SimHash signatures (no output ordering — shared by the queries below).
     * Per (doc, bit): sum of ±1 over distinct token hashes; bit set iff the
-    * sum is strictly positive. With GraftExtensions this is a SHUFFLE-FREE
-    * per-row pass through the codegen'd `simhash_sig` expression; foreign
-    * sessions fall back to the explode + 60-partial-sums aggregate —
-    * bit-identical output either way (FallbackSpec). */
+    * sum is strictly positive. A SHUFFLE-FREE per-row pass through the
+    * codegen'd `token_hashes_distinct` and `simhash_sig` expressions. */
   def simhashSig(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("simhash_sig") && s.catalog.functionExists("token_hashes_distinct"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        expr("simhash_sig(token_hashes_distinct(text))").as("simhash"))
-    else if (s.catalog.functionExists("simhash_sig"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        expr(s"simhash_sig(transform(array_distinct(split(text, ' ')), t -> ${tokHashSql("t")}))")
-          .as("simhash"))
-    else {
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
-        .withColumn("h", tokHash(col("tok")))
-      val bitSums = (0 until SimBits).map(b =>
-        sum(expr(s"CASE WHEN (h >> $b) % 2 = 1 THEN 1 ELSE -1 END")).as(s"s$b"))
-      val sig = (0 until SimBits)
-        .map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-        .reduce(_ + _)
-      tok.groupBy("doc_id")
-        .agg(bitSums.head, bitSums.tail: _*)
-        .select(col("doc_id"), sig.as("simhash"))
-    }
+    t(s, dir, "documents").select(
+      col("doc_id"),
+      expr("simhash_sig(token_hashes_distinct(text))").as("simhash"))
 
   /** SimHash: 60-bit signature per doc. */
   def simhash(s: SparkSession, dir: String): DataFrame =
@@ -788,12 +728,12 @@ object Dedup {
                                          planes: Int): DataFrame = {
     val e = t(s, dir, "embeddings").select(
       col("vec_id"), col("embedding"),
-      expr(Similarity.normFor(s)("embedding")).as("nrm"),
-      expr(Similarity.bucketFor(s)("embedding", planes)).as("bucket"))
+      expr(Similarity.normSql("embedding")).as("nrm"),
+      expr(Similarity.bucketSql("embedding", planes)).as("bucket"))
     val a = e.alias("a"); val b = e.alias("b")
     a.join(b, col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos",
-        expr(Similarity.dotFor(s)("a.embedding", "b.embedding")) / (col("a.nrm") * col("b.nrm")))
+        expr(Similarity.dotSql("a.embedding", "b.embedding")) / (col("a.nrm") * col("b.nrm")))
   }
 
   /** Embedding-cosine near-dup blocked by the hyperplane-LSH bucket instead
@@ -826,11 +766,11 @@ object Dedup {
   def embedNear(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings").select(
       col("vec_id"), col("label"), col("embedding"),
-      expr(Similarity.normFor(s)("embedding")).as("nrm"))
+      expr(Similarity.normSql("embedding")).as("nrm"))
     val a = e.alias("a"); val b = e.alias("b")
     a.join(b, col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos",
-        expr(Similarity.dotFor(s)("a.embedding", "b.embedding")) / (col("a.nrm") * col("b.nrm")))
+        expr(Similarity.dotSql("a.embedding", "b.embedding")) / (col("a.nrm") * col("b.nrm")))
       .filter(col("cos") >= 0.35)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("cos"))
       .orderBy("vec_a", "vec_b")
@@ -893,7 +833,7 @@ object Dedup {
   def dedupBatchAgainstIndex(s: SparkSession, docs: DataFrame,
                              target: String): DataFrame = {
     val idx = graft.etl.Warehouse.read(s, target)
-    val delta = hashedTokensOf(s, docs)
+    val delta = hashedTokensOf(docs)
       .select(col("doc_id"), array_sort(array_distinct(col("th"))).as("ths"))
       .withColumn("nt", size(col("ths")))
     val dBands = bandsOf(withSig(delta, "ths", Seq("doc_id", "ths", "nt")),

@@ -148,7 +148,7 @@ object GraphMaintenance {
       cand.join(base.select(col("vec_id").as("n_id"),
           col("embedding").as("n_emb"), col("nrm").as("n_nrm")), "n_id")
         .join(q, "q_id")
-        .withColumn("cos", expr(Similarity.dotFor(s)("q_emb", "n_emb")) /
+        .withColumn("cos", expr(Similarity.dotSql("q_emb", "n_emb")) /
           (col("q_nrm") * col("n_nrm")))
         .select("q_id", "n_id", "cos")
     // search graph = the base layer (published base kNN layer + the base

@@ -64,8 +64,7 @@ object IvfMaintenance {
     * (`read`) is what the composite's residual stage reads too. */
   val lists = new Segments.Root("ivf", "up_lists", "embeddings",
       Some("cent_id"),
-      project = _.select(col("vec_id"), col("embedding"), col("nrm"),
-        col("cent_id").cast("long").as("cent_id")))({ (s, dir) =>
+      project = _.select("vec_id", "embedding", "nrm", "cent_id"))({ (s, dir) =>
     val cut = Segments.cut(s, dir, "embeddings")
     (assignSlice(s, dir, cut, newRows = false), assignSlice(s, dir, cut, newRows = true))
   })

@@ -116,8 +116,6 @@ object IvfPq {
     graft.etl.State.memo(s, codesTarget(s, dir))(graft.etl.Warehouse.publishPartitioned(s, _,
         Pq.assign(residualSubvecs(s, dir), books(s, dir)).select("vec_id", "m", "code", "cent_id"),
         "cent_id"))
-      // partition-column inference reads dir names as int — restore long
-      .select(col("vec_id"), col("m"), col("code"), col("cent_id").cast("long").as("cent_id"))
 
   /** THE IVFADC estimate — one body for the base serves, the sweep and
     * the upsert serves; each passes the state it resolved: `probes`
@@ -135,7 +133,7 @@ object IvfPq {
   private def adcEstimate(s: SparkSession, dir: String, probes: DataFrame,
                           cents: DataFrame, books: DataFrame,
                           codes: DataFrame): DataFrame = {
-    val dd = Clustering.dist2For(s) _
+    val dd = Clustering.dist2Sql _
     val keys = probes.columns.toSeq
     val q = t(s, dir, "embeddings").filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("embedding"))
@@ -265,8 +263,7 @@ object IvfPq {
     * both). */
   val upCodes = new Segments.Root("ivf", "ivfpqup_lists", "embeddings",
       Some("cent_id"),
-      project = _.select(col("vec_id"), col("m"), col("code"),
-        col("cent_id").cast("long").as("cent_id")))({ (s, dir) =>
+      project = _.select("vec_id", "m", "code", "cent_id"))({ (s, dir) =>
     val cut = Segments.cut(s, dir, "embeddings")
     (upCodesSlice(s, dir, cut, newRows = false), upCodesSlice(s, dir, cut, newRows = true))
   })
@@ -327,7 +324,7 @@ object IvfPq {
     * broadcast books + the residual map — O(corpus codes), 2-row output;
     * a deployment runs the late-segment half per batch. */
   def drift(s: SparkSession, dir: String): DataFrame = {
-    val dd = Clustering.dist2For(s) _
+    val dd = Clustering.dist2Sql _
     val cut = Segments.cut(s, dir, "embeddings")
     val qe = upResidualSubvecs(s, dir)
       .join(upCodes.read(s, dir).select("vec_id", "m", "code"),
@@ -345,7 +342,7 @@ object IvfPq {
     * the L2 exact set, not the cosine one q_sim_recall uses). Broadcast
     * queries, heap ranking — the bruteTopK shape. */
   private[llm] def bruteL2TopK(s: SparkSession, dir: String): DataFrame = {
-    val dd = Clustering.dist2For(s) _
+    val dd = Clustering.dist2Sql _
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val qq = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))

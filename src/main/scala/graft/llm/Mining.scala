@@ -44,7 +44,7 @@ object Mining {
   private def corpus(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings").select(
       col("vec_id"), col("label").cast("long").as("label"), col("embedding"),
-      expr(Similarity.normFor(s)("embedding")).as("nrm"))
+      expr(Similarity.normSql("embedding")).as("nrm"))
 
   private def anchors(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < 8).select(
@@ -64,7 +64,7 @@ object Mining {
     val q = anchors(e)
     val cands = e.join(broadcast(q), col("label") =!= col("q_label"))
       .withColumn("cos",
-        expr(Similarity.dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
+        expr(Similarity.dotSql("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
       .filter(col("cos") <= NearDupCeiling)
       .select("q_id", "vec_id", "cos")
     labeled(e, Ranking.topKPerGroup(cands, "q_id", "cos", "vec_id",
@@ -102,7 +102,7 @@ object Mining {
     def scored(pred: org.apache.spark.sql.Column): DataFrame =
       e.join(broadcast(q), pred)
         .withColumn("cos",
-          expr(Similarity.dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
+          expr(Similarity.dotSql("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
         .select("q_id", "vec_id", "cos")
     val pos = Ranking.topKPerGroup(
         scored(col("label") === col("q_label") && col("vec_id") =!= col("q_id")),

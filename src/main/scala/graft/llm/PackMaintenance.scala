@@ -35,17 +35,14 @@ object PackMaintenance {
   /** The packed-bin segments: base and delta members hive-partitioned by
     * source. The chunk stream and column contract are the SHARED
     * definitions (Curation.uniqChunks / Curation.packSegments), so artifact
-    * and declaration cannot drift. Each member's partition column is cast
-    * back to its declared STRING type: directory-name inference would
-    * otherwise read a numeric-looking source ('2024') as INT and break
-    * bit-identity with the declared pack math. Bin ids are pairwise
+    * and declaration cannot drift; the partition column reads back with its
+    * written type (Warehouse's `_SCHEMA`). Bin ids are pairwise
     * disjoint across segments per (source, pack_shard), so compaction
     * moves files, never bytes within a bin: the serve is bit-identical at
     * every instant and reads ONE segment afterwards. */
   val segments = new Segments.Root("pack", "up_bins", "documents",
       Some("source"),
-      project = _.withColumn("source", col("source").cast("string"))
-        .select(Curation.PackCols.map(col): _*))({ (s, dir) =>
+      project = _.select(Curation.PackCols.map(col): _*))({ (s, dir) =>
     Curation.packSegments(Curation.uniqChunks(s, dir), Segments.cut(s, dir, "documents"))
   })
 

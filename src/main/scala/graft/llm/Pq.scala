@@ -32,7 +32,7 @@ import graft.Tables._
   * Numeric discipline: training is the shared Lloyd loop (Clustering
   * .lloyd — Tables.exactMean recenter, overflow-safe at any corpus);
   * assignment ties break to the LOWER code id; all distances go through
-  * the codegen'd vec_dist2 with the bit-identical HOF fallback. */
+  * the codegen'd vec_dist2. */
 object Pq {
 
   /** Subspaces (codes per vector). */
@@ -118,7 +118,7 @@ object Pq {
     * carries Q×k rows per partition, never the corpus-sized frame into Q
     * sort tasks. */
   private def adcShortlist(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val dd = Clustering.dist2For(s) _
+    val dd = Clustering.dist2Sql _
     val q = subvecs(s, dir).filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qsv"))
     val lut = q.join(broadcast(books(s, dir)), "m")
@@ -148,7 +148,7 @@ object Pq {
     * `rank` — Q·Shortlist vectors touched at any corpus size. */
   private[llm] def rerank(s: SparkSession, dir: String, short: DataFrame,
                           part: String*): DataFrame = {
-    val dd = Clustering.dist2For(s) _
+    val dd = Clustering.dist2Sql _
     val e = t(s, dir, "embeddings")
     short
       .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), "n_id")

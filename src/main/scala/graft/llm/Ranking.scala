@@ -1,7 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-group top-k ranking for the ANN serve family (VERDICT r7 item 1).
@@ -16,11 +15,8 @@ import org.apache.spark.sql.functions._
   * at most k (score, id) pairs per group, the exchange carries
   * groups×k×partitions rows, and no task sorts anything larger than a
   * k-heap. Results are bit-identical to the window form — same total order
-  * on doubles, same lower-id tiebreak — which FallbackSpec pins by running
-  * both paths.
-  *
-  * Sessions without GraftExtensions (a foreign driver) degrade to the
-  * window form transparently: same rows, the old shuffle shape.
+  * on doubles, same lower-id tiebreak — which KernelSpec pins against the
+  * window reference.
   */
 object Ranking {
 
@@ -29,24 +25,13 @@ object Ranking {
     * must be a non-null DOUBLE column, `id` a non-null BIGINT unique within
     * its group (every serve call site keys on a distinct vec_id). */
   def topKPerGroup(cands: DataFrame, grp: String, score: String, id: String,
-                   k: Int, asc: Boolean, outScore: String, outId: String): DataFrame = {
-    val s = cands.sparkSession
-    if (s.catalog.functionExists("top_structs")) {
-      cands
-        .groupBy(grp)
-        .agg(expr(s"top_structs($score, $id, $k, $asc)").as("_top"))
-        .select(col(grp), posexplode(col("_top")).as(Seq("_pos", "_t")))
-        .select(col(grp), col(s"_t.id").as(outId), col(s"_t.score").as(outScore),
-          (col("_pos") + 1).cast("long").as("rank"))
-    } else {
-      val ord: Column = if (asc) col(score).asc else col(score).desc
-      val w = Window.partitionBy(grp).orderBy(ord, col(id))
-      cands
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col(grp), col(id).as(outId), col(score).as(outScore), col("rank"))
-    }
-  }
+                   k: Int, asc: Boolean, outScore: String, outId: String): DataFrame =
+    cands
+      .groupBy(grp)
+      .agg(expr(s"top_structs($score, $id, $k, $asc)").as("_top"))
+      .select(col(grp), posexplode(col("_top")).as(Seq("_pos", "_t")))
+      .select(col(grp), col(s"_t.id").as(outId), col(s"_t.score").as(outScore),
+        (col("_pos") + 1).cast("long").as("rank"))
 
   /** The recall tail every ANN audit shares: `exact` (its key columns,
     * e.g. q_id, n_id) left-joined to the `approx` rows with the same keys,

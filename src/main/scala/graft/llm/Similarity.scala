@@ -29,24 +29,13 @@ object Similarity {
 
   /** Left-to-right double dot product of two float-array columns — the
     * custom codegen'd expression (graft.functions.VecDot), registered
-    * by GraftExtensions. Bit-identical to the built-in HOF form (same
-    * accumulation order), but without per-element lambda dispatch on the
-    * pair-join hot path. Sessions built without GraftExtensions (a foreign
-    * driver session) degrade to the HOF form transparently — same results,
-    * slower. */
+    * by GraftExtensions. Bit-identical to the built-in HOF form
+    * `aggregate(zip_with(...))` (same accumulation order), but without
+    * per-element lambda dispatch on the pair-join hot path. */
   def dotSql(a: String, b: String): String = s"vec_dot($a, $b)"
-
-  private def hofDotSql(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
-
-  private[graft] def dotFor(s: SparkSession)(a: String, b: String): String =
-    if (s.catalog.functionExists("vec_dot")) dotSql(a, b) else hofDotSql(a, b)
 
   /** Euclidean norm of a float-array column, same accumulation order. */
   def normSql(a: String): String = s"sqrt(vec_dot($a, $a))"
-
-  private[graft] def normFor(s: SparkSession)(a: String): String =
-    s"sqrt(${dotFor(s)(a, a)})"
 
   /** Number of hyperplanes / signature bits for LSH. Sizing math (the knob a
     * deployment turns, VERDICT r1 item 7): expected bucket occupancy is
@@ -79,26 +68,12 @@ object Similarity {
     math.max(MultiProbePlanes,
       math.ceil(math.log(math.max(n, 1).toDouble / targetBucket) / math.log(2.0)).toInt)
 
-  /** Deterministic pseudo-random hyperplane component r_i[d] ∈ [-1, 1):
-    * integer congruential formula — bit-identical in Spark and DuckDB.
-    * `d` is the 0-based element index supplied by transform's (x, d) lambda. */
-  private def planeCoef(i: Int): String =
-    s"(CAST((${(i + 1) * 2654435761L}L + d * 40503L) % 2000001L AS DOUBLE) / 1000000.0D - 1.0D)"
-
-  /** LSH bucket id: `planes` sign bits of hyperplane dot products. */
+  /** LSH bucket id: `planes` sign bits of deterministic pseudo-random
+    * hyperplane dot products, in one pass through the codegen'd
+    * `hyperplane_bucket` (graft.functions.HyperplaneBucket); the hyperplane
+    * components come from integer arithmetic, bit-identical in DuckDB. */
   def bucketSql(emb: String, planes: Int = Planes): String =
-    (0 until planes).map { i =>
-      val dot = s"aggregate(transform($emb, (x, d) -> CAST(x AS DOUBLE) * ${planeCoef(i)}), 0D, (acc, v) -> acc + v)"
-      s"(CASE WHEN $dot > 0D THEN ${1L << i}L ELSE 0L END)"
-    }.mkString("(", " + ", ")")
-
-  /** Bucket id via the one-pass codegen'd expression when registered
-    * (GraftExtensions), else the HOF form — same IEEE operation sequence,
-    * bit-identical bucket ids (FallbackSpec). */
-  private[graft] def bucketFor(s: SparkSession)(emb: String, planes: Int): String =
-    if (s.catalog.functionExists("hyperplane_bucket"))
-      s"hyperplane_bucket($emb, $planes)"
-    else bucketSql(emb, planes)
+    s"hyperplane_bucket($emb, $planes)"
 
   private def queries(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < 8)
@@ -108,7 +83,7 @@ object Similarity {
     * cosine serve, index build and maintenance path scores against. */
   private[llm] def withNorm(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings").select(
-      col("vec_id"), col("embedding"), expr(normFor(s)("embedding")).as("nrm"))
+      col("vec_id"), col("embedding"), expr(normSql("embedding")).as("nrm"))
 
   /** Exact cosine top-10 for each query vector (vec_id < 8) — brute force.
     * The query side is tiny and broadcast; the scan stays embarrassingly
@@ -120,7 +95,7 @@ object Similarity {
   def bruteTopK(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(s, dir)
     rankTop10(e.join(broadcast(queries(e)), col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm"))))
+      .withColumn("cos", expr(dotSql("q_emb", "embedding")) / (col("q_nrm") * col("nrm"))))
   }
 
   /** Scored LSH candidate stage shared by the single- and multi-probe
@@ -132,7 +107,7 @@ object Similarity {
     * Q×(planes+1) probe rows against the bucketed corpus — never Q×N. */
   private[graft] def lshCandidates(s: SparkSession, dir: String,
                                    planes: Int, probeDist: Int): DataFrame = {
-    val e = withNorm(s, dir).withColumn("bucket", expr(bucketFor(s)("embedding", planes)))
+    val e = withNorm(s, dir).withColumn("bucket", expr(bucketSql("embedding", planes)))
     val q = e.filter(col("vec_id") < 8).select(
       col("vec_id").as("q_id"), col("embedding").as("q_emb"),
       col("nrm").as("q_nrm"), col("bucket").as("q_bucket"))
@@ -143,7 +118,7 @@ object Similarity {
     val probes = q.select(col("q_id"), col("q_emb"), col("q_nrm"),
       explode(probeBuckets).as("pb"))
     e.join(broadcast(probes), col("bucket") === col("pb") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
+      .withColumn("cos", expr(dotSql("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
   }
 
   private def rankTop10(c: DataFrame): DataFrame =
@@ -225,15 +200,13 @@ object Similarity {
     * centroid by cosine (centroids are metadata-sized — broadcast; the only
     * per-corpus work is the N×k scoring, partitioned by vector). The ONE
     * cell ranking of the IVF family: training, assignment, probing and the
-    * all-in-plan serve all call it. Scores through `dotFor` (the codegen'd
-    * vec_dot, float×double overload, or the bit-identical HOF form on
-    * foreign sessions). Columns of `e` beyond (vec_id, embedding, nrm)
-    * pass through. */
+    * all-in-plan serve all call it. Scores through `dotSql` (the codegen'd
+    * vec_dot, float×double overload). Columns of `e` beyond (vec_id,
+    * embedding, nrm) pass through. */
   private[llm] def rankAgainst(e: DataFrame, cents: DataFrame): DataFrame = {
-    val dot = dotFor(e.sparkSession) _
-    val c = cents.withColumn("c_nrm", expr(s"sqrt(${dot("c_emb", "c_emb")})"))
+    val c = cents.withColumn("c_nrm", expr(normSql("c_emb")))
     e.crossJoin(broadcast(c))
-      .withColumn("c_cos", expr(dot("embedding", "c_emb")) / (col("nrm") * col("c_nrm")))
+      .withColumn("c_cos", expr(dotSql("embedding", "c_emb")) / (col("nrm") * col("c_nrm")))
       .withColumn("crn", row_number().over(
         Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("cent_id"))))
   }
@@ -307,15 +280,12 @@ object Similarity {
       // columns through) — no corpus-side join anywhere in the build
       val e = t(s, dir, "embeddings").select(
         col("vec_id"), col("embedding"), col("label").cast("long").as("label"),
-        expr(normFor(s)("embedding")).as("nrm"))
+        expr(normSql("embedding")).as("nrm"))
       val assigned = nearestCell(e, cents)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("label"),
           col("cent_id"))
       graft.etl.Warehouse.publishPartitioned(s, target, assigned, "cent_id")
-    } // partition-column type inference reads the dir names as int — restore
-      // the build-side long
-      .select(col("vec_id"), col("embedding"),
-        col("nrm"), col("label"), col("cent_id").cast("long").as("cent_id"))
+    }
 
   /** IVF ANN over TRAINED centroids, train-once/serve-many — and since r8,
     * SERVED FROM THE PUBLISHED INVERTED LISTS: the first call trains +
@@ -362,7 +332,7 @@ object Similarity {
     val scored = lists.filter(col("cent_id").isInCollection(cellIds))
       .join(broadcast(fan(probes)), "cent_id")
       .filter(keep)
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
+      .withColumn("cos", expr(dotSql("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
     Ranking.topKPerGroup(cap.fold(scored)(scored.filter).select(grp, "vec_id", "cos"),
       grp, "cos", "vec_id", k, asc = false, "cos", "n_id")
   }
@@ -417,7 +387,7 @@ object Similarity {
     val cands = probes.join(assigned, "cent_id")
       .filter(col("vec_id") =!= col("q_id"))
       .join(broadcast(queries(e)), "q_id")
-      .withColumn("cos", expr(dotFor(s)("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
+      .withColumn("cos", expr(dotSql("q_emb", "embedding")) / (col("q_nrm") * col("nrm")))
     rankTop10(cands)
   }
 
@@ -494,7 +464,7 @@ object Similarity {
     * and `nrm` its norm. */
   private def dequantized(codes: DataFrame): DataFrame =
     codes.withColumn("embedding", expr(DequantSql))
-      .withColumn("nrm", expr(normFor(codes.sparkSession)("embedding")))
+      .withColumn("nrm", expr(normSql("embedding")))
 
   /** The quantized serve's cells: the first-`Cells` dequantized vectors. */
   private def quantCells(s: SparkSession, dir: String): DataFrame =
@@ -513,8 +483,7 @@ object Similarity {
       val assigned = nearestCell(dequantized(quantCodes(s, dir)), quantCells(s, dir))
         .select(col("vec_id"), col("maxabs"), col("codes"), col("nrm"), col("cent_id"))
       graft.etl.Warehouse.publishPartitioned(s, target, assigned, "cent_id")
-    }.select(col("vec_id"), col("maxabs"),
-      col("codes"), col("nrm"), col("cent_id").cast("long").as("cent_id"))
+    }
 
   /** Distributed GRAM MATRIX of the embedding corpus (upper triangle):
     * G[i,j] = Σ_v x_v[i]·x_v[j] — the statistic PCA/whitening runs on
@@ -675,7 +644,7 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy(_._1).map(_._2)
     graft.Tables.withBroadcastArray(t(s, dir, "embeddings"), "pc", v.toSeq)
-      .select(col("vec_id"), expr(hofDotSql("embedding", "pc")).as("score"))
+      .select(col("vec_id"), expr(dotSql("embedding", "pc")).as("score"))
       .orderBy("vec_id")
   }
 
@@ -862,7 +831,7 @@ object Similarity {
           .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
             col("nrm").as("n_nrm")), "n_id")
         .join(broadcast(q), "q_id")
-        .withColumn("cos", expr(dotFor(s)("q_emb", "n_emb")) /
+        .withColumn("cos", expr(dotSql("q_emb", "n_emb")) /
           (col("q_nrm") * col("n_nrm")))
         .select("q_id", "n_id", "cos")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -991,7 +960,7 @@ object Similarity {
           col("nrm").as("sn")), "src")
         .join(e.select(col("vec_id").as("dst"), col("embedding").as("de"),
           col("nrm").as("dn")), "dst")
-        .withColumn("cos", expr(dotFor(s)("se", "de")) / (col("sn") * col("dn")))
+        .withColumn("cos", expr(dotSql("se", "de")) / (col("sn") * col("dn")))
         .select("src", "dst", "cos")
         .withColumn("rnk", row_number().over(w).cast("long"))
         .filter(col("rnk") <= DescentK)

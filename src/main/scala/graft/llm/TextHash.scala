@@ -47,10 +47,6 @@ object TextHash {
   /** SQL-expression form of tokHash, for use inside lambda strings. */
   def tokHashSql(e: String): String = s"CAST(conv(substring(md5($e), 1, 15), 16, 10) AS BIGINT)"
 
-  /** MinHash value i over a (already hashed, mod-P-reduced) token array. */
-  def minHashSql(hashedArr: String, i: Int): String =
-    s"array_min(transform($hashedArr, x -> (${A(i)}L * x + ${B(i)}L) % ${P}L))"
-
   /** Band hash folding `Rows` minhash values mod P (stays well below 2^63 at
     * every step; P-collisions are harmless — they only add candidates, and
     * identically so in the DuckDB twin). */

@@ -236,13 +236,6 @@ object Aggregates {
     * fixed-size at any corpus. */
   def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Cms
-    if (!s.catalog.functionExists("count_min_sketch_merge"))
-      // foreign session: the exact form (same output contract; the sketch
-      // path's value is the serve-many topology, not different numbers —
-      // at this eps the estimates equal the exact counts anyway)
-      return t(s, dir, "orders")
-        .groupBy("o_orderpriority").agg(count(lit(1)).as("approx_n"))
-        .orderBy("o_orderpriority")
     val partials = t(s, dir, "orders")
       .groupBy(year(col("o_orderdate")).as("yr"))
       .agg(expr(s"count_min_sketch(o_orderpriority, ${Cms.Eps}d, ${Cms.Confidence}d, ${Cms.Seed})").as("sk"))
@@ -493,24 +486,19 @@ object Aggregates {
     * min-heap per partial, merged associatively — the shuffle carries
     * groups × k doubles, never the raw rows, unlike the window-rank form
     * (full row shuffle) or collect_list (unbounded executor state on a hot
-    * group). Sessions without GraftExtensions fall back to the declarative
-    * slice(sort_array(collect_list…)) — identical output (TopKSpec pins
-    * both), just without the bounded-state guarantee. Values surface
-    * scale-padded through DECIMAL(18,2) so the joined string renders
-    * identically in both engines. */
-  def topVals(s: SparkSession, dir: String): DataFrame = {
-    val tv =
-      if (s.catalog.functionExists("top_vals")) expr("top_vals(o_totalprice, 5)")
-      else expr("slice(sort_array(collect_list(o_totalprice), false), 1, 5)")
+    * group); TopKSpec pins it to the declarative
+    * slice(sort_array(collect_list…)). Values surface scale-padded through
+    * DECIMAL(18,2) so the joined string renders identically in both
+    * engines. */
+  def topVals(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "orders")
       .groupBy("o_orderpriority")
-      .agg(tv.as("arr"), count(lit(1)).as("n"))
+      .agg(expr("top_vals(o_totalprice, 5)").as("arr"), count(lit(1)).as("n"))
       .select(col("o_orderpriority"),
         concat_ws("|", expr(
           "transform(arr, x -> CAST(CAST(x AS DECIMAL(18,2)) AS STRING))")).as("top5"),
         col("n"))
       .orderBy("o_orderpriority")
-  }
 
   /** Conditional/boolean aggregate family (count_if / bool_or / bool_and /
     * conditional max) — the last scalar-aggregate surface gap. All four

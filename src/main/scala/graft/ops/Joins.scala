@@ -268,9 +268,7 @@ object Joins {
     * AsOfJoinExec merge join (each side shuffles once on its own key; no
     * union super-relation, no window state — see AsOfJoin.scala for the
     * 100 TB rationale). The oracle is DuckDB's ASOF LEFT JOIN, and
-    * NativeAsOfSpec additionally pins it row-for-row to `asof2`. On a
-    * session without GraftExtensions the plan cannot be planned — the
-    * query then degrades to the window form, which is the same result. */
+    * NativeAsOfSpec additionally pins it row-for-row to `asof2`. */
   def asofNative(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
     val trades = ev.filter(col("event_type") === "purchase")
@@ -278,28 +276,13 @@ object Joins {
     val quotes = ev.filter(col("event_type") === "view")
       .select(col("user_id").as("q_user_id"), col("ts").as("q_ts"),
         col("value").as("q_value"), col("event_id").as("q_event_id"))
-    def finish(df: DataFrame): DataFrame = df
+    graft.plans.AsOf.join(trades, quotes,
+        "user_id", "ts", "q_user_id", "q_ts", rightTieBreak = Some("q_event_id"))
       .select(col("event_id"), col("user_id"), col("t_value"),
         nsToMs("ts").as("ts_ms"),
         expr("q_ts div 1000000").as("quote_ts_ms"),
         col("q_value").as("quote_value"))
       .orderBy("event_id")
-    // Capability check, not a catch-all: probing by planning and swallowing
-    // Throwable would mask genuine analysis/planner bugs in the native
-    // operator (and even fatals like OOM) as "foreign session". The strategy
-    // is an object, so presence in the session's planner is exact.
-    val hasStrategy =
-      s.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy)
-    if (hasStrategy)
-      finish(graft.plans.AsOf.join(trades, quotes,
-        "user_id", "ts", "q_user_id", "q_ts", rightTieBreak = Some("q_event_id")))
-    else {
-      // foreign session (no injected strategy): the window form computes
-      // the identical result with the identical column contract
-      System.err.println(
-        "[graft] AsOfJoinStrategy not in this session; q_join_asof_native uses the window form")
-      asof2(s, dir)
-    }
   }
 
   /** Shipping-priority report (TPC-H Q3 shape): unshipped revenue of
@@ -627,8 +610,7 @@ object Joins {
     * false positives, so the result is bit-identical to the plain join (the
     * oracle IS the plain join — the hash match proves the rewrite). Uses
     * Spark's own BloomFilterAggregate/BloomFilterMightContain (exposed as
-    * bloom_agg/bloom_contains by GraftExtensions) over xxhash64 keys;
-    * sessions without the extensions run the identical-result plain join.
+    * bloom_agg/bloom_contains by GraftExtensions) over xxhash64 keys.
     * BloomJoinSpec asserts the pruned plan and the equivalence. */
   def bloomPrunedJoin(s: SparkSession, dir: String): DataFrame = {
     t(s, dir, "orders")
@@ -637,19 +619,15 @@ object Joins {
     t(s, dir, "lineitem")
       .select("l_orderkey", "l_returnflag", "l_extendedprice")
       .createOrReplaceTempView("graft_bloom_fact")
-    val bloomPred =
-      if (s.catalog.functionExists("bloom_contains"))
-        """WHERE bloom_contains(
-             (SELECT bloom_agg(xxhash64(o_orderkey)) FROM graft_bloom_dim),
-             xxhash64(l.l_orderkey))"""
-      else ""
     s.sql(
-      s"""SELECT l.l_returnflag, count(*) AS n,
-                 CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-          FROM graft_bloom_fact l
-          JOIN graft_bloom_dim d ON l.l_orderkey = d.o_orderkey
-          $bloomPred
-          GROUP BY 1 ORDER BY 1""")
+      """SELECT l.l_returnflag, count(*) AS n,
+                CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+         FROM graft_bloom_fact l
+         JOIN graft_bloom_dim d ON l.l_orderkey = d.o_orderkey
+         WHERE bloom_contains(
+           (SELECT bloom_agg(xxhash64(o_orderkey)) FROM graft_bloom_dim),
+           xxhash64(l.l_orderkey))
+         GROUP BY 1 ORDER BY 1""")
   }
 
   /** LATERAL correlated-subquery join: top-2 richest customers PER nation,

@@ -356,11 +356,11 @@ object StreamTwins {
     * micro-batch never shuffles. The fold scans centroids in ascending
     * cluster order with a strict `<`, so ties keep the LOWER cluster id —
     * the batch argmin's exact tie-break (Clustering.assign). Distances go
-    * through the same codegen'd vec_dist2 / HOF-fallback pair as batch. */
+    * through the same codegen'd vec_dist2 as batch. */
   def clusterAssign(embs: DataFrame,
                     centroids: Seq[(Long, Seq[Double])]): DataFrame = {
     val cents = typedlit(centroids.sortBy(_._1))
-    val d2 = graft.llm.Clustering.dist2For(embs.sparkSession) _
+    val d2 = graft.llm.Clustering.dist2Sql _
     // distances materialize ONCE per centroid (transform), then the fold
     // only compares — the CASE form evaluated the d2 expression twice per
     // centroid (predicate + winning branch), doubling the per-event
@@ -393,7 +393,7 @@ object StreamTwins {
     * Similarity.probeCells on the same rows (StreamTwinsSpec). */
   def ivfProbe(embs: DataFrame, centroids: Seq[(Long, Seq[Double])],
                nProbe: Int = graft.llm.Similarity.NProbe): DataFrame = {
-    val dot = graft.llm.Similarity.dotFor(embs.sparkSession) _
+    val dot = graft.llm.Similarity.dotSql _
     embs.withColumn("cents", typedlit(centroids.sortBy(_._1)))
       .withColumn("nrm", expr(s"sqrt(${dot("embedding", "embedding")})"))
       .withColumn("scored", expr(
@@ -423,7 +423,7 @@ object StreamTwins {
     * drained output is bit-identical to the batch add on the same rows
     * (StreamTwinsSpec). */
   def ivfAdd(embs: DataFrame, centroids: Seq[(Long, Seq[Double])]): DataFrame = {
-    val dot = graft.llm.Similarity.dotFor(embs.sparkSession) _
+    val dot = graft.llm.Similarity.dotSql _
     embs.withColumn("cents", typedlit(centroids.sortBy(_._1)))
       .withColumn("nrm", expr(s"sqrt(${dot("embedding", "embedding")})"))
       .withColumn("best", expr(
@@ -453,9 +453,8 @@ object StreamTwins {
     * (StreamTwinsSpec). */
   def ivfpqAdd(embs: DataFrame, centroids: Seq[(Long, Seq[Double])],
                books: Seq[(Int, Long, Seq[Double])]): DataFrame = {
-    val s = embs.sparkSession
-    val dot = graft.llm.Similarity.dotFor(s) _
-    val dd = graft.llm.Clustering.dist2For(s) _
+    val dot = graft.llm.Similarity.dotSql _
+    val dd = graft.llm.Clustering.dist2Sql _
     val m = graft.llm.IvfPq.M
     val sub = graft.llm.IvfPq.SubDim
     embs.withColumn("cents", typedlit(centroids.sortBy(_._1)))

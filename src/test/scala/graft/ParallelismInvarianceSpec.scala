@@ -51,7 +51,14 @@ class ParallelismInvarianceSpec extends SparkSpec {
     "q_sim_ivfpq_upsert_rerank",
     "q_sim_ivf_sweep",
     "q_sim_ivf_quantized",
-    "q_mine_hard_negatives_ivf"))
+    "q_mine_hard_negatives_ivf",
+    // the partitioned-member readers and drift monitors
+    "q_sim_ivfpq_rerank",
+    "q_sim_ivfpq_upsert",
+    "q_sim_ivfpq_drift",
+    "q_sim_binary_drift",
+    "q_text_bm25_drift",
+    "q_partition_prune"))
     test(s"$q is byte-identical at shuffle.partitions=197") {
       val fn = SparkEntry.queries(q)
       val want = fn(spark, sf).collect().map(_.toString).toSeq

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Every published version dir carries its writer's schema in a `_SCHEMA`
   * sidecar: reads through `Warehouse` see exactly the schema parquet footer
-  * inference would give, without launching the inference job, and a dir
-  * published before sidecars existed still reads by inference. */
+  * inference would give, except that a partition column keeps its written
+  * type, without launching the inference job, and a dir published before
+  * sidecars existed still reads by inference. */
 class RecordedSchemaSpec extends SparkSpec {
 
   private def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
@@ -26,6 +27,10 @@ class RecordedSchemaSpec extends SparkSpec {
 
   private def inferred(dir: String) = spark.read.parquet(dir).schema
 
+  /** Footer inference with the partition column `cell` at its written type. */
+  private def written(dir: String) = org.apache.spark.sql.types.StructType(inferred(dir).map(f =>
+    if (f.name == "cell") f.copy(dataType = org.apache.spark.sql.types.LongType) else f))
+
   private def sorted(d: DataFrame) = d.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
 
   test("read, readVersion and schemaOf match footer inference for every publish path") {
@@ -39,15 +44,15 @@ class RecordedSchemaSpec extends SparkSpec {
       val t = s"$root/$name"
       val v = publish(t)
       assert(new java.io.File(s"$t/$v/_SCHEMA").isFile, name)
-      val want = inferred(s"$t/$v")
+      val want = written(s"$t/$v")
       assert(Warehouse.read(spark, t).schema === want, name)
       assert(Warehouse.readVersion(spark, t, v).schema === want, name)
       assert(Warehouse.schemaOf(spark, t).contains(want), name)
       assert(sorted(Warehouse.read(spark, t)) === sorted(spark.read.parquet(s"$t/$v")), name)
     }
-    // the partition column is typed from the paths, as without the sidecar
+    // the partition column keeps its written type (inference reads it as int)
     val p = Warehouse.read(spark, s"$root/partitioned").schema("cell").dataType
-    assert(p === org.apache.spark.sql.types.IntegerType)
+    assert(p === org.apache.spark.sql.types.LongType)
   }
 
   test("snapshot members record their schema, including a rewritten empty member") {
@@ -56,7 +61,7 @@ class RecordedSchemaSpec extends SparkSpec {
       Seq("base" -> rows, "delta" -> rows.limit(0)), partCol = Some("cell"))
     Seq("base", "delta").foreach { m =>
       val dir = s"$root/$m/${snap(m)}"
-      assert(Warehouse.readSnapshotMember(spark, root, m, snap(m)).schema === inferred(dir), m)
+      assert(Warehouse.readSnapshotMember(spark, root, m, snap(m)).schema === written(dir), m)
     }
     assert(Warehouse.readSnapshotMember(spark, root, "base", snap("base")).count() === 4)
     assert(Warehouse.readSnapshotMember(spark, root, "delta", snap("delta")).count() === 0)

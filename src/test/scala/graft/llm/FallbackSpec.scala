@@ -1,26 +1,16 @@
 package graft.llm
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** The engine claims graceful degradation on foreign sessions: every query
-  * that uses a custom expression (vec_dot, minhash_sig) falls back to the
-  * built-in HOF form when the function is not registered, with BIT-IDENTICAL
-  * results. This spec runs the affected queries on a sibling session whose
-  * function registry has the graft functions dropped and compares collected
-  * output row-for-row. */
+/** Each query that runs a scalar kernel (vec_dot, vec_dist2, the token,
+  * shingle and winnow hashers, minhash_sig, simhash_sig) returns exactly
+  * what it returns with the kernels replaced by their built-in reference
+  * forms (References.install: the same names bound to higher-order SQL
+  * functions). Compares collected output row for row; KernelSpec checks
+  * the kernels one by one. */
 class FallbackSpec extends SparkSpec {
 
-  private lazy val plain = {
-    val p = spark.newSession()
-    Seq("vec_dot", "vec_dist2", "minhash_sig", "simhash_sig", "shingle_hashes",
-        "token_hashes", "token_hashes_distinct", "hyperplane_bucket",
-        "long_array_md5", "winnow_fps", "top_structs").foreach { f =>
-      p.sessionState.functionRegistry.dropFunction(FunctionIdentifier(f))
-      assert(!p.catalog.functionExists(f))
-    }
-    p
-  }
+  private lazy val plain = References.install(spark.newSession())
 
   for (q <- Seq("q_sim_topk", "q_sim_ivf_trained", "q_sim_lsh_multiprobe",
     "q_sim_pq_codes", "q_sim_pq_topk", "q_sim_pq_rerank",
@@ -33,31 +23,7 @@ class FallbackSpec extends SparkSpec {
     test(s"$q is bit-identical without the custom expressions") {
       val fn = SparkEntry.queries(q)
       val want = fn(spark, sf).collect().map(_.toString).toSeq
-      val got = fn(plain, sf).collect().map(_.toString).toSeq
+      val got = inFreshStore(fn(plain, sf).collect().map(_.toString).toSeq)
       assert(got == want)
     }
-
-  test("vec_dot / vec_dist2 return NULL on ragged inputs, matching the HOF form") {
-    // ADVICE r6: the codegen path used to min-truncate mismatched lengths —
-    // a dimension-mismatch bug upstream yielded a plausible wrong score and
-    // the codegen/fallback paths diverged. Both now agree on NULL: zip_with
-    // null-pads the shorter side and `+ null` nulls the HOF aggregate.
-    import org.apache.spark.sql.functions.expr
-    val df = spark.range(1).select(
-      expr("array(1.0D, 2.0D)").as("a"),
-      expr("array(1.0D, 2.0D, 3.0D)").as("b"))
-    val custom = df.select(
-      expr("vec_dot(a, b)"), expr("vec_dist2(a, b)")).collect()(0)
-    assert(custom.isNullAt(0) && custom.isNullAt(1))
-    val hof = df.select(
-      expr("aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"),
-      expr("aggregate(zip_with(a, b, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0D, (acc, v) -> acc + v)"))
-      .collect()(0)
-    assert(hof.isNullAt(0) && hof.isNullAt(1))
-    // equal lengths keep producing identical non-null values on both paths
-    val ok = spark.range(1).select(
-      expr("vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))"),
-      expr("vec_dist2(array(1.0D, 2.0D), array(3.0D, 4.0D))")).collect()(0)
-    assert(ok.getDouble(0) == 11.0 && ok.getDouble(1) == 8.0)
-  }
 }

@@ -27,7 +27,7 @@ class GraphSearchSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(entryIds.length == Similarity.NEntries)
     val e = graft.Tables.t(spark, sf, "embeddings")
-    val dot = Similarity.dotFor(spark) _
+    val dot = Similarity.dotSql _
     val withN = e.select(col("vec_id"), col("embedding"),
       expr(s"sqrt(${dot("embedding", "embedding")})").as("nrm"))
     val q = withN.filter(col("vec_id") < 8).select(

@@ -25,7 +25,7 @@ class IvfPqRetrainSpec extends SparkSpec {
                     codes: org.apache.spark.sql.DataFrame,
                     books: org.apache.spark.sql.DataFrame,
                     cut: Long): Double = {
-    val dd = Clustering.dist2For(spark) _
+    val dd = Clustering.dist2Sql _
     val rows = sub
       .join(codes.select("vec_id", "m", "code"), Seq("vec_id", "m"))
       .join(broadcast(books), Seq("m", "code"))

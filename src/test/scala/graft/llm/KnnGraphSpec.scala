@@ -20,7 +20,7 @@ class KnnGraphSpec extends SparkSpec {
       graft.etl.TableStats.rowCount(spark, sf, "embeddings"))
     spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),
-        expr(Similarity.bucketSql("embedding", planes)).as("bucket"),
+        expr(References.bucketSql("embedding", planes)).as("bucket"),
         col("embedding").cast("array<double>").as("emb"))
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Double](2).toArray))

@@ -24,7 +24,7 @@ class NnDescentSpec extends SparkSpec {
 
   private lazy val trueKnn: Map[Long, Set[Long]] = {
     val e = graft.Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
-    val dot = Similarity.dotFor(spark) _
+    val dot = Similarity.dotSql _
     val withN = e.select(col("vec_id"), col("embedding"),
       expr(s"sqrt(${dot("embedding", "embedding")})").as("nrm"))
     val b = withN.select(col("vec_id").as("dst"), col("embedding").as("de"),

@@ -21,7 +21,7 @@ class PqSpec extends SparkSpec {
     val e = graft.Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
     val q = e.filter(col("vec_id") < Pq.NQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val d2 = Clustering.dist2For(spark) _
+    val d2 = Clustering.dist2Sql _
     topSets(q.crossJoin(e).filter(col("q_id") =!= col("vec_id"))
       .withColumn("d2", expr(d2("qe", "embedding")))
       .withColumn("rn", row_number().over(org.apache.spark.sql.expressions

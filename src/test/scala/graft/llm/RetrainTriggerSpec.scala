@@ -21,7 +21,7 @@ class RetrainTriggerSpec extends SparkSpec {
     * candidate retrained index (the monitor's math, parameterized). */
   private def fitGap(dir: String,
                      cents: org.apache.spark.sql.DataFrame): Double = {
-    val dot = Similarity.dotFor(spark) _
+    val dot = Similarity.dotSql _
     val e = graft.Tables.t(spark, dir, "embeddings").select(
       col("vec_id"), col("embedding"),
       expr(s"sqrt(${dot("embedding", "embedding")})").as("nrm"))

@@ -1,14 +1,13 @@
 package graft.ops
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** count_min_sketch_merge / count_min_sketch_estimate (graft.functions.Cms*):
   * the serve-many half of the CMS family. Pins (1) merged-partials probe ≥
   * exact count for EVERY key (CMS error is one-sided) and equality on this
   * domain-bounded key set, (2) merge-of-partials ≡ one directly-built
-  * sketch, (3) the registered query's fallback runs without the functions. */
+  * sketch, (3) the registered query's rows equal an exact count's. */
 class CmsSpec extends SparkSpec {
 
   test("merged CMS estimates are >= exact and equal on the bounded domain") {
@@ -44,13 +43,11 @@ class CmsSpec extends SparkSpec {
     assert(probe(merged) == probe(direct))
   }
 
-  test("q_agg_cms_topk degrades to the exact form without the functions") {
-    val plain = spark.newSession()
-    Seq("count_min_sketch_merge", "count_min_sketch_estimate").foreach { f =>
-      plain.sessionState.functionRegistry.dropFunction(FunctionIdentifier(f))
-    }
-    val fn = SparkEntry.queries("q_agg_cms_topk")
-    assert(fn(plain, sf).collect().map(_.toString).toSeq ==
-      fn(spark, sf).collect().map(_.toString).toSeq)
+  test("q_agg_cms_topk equals an exact groupBy count row for row") {
+    val exact = graft.Tables.t(spark, sf, "orders")
+      .groupBy("o_orderpriority").agg(count(lit(1)).as("approx_n"))
+      .orderBy("o_orderpriority")
+    assert(SparkEntry.queries("q_agg_cms_topk")(spark, sf).collect().map(_.toString).toSeq ==
+      exact.collect().map(_.toString).toSeq)
   }
 }

@@ -54,11 +54,9 @@ class ThetaSpec extends SparkSpec {
     assert(b.nonEmpty)
     b.foreach(r => assert(r.getBoolean(2) && r.getBoolean(3),
       s"(${r.getString(0)},${r.getString(1)}) estimate out of tolerance"))
-    // scale shape: with top_structs registered, the K-minima build is the
-    // heap aggregate — no window ranking a corpus-sized frame by segment
-    if (spark.catalog.functionExists("top_structs")) {
-      val plan = Aggregates.thetaOps(spark, sf).queryExecution.executedPlan.toString
-      assert(!plan.contains("row_number"), s"sketch build fell back to a window:\n$plan")
-    }
+    // scale shape: the K-minima build is the top_structs heap aggregate —
+    // no window ranking a corpus-sized frame by segment
+    val plan = Aggregates.thetaOps(spark, sf).queryExecution.executedPlan.toString
+    assert(!plan.contains("row_number"), s"sketch build ranks through a window:\n$plan")
   }
 }

@@ -1,24 +1,28 @@
 package graft.ops
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** graft.functions.TopVals (the `top_vals` TypedImperativeAggregate):
   * bounded-buffer exact top-k per group. Pins (1) the registered query to
-  * its declarative collect_list fallback bit-for-bit, (2) heap/merge
+  * the declarative collect_list form bit-for-bit, (2) heap/merge
   * correctness against sort-based truth across many partitions, ties, and
   * k > group size, (3) null skipping. */
 class TopKSpec extends SparkSpec {
   import spark.implicits._
 
   test("q_agg_topk is bit-identical without the custom aggregate") {
-    val p = spark.newSession()
-    p.sessionState.functionRegistry.dropFunction(FunctionIdentifier("top_vals"))
-    assert(!p.catalog.functionExists("top_vals"))
-    val fn = SparkEntry.queries("q_agg_topk")
-    assert(fn(p, sf).collect().map(_.toString).toSeq ==
-      fn(spark, sf).collect().map(_.toString).toSeq)
+    val want = graft.Tables.t(spark, sf, "orders")
+      .groupBy("o_orderpriority")
+      .agg(expr(graft.llm.References.topValsSql("o_totalprice", 5)).as("arr"),
+        count(lit(1)).as("n"))
+      .select(col("o_orderpriority"),
+        concat_ws("|", expr(
+          "transform(arr, x -> CAST(CAST(x AS DECIMAL(18,2)) AS STRING))")).as("top5"),
+        col("n"))
+      .orderBy("o_orderpriority")
+    val got = SparkEntry.queries("q_agg_topk")(spark, sf)
+    assert(got.collect().map(_.toString).toSeq == want.collect().map(_.toString).toSeq)
   }
 
   test("top_vals equals sort-based truth across partitions, with ties and small groups") {
